@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.OpUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
@@ -16,28 +17,6 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** Inferred parquet schema per table path, cached for the JVM: schema
-    * inference launches a footer-read Spark job on EVERY
-    * `spark.read.parquet(path)` call, so each query paid ~30-50 ms per
-    * table per execution in pure metadata re-derivation (q52 loads all
-    * ten views: 10 such jobs per run). A production deployment reads
-    * catalog tables whose schema is known without inference; this cache
-    * is that catalog's schema entry. METADATA only — file listing stays
-    * fresh per call, and every query still computes from the parquet
-    * bytes. */
-  private val schemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-
-  private def read(spark: SparkSession, path: String): DataFrame = {
-    val cached = schemaCache.get(path)
-    if (cached != null) spark.read.schema(cached).parquet(path)
-    else {
-      val df = spark.read.parquet(path)
-      schemaCache.put(path, df.schema)
-      df
-    }
-  }
-
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events") {
       // events.ts has shipped as TIMESTAMP(NANOS) (which Spark's
@@ -46,7 +25,7 @@ object Tables {
       // Normalize either to a microsecond TimestampType; the session
       // timezone is UTC everywhere, so the NTZ cast is value-identity.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = read(spark, s"$sfDir/$name.parquet")
+      val raw = OpUtils.readParquet(spark, s"$sfDir/$name.parquet")
       import org.apache.spark.sql.functions.{col, expr}
       import org.apache.spark.sql.types._
       raw.schema("ts").dataType match {
@@ -56,7 +35,7 @@ object Tables {
         case other => throw new IllegalStateException(
           s"events.ts: unexpected parquet type $other")
       }
-    } else read(spark, s"$sfDir/$name.parquet")
+    } else OpUtils.readParquet(spark, s"$sfDir/$name.parquet")
   }
 
   /** Register all tables as temp views (idempotent) for spark.sql queries. */

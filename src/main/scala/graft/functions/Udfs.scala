@@ -29,24 +29,6 @@ object Udfs {
     def apply(key: Long): Long = cms.estimateCount(Long.box(key))
   }
 
-  /** Typed Aggregator: bounded top-k heap by (sim desc, id asc) — the
-    * SURVEY §7.2 "top-k-per-partition similarity heap". Partial
-    * aggregation merges k-bounded buffers, so memory is O(k) per group
-    * per task no matter the corpus size. Buffer is a plain sorted array
-    * (k is small; heap asymptotics don't pay below ~1000). */
-  class TopKBySim(k: Int) extends Aggregator[(Long, Double), Array[(Long, Double)], Array[(Long, Double)]] {
-    private def trim(a: Array[(Long, Double)]): Array[(Long, Double)] =
-      a.sortBy { case (id, sim) => (-sim, id) }.take(k)
-    override def zero: Array[(Long, Double)] = Array.empty
-    override def reduce(b: Array[(Long, Double)], in: (Long, Double)): Array[(Long, Double)] =
-      trim(b :+ in)
-    override def merge(a: Array[(Long, Double)], b: Array[(Long, Double)]): Array[(Long, Double)] =
-      trim(a ++ b)
-    override def finish(r: Array[(Long, Double)]): Array[(Long, Double)] = trim(r)
-    override def bufferEncoder: Encoder[Array[(Long, Double)]] = Encoders.kryo
-    override def outputEncoder: Encoder[Array[(Long, Double)]] = Encoders.kryo
-  }
-
   /** Typed Aggregator: exact discounted-revenue accumulator in scaled
     * longs (cents*10^4) — overflow-safe to ~9e14, i.e. ~90 trillion in
     * revenue units per group; order-independent, so deterministic under

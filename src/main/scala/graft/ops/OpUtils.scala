@@ -2,17 +2,17 @@ package graft.ops
 
 private[graft] object OpUtils {
 
-  /** Read a persisted-index parquet dir with its schema cached for the
-    * JVM. Every bare `spark.read.parquet(path)` re-derives the schema
-    * (directory listing + footer read, and sometimes a one-task Spark
-    * job) on the driver — pure metadata latency paid on EVERY serve
-    * call against an index whose schema is fixed at build time by
-    * construction (appends/deletes/compactions all write the same
-    * columns; a rebuilt index reuses its path only with its own
-    * layout). File LISTING stays per-call, so appended/deleted files
-    * are always visible — only the schema is pinned. The production
-    * analogue is a catalog table: schema known, no per-query
-    * inference. */
+  /** Read a parquet dir — a persisted index or a source table
+    * (`Tables.load`) — with its schema cached for the JVM. Every bare
+    * `spark.read.parquet(path)` re-derives the schema (directory
+    * listing + footer read, and sometimes a one-task Spark job) on the
+    * driver — pure metadata latency paid on EVERY serve call or query
+    * against a path whose schema is fixed by construction (index
+    * appends/deletes/compactions all write the same columns; a rebuilt
+    * index reuses its path only with its own layout). File LISTING
+    * stays per-call, so appended/deleted files are always visible —
+    * only the schema is pinned. The production analogue is a catalog
+    * table: schema known, no per-query inference. */
   def readParquet(spark: org.apache.spark.sql.SparkSession,
       path: String): org.apache.spark.sql.DataFrame = {
     val cached = indexSchemas.get(path)

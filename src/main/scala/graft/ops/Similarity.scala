@@ -16,34 +16,13 @@ import org.apache.spark.sql.functions._
   * LSH variant prunes the corpus side to matching buckets first, turning
   * a full scan per query into a bucket-join; multi-probe (flipping one
   * plane bit) recovers recall at bucket boundaries.
+  *
+  * Every serve path, batch and streaming, has one shape: its own
+  * candidate source (all pairs, IVF cells, LSH buckets, a PQ
+  * shortlist) feeding the one exact tail [[exactTopK]]. A persisted
+  * IVF index is read only through [[IvfIndexReader]].
   */
 object Similarity {
-
-  /** Aggregator-heap formulation of brute-force top-k (SURVEY §7.2):
-    * groupByKey(query) + a k-bounded typed Aggregator instead of a sort
-    * window. Same rows as bruteForceTopK (equivalence spec); the heap
-    * form is the one to reach for when a group's candidate list must
-    * never exist materialized (extreme fan-in). */
-  def bruteForceTopKAgg(corpus: DataFrame, queries: DataFrame, k: Int,
-      embCol: String = "embedding", id: String = "vec_id"): DataFrame = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val q = queries.select(col(id).as("query_id"), col(embCol).as("q_emb"))
-    val scored = corpus.select(col(id), col(embCol))
-      .crossJoin(broadcast(q))
-      .filter(col(id) =!= col("query_id"))
-      .withColumn("sim", cosine_sim(col(embCol), col("q_emb")))
-      .select(col("query_id"), col(id), col("sim"))
-      .as[(Long, Long, Double)]
-    val agg = new graft.functions.Udfs.TopKBySim(k).toColumn
-    scored.groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(agg.name("topk"))
-      .flatMap { case (qid, tops) =>
-        tops.zipWithIndex.map { case ((nid, sim), i) => (qid, nid, sim, i + 1) }
-      }
-      .toDF("query_id", "neighbor_id", "sim", "rank")
-  }
 
   /** Scalar int8 quantization of an embedding column: per-vector
     * absmax scale, codes = floor(x / scale * 127) in [-127, 127]. The
@@ -126,18 +105,35 @@ object Similarity {
       .select(col("query_id"), col("col.neighbor_id").as("neighbor_id"),
         col("col.sim").as(simCol), (col("pos") + lit(1)).cast("int").as("rank"))
 
+  /** The (query_id, q_emb) query side every serve path pairs with its
+    * candidates. */
+  private[graft] def queryFrame(queries: DataFrame, embCol: String,
+      id: String): DataFrame =
+    queries.select(col(id).as("query_id"), col(embCol).as("q_emb"))
+
+  /** Exact scoring of candidate pairs (corpus `id`/`embCol` beside
+    * query `query_id`/`q_emb`, whatever source produced them): drop
+    * self-pairs, then exact cosine into `sim`. */
+  private[graft] def scoreExact(cands: DataFrame, embCol: String,
+      id: String): DataFrame =
+    cands.filter(col(id) =!= col("query_id"))
+      .withColumn("sim", cosine_sim(col(embCol), col("q_emb")))
+
+  /** The exact tail every serve path ends in, batch and streaming:
+    * [[scoreExact]] then [[topKPerQuery]]. Paths differ only in the
+    * candidate source feeding it (all pairs, IVF cells, LSH buckets, a
+    * PQ shortlist). */
+  private[graft] def exactTopK(cands: DataFrame, k: Int, embCol: String,
+      id: String): DataFrame =
+    topKPerQuery(scoreExact(cands, embCol, id), k, id)
+
   /** Brute-force cosine top-k: every query vs every corpus vector.
     * Correctness baseline and the right plan when queries are few —
     * the corpus is scanned once, queries ride along broadcast. */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-      embCol: String = "embedding", id: String = "vec_id"): DataFrame = {
-    val q = queries.select(col(id).as("query_id"), col(embCol).as("q_emb"))
-    val scored = corpus.select(col(id), col(embCol))
-      .crossJoin(broadcast(q))
-      .filter(col(id) =!= col("query_id"))
-      .withColumn("sim", cosine_sim(col(embCol), col("q_emb")))
-    topKPerQuery(scored, k, id)
-  }
+      embCol: String = "embedding", id: String = "vec_id"): DataFrame =
+    exactTopK(corpus.select(col(id), col(embCol))
+      .crossJoin(broadcast(queryFrame(queries, embCol, id))), k, embCol, id)
 
   /** Metadata-FILTERED exact top-k — the production vector-search axis
     * every serving stack needs (top-k among `label = X` / tenant = T /
@@ -335,8 +331,7 @@ object Similarity {
     // fail at plan time: nProbe <= 0 would probe zero cells and surface
     // as an empty result rather than a misconfiguration
     require(nProbe >= 1, s"nProbe must be >= 1, got $nProbe")
-    queries
-      .select(col(id).as("query_id"), col(embCol).as("q_emb"))
+    queryFrame(queries, embCol, id)
       .withColumn("cell", explode(nearest_cells(col("q_emb"), centroids, nProbe)))
   }
 
@@ -351,10 +346,43 @@ object Similarity {
     // measured the whole serve as one task on a 1-file corpus). At
     // scale fileScanWidth ≥ cores and the floor is a no-op — no
     // repartition of a 100 TB corpus sneaks in.
-    val scoredQ = OpUtils.parallelismFloor(cb).join(broadcast(probes), "cell")
-      .filter(col(id) =!= col("query_id"))
-      .withColumn("sim", cosine_sim(col(embCol), col("q_emb")))
-    topKPerQuery(scoredQ, k, id)
+    exactTopK(OpUtils.parallelismFloor(cb).join(broadcast(probes), "cell"),
+      k, embCol, id)
+  }
+
+  /** The one reader of a persisted IVF index's layout (written by
+    * [[buildIvfIndex]] and the maintenance ops): `centroids/` (one row
+    * per cell), the cell-partitioned `corpus/`, and the optional
+    * `tombstones/` id list ([[deleteFromIvfIndex]]). Every read goes
+    * through `OpUtils.readParquet`. The tombstone directory is probed
+    * once per reader, so each operation builds its own. */
+  private[graft] final class IvfIndexReader(spark: SparkSession, path: String) {
+    /** The (cell, centroid) table. */
+    def centroidTable: DataFrame = OpUtils.readParquet(spark, s"$path/centroids")
+
+    /** The coarse quantizer collected in cell order (one driver action). */
+    def centroids: Array[Array[Double]] =
+      centroidTable.orderBy(col("cell")).select(col("centroid"))
+        .collect().map(_.getSeq[Double](0).toArray)
+
+    /** Every stored corpus row, tombstoned ones included. */
+    def stored: DataFrame = OpUtils.readParquet(spark, s"$path/corpus")
+
+    /** The tombstoned ids (duplicates possible), if any delete landed. */
+    lazy val tombstones: Option[DataFrame] = {
+      val dir = s"$path/tombstones"
+      if (IndexFs.exists(IndexFs.fs(spark, path), dir))
+        Some(OpUtils.readParquet(spark, dir))
+      else None
+    }
+
+    /** The live corpus: `scope` applied to the stored rows, then the
+      * tombstoned ids anti-joined out (broadcast — small by the
+      * [[deleteFromIvfIndex]] contract) when any exist. */
+    def live(id: String, scope: DataFrame => DataFrame = identity): DataFrame = {
+      val c = scope(stored)
+      tombstones.fold(c)(t => c.join(broadcast(t.distinct()), Seq(id), "left_anti"))
+    }
   }
 
   /** Build and PERSIST an IVF index: `path/centroids` holds the trained
@@ -409,18 +437,17 @@ object Similarity {
     * broadcast batch ids — no vector bytes are read. */
   def appendToIvfIndex(spark: SparkSession, path: String, batch: DataFrame,
       embCol: String = "embedding", id: String = "vec_id"): Unit = {
-    val fs = IndexFs.fs(spark, path)
+    val idx = new IvfIndexReader(spark, path)
     val batchIds = broadcast(batch.select(col(id)).distinct())
-    if (IndexFs.exists(fs, s"$path/tombstones")) {
-      val t = OpUtils.readParquet(spark, s"$path/tombstones")
-        .join(batchIds, Seq(id), "left_semi").limit(1).collect()
+    idx.tombstones.foreach { tombs =>
+      val t = tombs.join(batchIds, Seq(id), "left_semi").limit(1).collect()
       require(t.isEmpty,
         s"appendToIvfIndex($path): $id ${t.headOption.map(_.get(0))} is " +
           "tombstoned — its old row is still in the corpus, so a re-append " +
           "would be invisible now and dropped for good at the next " +
           "compaction; run compactIvfIndex (or rebuildIvfIndex) first")
     }
-    val dup = OpUtils.readParquet(spark, s"$path/corpus").select(col(id))
+    val dup = idx.stored.select(col(id))
       .join(batchIds, Seq(id), "left_semi").limit(1).collect()
     require(dup.isEmpty,
       s"appendToIvfIndex($path): $id ${dup.headOption.map(_.get(0))} is " +
@@ -436,10 +463,7 @@ object Similarity {
       s"appendToIvfIndex($path): batch contains duplicate $id " +
         s"${batchDup.headOption.map(_.get(0))} — one identity would serve " +
         "two corpus rows; dedup the batch before appending")
-    val centroids = OpUtils.readParquet(spark, s"$path/centroids")
-      .orderBy(col("cell")).select(col("centroid"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    batch.withColumn("cell", cellOf(centroids)(col(embCol)))
+    batch.withColumn("cell", cellOf(idx.centroids)(col(embCol)))
       .write.mode("append").partitionBy("cell").parquet(s"$path/corpus")
   }
 
@@ -505,15 +529,8 @@ object Similarity {
     // fall through to the raw append's loud compact-then-reappend
     // refusal — an all-stored no-op here would silently swallow the new
     // vectors while serving anti-joins the old ones out
-    val stored = OpUtils.readParquet(spark, s"$path/corpus")
-      .select(col(id)).distinct()
-      .join(broadcast(batchIds), Seq(id), "left_semi")
-    val tombDir = s"$path/tombstones"
-    val live =
-      if (IndexFs.exists(fs, tombDir))
-        stored.join(broadcast(OpUtils.readParquet(spark, tombDir).distinct()),
-          Seq(id), "left_anti")
-      else stored
+    val live = new IvfIndexReader(spark, path).live(id,
+      _.select(col(id)).distinct().join(broadcast(batchIds), Seq(id), "left_semi"))
     if (live.count() == nBatch) {
       require(IndexFs.exists(fs, marker),
         s"appendToIvfIndexIdempotent($path): every batch id is already " +
@@ -565,13 +582,10 @@ object Similarity {
     // hdfs:// (or file://) index root works — see IndexFs for the S3
     // rename caveat
     val fs = IndexFs.fs(spark, path)
-    val tombDir = s"$path/tombstones"
-    if (!IndexFs.exists(fs, tombDir)) return
+    val idx = new IvfIndexReader(spark, path)
+    if (idx.tombstones.isEmpty) return
     val tmp = s"$path/corpus.compacting" // crash leftovers overwritten
-    OpUtils.readParquet(spark, s"$path/corpus")
-      .join(broadcast(OpUtils.readParquet(spark, tombDir).distinct()),
-        Seq(id), "left_anti")
-      .write.mode("overwrite").partitionBy("cell").parquet(tmp)
+    idx.live(id).write.mode("overwrite").partitionBy("cell").parquet(tmp)
     // an all-rows-tombstoned compaction writes a part-file-less dir that
     // every later read would REJECT (no footers to infer a schema from)
     // — refuse and keep the servable tombstoned state instead of
@@ -588,7 +602,7 @@ object Similarity {
     if (IndexFs.exists(fs, old)) IndexFs.delete(fs, old)
     IndexFs.rename(fs, corpus, old)
     IndexFs.rename(fs, tmp, corpus)
-    IndexFs.delete(fs, tombDir) // last: crash above never resurrects
+    IndexFs.delete(fs, s"$path/tombstones") // last: crash above never resurrects
     IndexFs.delete(fs, old)
   }
 
@@ -623,20 +637,12 @@ object Similarity {
   def rebuildIvfIndex(spark: SparkSession, path: String,
       embCol: String = "embedding", id: String = "vec_id"): Unit = {
     import spark.implicits._
-    val oldCentroids = OpUtils.readParquet(spark, s"$path/centroids")
-      .orderBy(col("cell")).select(col("centroid"))
-      .collect().map(_.getSeq[Double](0).toArray)
+    val idx = new IvfIndexReader(spark, path)
+    val oldCentroids = idx.centroids
     val kClusters = oldCentroids.length
     val dim = oldCentroids.head.length
     val fs = IndexFs.fs(spark, path)
-    val tombDir = s"$path/tombstones"
-    val stored = OpUtils.readParquet(spark, s"$path/corpus").drop("cell")
-    val live =
-      if (IndexFs.exists(fs, tombDir))
-        stored.join(
-          broadcast(OpUtils.readParquet(spark, tombDir).distinct()),
-          Seq(id), "left_anti")
-      else stored
+    val live = idx.live(id, _.drop("cell"))
     // an all-rows-tombstoned rebuild has nothing to train on — refuse
     // BEFORE touching anything, keep the servable tombstoned state
     // (limit-1 probe; rebuilds are rare admin ops)
@@ -665,6 +671,7 @@ object Similarity {
     IndexFs.rename(fs, corpusDir, oldK)
     IndexFs.rename(fs, tmpCentroids, centroidsDir)
     IndexFs.rename(fs, tmpCorpus, corpusDir)
+    val tombDir = s"$path/tombstones"
     if (IndexFs.exists(fs, tombDir)) IndexFs.delete(fs, tombDir)
     IndexFs.delete(fs, oldC)
     IndexFs.delete(fs, oldK)
@@ -685,18 +692,15 @@ object Similarity {
     * the kClusters-row centroid table. No vector bytes are read. */
   def ivfCellStats(spark: SparkSession, path: String,
       id: String = "vec_id"): DataFrame = {
-    val cells = OpUtils.readParquet(spark, s"$path/centroids").select(col("cell"))
-    val corpus = OpUtils.readParquet(spark, s"$path/corpus")
+    val idx = new IvfIndexReader(spark, path)
+    val cells = idx.centroidTable.select(col("cell"))
+    val corpus = idx.stored
     val totals = corpus.groupBy(col("cell")).agg(count(lit(1)).as("n_total"))
-    val fs = IndexFs.fs(spark, path)
-    val tombDir = s"$path/tombstones"
     import spark.implicits._
-    val dead =
-      if (IndexFs.exists(fs, tombDir))
-        corpus.join(broadcast(OpUtils.readParquet(spark, tombDir).distinct()),
-            Seq(id), "left_semi")
-          .groupBy(col("cell")).agg(count(lit(1)).as("n_tomb"))
-      else Seq.empty[(Int, Long)].toDF("cell", "n_tomb")
+    val dead = idx.tombstones.fold(Seq.empty[(Int, Long)].toDF("cell", "n_tomb")) {
+      t => corpus.join(broadcast(t.distinct()), Seq(id), "left_semi")
+        .groupBy(col("cell")).agg(count(lit(1)).as("n_tomb"))
+    }
     cells.join(totals, Seq("cell"), "left")
       .join(dead, Seq("cell"), "left")
       .select(col("cell"),
@@ -765,9 +769,8 @@ object Similarity {
   def ivfTopKFromIndex(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, nProbe: Int = 4,
       embCol: String = "embedding", id: String = "vec_id"): DataFrame = {
-    val centroids = OpUtils.readParquet(spark, s"$path/centroids")
-      .orderBy(col("cell")).select(col("centroid"))
-      .collect().map(_.getSeq[Double](0).toArray)
+    val idx = new IvfIndexReader(spark, path)
+    val centroids = idx.centroids
     // probes materialize once (eager localCheckpoint): both the cell
     // collection below and the scoring join read them, and each read
     // would otherwise re-evaluate the kClusters×dim centroid-similarity
@@ -776,14 +779,8 @@ object Similarity {
       .localCheckpoint(true)
     val probedCells = probes.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted
-    val cb0 = OpUtils.readParquet(spark, s"$path/corpus")
-      .filter(col("cell").isin(probedCells.toIndexedSeq.map(Integer.valueOf): _*))
-    val tombDir = s"$path/tombstones"
-    val cb =
-      if (IndexFs.exists(IndexFs.fs(spark, path), tombDir))
-        cb0.join(broadcast(OpUtils.readParquet(spark, tombDir).distinct()),
-          Seq(id), "left_anti")
-      else cb0
+    val cb = idx.live(id,
+      _.filter(col("cell").isin(probedCells.toIndexedSeq.map(Integer.valueOf): _*)))
     ivfScore(cb, probes, k, embCol, id)
   }
 
@@ -800,10 +797,8 @@ object Similarity {
     val probes = qb.withColumn("probe",
       explode(array(col("q_bucket") +:
         (0 until nPlanes).map(i => col("q_bucket").bitwiseXOR(lit(1 << i))): _*)))
-    val scored = cb.join(broadcast(probes), col("bucket") === col("probe"))
-      .filter(col(id) =!= col("query_id"))
-      .withColumn("sim", cosine_sim(col(embCol), col("q_emb")))
-    topKPerQuery(scored, k, id)
+    exactTopK(cb.join(broadcast(probes), col("bucket") === col("probe")),
+      k, embCol, id)
   }
 
   /** PQ top-k with Asymmetric Distance Computation — the compressed-
@@ -909,7 +904,7 @@ object Similarity {
     * codeword c) — computed once per query row. */
   private def pqQueryLut(queries: DataFrame, books: Array[Array[Array[Double]]],
       dsub: Int, embCol: String, id: String, keepEmb: Boolean = false): DataFrame = {
-    val withLut = queries.select(col(id).as("query_id"), col(embCol).as("q_emb"))
+    val withLut = queryFrame(queries, embCol, id)
       .withColumn("lut", pq_lut(col("q_emb"), books, dsub))
     if (keepEmb) withLut else withLut.drop("q_emb")
   }
@@ -943,12 +938,9 @@ object Similarity {
     val shortlist = scored.groupBy(col("query_id"))
       .agg(top_k_by_sim(col(id), col("adc_sim"), k * rerank).as("topk"))
       .select(col("query_id"), explode(col("topk.neighbor_id")).as(id))
-    val qe = queries.select(col(id).as("query_id"), col(embCol).as("q_emb"))
-    val exact = broadcast(shortlist)
+    exactTopK(broadcast(shortlist)
       .join(corpus.select(col(id), col(embCol)), id)
-      .join(broadcast(qe), "query_id")
-      .withColumn("sim", cosine_sim(col(embCol), col("q_emb")))
-    topKPerQuery(exact, k, id)
+      .join(broadcast(queryFrame(queries, embCol, id)), "query_id"), k, embCol, id)
   }
 
   /** Multi-table SRP-LSH top-k — the textbook LSH structure: L
@@ -975,13 +967,10 @@ object Similarity {
         .withColumn("tbl", col("tb.tbl")).withColumn("b", col("tb.b")).drop("tb")
     }
     val cb = buckets(corpus.select(col(id), col(embCol)))
-    val qb = buckets(queries.select(col(id).as("query_id"), col(embCol).as("q_emb"))
-      .withColumnRenamed("q_emb", embCol))
+    val qb = buckets(queries.select(col(id).as("query_id"), col(embCol)))
       .withColumnRenamed(embCol, "q_emb")
     val cands = cb.join(broadcast(qb), Seq("tbl", "b"))
-      .filter(col(id) =!= col("query_id"))
       .dropDuplicates("query_id", id) // union over tables
-      .withColumn("sim", cosine_sim(col(embCol), col("q_emb")))
-    topKPerQuery(cands, k, id)
+    exactTopK(cands, k, embCol, id)
   }
 }

@@ -273,7 +273,7 @@ object Streaming {
 
     // streaming ANN serving: arriving query vectors probe the prebuilt
     // IVF index (llm45's lifecycle, online) — stream-static cell join +
-    // typed top-k heap state, one k-row heap per query. The drained
+    // TopKSimAgg state, one k-row buffer per query. The drained
     // result passes the same exactness/recall gate as the batch paths
     QDef("str12_stream_knn", Llm.annGateOracle(10)) { (s, dir) =>
       val emb = graft.Tables.load(s, dir, "embeddings")

@@ -243,24 +243,16 @@ object StreamOps {
     * projection against the broadcast centroid literals; candidates
     * come from a stream-static equi-join on the cell id (the static
     * corpus side is materialized once — an un-checkpointed static plan
-    * re-reads the index every micro-batch); per-query top-k runs as a
-    * typed k-bounded heap aggregation (`TopKBySim`) because window
-    * ranking is not available on streams — state is one k-row heap per
-    * query key, emitted in complete mode. Ties and ordering match the
-    * batch formulation (heap/window equivalence is spec-pinned). */
+    * re-reads the index every micro-batch); the exact tail is the batch
+    * serve paths' own (`Similarity.exactTopK`): per-query top-k runs as
+    * the k-bounded native aggregate (`TopKSimAgg`) because window
+    * ranking is not available on streams — state is one k-row buffer
+    * per query key, emitted in complete mode. Rows, ties and ordering
+    * equal `Similarity.ivfTopKFromIndex` (spec-pinned). */
   def ivfKnnStream(spark: SparkSession, path: String, queries: DataFrame,
-      k: Int, nProbe: Int): DataFrame = {
-    import spark.implicits._
-    val agg = new graft.functions.Udfs.TopKBySim(k).toColumn
-    ivfScoredStream(spark, path, queries, nProbe)
-      .groupByKey(_._1)
-      .mapValues(r => (r._2, r._3))
-      .agg(agg.name("topk"))
-      .flatMap { case (qid, tops) =>
-        tops.zipWithIndex.map { case ((nid, sim), i) => (qid, nid, sim, i + 1) }
-      }
-      .toDF("query_id", "neighbor_id", "sim", "rank")
-  }
+      k: Int, nProbe: Int): DataFrame =
+    graft.ops.Similarity.exactTopK(ivfCandidateStream(spark, path, queries, nProbe),
+      k, "embedding", "vec_id")
 
   /** Streaming token-budget ingestion gate — the arrival-order twin of
     * `TextAnalysis.tokenBudgetMixture`: each group (source/language)
@@ -324,7 +316,7 @@ object StreamOps {
     * serving deployment instead keeps one `ValueState` heap per query
     * with a processing-time TTL, so keys idle past `ttl` are evicted
     * from the state store (expiry is spec-pinned: state row counts DROP
-    * after the TTL elapses). Ordering matches `TopKBySim` exactly
+    * after the TTL elapses). Ordering matches `TopKSimAgg` exactly
     * ((sim desc, neighbor_id asc), k-bounded), so a re-queried key
     * rebuilds the same heap the aggregate would hold. Update mode:
     * each batch emits the refreshed top-k of the keys it touched. */
@@ -358,7 +350,10 @@ object StreamOps {
   def ivfKnnStreamTtl(spark: SparkSession, path: String, queries: DataFrame,
       k: Int, nProbe: Int, ttl: java.time.Duration): DataFrame = {
     import spark.implicits._
-    ivfScoredStream(spark, path, queries, nProbe)
+    graft.ops.Similarity.scoreExact(
+        ivfCandidateStream(spark, path, queries, nProbe), "embedding", "vec_id")
+      .select(col("query_id"), col("vec_id"), col("sim"))
+      .as[(Long, Long, Double)]
       .groupByKey(_._1)
       .mapValues(r => (r._2, r._3))
       .transformWithState(new TopKTtlProcessor(k, ttl),
@@ -366,28 +361,19 @@ object StreamOps {
       .toDF("query_id", "neighbor_id", "sim", "rank")
   }
 
-  /** The shared probe/score stage of the streaming ANN serving paths:
-    * arriving query vectors against a prebuilt IVF index → (query_id,
-    * neighbor_id, sim) candidate scores. */
-  private def ivfScoredStream(spark: SparkSession, path: String,
-      queries: DataFrame, nProbe: Int): Dataset[(Long, Long, Double)] = {
-    import spark.implicits._
-    import graft.functions.VectorFunctions.cosine_sim
-    val centroids = spark.read.parquet(s"$path/centroids")
-      .orderBy(col("cell")).select(col("centroid"))
-      .collect().map(_.getSeq[Double](0).toArray)
-    val cb = spark.read.parquet(s"$path/corpus")
-      .select(col("vec_id"), col("embedding"), col("cell"))
+  /** The shared candidate source of the streaming ANN serving paths:
+    * arriving query vectors probe a prebuilt IVF index's LIVE corpus
+    * (tombstoned ids excluded, as `ivfTopKFromIndex` serves) → unscored
+    * (query, candidate) pairs for `Similarity.scoreExact`. */
+  private def ivfCandidateStream(spark: SparkSession, path: String,
+      queries: DataFrame, nProbe: Int): DataFrame = {
+    import graft.ops.Similarity
+    val idx = new Similarity.IvfIndexReader(spark, path)
+    val centroids = idx.centroids
+    val cb = idx.live("vec_id", _.select(col("vec_id"), col("embedding"), col("cell")))
       .localCheckpoint(true)
-    val probes = queries
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-      .withColumn("cell", explode(
-        graft.functions.VectorFunctions.nearest_cells(col("q_emb"), centroids, nProbe)))
-    probes.join(cb, "cell")
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim", cosine_sim(col("embedding"), col("q_emb")))
-      .select(col("query_id"), col("vec_id"), col("sim"))
-      .as[(Long, Long, Double)]
+    Similarity.ivfProbes(queries, centroids, nProbe, "embedding", "vec_id")
+      .join(cb, "cell")
   }
 
   /** Streaming span-duplication scoring: each ARRIVING document is

@@ -401,16 +401,6 @@ class LlmOpsSpec extends SparkTestBase {
     assert(got == expect)
   }
 
-  test("aggregator-heap top-k equals window top-k") {
-    val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    val queries = emb.filter($"vec_id" % 100 === 0)
-    val win = Similarity.bruteForceTopK(emb, queries, k = 7)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    val agg = Similarity.bruteForceTopKAgg(emb, queries, k = 7)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    assert(agg == win)
-  }
-
   test("text analysis: token stats, quality bounds, langid determinism") {
     val stats = TextAnalysis.tokenStats(docs)
     assert(stats.filter($"n_tokens" =!= 40).count() == 0)

@@ -160,6 +160,42 @@ class StreamStateSpec extends SparkTestBase {
     }
   }
 
+  test("ivfKnnStream never serves a tombstoned id and equals the batch lookup") {
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val rnd = new scala.util.Random(7)
+    val emb = (0L until 200L).map(i => (i, Array.fill(8)(rnd.nextFloat() * 2 - 1)))
+      .toDF("vec_id", "embedding")
+    val idx = java.nio.file.Files.createTempDirectory("tomb-ivf").toString
+    graft.ops.Similarity.buildIvfIndex(emb, idx, kClusters = 4, dim = 8)
+    val queries = emb.filter(col("vec_id") % 20 === 0)
+    def batchLookup() = graft.ops.Similarity
+      .ivfTopKFromIndex(spark, idx, queries, k = 3, nProbe = 2)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      .toSet
+    // delete a neighbor the index serves right now, so a stream that
+    // reads the raw corpus would surface it
+    val victim = batchLookup().filter(_._4 == 1).minBy(_._1)._2
+    graft.ops.Similarity.deleteFromIvfIndex(spark, idx, Seq(victim).toDF("vec_id"))
+    val in = MemoryStream[(Long, Array[Float])]
+    val out = StreamOps.ivfKnnStream(spark,
+      idx, in.toDF().toDF("vec_id", "embedding"), k = 3, nProbe = 2)
+    val q = out.writeStream.format("memory").queryName("tomb_ivf")
+      .outputMode("complete").option("checkpointLocation", ckpt("tomb-ivf")).start()
+    try {
+      in.addData(queries.collect().map(r =>
+        (r.getLong(0), r.getSeq[Float](1).toArray)).toIndexedSeq)
+      q.processAllAvailable()
+      val got = spark.table("tomb_ivf")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+        .toSet
+      assert(!got.exists(_._2 == victim),
+        s"tombstoned vec_id $victim was served by the stream: $got")
+      val expected = batchLookup()
+      assert(got.nonEmpty && got == expected,
+        s"streamed top-k must equal the batch lookup after a delete:\n got $got\n exp $expected")
+    } finally q.stop()
+  }
+
   test("tokenBudgetGateStream: budget enforced ACROSS micro-batches; rejected tokens still count") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, String, String)] // (doc_id, lang, text)
