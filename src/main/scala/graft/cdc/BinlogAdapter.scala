@@ -5,17 +5,18 @@ import org.apache.spark.sql.types.StructType
 /** The binlog-format adapter seam. The engine's scan, pushdown,
   * partition-planning, streaming-offset, and schema-synthesis layers
   * consume ONLY this interface's vocabulary, so a wire format is a
-  * pluggable decoder, not an engine fork. Two implementations exist:
-  * [[GcdcAdapter]] (the self-contained test format) and
+  * pluggable decoder, not an engine fork. Three implementations exist:
+  * [[GcdcAdapter]] (the self-contained test format),
   * [[MysqlBinlogAdapter]] (the REAL MySQL binlog v4 byte layout,
-  * decoded pure-JVM in MysqlBinlog.scala — no client library). The
-  * shared vocabulary:
+  * decoded pure-JVM in MysqlBinlog.scala — no client library) and
+  * [[MariaDbAdapter]] (the MariaDB fork of that layout). The shared
+  * vocabulary:
   *
   *   - [[CdcCodec.RawEvent]]: (type, timestamp, payload bytes, byte
   *     offsets). MySQL's 19-byte v4 event header carries exactly these
   *     fields (type_code, timestamp, event_length/next_position —
   *     reference binlog_table_reader.cc:151-154); `pos`/`endPos` are
-  *     the resume/admission offsets, identical in both formats.
+  *     the resume/admission offsets, identical in every format.
   *   - [[RawEventSource]]: sequential event iteration over one log
   *     file after a header check (GCDC: magic+version; MySQL: the
   *     4-byte 0xfe 'b''i''n' magic + the FORMAT_DESCRIPTION event).
@@ -26,41 +27,29 @@ import org.apache.spark.sql.types.StructType
   *     (`Field::unpack`, reference :151-154) where GCDC reads its
   *     self-describing layout. The column-pruning mask (`needed`) and
   *     drift-epoch semantics are format-independent contracts.
-  *   - index enumeration: `mysql-bin.index` and GCDC's `binlog.index`
-  *     share the one-path-per-line format (reference :12-19) —
-  *     [[CdcCodec.readIndex]] already parses both.
+  *   - index enumeration is not part of the seam: `mysql-bin.index`
+  *     and GCDC's `binlog.index` share the one-path-per-line format
+  *     (reference :12-19), which [[CdcCodec.readIndex]] parses for
+  *     every format.
   *
   * Each format plugs in as ONE [[BinlogFormatAdapter]] implementation:
   * no partition planner, pushdown rule, or streaming-offset change.
   * The `binlogFormat` source option selects the adapter by name (see
   * [[BinlogFormats]]).
   *
-  * '''The production deployment seam — live replication-protocol
-  * ingestion.''' Both the reference and this engine are FILE-based:
-  * they read binlog files someone ships (the reference from inside
-  * mysqld's own datadir, this engine from any Hadoop-addressable root
-  * — see [[LogFs]]). The mode a production CDC user asks for first is
-  * LIVE ingestion: connect to mysqld as a replica — `COM_REGISTER_SLAVE`
-  * + `COM_BINLOG_DUMP_GTID` over the client protocol — and consume the
-  * event stream the server pushes, no file shipping at all (the
-  * Debezium deployment shape). That mode is a FOURTH implementation of
-  * exactly this interface, not an engine change: the wire frames the
-  * replica receives are the same v4 events [[MysqlBinlog]] already
-  * decodes (each prefixed by one status byte), so `open` becomes a
-  * socket-backed [[RawEventSource]], `readIndex`/`filesMeta` enumerate
-  * server binlogs via `SHOW BINARY LOGS` / the dump position instead
-  * of an index file, `lastCompleteOffset` is the stream's
-  * acknowledged position, and the row decode is reused verbatim.
-  * The PROTOCOL layer of that plug is implemented and spec-pinned:
-  * [[MysqlReplica]] speaks the public client/server wire (protocol-41
-  * handshake, `mysql_native_password` scramble, `COM_REGISTER_SLAVE`,
-  * `COM_BINLOG_DUMP_GTID`) and returns the dump as a
-  * [[RawEventSource]] through the SAME [[MysqlBinlog.EventReader]] the
-  * file path uses — byte-for-byte parity with the file reader is
-  * pinned against the loopback [[FakeMysqld]] stand-in. What remains
-  * is deployment work (no mysqld exists in this offline build
-  * environment): pointing it at a real endpoint and the DSv2 adapter
-  * wiring above; see DESIGN.md "The replication-protocol seam".
+  * '''Live replication ingestion.''' The scan is FILE-based, like the
+  * reference: it reads binlog files someone ships (from any
+  * Hadoop-addressable root — see [[LogFs]]). Live ingestion connects
+  * to mysqld as a replica instead (`COM_REGISTER_SLAVE` +
+  * `COM_BINLOG_DUMP_GTID`, the Debezium deployment shape), and it
+  * needs no further adapter: [[MysqlReplica]] speaks the client/server
+  * wire and returns the dump as a [[RawEventSource]] through the same
+  * [[MysqlBinlog.EventReader]] the file path uses (byte parity pinned
+  * against the loopback [[FakeMysqld]]). `graft.sources.ReplicaTail`
+  * lands those event bytes as binlog files plus a `mysql-bin.index`,
+  * then reads the landed files through [[MysqlBinlogAdapter]] with the
+  * distributed fan-out decode. See DESIGN.md "The replication-protocol
+  * seam".
   */
 trait RawEventSource extends Iterator[CdcCodec.RawEvent] with AutoCloseable
 
@@ -71,23 +60,23 @@ trait CdcRowDecoder {
   def decode(ev: CdcCodec.RawEvent): Seq[CdcCodec.CdcRow]
 }
 
-/** One pluggable binlog format: index enumeration + per-file event
-  * iteration + stateful row decode, plus the format-dependent offsets
+/** One pluggable binlog format: per-file event iteration + stateful
+  * row decode + per-file metadata, plus the format-dependent offsets
   * the scan/streaming layers need (file header length, row-event type
   * test, torn-tail boundary, schema inference). */
 trait BinlogFormatAdapter {
   /** Byte offset of the first event (GCDC: 8-byte magic+version;
     * MySQL: the 4-byte 0xfe 'b' 'i' 'n' magic). */
   def headerLen: Long
-  def readIndex(indexFile: String): Seq[String]
   def open(path: String): RawEventSource
   def decoder(targetDb: String, targetTable: String,
       needed: Int => Boolean = _ => true,
       expectedSchema: Option[StructType] = None,
       driftEpochs: Boolean = false): CdcRowDecoder
   /** Does this event type carry row images (vs control state)? The
-    * partition reader uses this to skip out-of-range row events without
-    * decoding while still replaying control events for state. */
+    * byte-range rule (`CdcPartitionReader.rangeEvents`) uses this to skip
+    * row events before a range's start without decoding them, while
+    * still replaying control events for state. */
   def isRowEvent(tpe: Byte): Boolean
   /** Offset of the last COMPLETE event — the streaming admission
     * boundary (a producer's in-flight append may leave a torn tail). */
@@ -100,7 +89,9 @@ trait BinlogFormatAdapter {
     * log-close sidecars; MySQL derives gtid bounds from consecutive
     * files' PREVIOUS_GTIDS events — the format's OWN metadata, so
     * gtid-range scans prune files on a real binlog with nothing extra
-    * written. */
+    * written. A batch scan calls it once (`graft.sources.CdcLogSnapshot`)
+    * and answers aggregate and OFFSET pushdown from its per-table stats
+    * only, so formats whose metadata has none decline both. */
   def filesMeta(files: Seq[String]): Seq[Option[CdcCodec.FileMeta]]
   /** (db, table) pairs for catalog listing. Both formats re-emit
     * TABLE_MAP per transaction, so the NEWEST file names every table
@@ -152,8 +143,6 @@ trait FixtureSink extends AutoCloseable {
 /** The built-in GCDC format behind the adapter interface. */
 object GcdcAdapter extends BinlogFormatAdapter {
   override def headerLen: Long = CdcCodec.HeaderLen.toLong
-  override def readIndex(indexFile: String): Seq[String] =
-    CdcCodec.readIndex(indexFile)
   override def open(path: String): RawEventSource =
     new CdcCodec.EventReader(path)
   override def decoder(targetDb: String, targetTable: String,

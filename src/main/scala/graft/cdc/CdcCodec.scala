@@ -696,7 +696,12 @@ object CdcCodec {
     * a deployment caches (path, length) → boundary. */
   def lastCompleteOffset(path: String): Long = {
     if (LogFs.lenOrZero(path) < HeaderLen) return HeaderLen.toLong
-    val r = new EventReader(path)
+    val r = try new EventReader(path) catch {
+      // shrank below its header after the length check (a producer
+      // rewriting the file): the short-file answer above; the stream's
+      // monotonic guard keeps its offset until the file is whole again
+      case _: java.io.EOFException => return HeaderLen.toLong
+    }
     try {
       var end = HeaderLen.toLong
       while (r.hasNext) end = r.next().endPos

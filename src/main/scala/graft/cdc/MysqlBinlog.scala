@@ -376,6 +376,10 @@ object MysqlBinlog {
       this(LogFs.open(path), path, maria)
     try {
       val m = in.readNBytes(MagicLen)
+      // cut inside the magic: a truncated log (a producer mid-rewrite),
+      // not a foreign file — lastCompleteOffset reads it as empty
+      if (m.length < MagicLen)
+        throw new EOFException(s"$path: ends inside its magic")
       // encrypted binlogs (binlog_encryption=ON, MySQL 8.0.14+) carry
       // their own magic 0xFD62696E ('.bin') ahead of an encryption
       // header — everything after it is ciphertext only the server's
@@ -387,7 +391,7 @@ object MysqlBinlog {
             "0xFD62696E): the event stream is ciphertext under the server's " +
             "keyring; decrypt on the producer side or disable " +
             "binlog_encryption for logs this reader consumes")
-      require(m.length == MagicLen && java.util.Arrays.equals(m, Magic),
+      require(java.util.Arrays.equals(m, Magic),
         s"$path: not a MySQL binlog (bad magic)")
     } catch {
       // constructor throws escape before any caller can close() —
@@ -506,7 +510,12 @@ object MysqlBinlog {
     * point past it. */
   def lastCompleteOffset(path: String, maria: Boolean = false): Long = {
     if (LogFs.lenOrZero(path) < MagicLen) return MagicLen.toLong
-    val r = new EventReader(path, maria)
+    val r = try new EventReader(path, maria) catch {
+      // shrank below its magic after the length check (a producer
+      // rewriting the file): the short-file answer above; the stream's
+      // monotonic guard keeps its offset until the file is whole again
+      case _: EOFException => return MagicLen.toLong
+    }
     try {
       var end = MagicLen.toLong
       while (r.hasNext) end = r.next().endPos
@@ -1995,7 +2004,7 @@ object MysqlBinlog {
   /** `a` minus `b` over sorted disjoint [start, end) interval lists.
     * Two-pointer merge, O(|a| + |b|): the earlier nested-loop form was
     * O(|a|·|b|), and it runs at PLANNING time on the driver
-    * (CdcScan.planInputPartitions → filesMeta → fileGtidBounds) — with
+    * (a batch scan's CdcLogSnapshot → filesMeta → fileGtidBounds) — with
     * a gappy executed set (tens of thousands of intervals per
     * PREVIOUS_GTIDS) the quadratic subtract was ~70% of cdc21's
     * steady-state wall (r17 jstack sampling). Semantics unchanged:
@@ -3147,13 +3156,11 @@ object MysqlBinlog {
 
 /** The MySQL binlog v4 format behind the [[BinlogFormatAdapter]] seam —
   * select with `.option("binlogFormat", "mysql")` on the `binlogcdc`
-  * source. Index enumeration shares [[CdcCodec.readIndex]] (the
-  * `mysql-bin.index` one-path-per-line format is identical,
-  * /root/reference/binlog_table_reader.cc:12-19). */
+  * source. Its `mysql-bin.index` is read by [[CdcCodec.readIndex]],
+  * like every format's index (the one-path-per-line format is
+  * identical, reference binlog_table_reader.cc:12-19). */
 object MysqlBinlogAdapter extends BinlogFormatAdapter {
   override def headerLen: Long = MysqlBinlog.MagicLen.toLong
-  override def readIndex(indexFile: String): Seq[String] =
-    CdcCodec.readIndex(indexFile)
   override def open(path: String): RawEventSource =
     new MysqlBinlog.EventReader(path)
   override def decoder(targetDb: String, targetTable: String,
@@ -3167,8 +3174,8 @@ object MysqlBinlogAdapter extends BinlogFormatAdapter {
       tpe == MysqlBinlog.EventType.UpdateRowsV2 ||
       tpe == MysqlBinlog.EventType.DeleteRowsV2 ||
       // PARTIAL_JSON updates are row events too — classifying type 39
-      // as control would silently DISCARD its decoded pairs (the
-      // partition reader only queues rows from isRowEvent types)
+      // as control would replay it before a range's start, re-emitting
+      // pairs an earlier range (micro-batch) already delivered
       tpe == MysqlBinlog.EventType.PartialUpdateRows ||
       // a compressed transaction carries row events (the partition
       // reader must treat its decode output as rows, and byte-range
@@ -3203,8 +3210,6 @@ object MysqlBinlogAdapter extends BinlogFormatAdapter {
   * fails loud at the FDE version string, and vice versa. */
 object MariaDbAdapter extends BinlogFormatAdapter {
   override def headerLen: Long = MysqlBinlog.MagicLen.toLong
-  override def readIndex(indexFile: String): Seq[String] =
-    CdcCodec.readIndex(indexFile)
   override def open(path: String): RawEventSource =
     new MysqlBinlog.EventReader(path, maria = true)
   override def decoder(targetDb: String, targetTable: String,

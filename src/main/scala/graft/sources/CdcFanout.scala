@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.cdc.{BinlogFormats, CdcSchema}
+import graft.cdc.{BinlogFormats, CdcCodec, CdcSchema}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -65,19 +65,9 @@ object CdcFanout {
   def materializeTables(spark: SparkSession, indexFile: String,
       tables: Seq[(String, String)], outRoot: String,
       format: String = "gcdc"): Map[(String, String), String] = {
-    require(tables.nonEmpty, "cdcFanout: no tables requested")
-    require(tables.distinct.length == tables.length,
-      s"cdcFanout: duplicate table in $tables")
     val adapter = BinlogFormats.forName(format)
-    val targets: Seq[(String, String, StructType)] = tables.map {
-      case (db, tbl) =>
-        val src = adapter.inferSourceSchema(indexFile, db, tbl).getOrElse {
-          throw new IllegalArgumentException(
-            s"cdcFanout: no TABLE_MAP for $db.$tbl found in CDC log $indexFile")
-        }
-        (db, tbl, src)
-    }
-    val files = adapter.readIndex(indexFile)
+    val targets = resolveTargets(adapter, indexFile, tables)
+    val files = CdcCodec.readIndex(indexFile)
     require(files.nonEmpty, s"cdcFanout: empty CDC log index $indexFile")
 
     decodeToStaging(spark, format, targets,
@@ -127,12 +117,11 @@ object CdcFanout {
 
   /** The ONE decode pass: walk each `(path, startPos, endPos)` range
     * once, feeding every event to all N per-table decoders, and land
-    * the union-schema staging frame at `dest`. Row events below
-    * `startPos` are byte-skipped WITHOUT decode (already-consumed
-    * prefix — the incremental path), control events always replay
-    * (TABLE_MAP/GTID state, exactly the batch scan's range semantics),
-    * and iteration stops at `endPos` (the torn-tail admission
-    * boundary). */
+    * the union-schema staging frame at `dest`. The range follows the
+    * batch scan's rule ([[CdcPartitionReader.rangeEvents]]): row events
+    * below `startPos` are skipped without decode (already-consumed
+    * prefix — the incremental path), control events always replay, and
+    * iteration stops at `endPos` (the torn-tail admission boundary). */
   private def decodeToStaging(spark: SparkSession, format: String,
       targets: Seq[(String, String, StructType)],
       ranges: Seq[(String, Long, Long)], dest: String): Unit = {
@@ -152,31 +141,28 @@ object CdcFanout {
           val tblKeys = serTargets.map { case (db, tbl, _) =>
             UTF8String.fromString(s"$db.$tbl")
           }
-          val events = ad.open(path)
+          val src = ad.open(path)
           Option(org.apache.spark.TaskContext.get())
-            .foreach(_.addTaskCompletionListener[Unit](_ => events.close()))
-          events.takeWhile(_.pos < endPos).flatMap { ev =>
-            if (ad.isRowEvent(ev.tpe) && ev.pos < startPos) Nil
-            else {
-              var out = List.empty[InternalRow]
-              var i = nSlots - 1
-              while (i >= 0) {
-                // ONE walk: control events update every decoder's state;
-                // a row event decodes once (owner), byte-skips elsewhere
-                decs(i).decode(ev).foreach { r =>
-                  val vals = new Array[Any](5 + nSlots)
-                  vals(0) = r.op
-                  vals(1) = r.gtid
-                  vals(2) = r.tmMicros
-                  vals(3) = r.sourceId
-                  vals(4) = tblKeys(i)
-                  vals(5 + i) = new GenericInternalRow(r.values)
-                  out ::= new GenericInternalRow(vals)
-                }
-                i -= 1
+            .foreach(_.addTaskCompletionListener[Unit](_ => src.close()))
+          CdcPartitionReader.rangeEvents(ad, src, startPos, endPos).flatMap { ev =>
+            var out = List.empty[InternalRow]
+            var i = nSlots - 1
+            while (i >= 0) {
+              // ONE walk: control events update every decoder's state;
+              // a row event decodes once (owner), byte-skips elsewhere
+              decs(i).decode(ev).foreach { r =>
+                val vals = new Array[Any](5 + nSlots)
+                vals(0) = r.op
+                vals(1) = r.gtid
+                vals(2) = r.tmMicros
+                vals(3) = r.sourceId
+                vals(4) = tblKeys(i)
+                vals(5 + i) = new GenericInternalRow(r.values)
+                out ::= new GenericInternalRow(vals)
               }
-              out
+              i -= 1
             }
+            out
           }
         }
       }
@@ -253,7 +239,7 @@ object CdcFanout {
       IndexFs.listNames(fs, d).filter(_.startsWith(s"seq$n-"))
         .foreach(f => IndexFs.delete(fs, s"$d/$f"))
     }
-    val ranges = adapter.readIndex(indexFile).flatMap { f =>
+    val ranges = CdcCodec.readIndex(indexFile).flatMap { f =>
       val start = committed.getOrElse(f, adapter.headerLen)
       // length fast-path: a consumed file that has not GROWN is skipped
       // without the O(file) lastCompleteOffset event walk — otherwise

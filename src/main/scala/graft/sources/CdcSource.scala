@@ -5,7 +5,7 @@ import java.util
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import graft.cdc.{BinlogFormats, CdcCodec, CdcSchema}
+import graft.cdc.{BinlogFormatAdapter, BinlogFormats, CdcCodec, CdcSchema, RawEventSource}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -72,9 +72,10 @@ object CdcTableProvider {
     (req("indexFile"), req("database"), req("table"))
   }
 
-  /** The wire format behind the index file: `gcdc` (default) or
-    * `mysql` (real binlog v4, MysqlBinlog.scala). Validated here so a
-    * typo fails at planning, not inside an executor. */
+  /** The wire format behind the index file: `gcdc` (default), `mysql`
+    * (real binlog v4, MysqlBinlog.scala) or `mariadb` (the MariaDB fork
+    * of v4). Validated here so a typo fails at planning, not inside an
+    * executor. */
   def formatName(options: CaseInsensitiveStringMap): String = {
     val f = Option(options.get("binlogFormat")).getOrElse("gcdc")
     BinlogFormats.forName(f) // fail loud on unknown names
@@ -173,9 +174,14 @@ class CdcScanBuilder(indexFile: String, db: String, table: String, full: StructT
   // pushFilters (e.g. the streaming path)
   private var pushed: Array[Filter] = baseFilters
   private var limit: Option[Int] = None
-  private var offset: Option[Long] = None
+  // the pushed OFFSET, with the per-file stats it was accepted on
+  private var offset: Option[(Long, Seq[Option[CdcCodec.TableStats]])] = None
   // resolved (value, type) per pushed aggregate expression, in order
   private var aggResult: Option[Seq[(Any, org.apache.spark.sql.types.DataType)]] = None
+  // this scan's one view of the log: pushdown decides from it, and the
+  // built CdcScan plans from the same object
+  private val snapshot = new CdcLogSnapshot(indexFile, format)
+  private lazy val tableStats = snapshot.tableStats(db, table)
 
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val (ours, theirs) = filters.partition(EnvelopePredicate.supports)
@@ -203,33 +209,17 @@ class CdcScanBuilder(indexFile: String, db: String, table: String, full: StructT
     * the log touches metadata for the prefix, not bytes. Declined
     * honestly whenever exactness can't be guaranteed: pushed filters
     * (post-filter skip isn't precomputable from row counts), a pushed
-    * limit (Spark composes them above instead), or any file lacking a
-    * v2 per-table sidecar. */
+    * limit (Spark composes them above instead), or any file whose
+    * metadata lacks v2 per-table row counts. */
   override def pushOffset(o: Int): Boolean = {
     // aggResult guard: Spark pushes aggregates BEFORE limit/offset — an
     // accepted offset over an already-pushed aggregate would be silently
     // dropped by CdcAggScan (sidecarAgg's offset.isEmpty only covers the
     // reverse order)
     val ok = pushed.isEmpty && limit.isEmpty && aggResult.isEmpty &&
-      perFileRows.isDefined
-    if (ok) offset = Some(o.toLong)
+      tableStats.isDefined
+    if (ok) offset = tableStats.map((o.toLong, _))
     ok
-  }
-
-  /** (file, output rows of this table) for every log file in index
-    * order, iff every file has a v2 sidecar; files that never mention
-    * the table count 0. Row counts are output-row semantics (updates
-    * count twice), same as the COUNT(*) pushdown. */
-  private lazy val perFileRows: Option[Seq[(String, Long)]] = {
-    val files = CdcCodec.readIndex(indexFile)
-    if (files.isEmpty) None
-    else {
-      val metas = files.map(CdcCodec.readMeta)
-      if (!metas.forall(_.exists(_.tables.isDefined))) None
-      else Some(files.zip(metas).map { case (f, m) =>
-        f -> m.get.tables.get.get((db, table)).map(_.rows).getOrElse(0L)
-      })
-    }
   }
 
   /** COMPLETE aggregate pushdown from v2 sidecar metadata: an
@@ -240,30 +230,17 @@ class CdcScanBuilder(indexFile: String, db: String, table: String, full: StructT
     * __gtid is the CDC high-water-mark query. Declined honestly
     * (reference anti-lesson) whenever anything could change the answer:
     * pushed filters, a pushed limit, GROUP BY, an unsupported aggregate,
-    * or any file lacking v2 per-table stats. */
-  /** One cached sweep of the per-file sidecars: Some(per-file stats of
-    * this table, for files that mention it) iff every file has a v2
-    * sidecar; None = at least one v1/absent sidecar (cannot push). */
-  private lazy val sidecarStats: Option[Seq[CdcCodec.TableStats]] = {
-    val files = CdcCodec.readIndex(indexFile)
-    if (files.isEmpty) None
-    else {
-      val metas = files.map(CdcCodec.readMeta)
-      if (!metas.forall(_.exists(_.tables.isDefined))) None
-      else Some(metas.flatMap(_.get.tables.get.get((db, table))))
-    }
-  }
-
+    * or any file whose metadata lacks v2 per-table stats. */
   private def sidecarAgg(agg: Aggregation): Option[Seq[(Any, org.apache.spark.sql.types.DataType)]] = {
     import org.apache.spark.sql.types.LongType
     val pushable = pushed.isEmpty && limit.isEmpty && offset.isEmpty &&
       agg.groupByExpressions.isEmpty && agg.aggregateExpressions.nonEmpty
     if (!pushable) return None
-    // memoized: Spark calls supportCompletePushDown and pushAggregation
-    // separately — one driver sweep over the (possibly ~1M) meta files,
-    // not two
-    val stats = sidecarStats match {
-      case Some(s) => s
+    // Spark calls supportCompletePushDown and pushAggregation
+    // separately; both read the one snapshot, whose metadata sweep over
+    // the (possibly ~1M) files runs once
+    val stats = tableStats match {
+      case Some(s) => s.flatten // the files that mention the table
       case None => return None
     }
     val total = stats.map(_.rows).sum
@@ -315,12 +292,36 @@ class CdcScanBuilder(indexFile: String, db: String, table: String, full: StructT
   override def build(): Scan = aggResult match {
     case Some(vals) => new CdcAggScan(db, table, indexFile, vals)
     case None =>
-      // the offset ships WITH the builder's sidecar sweep: planInput-
+      // the scan plans from the snapshot pushdown decided on: planInput-
       // Partitions must not re-read ~1M metas, and a sidecar vanishing
       // between push time and plan time must not shift the skip boundary
-      new CdcScan(indexFile, db, table, full, required, pushed, maxBytesPerTrigger,
-        limit, offset.map(o => (o, perFileRows.get)), driftEpochs, format)
+      new CdcScan(snapshot, db, table, full, required, pushed,
+        maxBytesPerTrigger, limit, offset, driftEpochs)
   }
+}
+
+/** One bounded snapshot of the log for one batch scan, taken lazily:
+  * the index read once and the adapter's metadata for that file list.
+  * Aggregate and OFFSET pushdown and partition planning (re-plans after
+  * a runtime filter included) all derive from it, so a scan never plans
+  * from one metadata source and answers from another. One per scan
+  * object, never shared across queries; streams never force it. */
+private[sources] final class CdcLogSnapshot(val indexFile: String,
+    val format: String) {
+  /** (file, adapter metadata) in index order. */
+  lazy val files: Seq[(String, Option[CdcCodec.FileMeta])] = {
+    val fs = CdcCodec.readIndex(indexFile)
+    fs.zip(BinlogFormats.forName(format).filesMeta(fs))
+  }
+
+  /** Per-file stats of (db, table) aligned with `files` — None for a
+    * file that never mentions the table (zero rows) — iff every file's
+    * metadata carries v2 per-table stats, which only GCDC sidecars
+    * record; None otherwise, and for an empty log. Row counts are
+    * output-row semantics (updates count twice). */
+  def tableStats(db: String, table: String): Option[Seq[Option[CdcCodec.TableStats]]] =
+    if (files.isEmpty || !files.forall(_._2.exists(_.tables.isDefined))) None
+    else Some(files.map(_._2.get.tables.get.get((db, table))))
 }
 
 /** Single-partition scan serving a completely-pushed aggregation
@@ -351,15 +352,16 @@ class CdcAggScan(db: String, table: String, indexFile: String,
 
 final case class CdcAggPartition(values: Array[Any]) extends InputPartition
 
-class CdcScan(indexFile: String, db: String, table: String,
+class CdcScan private[sources] (log: CdcLogSnapshot, db: String, table: String,
     full: StructType, required: StructType, filters: Array[Filter],
     maxBytesPerTrigger: Option[Long] = None, limit: Option[Int] = None,
-    offset: Option[(Long, Seq[(String, Long)])] = None,
-    driftEpochs: Boolean = false, format: String = "gcdc")
+    offset: Option[(Long, Seq[Option[CdcCodec.TableStats]])] = None,
+    driftEpochs: Boolean = false)
     extends Scan with Batch with SupportsReportStatistics
     with SupportsRuntimeFiltering {
 
-  private def adapter = BinlogFormats.forName(format)
+  private def indexFile = log.indexFile
+  private def format = log.format
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -394,43 +396,44 @@ class CdcScan(indexFile: String, db: String, table: String,
   // calls it after planning) — surfaces the pruning story in the UI
   @volatile private var prunedFiles = 0L
 
-  override def planInputPartitions(): Array[InputPartition] = offset match {
-    case Some((o, fileRows)) =>
-      // pushed OFFSET: whole files inside the skipped prefix drop out by
-      // sidecar row count alone; the boundary file carries the residual
-      // skip. Builder guarantees v2 sidecars everywhere and no filters;
-      // the per-file counts were captured at push time (one sweep).
-      var remaining = o
-      val parts = fileRows.flatMap { case (f, rows) =>
-        if (remaining >= rows) { remaining -= rows; None }
-        else {
-          val skip = remaining
-          remaining = 0L
-          Some(CdcInputPartition(f, adapter.headerLen, Long.MaxValue,
-            skip): InputPartition)
+  /** Both branches filter the snapshot's (file, metadata) list, so a
+    * second call — Spark re-plans after a runtime filter — reads no
+    * metadata again. */
+  override def planInputPartitions(): Array[InputPartition] = {
+    val files = log.files
+    // (file, rows of the skipped prefix it still discards)
+    val kept: Seq[(String, Long)] = offset match {
+      case Some((o, stats)) =>
+        // pushed OFFSET: whole files inside the skipped prefix drop out
+        // by row count alone; the boundary file carries the residual
+        // skip. CdcScanBuilder pushed it only with no filters, on the
+        // snapshot's per-file stats (aligned with `files`).
+        var remaining = o
+        files.zip(stats).flatMap { case ((f, _), st) =>
+          val rows = st.fold(0L)(_.rows)
+          if (remaining >= rows) { remaining -= rows; None }
+          else {
+            val skip = remaining
+            remaining = 0L
+            Some(f -> skip)
+          }
         }
-      }.toArray
-      prunedFiles = fileRows.length - parts.length
-      parts
-    case None =>
-      // one adapter call for the whole list: GCDC reads its per-file
-      // sidecars, MySQL derives gtid bounds from consecutive files'
-      // PREVIOUS_GTIDS events — either way, files provably outside the
-      // pushed/runtime filters never open
-      val files = adapter.readIndex(indexFile)
-      val parts = files.zip(adapter.filesMeta(files))
-        .filter { case (_, meta) =>
-          // v2 sidecars prune per-TABLE: a file whose map omits the table
-          // has zero rows for it (skip outright, filters or not), and the
-          // table's own gtid/time bounds are tighter than the file-global
-          // ones in a multi-table log
-          EnvelopePredicate.keepsFile(db, table, allFilters, meta)
-        }
-        .map { case (f, _) =>
-          CdcInputPartition(f, adapter.headerLen, Long.MaxValue): InputPartition
-        }.toArray
-      prunedFiles = files.length - parts.length
-      parts
+      case None =>
+        // GCDC metadata is its per-file sidecars, MySQL's the gtid bounds
+        // of consecutive files' PREVIOUS_GTIDS events — either way, files
+        // provably outside the pushed/runtime filters never open. v2
+        // sidecars prune per-TABLE: a file whose map omits the table has
+        // zero rows for it (skip outright, filters or not), and the
+        // table's own gtid/time bounds are tighter than the file-global
+        // ones in a multi-table log
+        files.collect { case (f, meta)
+            if EnvelopePredicate.keepsFile(db, table, allFilters, meta) => f -> 0L }
+    }
+    prunedFiles = files.length - kept.length
+    val headerLen = BinlogFormats.forName(format).headerLen
+    kept.map { case (f, skip) =>
+      CdcInputPartition(f, headerLen, Long.MaxValue, skip): InputPartition
+    }.toArray
   }
 
   override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
@@ -510,7 +513,9 @@ class CdcPartitionReader(part: CdcInputPartition, db: String, table: String,
     m
   }
   private val predicate = EnvelopePredicate.compile(filters)
-  private val events = adapter.open(part.path)
+  private val src = adapter.open(part.path)
+  private val events =
+    CdcPartitionReader.rangeEvents(adapter, src, part.startPos, part.endPos)
   private val sourceSchema = org.apache.spark.sql.types.StructType(full.fields.take(sourceWidth))
   private val decoder = adapter.decoder(db, table, i => neededMask(i),
     expectedSchema = Some(sourceSchema), driftEpochs = driftEpochs)
@@ -546,20 +551,12 @@ class CdcPartitionReader(part: CdcInputPartition, db: String, table: String,
         }
       }
       var refilled = false
+      // skipped row events never reach here: the metric is decode work,
+      // not reads. Control events decode to no rows (state only).
       while (!refilled && events.hasNext) {
-        val ev = events.next()
-        if (ev.pos >= part.endPos) return false
-        if (adapter.isRowEvent(ev.tpe)) {
-          if (ev.pos >= part.startPos) {
-            eventsDecoded += 1
-            val rows = decoder.decode(ev)
-            if (rows.nonEmpty) { queue = rows.iterator; refilled = true }
-          } // out-of-range row events: skip entirely (no decode cost,
-            // and NOT counted — the metric is decode work, not reads)
-        } else {
-          eventsDecoded += 1
-          decoder.decode(ev) // control event: state only
-        }
+        eventsDecoded += 1
+        val rows = decoder.decode(events.next())
+        if (rows.nonEmpty) { queue = rows.iterator; refilled = true }
       }
       if (!refilled) return false
     }
@@ -585,7 +582,22 @@ class CdcPartitionReader(part: CdcInputPartition, db: String, table: String,
     new GenericInternalRow(out)
   }
 
-  override def close(): Unit = events.close()
+  override def close(): Unit = src.close()
+}
+
+private[sources] object CdcPartitionReader {
+  /** The byte-range rule, in one place: the events of one log file that
+    * a reader of [startPos, endPos) decodes. Control events always pass
+    * (decoder state needs them wherever the range starts); row events
+    * before `startPos` are skipped without decoding (an already-consumed
+    * prefix); iteration stops at the first event at or past `endPos`.
+    * The partition reader and the fan-out decode both read through it;
+    * the caller owns `src` and closes it. */
+  private[sources] def rangeEvents(adapter: BinlogFormatAdapter,
+      src: RawEventSource, startPos: Long,
+      endPos: Long): Iterator[CdcCodec.RawEvent] =
+    src.takeWhile(_.pos < endPos)
+      .filter(ev => ev.pos >= startPos || !adapter.isRowEvent(ev.tpe))
 }
 
 /** Compiles pushed source filters into a predicate over the envelope. */
@@ -841,7 +853,7 @@ class CdcMicroBatchStream(indexFile: String, db: String, table: String,
 
   private val adapter = BinlogFormats.forName(format)
 
-  private def files: Seq[String] = adapter.readIndex(indexFile)
+  private def files: Seq[String] = CdcCodec.readIndex(indexFile)
 
   /** A FRESH query (no checkpoint) starts at the first file the pushed
     * filters cannot prove irrelevant — the same sidecar/PREVIOUS_GTIDS
@@ -900,7 +912,10 @@ class CdcMicroBatchStream(indexFile: String, db: String, table: String,
   }
 
   /** Walk files from `start`, accumulating complete-event bytes until the
-    * budget is spent; always admits at least one event (progress). */
+    * budget is spent; always admits at least one event (progress). The
+    * batch ends at the last admitted event: the first event that does
+    * not fit ends the walk, so no later (smaller) event is admitted
+    * past it — planning spans every byte up to the end offset. */
   private def boundedEnd(start: CdcOffset, budgetBytes: Long): CdcOffset = {
     val fs = files
     var budget = budgetBytes
@@ -914,28 +929,24 @@ class CdcMicroBatchStream(indexFile: String, db: String, table: String,
         // scan event boundaries within [from, fileEnd]
         val r = adapter.open(fs(fi))
         try {
-          var done = false
-          while (!done && r.hasNext) {
+          var torn = false
+          while (!torn && r.hasNext) {
             val ev = r.next()
-            if (ev.endPos > fileEnd) done = true
+            if (ev.endPos > fileEnd) torn = true
             else if (ev.pos >= from) {
               val sz = ev.endPos - ev.pos
-              if (budget >= sz || !admitted) {
-                budget -= sz
-                last = CdcOffset(fi, ev.endPos)
-                admitted = true
-              } else done = true
+              if (admitted && sz > budget) return last
+              budget -= sz
+              last = CdcOffset(fi, ev.endPos)
+              admitted = true
+              if (budget <= 0) return last
             }
-            if (budget <= 0 && admitted) done = true
           }
-          if (budget <= 0) return last
         } finally r.close()
       }
       fi += 1
-      if (fi < fs.length && last.fileIdx < fi && budget > 0) {
-        // advance into the next file only if the budget allows more
-        last = if (admitted) last else CdcOffset(fi, adapter.headerLen)
-      }
+      // nothing admitted yet: the batch starts at the next file's head
+      if (fi < fs.length && !admitted) last = CdcOffset(fi, adapter.headerLen)
     }
     last
   }

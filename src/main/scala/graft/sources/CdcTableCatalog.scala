@@ -70,7 +70,9 @@ class CdcTableCatalog extends TableCatalog with SupportsNamespaces {
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     require(options.get("indexFile") != null && options.get("indexFile").nonEmpty,
       s"catalog '$name': option 'spark.sql.catalog.$name.indexFile' is required")
-    BinlogFormats.forName(Option(options.get("binlogFormat")).getOrElse("gcdc"))
+    // the provider's own resolution, so a bad format or a rowsQuery the
+    // format has no wire event for fails here, not at the first scan
+    CdcTableProvider.rowsQuery(options)
     catalogName = name
     opts = options
   }
@@ -78,8 +80,7 @@ class CdcTableCatalog extends TableCatalog with SupportsNamespaces {
   override def name(): String = catalogName
 
   private def indexFile: String = opts.get("indexFile")
-  private def adapter = BinlogFormats.forName(
-    Option(opts.get("binlogFormat")).getOrElse("gcdc"))
+  private def adapter = BinlogFormats.forName(CdcTableProvider.formatName(opts))
 
   // ------------------------------------------------------------ namespaces
 
@@ -164,8 +165,8 @@ class CdcTableCatalog extends TableCatalog with SupportsNamespaces {
     props.put("database", db)
     props.put("table", tbl)
     extra.foreach { case (k, v) => props.put(k, v) }
-    val rq = opts.getBoolean("rowsQuery", false)
-    new CdcTable(CdcSchema.withEnvelope(src, rowsQuery = rq), props)
+    new CdcTable(CdcSchema.withEnvelope(src,
+      rowsQuery = CdcTableProvider.rowsQuery(opts)), props)
   }
 
   override def createTable(ident: Identifier, schema: StructType,

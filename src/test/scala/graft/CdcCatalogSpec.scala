@@ -208,6 +208,27 @@ class CdcCatalogSpec extends SparkTestBase {
     assert(rows == Seq((9L, "INSERT INTO t VALUES (9, 9.0)")))
   }
 
+  test("catalog resolves binlogFormat and rowsQuery the way the provider does") {
+    // rowsQuery=true needs a statement-text wire event, which gcdc lacks:
+    // the catalog must refuse at initialize, as the provider refuses at
+    // planning — not load a table with a __query column that only fails
+    // at the first scan
+    def msgs(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ msgs(t.getCause)
+    val index = writeGcdcLog()
+    val rq = register(index, "rowsQuery" -> "true")
+    val e1 = intercept[Exception] { spark.sql(s"SHOW NAMESPACES IN $rq").collect() }
+    assert(msgs(e1).mkString(" | ").contains("rowsQuery=true requires"), e1.getMessage)
+    val bad = register(index, "binlogFormat" -> "nope")
+    val e2 = intercept[Exception] { spark.sql(s"SHOW NAMESPACES IN $bad").collect() }
+    assert(msgs(e2).mkString(" | ").contains("unknown binlogFormat 'nope'"), e2.getMessage)
+    // the explicit default reads like the implicit one
+    val cat = register(index, "binlogFormat" -> "gcdc", "rowsQuery" -> "false")
+    val t = spark.sql(s"SELECT * FROM $cat.db.t")
+    assert(!t.columns.contains("__query"))
+    assert(t.count() == 3)
+  }
+
   test("catalog binlogFormat=mariadb: zero-config SQL over a fork log") {
     // listTables / schema inference / load all ride the adapter seam,
     // so a MariaDB log is a plain SQL table too — identity triple in

@@ -68,6 +68,20 @@ class MysqlBinlogSpec extends SparkTestBase {
     assert(ex2.getMessage.contains("bad magic"), ex2.getMessage)
   }
 
+  test("a binlog cut inside its magic reads as truncated, not foreign") {
+    // a producer rewriting the file can leave it this short between
+    // lastCompleteOffset's length check and its open: the open must
+    // fail as EOF (a torn log, offset stays at the header) rather than
+    // as a foreign file, for both flavours
+    val path = s"${tmpDir()}/mysql-bin.000001"
+    Files.write(Paths.get(path), Array[Byte](0xfe.toByte, 'b'))
+    for (maria <- Seq(false, true)) {
+      intercept[java.io.EOFException](new MysqlBinlog.EventReader(path, maria))
+      assert(MysqlBinlog.lastCompleteOffset(path, maria) ==
+        MysqlBinlog.MagicLen.toLong)
+    }
+  }
+
   test("MariaDB binlog fails loud naming the GTID-layer difference") {
     val dir = tmpDir()
     val path = s"$dir/mysql-bin.000001"
@@ -1164,6 +1178,110 @@ class MysqlBinlogSpec extends SparkTestBase {
     val batch = readFmt(mIdx, "mysql").orderBy("__gtid", "__op", "id").collect().toSeq
     assert(streamed == batch,
       "byte-budgeted micro-batches must reassemble the exact batch result")
+  }
+
+  /** Two closed binlogs of `txns` transactions each (BEGIN, TABLE_MAP,
+    * one `rowsPerTxn`-row WRITE_ROWS, XID) for db.t(id, s), ids
+    * 1..2 × txns × rowsPerTxn in log order; returns the index path. */
+  private def twoFileLog(txns: Int, rowsPerTxn: Int): String = {
+    val dir = tmpDir()
+    val schema = StructType(Seq(
+      StructField("id", LongType), StructField("s", StringType)))
+    var gno = 0L
+    Seq("mysql-bin.000001", "mysql-bin.000002").foreach { name =>
+      val w = new MysqlBinlog.Writer(s"$dir/$name", checksum = true)
+      (0 until txns).foreach { _ =>
+        gno += 1
+        val ts = gno * 1000L
+        w.gtid(ts, gno, Sid)
+        w.query(ts, "db", "BEGIN")
+        w.tableMap(ts, 1L, "db", "t", schema)
+        w.writeRows(ts, 1L, schema, (1 to rowsPerTxn).map { i =>
+          val id = (gno - 1) * rowsPerTxn + i
+          Array[Any](id, s"row-$id")
+        })
+        w.xid(ts, gno)
+      }
+      w.close()
+    }
+    Files.writeString(Paths.get(dir, "binlog.index"),
+      "mysql-bin.000001\nmysql-bin.000002\n")
+    s"$dir/binlog.index"
+  }
+
+  test("maxBytesPerTrigger: a micro-batch never plans more than its budget across a file boundary") {
+    import graft.sources.{CdcInputPartition, CdcMicroBatchStream, CdcOffset}
+    import org.apache.spark.sql.connector.read.streaming.ReadLimit
+    // ~99 KB per file: an event that does not fit must END the batch —
+    // admitting the next file's small control events past it would make
+    // planning span the whole first file, refused bytes included
+    val index = twoFileLog(txns = 165, rowsPerTxn = 20)
+    val files = CdcCodec.readIndex(index)
+    val sizes = files.map(f => new java.io.File(f).length)
+    assert(sizes.forall(_ > 90000L), sizes)
+    val largest = files.map { f =>
+      val r = MysqlBinlogAdapter.open(f)
+      try r.map(ev => ev.endPos - ev.pos).max finally r.close()
+    }.max
+    val env = CdcSchema.withEnvelope(StructType(Seq(
+      StructField("id", LongType), StructField("s", StringType))))
+    def stream(budget: Long) = new CdcMicroBatchStream(index, "db", "t",
+      env, env, Array.empty, maxBytesPerTrigger = Some(budget), format = "mysql")
+    def span(s: CdcMicroBatchStream, from: CdcOffset, to: CdcOffset): Long =
+      s.planInputPartitions(from, to).map {
+        case p: CdcInputPartition => p.endPos - p.startPos
+      }.sum
+    val over = (150L to 30000L by 13L).flatMap { budget =>
+      val s = stream(budget)
+      val start = s.initialOffset().asInstanceOf[CdcOffset]
+      val end = s.latestOffset(start, ReadLimit.allAvailable()).asInstanceOf[CdcOffset]
+      val planned = span(s, start, end)
+      if (planned > math.max(budget, largest)) Some(budget -> planned) else None
+    }
+    assert(over.length == 0, s"budgets planned past max(budget, " +
+      s"$largest B largest event); first: ${over.take(5)}")
+    // draining batch by batch still delivers every row exactly once
+    val want = (1L to 2L * 165 * 20).toSeq
+    Seq(150L, 514L, 4096L, 30000L).foreach { budget =>
+      val s = stream(budget)
+      val frontier = s.latestOffset().asInstanceOf[CdcOffset]
+      var at = s.initialOffset().asInstanceOf[CdcOffset]
+      val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
+      while (at != frontier) {
+        val end = s.latestOffset(at, ReadLimit.allAvailable()).asInstanceOf[CdcOffset]
+        assert(end != at, s"budget $budget: no progress at $at")
+        s.planInputPartitions(at, end).foreach { p =>
+          val r = s.createReaderFactory().createReader(p)
+          try while (r.next()) ids += r.get().getLong(0) finally r.close()
+        }
+        at = end
+      }
+      assert(ids.toSeq == want, s"budget $budget: rows lost, duplicated or reordered")
+    }
+  }
+
+  test("DSv2: a mysql-format scan ignores gcdc sidecars (no aggregate or OFFSET pushdown)") {
+    // a v2 .meta beside each binlog claims 999 rows of db.t: it is not
+    // this format's metadata, so COUNT(*), MAX(__gtid) and OFFSET must
+    // come from the decoded log (10 rows, gtids 1..10), never from it
+    val index = twoFileLog(txns = 5, rowsPerTxn = 1)
+    CdcCodec.readIndex(index).foreach { f =>
+      Files.writeString(Paths.get(f + ".meta"),
+        "v2 1 999 0 999000\nc db t 999 1 999 0 999000\n")
+    }
+    def plan(df: org.apache.spark.sql.DataFrame): String =
+      df.queryExecution.executedPlan.toString
+    val counted = readFmt(index, "mysql").agg(count(lit(1)))
+    assert(counted.head().getLong(0) == 10L)
+    assert(!plan(counted).contains("PushedAggregates"), plan(counted))
+    val hwm = readFmt(index, "mysql").agg(max(col("__gtid")))
+    assert(hwm.head().getLong(0) == 10L)
+    assert(!plan(hwm).contains("PushedAggregates"), plan(hwm))
+    val all = readFmt(index, "mysql").collect().map(_.getLong(0)).toSeq
+    assert(all == (1L to 10L))
+    val off = readFmt(index, "mysql").offset(3)
+    assert(off.collect().map(_.getLong(0)).toSeq == all.drop(3))
+    assert(!plan(off).contains("PushedOffset"), plan(off))
   }
 
   test("schemaDrift=epochs on mysql: name-matched remap spans a permuting ALTER") {
