@@ -325,23 +325,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // file listing below this many paths runs on the driver instead
-      // of as a distributed job: the default (32) turned every read of
-      // a cell-partitioned index (~80 dirs) into an 80-task listing job
-      // of ~0 ms tasks — 150 ms of pure scheduler overhead per serve
-      // (llm82 ProfileJobs). Deployments with thousands of partition
-      // dirs on an object store still get the distributed listing.
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = GraftSession.cores
+    val spark = GraftSession.build(cpus)
     // SPARK_GRAFT_BENCH_ONLY=a,b,c: bench exactly those queries under
     // the same warmup/min-of-N harness — the apples-to-apples re-check
-    // for a flagged regression (Profile's cold-JVM numbers are not
+    // for a flagged regression (ProfileJobs' cold-JVM numbers are not
     // comparable to bench numbers)
     val fullSurface = sys.env.get("SPARK_GRAFT_BENCH_ALL").contains("1")
     // the gate run carries K rotated non-headline queries this round
@@ -382,7 +370,7 @@ object Bench {
     // prep failure falls back to raw rather than failing the bench
     val relaidDir: Option[String] =
       if (sys.env.get("SPARK_GRAFT_BENCH_RELAY").contains("0")) None
-      else try Some(ensureRelaid(spark, sfDir, cpus.toInt))
+      else try Some(ensureRelaid(spark, sfDir, cpus))
       catch { case NonFatal(e) =>
         System.err.println(s"[bench] relay prep failed, timing raw layout: $e")
         None

@@ -7,16 +7,17 @@ import org.apache.spark.sql.types.IntegerType
 
 import graft.functions._
 
-/** Build-time extension entry point:
+/** Build-time extension entry point, set as `spark.sql.extensions` by
+  * the engine's session builder:
   * {{{
-  *   SparkSession.builder()
-  *     .config("spark.sql.extensions", "graft.GraftExtensions")
-  *     ...
+  *   val spark = graft.GraftSession.build()
+  *   spark.sql("SELECT cosine_sim(a, b) FROM t")
   * }}}
   * injects the engine's planner strategies AND registers the custom
   * expressions as SQL functions, so `spark.sql("SELECT cosine_sim(a, b)
-  * ...")` works with no Scala imports. The runtime twin for sessions
-  * built elsewhere is [[GraftExtensions.register]] (strategies via
+  * ...")` works with no Scala imports, in every session of the context.
+  * The runtime twin for sessions built elsewhere is
+  * [[GraftExtensions.register]] (strategies via
   * `graft.plans.AsOfJoin.register`).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
@@ -65,9 +66,8 @@ object GraftExtensions {
     entry("kmv_intersect_estimate", 3) { case Seq(a, b, k) =>
       KmvIntersectEstimate(a, b, litInt("kmv_intersect_estimate", "k")(k)) })
 
-  /** Runtime registration on an already-built session (functions +
-    * planner strategy) — the path the driver's Verify/Bench mains and
-    * notebooks use. Idempotent. */
+  /** Runtime registration on a session not built by [[GraftSession]]
+    * (functions + planner strategy), e.g. a notebook's. Idempotent. */
   def register(spark: SparkSession): Unit = {
     graft.plans.AsOfJoin.register(spark)
     sqlFunctions.foreach { case (ident, info, builder) =>

@@ -1,29 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * `runMain graft.Verify <sfDir> <outDir> [name1,name2,...]`: with the
+  * optional name filter only those queries run, and only their oracles
+  * are written, so scripts/check_oracle.py compares exactly that subset.
+  */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (local smoke
-    // runs of a few queries; the driver passes two args = run all)
+    // the driver passes two args = run all
     val (sfDir, outDir, only) = args match {
       case Array(a, b) => (a, b, None)
-      case Array(a, b, c) => (a, b, Some(c.split(',').toSet))
+      case Array(a, b, c) =>
+        val names = c.split(',').map(_.trim).filter(_.nonEmpty).toSet
+        val missing = names.filterNot(SparkEntry.queries.contains)
+        require(missing.isEmpty, s"unknown verify queries: ${missing.toSeq.sorted.mkString(",")}")
+        (a, b, Some(names))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // driver-side listing below 128 paths (see Bench.scala)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    def selected(name: String): Boolean = only.forall(_.contains(name))
+    val spark = GraftSession.build()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -44,6 +42,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => selected(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

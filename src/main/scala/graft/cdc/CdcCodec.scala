@@ -411,8 +411,10 @@ object CdcCodec {
     * smoke, and this is the same win for the GCDC format. Bounds safety
     * comes from the array itself (a truncated payload throws
     * ArrayIndexOutOfBounds, surfaced as a decode error — the EventReader
-    * already guarantees whole payloads). */
-  private final class BeCur(a: Array[Byte]) {
+    * already guarantees whole payloads), and every count or length read
+    * from the payload passes [[len]] before it sizes anything. `pos` is
+    * the event's log offset, for the error. */
+  private final class BeCur(a: Array[Byte], pos: Long) {
     var p = 0
     def u8(): Int = { val v = a(p) & 0xff; p += 1; v }
     def s8(): Byte = { val v = a(p); p += 1; v }
@@ -432,18 +434,27 @@ object CdcCodec {
     def f32(): Float = java.lang.Float.intBitsToFloat(i32())
     def f64(): Double = java.lang.Double.longBitsToDouble(i64())
     def bool(): Boolean = u8() != 0
+    /** `n` as a count or length of what follows: a corrupted field
+      * must fail here, not size an array of up to 2 GiB
+      * (`copyOfRange` zero-pads past the payload) or a view past it. */
+    def len(n: Int): Int = {
+      if (n < 0 || n > a.length - p) throw new java.io.IOException(
+        s"corrupt event at log offset $pos: count or length $n with " +
+          s"${a.length - p} payload bytes left")
+      n
+    }
     def bytes(n: Int): Array[Byte] = {
-      val b = java.util.Arrays.copyOfRange(a, p, p + n); p += n; b
+      val b = java.util.Arrays.copyOfRange(a, p, p + len(n)); p += n; b
     }
     def str(): String = {
-      val n = i32()
+      val n = len(i32())
       val s = new String(a, p, n, StandardCharsets.UTF_8); p += n; s
     }
     def utf8(): UTF8String = {
-      val n = i32()
+      val n = len(i32())
       val s = UTF8String.fromBytes(a, p, n); p += n; s
     }
-    def skip(n: Int): Unit = p += n
+    def skip(n: Int): Unit = p += len(n)
   }
 
   /** Stateful decoder: feed raw events in log order, get CDC rows for the
@@ -515,12 +526,12 @@ object CdcCodec {
     private var seenGtid = false
 
     def decode(ev: RawEvent): Seq[CdcRow] = {
-      val d = new BeCur(ev.payload)
+      val d = new BeCur(ev.payload, ev.pos)
       ev.tpe match {
         case EventType.TableMap =>
           val tableId = d.i64()
           val db = d.str(); val table = d.str()
-          val n = d.i32()
+          val n = d.len(d.i32())
           val fields = (0 until n).map { _ =>
             val name = d.str()
             val tag = d.s8(); val p = d.s8(); val s = d.s8()
@@ -579,7 +590,7 @@ object CdcCodec {
           rowsFor(d, ev)(readImagesFused(d, CdcSchema.Op.Delete))
         case EventType.UpdateRows =>
           rowsFor(d, ev) { (schema, codes, tm, plan) =>
-            val n = d.i32()
+            val n = d.len(d.i32())
             val out = new Array[CdcRow](n * 2)
             var r = 0
             while (r < n) {
@@ -619,7 +630,7 @@ object CdcCodec {
       * intermediate row Vector, no second map pass). */
     private def readImagesFused(d: BeCur, op: Int)(schema: StructType,
         codes: Array[Int], tm: Long, plan: EpochPlan): Seq[CdcRow] = {
-      val n = d.i32()
+      val n = d.len(d.i32())
       val out = new Array[CdcRow](n)
       var r = 0
       while (r < n) {

@@ -2,7 +2,7 @@ package graft.tools
 
 import graft.Tables
 import graft.ops.Similarity
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Recall tracker for every ANN variant vs exact brute-force top-k.
@@ -22,10 +22,7 @@ object AnnRecallProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val k = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build(8)
     val emb = Tables.load(spark, sfDir, "embeddings")
     val queries = emb.filter(col("vec_id") % 50 === 0)
     val exact = Similarity.bruteForceTopK(

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Batch plan dumper for the optimization rounds:
   * `runMain graft.tools.ExplainAll <outDir> [sfDir] [name1,name2,...]`
   *
@@ -9,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * every (or each named) batch query, plus a one-line-per-query
   * `summary.tsv` (Exchange count, join strategies, scan count) so a
   * whole-surface triage — "which plans have an exchange they should
-  * not" — is one run instead of 242 Explain invocations. Streaming
+  * not" — is one run instead of one plan dump per query. Streaming
   * QDefs are skipped (their micro-batch plans are audited by
   * PlanLint's @stream path).
   */
@@ -20,14 +18,7 @@ object ExplainAll {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').map(_.trim).toSet) else None
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftExtensions.register(spark)
+    val spark = graft.GraftSession.build(8)
     val names = graft.SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
     val summary = new StringBuilder

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.Tables
 import graft.ops.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-tracked IVF drift observability probe (DESIGN.md §"ANN recall
@@ -18,10 +17,7 @@ import org.apache.spark.sql.functions._
 object IvfDriftProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build(8)
     val emb = Tables.load(spark, sfDir, "embeddings")
     def report(tag: String, drifted: Boolean): Unit = {
       val idx = java.nio.file.Files.createTempDirectory(s"ivf-probe-$tag").toString

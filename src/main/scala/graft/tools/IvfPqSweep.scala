@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.Tables
 import graft.ops.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Knob sweep for the composed IVF-PQ index: recall@k and wall time per
@@ -17,10 +16,7 @@ object IvfPqSweep {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val k = if (args.length > 1) args(1).toInt else 10
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.GraftSession.build(8)
     val emb = Tables.load(spark, sfDir, "embeddings").localCheckpoint(true)
     val queries = emb.filter(col("vec_id") % 50 === 0)
     val exact = Similarity.bruteForceTopK(

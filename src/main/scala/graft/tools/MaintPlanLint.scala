@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Executed-plan audit for the index-MAINTENANCE surface — the ops
@@ -58,14 +57,7 @@ object MaintPlanLint {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftExtensions.register(spark)
+    val spark = graft.GraftSession.build(4)
     import spark.implicits._
 
     val plans = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()

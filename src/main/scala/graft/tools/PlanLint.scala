@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Automated plan audit over the ENTIRE query surface — the "would this
   * survive 100x?" check as a tool instead of a per-round manual sweep.
   *
@@ -185,13 +183,7 @@ object PlanLint {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val only = args.drop(1).headOption
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.GraftExtensions.register(spark)
+    val spark = graft.GraftSession.build(4)
     var bad = 0
     var checked = 0
     var streamChecked = 0

@@ -1,104 +1,64 @@
 package graft.tools
 
-import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
-
 /** Job/stage-level profiler for the optimization rounds:
-  * `runMain graft.tools.ProfileJobs <queryName> [sfDir] [reps]`
+  * `runMain graft.tools.ProfileJobs <queryName[,name2,...]> [sfDir] [reps] [warmups]`
   *
-  * Runs the query with 1 warmup then `reps` timed executions, with a
-  * SparkListener recording every job and stage: wall time, task count,
-  * and total task time. Prints the per-job breakdown of the LAST timed
-  * rep — the "where do the seconds go" view the bench's single total
-  * hides (guide §1.1: decide whether time goes to scheduling, shuffle,
-  * or compute before changing anything). The gap between sum(job wall)
-  * and the rep wall is driver-side work (planning, collects,
-  * checkpoint bookkeeping).
+  * Runs each query `warmups` untimed times (default 1), then `reps`
+  * timed executions (default 2), with a [[JobListener]] recording every
+  * job and stage: wall time, task count, and total task time. Prints
+  * each rep's wall, their min and median, and the per-job breakdown of
+  * the LAST timed rep — the "where do the seconds go" view the bench's
+  * single total hides (guide §1.1: decide whether time goes to
+  * scheduling, shuffle, or compute before changing anything). The gap
+  * between sum(job wall) and the rep wall is driver-side work
+  * (planning, collects, checkpoint bookkeeping).
+  *
+  * The IVF/PQ family needs ~5 warmups to reach steady state: C2
+  * compilation of the kmeans/encode/score paths ramps over the first
+  * ~5 executions (a monotone per-rep decrease, measured round 9 — not
+  * host noise or tiny-task scheduling).
+  *
+  * `SPARK_GRAFT_PROFILE_CONF="k=v;k=v"` adds session confs for ad-hoc
+  * experiments; `SPARK_GRAFT_PROFILE_STAGES=1` adds one line per stage.
   */
 object ProfileJobs {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(',').map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // driver-side listing below 128 paths (see Bench.scala)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "128")
-    // ad-hoc conf experiments: SPARK_GRAFT_PROFILE_CONF="k=v;k=v"
-    sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach(_.split(';')
-      .filter(_.contains('=')).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); b.config(k, v)
-      })
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-
-    case class JobRec(id: Int, desc: String, t0: Long, var t1: Long = 0L,
-      var stages: Int = 0, var tasks: Int = 0, var taskMs: Long = 0L,
-      val stageDetail: scala.collection.mutable.ArrayBuffer[String] =
-        scala.collection.mutable.ArrayBuffer.empty)
-    val jobs = new scala.collection.concurrent.TrieMap[Int, JobRec]
-    val stageToJob = new scala.collection.concurrent.TrieMap[Int, Int]
-    val order = new java.util.concurrent.ConcurrentLinkedQueue[Int]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        jobs(e.jobId) = JobRec(e.jobId, desc, e.time)
-        order.add(e.jobId)
-        e.stageIds.foreach(sid => stageToJob(sid) = e.jobId)
+    val warmups = if (args.length > 3) args(3).toInt else 1
+    val conf = sys.env.get("SPARK_GRAFT_PROFILE_CONF").toSeq
+      .flatMap(_.split(';')).filter(_.contains('=')).map { kv =>
+        val Array(k, v) = kv.split("=", 2); k -> v
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        jobs.get(e.jobId).foreach(_.t1 = e.time)
-      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
-        val si = e.stageInfo
-        stageToJob.get(si.stageId).flatMap(jobs.get).foreach { j =>
-          j.stages += 1
-          j.tasks += si.numTasks
-          j.taskMs += si.taskMetrics.executorRunTime
-          val m = si.taskMetrics
-          val wall = (for (a <- si.completionTime; b <- si.submissionTime)
-            yield a - b).getOrElse(-1L)
-          j.stageDetail += f"    stage ${si.stageId}%4d ${wall}%6d ms " +
-            f"tasks=${si.numTasks}%4d run=${m.executorRunTime}%6d " +
-            f"cpu=${m.executorCpuTime / 1000000}%6d deser=${m.executorDeserializeTime}%5d " +
-            f"gc=${m.jvmGCTime}%5d shW=${m.shuffleWriteMetrics.writeTime / 1000000}%4d " +
-            f"shRwait=${m.shuffleReadMetrics.fetchWaitTime}%4d  ${si.name.take(60)}"
-        }
-      }
-    })
+    val spark = graft.GraftSession.build(conf = conf)
+    val listener = JobListener.attach(spark.sparkContext)
 
     def release(): Unit =
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
     names.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
-      fn(spark, sfDir).count(); release() // warmup
-      var lastWall = 0.0
-      (1 to reps).foreach { r =>
-        jobs.clear(); order.clear()
+      (1 to warmups).foreach { _ => fn(spark, sfDir).count(); release() }
+      val walls = (1 to reps).map { r =>
+        listener.reset()
         val t0 = System.nanoTime()
         fn(spark, sfDir).count()
-        lastWall = (System.nanoTime() - t0) / 1e9
+        val wall = (System.nanoTime() - t0) / 1e9
         release()
-        println(f"$name rep $r wall ${lastWall}%.3f s")
+        println(f"$name rep $r wall ${wall}%.3f s")
+        wall
       }
-      Thread.sleep(300) // let listener drain
-      var jobWall = 0L
-      val it = order.iterator()
+      val lastWall = walls.last
+      println(f"$name walls: min=${walls.min}%.3f median=${walls.sorted.apply((reps - 1) / 2)}%.3f s")
       println(f"--- $name last rep jobs (wall ${lastWall}%.3f s) ---")
-      while (it.hasNext) {
-        val j = jobs(it.next())
-        val w = math.max(0L, j.t1 - j.t0)
-        jobWall += w
-        println(f"job ${j.id}%4d ${w}%6d ms  stages=${j.stages}%2d tasks=${j.tasks}%4d taskTime=${j.taskMs}%6d ms  ${j.desc.take(80)}")
+      val jobs = listener.jobs
+      jobs.foreach { j =>
+        println(f"job ${j.id}%4d ${j.wallMs}%6d ms  stages=${j.stages}%2d tasks=${j.tasks}%4d taskTime=${j.runMs}%6d ms  ${j.desc.take(80)}")
         if (sys.env.get("SPARK_GRAFT_PROFILE_STAGES").contains("1"))
           j.stageDetail.foreach(println)
       }
-      println(f"$name sum(job wall) = ${jobWall / 1000.0}%.3f s; driver gap = ${lastWall - jobWall / 1000.0}%.3f s")
+      val jobWall = jobs.map(_.wallMs).sum / 1000.0
+      println(f"$name sum(job wall) = ${jobWall}%.3f s; driver gap = ${lastWall - jobWall}%.3f s")
     }
     spark.stop()
   }

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scale smoke: run the distributed-global-order / packing / dedup
@@ -15,14 +14,8 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val nBig = if (args.nonEmpty) args(0).toLong else 10000000L
     val nText = if (args.length > 1) args(1).toLong else 1000000L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.build(
+      conf = Seq("spark.sql.shuffle.partitions" -> "64"))
     import spark.implicits._
 
     def timed[T](name: String)(body: => T): T = {
@@ -33,31 +26,9 @@ object ScaleSmoke {
     }
 
     // shuffle-write accounting for the string-vs-hash span-key
-    // comparison: a listener tallies per-stage shuffle bytes; the bus is
-    // async, so each measurement drains it with waitUntilEmpty below
-    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onStageCompleted(
-          sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-        shuffleBytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-    })
-    // drain the ASYNC listener bus before reading the counter: a fixed
-    // sleep lets stage-completed events land outside the window on a
-    // loaded machine, skewing the byte totals in either direction (a
-    // flaky assert — or a spurious PASS from an over-counted baseline).
-    // LiveListenerBus.waitUntilEmpty is private[spark]; reflection keeps
-    // this measurement-tool-only dependency out of the library surface.
-    def drainListenerBus(): Unit = {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    }
-    def measuredShuffle[T](body: => T): (T, Long) = {
-      drainListenerBus(); shuffleBytes.set(0L)
-      val r = body
-      drainListenerBus()
-      (r, shuffleBytes.get())
-    }
+    // comparison and the maintenance shuffle pins below
+    val listener = JobListener.attach(spark.sparkContext)
+    import listener.measuredShuffle
 
     // skewed, shuffled sort keys with ties — the worst case a curriculum
     // sort sees; invariant: positions are exactly the 1..N permutation

@@ -85,6 +85,12 @@ object Bridge {
       }
   }
 
+  /** Block until every event posted so far has reached every listener
+    * (`LiveListenerBus.waitUntilEmpty`, `private[spark]`) — the drain a
+    * listener-based measurement needs before it reads its counters. */
+  def waitForListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
   /** Idempotently register an extra planner strategy on a live session
     * (the public `experimental` hook; `SparkSessionExtensions` covers the
     * build-time path — see graft.GraftExtensions). */

@@ -100,6 +100,47 @@ class CdcCodecSpec extends AnyFunSuite {
     assert(decoded > 0)
   }
 
+  test("a row count or BLOB length past the payload fails with the event's log offset") {
+    // hand-built rows events whose count (2^24) or BLOB length (2^30)
+    // exceeds the payload: the decoder must refuse the field, not size
+    // an array from it first
+    val s2 = StructType(Seq(StructField("id", LongType), StructField("bin", BinaryType)))
+    val f = s"${tmp()}/log.0"
+    val w = new CdcCodec.LogWriter(f)
+    w.tableMap(0L, 1L, "db", "t", s2)
+    w.gtid(0L, 1L)
+    w.close()
+    val dec = new CdcCodec.RowDecoder("db", "t")
+    val r = new CdcCodec.EventReader(f)
+    try r.foreach(dec.decode) finally r.close()
+    def payload(count: Int, rows: Seq[(Long, Int, Array[Byte])]): Array[Byte] = {
+      val buf = new java.io.ByteArrayOutputStream()
+      val d = new java.io.DataOutputStream(buf)
+      d.writeLong(1L); d.writeInt(count)
+      rows.foreach { case (id, len, bin) =>
+        d.writeByte(0); d.writeLong(id); d.writeInt(len); d.write(bin)
+      }
+      d.flush(); buf.toByteArray
+    }
+    def event(tpe: Byte, p: Array[Byte], pos: Long) =
+      CdcCodec.RawEvent(tpe, 0L, p, pos, pos + 13 + p.length)
+    val two = Seq((1L, 2, Array[Byte](1, 2)), (2L, 2, Array[Byte](3, 4)))
+    import CdcCodec.EventType._
+    Seq(
+      event(WriteRows, payload(1 << 24, two), 4096L),
+      event(UpdateRows, payload(1 << 24, two), 8192L),
+      event(WriteRows, payload(1, Seq((1L, 1 << 30, Array[Byte](1, 2)))), 12288L)
+    ).foreach { ev =>
+      val e = intercept[java.io.IOException](dec.decode(ev))
+      assert(e.getMessage.contains(s"log offset ${ev.pos}"), e.getMessage)
+    }
+    // the decoder still reads a well-formed event afterwards
+    val ok = dec.decode(event(WriteRows, payload(2, two), 16384L))
+    assert(ok.map(_.values(0)) == Seq(1L, 2L))
+    assert(ok.map(_.values(1).asInstanceOf[Array[Byte]].toSeq) ==
+      Seq(Seq[Byte](1, 2), Seq[Byte](3, 4)))
+  }
+
   test("BinlogFormatAdapter seam: the GCDC implementation decodes through the interface") {
     // the adapter traits (BinlogAdapter.scala) are the documented seam a
     // real MySQL-binlog decoder implements; this drives the built-in

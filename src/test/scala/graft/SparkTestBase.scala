@@ -20,15 +20,7 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  /** The engine's session ([[GraftSession]]) at a fixed 4 cores, so the
+    * suite runs the configuration the mains run. */
+  lazy val session: SparkSession = GraftSession.build(4)
 }
