@@ -46,8 +46,7 @@ object TmpDirs {
     * callers that drain repeatedly (the bench) should delete eagerly
     * after `stop()`. */
   def ephemeralCheckpoint(tag: String): String = {
-    val p = java.nio.file.Paths.get(ramRoot,
-      s"graft-ckpt-$tag-${ProcessHandle.current().pid()}-${ckptCounter.incrementAndGet()}").toString
+    val p = ramCheckpointDir(tag)
     synchronized {
       if (registered.add(p)) {
         sys.addShutdownHook(deleteRecursively(new java.io.File(p)))
@@ -56,6 +55,12 @@ object TmpDirs {
     }
     p
   }
+
+  /** A fresh [[ephemeralCheckpoint]] path with no shutdown hook: for
+    * callers that delete it themselves when their query stops. */
+  private[graft] def ramCheckpointDir(tag: String): String =
+    java.nio.file.Paths.get(ramRoot,
+      s"graft-ckpt-$tag-${ProcessHandle.current().pid()}-${ckptCounter.incrementAndGet()}").toString
 
   /** 128-bit hex key for scoping scratch dirs by an input PATH: the
     * 32-bit String.hashCode it replaces could alias two datasets into

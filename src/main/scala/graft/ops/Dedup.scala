@@ -203,34 +203,37 @@ object Dedup {
     verifyJaccard(docs, cands, textCol, id, threshold, shingleN)
   }
 
-  /** Persist the near-dup corpus index: the capped (band, bh) buckets,
-    * the per-doc sorted shingle sets, and the banding parameters —
-    * build ONCE over the corpus, then dedup every later batch against
-    * the files (see [[incrementalNearDupFromIndex]]) without
-    * re-signing or re-shingling a single corpus document. This is the
-    * cross-session form of [[incrementalNearDup]]'s in-memory index,
-    * the same lifecycle split as `Similarity.buildIvfIndex`. */
+  /** Persist the near-dup corpus index: the capped (band, bh) buckets
+    * and the per-doc sorted shingle sets, committed through [[IndexLog]]
+    * with the banding parameters in the commit — build ONCE over the
+    * corpus, then dedup every later batch against the files (see
+    * [[incrementalNearDupFromIndex]]) without re-signing or
+    * re-shingling a single corpus document. A build over an existing
+    * index replaces it in one commit. This is the cross-session form of
+    * [[incrementalNearDup]]'s in-memory index, the same lifecycle split
+    * as `Similarity.buildIvfIndex`. */
   def buildNearDupIndex(corpus: DataFrame, path: String, k: Int = 16,
       bands: Int = 8, shingleN: Int = 3, maxBucket: Int = 100,
       textCol: String = "text", id: String = "doc_id"): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
-    // parameters ride with the index: a later session banding its batch
-    // with different k/bands/shingleN would silently stop matching
-    // buckets, so the query path reads them from here instead of
-    // trusting the caller
-    Seq((k, bands, shingleN, maxBucket))
-      .toDF("k", "bands", "shingleN", "maxBucket")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/params")
-    bandHashes(corpus, textCol, id, k, bands, shingleN)
+    val base = IndexLog.head(spark, path)
+    val buckets = IndexLog.write(bandHashes(corpus, textCol, id, k, bands, shingleN)
       .groupBy(col("band"), col("bh"))
       .agg(collect_list(col("__id")).as("cids"))
-      .filter(size(col("cids")).between(1, maxBucket))
-      .write.mode("overwrite").parquet(s"$path/buckets")
-    corpus.select(col(id).as("__id"), TextAnalysis.tokens(col(textCol)).as("__tk"))
-      .select(col("__id"), array_sort(array_distinct(
-        TextAnalysis.shinglesFromTokens(col("__tk"), shingleN))).as("sh"))
-      .write.mode("overwrite").parquet(s"$path/shingles")
+      .filter(size(col("cids")).between(1, maxBucket)), path, "buckets")
+    val shingles = IndexLog.write(
+      corpus.select(col(id).as("__id"), TextAnalysis.tokens(col(textCol)).as("__tk"))
+        .select(col("__id"), array_sort(array_distinct(
+          TextAnalysis.shinglesFromTokens(col("__tk"), shingleN))).as("sh")),
+      path, "shingles")
+    // parameters ride with the index: a later session banding its batch
+    // with different k/bands/shingleN would silently stop matching
+    // buckets, so the query path reads them from the commit instead of
+    // trusting the caller
+    IndexLog.commit(spark, path, "neardup", base,
+      Map("buckets" -> buckets, "shingles" -> shingles),
+      params = Map("k" -> k.toString, "bands" -> bands.toString,
+        "shingleN" -> shingleN.toString, "maxBucket" -> maxBucket.toString))
   }
 
   /** Incremental near-dup against a PREBUILT index (see
@@ -243,16 +246,17 @@ object Dedup {
   def incrementalNearDupFromIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, batch: DataFrame, threshold: Double,
       textCol: String = "text", id: String = "doc_id"): DataFrame = {
-    val p = spark.read.parquet(s"$path/params").head()
-    val (k, bands, shingleN, maxBucket) = (p.getAs[Int]("k"),
-      p.getAs[Int]("bands"), p.getAs[Int]("shingleN"), p.getAs[Int]("maxBucket"))
+    val snap = IndexLog.snapshot(spark, path)
+    def param(name: String): Int = snap.params(name).toInt
+    val (k, bands, shingleN, maxBucket) =
+      (param("k"), param("bands"), param("shingleN"), param("maxBucket"))
     val batchBands = bandHashes(batch, textCol, id, k, bands, shingleN)
       .localCheckpoint(true)
     val batchBuckets = batchBands.groupBy(col("band"), col("bh"))
       .agg(collect_list(col("__id")).as("bids"))
       .filter(size(col("bids")).between(1, maxBucket))
     val cross = batchBuckets
-      .join(spark.read.parquet(s"$path/buckets"), Seq("band", "bh"))
+      .join(snap.frame("buckets"), Seq("band", "bh"))
       .select(explode(col("bids")).as("bid"), col("cids"))
       .select(col("bid"), explode(col("cids")).as("cid"))
       .select(least(col("bid"), col("cid")).as("id_a"),
@@ -266,7 +270,7 @@ object Dedup {
       .select(col(id).as("__id"), TextAnalysis.tokens(col(textCol)).as("__tk"))
       .select(col("__id"), array_sort(array_distinct(
         TextAnalysis.shinglesFromTokens(col("__tk"), shingleN))).as("sh"))
-    val sh = spark.read.parquet(s"$path/shingles").unionByName(batchSh)
+    val sh = snap.frame("shingles").unionByName(batchSh)
       .join(broadcast(candIds), Seq("__id"), "left_semi")
       .localCheckpoint(true)
     jaccardOverPairs(cands, sh, threshold)
@@ -1544,13 +1548,13 @@ object Dedup {
     writeManifest(fs, path, known + (opId -> seq))
   }
 
-  /** Test-only failpoint: when set, [[appendToClusterIndex]] throws at
-    * the named point to simulate a crash (the recovery specs drive
-    * every window). Production code never sets it. */
-  private[graft] var appendCrashPoint: Option[String] = None
-  private def maybeCrash(point: String): Unit =
-    if (appendCrashPoint.contains(point))
-      throw new IllegalStateException(s"test crash at $point")
+  /** Test-only failpoint shared with [[IndexLog]]: when set, the index
+    * writers throw at the named point to simulate a crash (the recovery
+    * specs drive every window). Production code never sets it. */
+  private[graft] def appendCrashPoint: Option[String] = IndexLog.crashPoint
+  private[graft] def appendCrashPoint_=(p: Option[String]): Unit =
+    IndexLog.crashPoint = p
+  private def maybeCrash(point: String): Unit = IndexLog.maybeCrash(point)
 
   /** Idempotent per-bucket old/live/staged swap — re-runnable from any
     * crash window: each bucket independently reaches (old = previous
@@ -2137,89 +2141,58 @@ object Dedup {
     semDedupProbe(basg, casg, id, threshold, maxCluster)
   }
 
-  /** Persist the semantic-dedup serving index: the quantizer under
-    * `$path/seeds` and the corpus assignment `(id, cell, emb)` under
-    * `$path/members`, PARTITIONED BY cell — so a later
-    * [[semDedupFromIndex]] probe reads only the cell directories its
-    * batch touches (file-level partition pruning, the IVF-corpus
-    * layout applied to dedup). `members/` is written LAST, so its
-    * `_SUCCESS` is the built-ness marker fixtures key on. */
+  /** Persist the semantic-dedup serving index: the quantizer as
+    * `seeds` and the corpus assignment `(id, cell, emb)` as `members`,
+    * PARTITIONED BY cell — so a later [[semDedupFromIndex]] probe reads
+    * only the cells its batch touches (file-level pruning, the
+    * IVF-corpus layout applied to dedup). Both land in ONE
+    * [[IndexLog]] commit: a build over an existing index replaces the
+    * pair atomically, and a crash before the commit leaves the previous
+    * pair (or no index) for every reader. */
   def buildSemDedupIndex(corpus: DataFrame, path: String, embCol: String,
       id: String, seeds: DataFrame, seedId: String, seedEmb: String,
       probeAssign: Boolean = true): Unit = {
     val spark = corpus.sparkSession
-    val fs = IndexFs.fs(spark, path)
-    // REBUILD crash safety: members/ must go away BEFORE the new seeds
-    // land — a crash after overwriting seeds/ but before members/ would
-    // otherwise leave the PREVIOUS corpus assignment paired with the
-    // NEW quantizer, and probes would serve silently wrong verdicts
-    // (cells assigned by new seeds against members partitioned by old
-    // cells). With the delete first, every crash window leaves a
-    // visibly un-built index (probes fail loud on the missing
-    // members/_SUCCESS) and a retry converges.
-    IndexFs.delete(fs, s"$path/members")
-    maybeCrash("semdedup-after-members-delete")
-    seeds.select(col(seedId).as("seed_id"), col(seedEmb).as("s_emb"))
-      .repartition(1).write.mode("overwrite").parquet(s"$path/seeds")
+    val base = IndexLog.head(spark, path)
+    val seedsT = IndexLog.write(
+      seeds.select(col(seedId).as("seed_id"), col(seedEmb).as("s_emb"))
+        .repartition(1), path, "seeds")
     maybeCrash("semdedup-after-seeds")
-    assignCells(corpus, embCol, id, seeds, seedId, seedEmb, probeAssign)
-      .select(col(id), col("cluster_id").as("cell"), col("__emb"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/members")
+    IndexLog.commit(spark, path, "semdedup", base, Map("seeds" -> seedsT,
+      "members" -> writeMembers(
+        assignCells(corpus, embCol, id, seeds, seedId, seedEmb, probeAssign)
+          .select(col(id), col("cluster_id").as("cell"), col("__emb")), path)))
   }
 
-  /** Built-ness gate shared by every consumer of a persisted
-    * semantic-dedup index ([[semDedupFromIndex]], the streaming gate):
-    * `members/_SUCCESS` is written LAST by [[buildSemDedupIndex]], so
-    * its absence means a crashed or in-flight build — reading the
-    * partial (or stale) members/ would serve silently wrong verdicts;
-    * refuse loud and name the recovery (re-run the build). READERS
-    * additionally refuse while maintenance leftovers exist
-    * (`members.appending/` / `members.deleting/` / `members.old.del/`
-    * non-empty): a crashed [[appendToSemDedupIndex]] can leave part of
-    * an uncommitted batch in the live cells and a crashed delete can
-    * leave a retired cell missing — both read as silently wrong
-    * verdicts; the interrupted op's retry converges and cleans up.
-    * Maintenance ops themselves pass `maintenance = true` (they ARE
-    * the recovery). */
-  private[graft] def requireSemDedupIndexBuilt(spark: SparkSession,
-      path: String, maintenance: Boolean = false): Unit = {
-    val fs = IndexFs.fs(spark, path)
-    require(IndexFs.exists(fs, s"$path/members/_SUCCESS"),
-      s"semDedup index at $path is not fully built (members/_SUCCESS " +
-        "missing — a crashed or in-flight buildSemDedupIndex); re-run the " +
-        "build before probing")
-    if (!maintenance)
-      Seq("members.appending", "members.deleting", "members.old.del",
-          "members.compacting", "members.old.compact")
-        .foreach { d =>
-          require(IndexFs.listNames(fs, s"$path/$d").isEmpty,
-            s"semDedup index at $path has in-flight or crashed " +
-              s"maintenance ($d/ non-empty) — re-run the interrupted op " +
-              "(retries converge and clean up) before probing")
-        }
-  }
+  /** `(id, cell, __emb)` rows written as a fresh `members` write, one
+    * file per cell. */
+  private def writeMembers(rows: DataFrame, path: String): IndexLog.Table =
+    IndexLog.write(rows.repartition(col("cell")), path, "members", Some("cell"))
 
   /** [[semDedupIncremental]] served from a [[buildSemDedupIndex]]
     * index: the corpus assignment is read back instead of recomputed,
     * and the members scan is PRUNED to the batch's touched cells (the
     * cell set is batch-bounded and collected driver-side, like the IVF
     * probe's). Identical results to the two-frame form — and therefore
-    * to `semDedup(corpus ∪ batch)` restricted to the batch. */
+    * to `semDedup(corpus ∪ batch)` restricted to the batch. Seeds and
+    * members come from one snapshot of the index. */
   def semDedupFromIndex(spark: SparkSession, path: String,
       batch: DataFrame, embCol: String, id: String,
       threshold: Double, maxCluster: Int = 20000,
       probeAssign: Boolean = true): DataFrame = {
-    requireSemDedupIndexBuilt(spark, path)
-    val seeds = spark.read.parquet(s"$path/seeds")
-    val basg = assignCells(batch, embCol, id, seeds, "seed_id", "s_emb",
+    val snap = IndexLog.snapshot(spark, path)
+    val basg = assignCells(batch, embCol, id, snap.frame("seeds"), "seed_id", "s_emb",
       probeAssign).localCheckpoint(true) // cells pull + pair side + output
-    val cells = basg.select(col("cluster_id")).distinct()
-      .collect().map(_.get(0))
-    val casg = spark.read.parquet(s"$path/members")
-      .filter(col("cell").isInCollection(cells.toSeq))
+    semDedupProbe(basg, touchedMembers(snap, basg, id), id, threshold, maxCluster)
+  }
+
+  /** The members of `basg`'s cells as `(id, cluster_id, __emb)`: the
+    * cell set is collected driver-side and prunes the scan by file. */
+  private def touchedMembers(snap: IndexLog.Snapshot, basg: DataFrame,
+      id: String): DataFrame = {
+    val cells = basg.select(col("cluster_id")).distinct().collect().map(_.get(0))
+    snap.frame("members").filter(col("cell").isInCollection(cells.toSeq))
       .select(col(id), col("cell").as("cluster_id"), col("__emb"))
-    semDedupProbe(basg, casg, id, threshold, maxCluster)
   }
 
   /** The shared probe tail of [[semDedupIncremental]] and
@@ -2307,43 +2280,32 @@ object Dedup {
     * `semDedup(everything)` restricted to that batch, for ANY
     * micro-batch slicing (spec-pinned).
     *
-    * Crash safety, the [[appendTables]] discipline: the batch's cell
-    * files are fully staged under `members.appending/<opId>`, moved
-    * into the live cell directories with atomic per-file renames under
-    * deterministic `app-<opId>-` names, and the op's commit marker
-    * ([[writeCommitMarker]], shared manifest machinery) lands LAST — a
-    * retry of any crash window first sweeps this op's files from its
-    * (deterministically re-derived) cells and redoes the whole append,
-    * and a retry of a COMMITTED append no-ops with byte-identical
-    * verdicts (recomputed against members ∖ batch — exactly the
-    * pre-append touched-cell members). A reader between a crash and
-    * the retry is refused loud by [[requireSemDedupIndexBuilt]]'s
-    * in-flight-maintenance check rather than served a partial batch.
+    * Crash safety: the batch's cell files land in a fresh write that
+    * ONE [[IndexLog]] commit adds to `members`, recording the batch's
+    * deterministic op id (a digest of its id set). A crash before the
+    * commit leaves nothing any reader or retry sees, so the retry simply
+    * redoes the append. A retry of a COMMITTED append (op id recorded,
+    * every id live) no-ops with byte-identical verdicts, recomputed
+    * against members ∖ batch — exactly the pre-append touched-cell
+    * members. The op id alone is stale across a later delete of the
+    * same ids (the append → delete → re-append lifecycle reuses it), so
+    * a recorded op id with NO live id appends again, and one with
+    * PARTIAL liveness (a delete removed part of the committed batch)
+    * refuses loud.
     *
     * 100 TB posture: one batch-sized assignment pass, one column-pruned
     * global id scan (the identity guard), a touched-cells-only members
-    * read for the probe (partition filter), and a batch-sized
-    * partitioned write — never a corpus rewrite or shuffle. */
+    * read for the probe (file pruning), and a batch-sized partitioned
+    * write — never a corpus rewrite or shuffle. */
   def appendToSemDedupIndex(spark: SparkSession, path: String,
       batch: DataFrame, embCol: String, id: String, threshold: Double,
       maxCluster: Int = 20000, probeAssign: Boolean = true): DataFrame = {
-    requireSemDedupIndexBuilt(spark, path, maintenance = true)
+    val snap = IndexLog.snapshot(spark, path)
     require(batch.schema(id).dataType ==
         org.apache.spark.sql.types.LongType,
       s"appendToSemDedupIndex: $id must be LongType (op ids and the " +
         s"probe's id order are long-keyed), got ${batch.schema(id).dataType}")
-    val fs = IndexFs.fs(spark, path)
-    // the mirror of the delete's append-leftover refusal: a crashed
-    // delete can leave a retired live cell missing — this append's
-    // probe would silently miss that cell's members
-    Seq("members.deleting", "members.old.del").foreach { d =>
-      require(IndexFs.listNames(fs, s"$path/$d").isEmpty,
-        s"appendToSemDedupIndex($path): a crashed or in-flight delete " +
-          s"left $d/ non-empty — retry that delete (it converges and " +
-          "cleans up) before appending")
-    }
-    val seeds = spark.read.parquet(s"$path/seeds")
-    val basg = assignCells(batch, embCol, id, seeds, "seed_id", "s_emb",
+    val basg = assignCells(batch, embCol, id, snap.frame("seeds"), "seed_id", "s_emb",
       probeAssign).localCheckpoint(true) // ids + cells + probe + write
     // batch ids collect is bounded LOUD (batches are micro-batch-sized
     // by contract; the named-knob discipline for every driver collect)
@@ -2368,187 +2330,67 @@ object Dedup {
         s"${batchDup.headOption.map(_.get(0))} — one identity would serve " +
         "two member rows; dedup the batch first")
     val appId = appendIdOf(batchIds)
-    val cells = basg.select(col("cluster_id")).distinct()
-      .collect().map(_.get(0))
-    val seqs = commitSeqs(fs, path)
-    // committed-replay detection runs on PRE-sweep liveness: the marker
-    // alone is STALE across a later delete of the same ids (the
-    // documented append -> delete -> re-append lifecycle reuses the
-    // appId), so "this exact op committed" = marker AND every id live.
-    // A crashed RE-append retry therefore sees partial liveness, falls
-    // through, and the sweep below clears its leftovers — gating the
-    // sweep on marker absence alone wedged that retry forever (the
-    // stale marker suppressed the sweep, the landed files tripped the
-    // already-indexed guard, and no op could clear the state).
-    def liveCount(): Long = spark.read.parquet(s"$path/members")
-      .select(col(id))
-      .join(broadcast(basg.select(col(id))), Seq(id), "left_semi").count()
-    val liveAtEntry = if (seqs.contains(appId)) liveCount() else -1L
-    if (seqs.contains(appId) && liveAtEntry == batchIds.length) {
-      // committed replay: no-op the write, return byte-identical
-      // verdicts (members ∖ batch = exactly the pre-append touched-cell
-      // members), and finish the cleanup a post-marker crash skipped
-      IndexFs.delete(fs, s"$path/members.appending/$appId")
-      val casgR = spark.read.parquet(s"$path/members")
-        .filter(col("cell").isInCollection(cells.toSeq))
-        .select(col(id), col("cell").as("cluster_id"), col("__emb"))
-      return semDedupProbe(basg,
-        casgR.join(broadcast(basg.select(col(id))), Seq(id), "left_anti"),
-        id, threshold, maxCluster)
-    }
-    // a COMMITTED marker with PARTIAL liveness has two causes, and only
-    // one is recoverable here: (a) a crashed RE-append retry (stale
-    // marker from the append -> delete-all -> re-append lifecycle, some
-    // of the retry's files landed) — its `members.appending/<appId>`
-    // staging dir still exists, because staging is created only AFTER
-    // the liveness-zero gate passed (so everything it landed is
-    // uncommitted) and deleted only at commit; sweep + redo converges.
-    // (b) NO staging dir: the landed files predate any crashed attempt
-    // — a delete removed SOME of this batch's ids AFTER the append
-    // committed, so the surviving member files in cells the delete
-    // never rewrote ARE committed state, and the sweep below would
-    // silently thin them (the liveCnt guard would only fire after the
-    // damage, leaving no maintenance leftover for readers to refuse
-    // on). Fail loud BEFORE touching anything, like the delete's
-    // analogous ambiguity window.
-    require(!(seqs.contains(appId) && liveAtEntry > 0 &&
-        liveAtEntry < batchIds.length &&
-        !IndexFs.exists(fs, s"$path/members.appending/$appId")),
-      s"appendToSemDedupIndex($path): committed marker for this exact " +
-        s"batch with PARTIAL liveness ($liveAtEntry of ${batchIds.length} " +
-        "ids live) and no in-flight staging — ambiguous (a delete removed " +
-        "part of this committed batch); delete the remaining ids first " +
-        "(deleteFromSemDedupIndex) or rebuild, then append")
-    // sweep a crashed attempt of THIS op before anything else reads
-    // members: assignment is deterministic under the persisted
-    // quantizer, so a previous attempt's files can only live in this
-    // batch's cells, under this op's deterministic file prefix. The
-    // replay branch above returned for a genuinely committed op and the
-    // partial-liveness require refused the committed-then-partially-
-    // deleted window, so nothing swept here is committed state: a
-    // marker WITHOUT liveness is the documented stale-marker lifecycle
-    // (append -> delete all -> re-append), and no marker means the
-    // attempt never committed.
-    cells.foreach { c =>
-      val dir = s"$path/members/cell=$c"
-      IndexFs.listNames(fs, dir).filter(_.startsWith(s"app-$appId-"))
-        .foreach(f => IndexFs.delete(fs, s"$dir/$f"))
-    }
-    val members = spark.read.parquet(s"$path/members")
+    val casg = touchedMembers(snap, basg, id)
     // which batch ids are already members? One column-pruned corpus id
     // scan streaming against the broadcast batch ids (identity is
     // global — the same id could sit in a DIFFERENT cell if its
     // embedding changed, so the guard cannot prune to touched cells)
-    val liveCnt = liveCount()
-    val casg = members.filter(col("cell").isInCollection(cells.toSeq))
-      .select(col(id), col("cell").as("cluster_id"), col("__emb"))
+    val liveCnt = snap.frame("members").select(col(id))
+      .join(broadcast(basg.select(col(id))), Seq(id), "left_semi").count()
+    val committed = snap.ops.contains(appId)
+    if (committed && liveCnt == batchIds.length)
+      return semDedupProbe(basg, // committed replay: no write
+        casg.join(broadcast(basg.select(col(id))), Seq(id), "left_anti"),
+        id, threshold, maxCluster)
+    require(!committed || liveCnt == 0,
+      s"appendToSemDedupIndex($path): committed marker for this exact " +
+        s"batch with PARTIAL liveness ($liveCnt of ${batchIds.length} " +
+        "ids live) — a delete removed part of this committed batch; " +
+        "delete the remaining ids first (deleteFromSemDedupIndex) or " +
+        "rebuild, then append")
     require(liveCnt == 0,
       s"appendToSemDedupIndex($path): batch contains $liveCnt " +
         s"already-indexed $id(s) — appending would serve two member rows " +
-        "for one identity; if this is the retry of a crashed append, the " +
-        "sweep above should have cleared it — otherwise delete the ids " +
-        "first (deleteFromSemDedupIndex), then append")
-    // verdicts BEFORE the batch lands, materialized so the probe's
-    // members scan cannot observe this append's own files
+        "for one identity; delete the ids first (deleteFromSemDedupIndex), " +
+        "then append")
+    // verdicts materialized before the batch lands: the returned frame
+    // never re-reads members, whose files a later compaction may delete
     val verdicts = semDedupProbe(basg, casg, id, threshold, maxCluster)
       .localCheckpoint(true)
-    val staging = s"$path/members.appending/$appId"
-    IndexFs.delete(fs, staging)
-    basg.select(col(id), col("cluster_id").as("cell"), col("__emb"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(staging)
-    maybeCrash("semapp-after-staging")
-    IndexFs.listNames(fs, staging).filter(_.startsWith("cell=")).foreach {
-      cd =>
-        val live = s"$path/members/$cd"
-        IndexFs.mkdirs(fs, live)
-        IndexFs.listNames(fs, s"$staging/$cd")
-          .filter(f => f.endsWith(".parquet") && !f.startsWith("."))
-          .foreach(f =>
-            IndexFs.rename(fs, s"$staging/$cd/$f", s"$live/app-$appId-$f"))
-        maybeCrash("semapp-mid-rename")
-    }
-    maybeCrash("semapp-after-renames")
-    writeCommitMarker(fs, path, appId, Some(seqs))
-    IndexFs.delete(fs, s"$path/members.appending/$appId")
+    val added = writeMembers(
+      basg.select(col(id), col("cluster_id").as("cell"), col("__emb")), path)
+    snap.commit("semapp", Map("members" -> (snap.table("members") ++ added)),
+      newOps = Set(appId))
     verdicts
-  }
-
-  /** Roll a crashed [[deleteFromSemDedupIndex]] attempt to a consistent
-    * live members/ state. For each retired cell under
-    * `members.old.del/<op>`: a COMMITTED op's retired dirs are pure
-    * leftovers (the marker lands after every swap) — reclaim them; an
-    * UNCOMMITTED op rolls BACK fully — the retired dir holds the cell's
-    * exact pre-op content until the marker lands, so the swapped-in
-    * cleaned cell (when present) is dropped and the original restored.
-    * Rollback must be total, not per-cell best-effort: a half-applied
-    * delete would make the retry's not-indexed guard fire on the ids
-    * its own first attempt already removed. Staging is wiped wholesale:
-    * uncommitted attempts recompute it from the restored state.
-    * Single-writer by contract, like every other index maintenance op
-    * here. Idempotent under crashes DURING recovery (a re-run restores
-    * whatever cells still have retired dirs). */
-  private def recoverSemDedupDelete(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Unit = {
-    val oldRoot = s"$path/members.old.del"
-    IndexFs.listNames(fs, oldRoot).foreach { op =>
-      val committed = IndexFs.exists(fs, s"$path/appends/$op.committed")
-      IndexFs.listNames(fs, s"$oldRoot/$op").filter(_.startsWith("cell="))
-        .foreach { cd =>
-          val oldP = s"$oldRoot/$op/$cd"
-          val live = s"$path/members/$cd"
-          if (committed) IndexFs.delete(fs, oldP)
-          else {
-            if (IndexFs.exists(fs, live)) IndexFs.delete(fs, live)
-            IndexFs.rename(fs, oldP, live)
-          }
-        }
-      IndexFs.delete(fs, s"$oldRoot/$op")
-    }
-    IndexFs.delete(fs, oldRoot)
-    IndexFs.delete(fs, s"$path/members.deleting")
   }
 
   /** DELETE ids from a persisted semantic-dedup index — the
     * takedown/retention half of the lifecycle (opt-outs, license
     * revocations, PII purges), the semantic twin of
     * [[deleteFromClusterIndex]]. Unlike the IVF index there is no
-    * tombstone list to consult on every probe: members/ is
+    * tombstone list to consult on every probe: members are
     * cell-partitioned and deletes are cell-local, so the ids' cells are
-    * REWRITTEN in place (anti-join, O(touched cells) — never a corpus
-    * rewrite) and later probes/gates serve the remaining corpus with
-    * zero read-path overhead. Verdict semantics after a delete are the
+    * REWRITTEN (anti-join, O(touched cells) — never a corpus rewrite)
+    * and later probes/gates serve the remaining corpus with zero
+    * read-path overhead. Verdict semantics after a delete are the
     * from-scratch ones over the remaining members, exactly what a
     * rebuild over corpus ∖ batch would serve (spec-pinned).
     *
-    * Crash safety: crash recovery runs FIRST ([[recoverSemDedupDelete]]
-    * — also reclaiming a previous COMMITTED op's leftovers), the
-    * cleaned cells are fully staged under `members.deleting/<opId>`,
-    * each touched cell swaps via retire-then-replace renames (retired
-    * dirs tracked under `members.old.del/<opId>` so a mid-swap crash
-    * restores instead of losing the cell), and the commit marker lands
-    * LAST. Idempotence is liveness-gated like the cluster index:
-    * marker + none-live = committed retry (no-op); marker + all-live =
-    * a genuine re-delete after a re-append (proceed); partial liveness
-    * fails loud. Deleting every member refuses loud (an empty members/
-    * is unreadable — clearing an index means deleting its directory). */
+    * Crash safety: the rewritten cells land in a fresh write, and ONE
+    * commit swaps them for the touched cells' files and records the
+    * op id; a crash before it leaves the last committed members.
+    * Idempotence is liveness-gated like the cluster index: recorded op
+    * + none live = committed retry (no-op); recorded op + all live = a
+    * genuine re-delete after a re-append (proceed); partial liveness
+    * fails loud. Deleting every member refuses loud (clearing an index
+    * means deleting its directory). */
   def deleteFromSemDedupIndex(spark: SparkSession, path: String,
       ids: DataFrame, id: String): Unit = {
-    requireSemDedupIndexBuilt(spark, path, maintenance = true)
+    val snap = IndexLog.snapshot(spark, path)
     require(ids.schema(id).dataType ==
         org.apache.spark.sql.types.LongType,
       s"deleteFromSemDedupIndex: $id must be LongType, got " +
         s"${ids.schema(id).dataType}")
-    val fs = IndexFs.fs(spark, path)
-    // the two maintenance kinds recover only their OWN leftovers: a
-    // crashed append's live-cell files are addressed by the append's
-    // deterministic sweep — a delete rewriting those cells would fold
-    // the uncommitted rows into new files the sweep can no longer see
-    require(IndexFs.listNames(fs, s"$path/members.appending").isEmpty,
-      s"deleteFromSemDedupIndex($path): a crashed or in-flight append " +
-        "left members.appending/ non-empty — retry that append (it " +
-        "converges and cleans up) before deleting")
-    recoverSemDedupDelete(fs, path)
     val cap = spark.conf
       .get("spark.graft.semdedup.appendBatchCap", "4000000").toInt
     val idRows = ids.select(col(id)).distinct().limit(cap + 1).collect()
@@ -2557,36 +2399,23 @@ object Dedup {
         s"spark.graft.semdedup.appendBatchCap=$cap ids")
     val batchIds = idRows.map(_.getLong(0))
     if (batchIds.isEmpty) return
-    // namespaced so a delete of the same id set addresses a DIFFERENT
-    // marker than its append: the "del-" prefix is applied to the
-    // already-hashed digest, giving deletes their own marker namespace
-    // while keeping the digest itself shared with the append's
+    // namespaced so a delete of the same id set records a DIFFERENT op
+    // id than its append
     val opId = "del-" + appendIdOf(batchIds)
-    val seqs = commitSeqs(fs, path)
-    val members = spark.read.parquet(s"$path/members")
+    val members = snap.frame("members")
     import spark.implicits._
     val idsDf = broadcast(batchIds.toSeq.toDF(id))
     // one column-pruned (id, cell) scan: liveness + touched cells
     val matched = members.select(col(id), col("cell"))
       .join(idsDf, Seq(id), "left_semi").collect()
-    val committed = seqs.contains(opId)
+    val committed = snap.ops.contains(opId)
     if (committed && matched.isEmpty) return // committed retry: no-op
-    if (committed) {
+    if (committed)
       require(matched.length == batchIds.length,
         s"deleteFromSemDedupIndex($path): committed marker with PARTIAL " +
           s"liveness (${matched.length}/${batchIds.length} live) — " +
           "ambiguous state; rebuild the index")
-      // a RE-delete after a re-append of the same ids: the stale marker
-      // must go BEFORE any swap work, or a crash mid-swap would make
-      // [[recoverSemDedupDelete]] misread this attempt as committed and
-      // reclaim the retired cell dirs — the only copy of their pre-op
-      // content. With the marker cleared, that recovery rolls back; the
-      // retry (or an at-least-once replay of the ORIGINAL delete, which
-      // now also executes — the ids are live, which is what a delete
-      // wants gone) re-runs and re-commits with a fresh sequence.
-      IndexFs.delete(fs, s"$path/appends/$opId.committed")
-      writeManifest(fs, path, seqs - opId)
-    } else {
+    else {
       val liveSet = matched.map(_.getLong(0)).toSet
       val missing = batchIds.filterNot(liveSet)
       require(missing.isEmpty,
@@ -2597,35 +2426,18 @@ object Dedup {
     val total = members.count()
     require(total > batchIds.length,
       s"deleteFromSemDedupIndex($path): deleting every member would " +
-        "leave an unreadable empty members/ — delete the index " +
-        "directory instead")
+        "leave an empty index — delete the index directory instead")
     val cells = matched.map(_.get(1)).distinct.toSeq
-    val staging = s"$path/members.deleting/$opId"
-    members.filter(col("cell").isInCollection(cells))
+    // a cell whose every row is deleted writes no file: dropping its
+    // old files IS the delete
+    val rewritten = writeMembers(members.filter(col("cell").isInCollection(cells))
       .join(idsDf, Seq(id), "left_anti")
-      .select(col(id), col("__emb"), col("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(staging)
-    maybeCrash("semdel-after-staging")
-    val oldRoot = s"$path/members.old.del/$opId"
-    IndexFs.mkdirs(fs, oldRoot)
-    cells.map(c => s"cell=$c").sorted.zipWithIndex.foreach {
-      case (cd, i) =>
-        val live = s"$path/members/$cd"
-        val oldP = s"$oldRoot/$cd"
-        val staged = s"$staging/$cd"
-        if (IndexFs.exists(fs, oldP)) IndexFs.delete(fs, oldP)
-        IndexFs.rename(fs, live, oldP)
-        maybeCrash(s"semdel-mid-swap-$i")
-        // a cell whose every row is deleted has no staged dir
-        // (partitionBy writes nothing) — retiring the live dir IS the swap
-        if (IndexFs.exists(fs, staged)) IndexFs.rename(fs, staged, live)
-        maybeCrash(s"semdel-after-swap-$i")
-    }
-    maybeCrash("semdel-after-swaps")
-    writeCommitMarker(fs, path, opId, Some(seqs))
-    IndexFs.delete(fs, s"$path/members.deleting/$opId")
-    IndexFs.delete(fs, oldRoot)
+      .select(col(id), col("__emb"), col("cell")), path)
+    val touched = cells.map(_.toString).toSet
+    val old = snap.table("members")
+    snap.commit("semdel", Map("members" ->
+      (old.copy(files = old.files.filterNot(_.cell.exists(touched))) ++ rewritten)),
+      newOps = Set(opId))
   }
 
   /** Per-cell HYGIENE of a persisted semantic-dedup index — the number
@@ -2635,21 +2447,15 @@ object Dedup {
     * grows with append lifetime; `advise_compact` flags cells whose
     * file count reaches `fileThreshold`. Cost: one footer-only members
     * scan for the counts (only the PARTITION column is read — zero data
-    * bytes) plus a driver-side directory listing, O(k) at k ~ √n cells
-    * by contract. */
+    * bytes); the per-cell file counts come from the snapshot's file
+    * list, O(files) on the driver with no listing. */
   def semDedupIndexReport(spark: SparkSession, path: String,
       fileThreshold: Int = 4): DataFrame = {
-    requireSemDedupIndexBuilt(spark, path)
-    val fs = IndexFs.fs(spark, path)
+    val snap = IndexLog.snapshot(spark, path)
     import spark.implicits._
-    val files = IndexFs.listNames(fs, s"$path/members")
-      .filter(_.startsWith("cell="))
-      .map { cd =>
-        (cd.stripPrefix("cell=").toLong,
-          IndexFs.listNames(fs, s"$path/members/$cd")
-            .count(f => f.endsWith(".parquet") && !f.startsWith(".")))
-      }.toDF("cell", "n_files")
-    val counts = spark.read.parquet(s"$path/members")
+    val files = snap.table("members").files.groupBy(_.cell.get)
+      .map { case (c, fs) => (c.toLong, fs.length) }.toSeq.toDF("cell", "n_files")
+    val counts = snap.frame("members")
       .groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("n_members"))
     counts.join(broadcast(files), Seq("cell"))
@@ -2657,57 +2463,20 @@ object Dedup {
         (col("n_files") >= fileThreshold).as("advise_compact"))
   }
 
-  /** COMPACT a persisted semantic-dedup index: rewrite members/ to ONE
+  /** COMPACT a persisted semantic-dedup index: rewrite members to ONE
     * file per cell (the build-time layout), reclaiming the per-append
     * file growth [[semDedupIndexReport]] flags. Serving is unchanged by
     * construction — the rewrite is a row-identical repartition, no
-    * filter. Crash-safe with the two-rename discipline, plus an
-    * explicit roll-forward/roll-back head so a retried compaction heals
-    * the one window where no members/ exists (a reader there refuses
-    * loud on the missing `members/_SUCCESS`; the retired dir rides
-    * `members.old.compact` until the swap completes). Commit markers
-    * and their manifest are untouched: committed-append replays keep
-    * no-opping through the all-live check over the compacted rows. At
-    * 100 TB the rewrite is one corpus-linear partitioned copy
-    * (cell-partitioned input → no shuffle beyond the file split), run
-    * RARELY, gated by the report. */
+    * filter — and one commit swaps the whole member set, so readers see
+    * either layout and never a mix. Recorded op ids carry over:
+    * committed-append replays keep no-opping through the all-live check
+    * over the compacted rows. At 100 TB the rewrite is one
+    * corpus-linear partitioned copy (cell-partitioned input → no
+    * shuffle beyond the file split), run RARELY, gated by the report. */
   def compactSemDedupIndex(spark: SparkSession, path: String): Unit = {
-    val fs = IndexFs.fs(spark, path)
-    // heal a previously crashed compaction FIRST: complete the swap if
-    // the replacement finished writing, else restore the retired dir
-    val live = s"$path/members"
-    val tmp = s"$path/members.compacting"
-    val old = s"$path/members.old.compact"
-    if (!IndexFs.exists(fs, s"$live/_SUCCESS")) {
-      if (IndexFs.exists(fs, s"$tmp/_SUCCESS")) {
-        if (IndexFs.exists(fs, live)) IndexFs.delete(fs, live)
-        IndexFs.rename(fs, tmp, live) // roll forward
-      } else if (IndexFs.exists(fs, old)) {
-        if (IndexFs.exists(fs, live)) IndexFs.delete(fs, live)
-        IndexFs.rename(fs, old, live) // roll back
-      }
-    }
-    requireSemDedupIndexBuilt(spark, path, maintenance = true)
-    // append/delete leftovers are THEIR retries' job (the compaction
-    // rewrite would fold uncommitted rows into files their sweeps can
-    // no longer address)
-    Seq("members.appending", "members.deleting", "members.old.del")
-      .foreach { d =>
-        require(IndexFs.listNames(fs, s"$path/$d").isEmpty,
-          s"compactSemDedupIndex($path): crashed or in-flight " +
-            s"maintenance left $d/ non-empty — retry that op first")
-      }
-    IndexFs.delete(fs, tmp)
-    spark.read.parquet(live)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    maybeCrash("semcompact-after-staging")
-    if (IndexFs.exists(fs, old)) IndexFs.delete(fs, old)
-    IndexFs.rename(fs, live, old)
-    maybeCrash("semcompact-mid-swap")
-    IndexFs.rename(fs, tmp, live)
-    maybeCrash("semcompact-after-swap")
-    IndexFs.delete(fs, old)
+    val snap = IndexLog.snapshot(spark, path)
+    snap.commit("semcompact",
+      Map("members" -> writeMembers(snap.frame("members"), path)))
   }
 
   /** REBUILD a drifted semantic-dedup index in place — the op that
@@ -2720,81 +2489,18 @@ object Dedup {
     * re-assigns every member, restoring the balanced partition (and,
     * since the rewrite is one-file-per-cell, doubling as a compaction).
     *
-    * Crash-safe with NO data-loss window, unlike a naive
-    * delete-and-rebuild: both replacements (`seeds.rebuilding`,
-    * `members.rebuilding`) are FULLY written beside the live pair
-    * before either live dir is touched; the lives are then retired
-    * together (so no window serves a new quantizer over an old
-    * assignment or vice versa) and the replacements renamed in. Every
-    * crash window either leaves the live pair intact, or a missing
-    * live whose complete replacement (or retired original) exists — the
-    * heal head at entry rolls forward/back accordingly, and readers
-    * refuse loud in between. Commit markers stay: replays of committed
-    * appends keep no-opping through the all-live check over the
-    * re-assigned rows. kClusters defaults to the current quantizer's
-    * size; seed ids renumber 0..k-1 (verdicts are
-    * assignment-relative). */
+    * No data-loss window and no mixed generation: both replacements are
+    * written beside the live pair and ONE commit swaps seeds and
+    * members together, so every reader sees the old pair or the new
+    * one. Recorded op ids stay: replays of committed appends keep
+    * no-opping through the all-live check over the re-assigned rows.
+    * kClusters defaults to the current quantizer's size; seed ids
+    * renumber 0..k-1 (verdicts are assignment-relative). */
   def rebuildSemDedupIndex(spark: SparkSession, path: String,
       kClusters: Int = 0, probeAssign: Boolean = true): Unit = {
-    val fs = IndexFs.fs(spark, path)
-    val mLive = s"$path/members"; val sLive = s"$path/seeds"
-    val mTmp = s"$path/members.rebuilding"; val sTmp = s"$path/seeds.rebuilding"
-    val mOld = s"$path/members.old.rebuild"; val sOld = s"$path/seeds.old.rebuild"
-    // heal a previously crashed rebuild FIRST. The heal must be
-    // PAIR-aware: handling the two halves independently can install a
-    // MIXED-generation live pair (e.g. after a mid-swap crash, sLive is
-    // already the NEW quantizer and sTmp is gone — a per-half rollback
-    // would keep it while restoring the OLD members, and both dirs
-    // carry _SUCCESS, so every reader check passes over silently wrong
-    // verdicts). Forward is possible iff EVERY half can reach the new
-    // generation: its replacement is complete, or it already swapped in
-    // (live present with its tmp gone — renames only consume tmps by
-    // moving them to live). Only when forward is impossible do we roll
-    // the WHOLE pair back to the retired originals.
-    val livePairOk = IndexFs.exists(fs, s"$mLive/_SUCCESS") &&
-      IndexFs.exists(fs, s"$sLive/_SUCCESS")
-    val halves = Seq((sTmp, sLive, sOld), (mTmp, mLive, mOld))
-    if (livePairOk) {
-      // lives are a consistent pair (old before any retire, or new
-      // after the full swap): tmp/old dirs are pure leftovers
-      Seq(mTmp, sTmp, mOld, sOld).foreach(IndexFs.delete(fs, _))
-    } else if (halves.forall { case (tmp, live, _) =>
-        IndexFs.exists(fs, s"$tmp/_SUCCESS") || IndexFs.exists(fs, live) }) {
-      // roll FORWARD to the new pair: install each half's replacement,
-      // retiring whatever live dir still occupies the slot (it is the
-      // OLD generation — the swap only deletes tmps by renaming them
-      // into the live slot)
-      halves.foreach { case (tmp, live, old) =>
-        if (IndexFs.exists(fs, s"$tmp/_SUCCESS")) {
-          if (IndexFs.exists(fs, live)) {
-            IndexFs.delete(fs, old)
-            IndexFs.rename(fs, live, old)
-          }
-          IndexFs.rename(fs, tmp, live)
-        } // else: this half already swapped in (live IS the new one)
-      }
-      Seq(mOld, sOld).foreach(IndexFs.delete(fs, _))
-    } else {
-      // replacements unusable: roll the WHOLE pair back
-      halves.foreach { case (tmp, live, old) =>
-        if (!IndexFs.exists(fs, live)) {
-          require(IndexFs.exists(fs, old),
-            s"rebuildSemDedupIndex($path): $live missing and no retired " +
-              "copy to restore — manual recovery required")
-          IndexFs.rename(fs, old, live)
-        } else IndexFs.delete(fs, old)
-        IndexFs.delete(fs, tmp)
-      }
-    }
-    requireSemDedupIndexBuilt(spark, path, maintenance = true)
-    Seq("members.appending", "members.deleting", "members.old.del",
-        "members.compacting", "members.old.compact").foreach { d =>
-      require(IndexFs.listNames(fs, s"$path/$d").isEmpty,
-        s"rebuildSemDedupIndex($path): crashed or in-flight maintenance " +
-          s"left $d/ non-empty — retry that op first")
-    }
+    val snap = IndexLog.snapshot(spark, path)
     import spark.implicits._
-    val members = spark.read.parquet(mLive)
+    val members = snap.frame("members")
     val id = members.columns
       .filterNot(c => c == "__emb" || c == "cell") match {
       case Array(one) => one
@@ -2805,7 +2511,7 @@ object Dedup {
     val live = members.select(col(id), col("__emb"))
     val k =
       if (kClusters > 0) kClusters
-      else spark.read.parquet(sLive).count().toInt
+      else snap.frame("seeds").count().toInt
     require(k > 0, s"rebuildSemDedupIndex($path): empty quantizer")
     val dim = live.select(size(col("__emb"))).head().getInt(0)
     val seeds = Similarity
@@ -2813,25 +2519,10 @@ object Dedup {
       .zipWithIndex
       .map { case (c, i) => (i.toLong, c.map(_.toFloat).toSeq) }
       .toIndexedSeq.toDF("seed_id", "s_emb")
-    // replacements fully written BESIDE the live pair
-    seeds.repartition(1).write.mode("overwrite").parquet(sTmp)
-    assignCells(live, "__emb", id, seeds, "seed_id", "s_emb", probeAssign)
-      .select(col(id), col("cluster_id").as("cell"), col("__emb"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(mTmp)
-    maybeCrash("semrebuild-after-staging")
-    // retire the live pair together — members FIRST, so every reader in
-    // the swap window hits the clean members/_SUCCESS refusal instead
-    // of a raw missing-seeds read — then swap the replacements in,
-    // members LAST (its _SUCCESS is the serve gate)
-    Seq(mOld, sOld).foreach(IndexFs.delete(fs, _))
-    IndexFs.rename(fs, mLive, mOld)
-    IndexFs.rename(fs, sLive, sOld)
-    maybeCrash("semrebuild-after-retire")
-    IndexFs.rename(fs, sTmp, sLive)
-    maybeCrash("semrebuild-mid-swap")
-    IndexFs.rename(fs, mTmp, mLive)
-    maybeCrash("semrebuild-after-swap")
-    IndexFs.delete(fs, mOld); IndexFs.delete(fs, sOld)
+    snap.commit("semrebuild", Map(
+      "seeds" -> IndexLog.write(seeds.repartition(1), path, "seeds"),
+      "members" -> writeMembers(
+        assignCells(live, "__emb", id, seeds, "seed_id", "s_emb", probeAssign)
+          .select(col(id), col("cluster_id").as("cell"), col("__emb")), path)))
   }
 }

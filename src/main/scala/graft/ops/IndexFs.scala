@@ -3,24 +3,27 @@ package graft.ops
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Hadoop-FileSystem-routed primitives for the persisted-index
-  * lifecycle (the near-dup cluster index in [[Dedup]], the IVF index in
-  * [[Similarity]]): exists/rename/delete/read/write resolve against
-  * whatever filesystem the index root names — a bare local path, a
-  * `file://` URI, `hdfs://` — instead of `java.io.File`, which silently
-  * assumes a local root. A production index over a 100 TB corpus lives
-  * on HDFS or an object store, so the crash-safe swap protocols must
-  * speak the Hadoop FS API end to end.
+/** Hadoop-FileSystem-routed primitives for the persisted indexes (the
+  * [[IndexLog]] behind the IVF, semantic-dedup and near-dup indexes,
+  * and the near-dup cluster index in [[Dedup]]):
+  * exists/rename/delete/read/write resolve against whatever filesystem
+  * the index root names — a bare local path, a `file://` URI, `hdfs://`
+  * — instead of `java.io.File`, which silently assumes a local root. A
+  * production index over a 100 TB corpus lives on HDFS or an object
+  * store, so index maintenance must speak the Hadoop FS API end to end.
   *
-  * S3 caveat (documented, not papered over): the swap protocols here
-  * are RENAME-based, which is atomic on HDFS and local filesystems but
-  * not on S3 (S3A rename = server-side copy + delete: O(bytes), and a
-  * crash mid-rename can leave both or neither path). On an S3 root,
-  * treat the journal/marker files these protocols write LAST (the
-  * `appends/<id>.committed` marker, `_SUCCESS`) as the commit point and
-  * re-run the documented recovery (a retried append converges); or
-  * front the index with a rename-atomic store (HDFS, S3+EMRFS-
-  * consistent layer) when stronger guarantees are required.
+  * S3 caveat (documented, not papered over). The IVF, semantic-dedup
+  * and near-dup indexes commit through [[IndexLog]]: graft renames
+  * nothing there, and the commit point is the create-if-absent of one
+  * small file. Their data files are still written by Spark's file
+  * output committer, whose own renames under `_temporary/` are O(bytes)
+  * copies on S3; a rename-free committer would remove that last
+  * dependency. The cluster index still swaps directories by RENAME,
+  * which is atomic on HDFS and local filesystems but not on S3 (S3A
+  * rename = server-side copy + delete, and a crash mid-rename can leave
+  * both or neither path): on an S3 root, treat its marker files
+  * (`appends/<id>.committed`) as the commit point and re-run the
+  * documented recovery, or front it with a rename-atomic store.
   */
 private[graft] object IndexFs {
 

@@ -2,17 +2,14 @@ package graft.ops
 
 private[graft] object OpUtils {
 
-  /** Read a parquet dir — a persisted index or a source table
-    * (`Tables.load`) — with its schema cached for the JVM. Every bare
-    * `spark.read.parquet(path)` re-derives the schema (directory
-    * listing + footer read, and sometimes a one-task Spark job) on the
-    * driver — pure metadata latency paid on EVERY serve call or query
-    * against a path whose schema is fixed by construction (index
-    * appends/deletes/compactions all write the same columns; a rebuilt
-    * index reuses its path only with its own layout). File LISTING
-    * stays per-call, so appended/deleted files are always visible —
-    * only the schema is pinned. The production analogue is a catalog
-    * table: schema known, no per-query inference. */
+  /** Read a source table's parquet dir (`Tables.load`) with its schema
+    * cached for the JVM. Every bare `spark.read.parquet(path)`
+    * re-derives the schema (directory listing + footer read, and
+    * sometimes a one-task Spark job) on the driver — pure metadata
+    * latency paid on EVERY query against a path whose schema is fixed.
+    * File LISTING stays per-call; only the schema is pinned, keyed by
+    * path alone. The persisted indexes do not come here: they read
+    * their schema and file list from their commit ([[IndexLog]]). */
   def readParquet(spark: org.apache.spark.sql.SparkSession,
       path: String): org.apache.spark.sql.DataFrame = {
     val cached = indexSchemas.get(path)

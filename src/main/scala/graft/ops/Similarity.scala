@@ -350,15 +350,18 @@ object Similarity {
       k, embCol, id)
   }
 
-  /** The one reader of a persisted IVF index's layout (written by
-    * [[buildIvfIndex]] and the maintenance ops): `centroids/` (one row
-    * per cell), the cell-partitioned `corpus/`, and the optional
-    * `tombstones/` id list ([[deleteFromIvfIndex]]). Every read goes
-    * through `OpUtils.readParquet`. The tombstone directory is probed
-    * once per reader, so each operation builds its own. */
+  /** The one reader of a persisted IVF index (written by
+    * [[buildIvfIndex]] and the maintenance ops through [[IndexLog]]):
+    * `centroids` (one row per cell), the cell-partitioned `corpus`, and
+    * the optional `tombstones` id list ([[deleteFromIvfIndex]]). A
+    * reader holds one snapshot of the index's head commit, so each
+    * operation builds its own and every frame it reads comes from that
+    * one version. */
   private[graft] final class IvfIndexReader(spark: SparkSession, path: String) {
+    val snapshot: IndexLog.Snapshot = IndexLog.snapshot(spark, path)
+
     /** The (cell, centroid) table. */
-    def centroidTable: DataFrame = OpUtils.readParquet(spark, s"$path/centroids")
+    def centroidTable: DataFrame = snapshot.frame("centroids")
 
     /** The coarse quantizer collected in cell order (one driver action). */
     def centroids: Array[Array[Double]] =
@@ -366,15 +369,11 @@ object Similarity {
         .collect().map(_.getSeq[Double](0).toArray)
 
     /** Every stored corpus row, tombstoned ones included. */
-    def stored: DataFrame = OpUtils.readParquet(spark, s"$path/corpus")
+    def stored: DataFrame = snapshot.frame("corpus")
 
     /** The tombstoned ids (duplicates possible), if any delete landed. */
-    lazy val tombstones: Option[DataFrame] = {
-      val dir = s"$path/tombstones"
-      if (IndexFs.exists(IndexFs.fs(spark, path), dir))
-        Some(OpUtils.readParquet(spark, dir))
-      else None
-    }
+    lazy val tombstones: Option[DataFrame] =
+      snapshot.tables.get("tombstones").map(_ => snapshot.frame("tombstones"))
 
     /** The live corpus: `scope` applied to the stored rows, then the
       * tombstoned ids anti-joined out (broadcast — small by the
@@ -385,25 +384,34 @@ object Similarity {
     }
   }
 
-  /** Build and PERSIST an IVF index: `path/centroids` holds the trained
-    * coarse quantizer, `path/corpus` the cell-assigned corpus written
-    * `partitionBy("cell")`. Training and assignment run ONCE; every
-    * later session queries the files. The cell partitioning is the
-    * point at 100 TB: a probe reads only its nProbe cell directories
-    * (file-level partition pruning), so per-query scan cost is
-    * ~nProbe/kClusters of the corpus instead of all of it. */
+  /** Build and PERSIST an IVF index: `centroids` holds the trained
+    * coarse quantizer, `corpus` the cell-assigned corpus written
+    * `partitionBy("cell")`, both committed together through
+    * [[IndexLog]] (a build over an existing index replaces it in one
+    * commit). Training and assignment run ONCE; every later session
+    * queries the files. The cell partitioning is the point at 100 TB: a
+    * probe reads only its nProbe cells' files (file-level pruning), so
+    * per-query scan cost is ~nProbe/kClusters of the corpus instead of
+    * all of it. */
   def buildIvfIndex(corpus: DataFrame, path: String, kClusters: Int = 16,
       embCol: String = "embedding", id: String = "vec_id", dim: Int = 64): Unit = {
     val spark = corpus.sparkSession
-    import spark.implicits._
+    val base = IndexLog.head(spark, path)
     val centroids =
       unitCentroids(kmeansCentroids(corpus, embCol, kClusters, dim = dim))
-    centroids.zipWithIndex.toIndexedSeq
+    IndexLog.commit(spark, path, "ivfbuild", base, Map(
+      "centroids" -> writeCentroids(spark, path, centroids),
+      "corpus" -> IndexLog.write(corpus.withColumn("cell", cellOf(centroids)(col(embCol))),
+        path, "corpus", Some("cell"))))
+  }
+
+  /** The (cell, centroid) table of `centroids`, written as ONE file. */
+  private def writeCentroids(spark: SparkSession, path: String,
+      centroids: Array[Array[Double]]): IndexLog.Table = {
+    import spark.implicits._
+    IndexLog.write(centroids.zipWithIndex.toIndexedSeq
       .map { case (c, i) => (i, c.toSeq) }
-      .toDF("cell", "centroid")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/centroids")
-    corpus.withColumn("cell", cellOf(centroids)(col(embCol)))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$path/corpus")
+      .toDF("cell", "centroid").repartition(1), path, "centroids")
   }
 
   /** Append a NEW vector batch to a prebuilt IVF index WITHOUT
@@ -436,8 +444,14 @@ object Similarity {
     * Both checks are column-pruned id scans streaming against the
     * broadcast batch ids — no vector bytes are read. */
   def appendToIvfIndex(spark: SparkSession, path: String, batch: DataFrame,
-      embCol: String = "embedding", id: String = "vec_id"): Unit = {
-    val idx = new IvfIndexReader(spark, path)
+      embCol: String = "embedding", id: String = "vec_id"): Unit =
+    append(new IvfIndexReader(spark, path), batch, embCol, id, Set.empty)
+
+  /** The guarded append of [[appendToIvfIndex]] against `idx`'s
+    * snapshot; its commit records `ops`. */
+  private def append(idx: IvfIndexReader, batch: DataFrame, embCol: String,
+      id: String, ops: Set[String]): Unit = {
+    val path = idx.snapshot.root
     val batchIds = broadcast(batch.select(col(id)).distinct())
     idx.tombstones.foreach { tombs =>
       val t = tombs.join(batchIds, Seq(id), "left_semi").limit(1).collect()
@@ -463,45 +477,33 @@ object Similarity {
       s"appendToIvfIndex($path): batch contains duplicate $id " +
         s"${batchDup.headOption.map(_.get(0))} — one identity would serve " +
         "two corpus rows; dedup the batch before appending")
-    batch.withColumn("cell", cellOf(idx.centroids)(col(embCol)))
-      .write.mode("append").partitionBy("cell").parquet(s"$path/corpus")
+    val added = IndexLog.write(batch.withColumn("cell", cellOf(idx.centroids)(col(embCol))),
+      path, "corpus", Some("cell"))
+    idx.snapshot.commit("ivfapp", Map("corpus" -> (idx.snapshot.table("corpus") ++ added)), ops)
   }
 
   /** [[appendToIvfIndex]] under AT-LEAST-ONCE delivery — the streaming
-    * sink's form. Replay detection is MARKER-gated, not inferred from
-    * liveness alone: a committed append through THIS op leaves an
-    * intent marker under `$path/appends.idem/` keyed on an
-    * order-independent digest of the batch's id SET, so a batch whose
-    * ids are all live AND whose digest marker exists is the replay of
-    * a committed append (no-op), while an all-live batch with NO
-    * marker — foreign ids appended by another op, or a batch reusing
+    * sink's form. Replay detection keys on the COMMIT, not on liveness
+    * alone: the append's commit records an order-independent digest of
+    * the batch's id SET among its op ids, so a batch whose ids are all
+    * live AND whose digest a commit recorded is the replay of a
+    * committed append (no-op), while an all-live batch with NO recorded
+    * digest — foreign ids appended by another op, or a batch reusing
     * live ids with DIFFERENT embeddings — refuses loud instead of
     * silently swallowing the new vectors (every comparable path here
     * refuses loud on already-indexed ids; this op must not be the one
     * silent exception). PARTIAL liveness still refuses loud inside the
     * raw append (the documented tombstone-compact-reappend/rebuild
-    * case, never a silent retry).
-    *
-    * The marker lands AFTER the raw append succeeds (commit, not
-    * intent — r16 ADVICE): a marker written first would persist when
-    * the append THROWS and the batch is abandoned, so a later batch
-    * reusing that exact id set with different embeddings (its ids
-    * landed via the raw path) would silently no-op — the very case the
-    * marker exists to catch. With marker-last, a crash in the
-    * append-then-marker window replays as all-live with NO marker and
-    * refuses loud (delete + compact, then append) — the safe direction:
-    * a loud one-off recovery beats a silent swallow. Like the
-    * semDedup append's marker, the digest keys on the id SET only:
-    * a replay that reuses a committed batch's exact id set with
-    * different embeddings no-ops by contract (ids are identity).
-    * Pre-marker indexes: batches appended through this op BEFORE the
-    * marker existed replay as all-live with no marker and now refuse
-    * loud — the safe direction (loud, with the recovery named).
+    * case, never a silent retry). Data and digest land in ONE commit,
+    * so a failed or crashed append records nothing. Like the semDedup
+    * append, the digest keys on the id SET only: a replay that reuses a
+    * committed batch's exact id set with different embeddings no-ops by
+    * contract (ids are identity).
     *
     * Cost: one column-pruned corpus id scan streaming against the
     * broadcast batch ids (the same cost the append's own guard pays),
     * one order-independent hash aggregate over the batch ids (no
-    * driver-side id collect), one marker stat/write. */
+    * driver-side id collect); the digest lookup reads the snapshot. */
   def appendToIvfIndexIdempotent(spark: SparkSession, path: String,
       batch: DataFrame, embCol: String = "embedding",
       id: String = "vec_id"): Unit = {
@@ -522,17 +524,16 @@ object Similarity {
     val digest = java.lang.Long.toHexString(d.getLong(0)) + "-" +
       java.lang.Long.toHexString(d.getLong(1)) + "-" +
       s"${d.get(2)}-${d.get(3)}-$nBatch"
-    val fs = IndexFs.fs(spark, path)
-    val marker = s"$path/appends.idem/$digest"
     // "live" must exclude TOMBSTONED rows: a stored-but-tombstoned id
     // means the batch is a genuine re-append after a delete, which must
     // fall through to the raw append's loud compact-then-reappend
     // refusal — an all-stored no-op here would silently swallow the new
     // vectors while serving anti-joins the old ones out
-    val live = new IvfIndexReader(spark, path).live(id,
+    val idx = new IvfIndexReader(spark, path)
+    val live = idx.live(id,
       _.select(col(id)).distinct().join(broadcast(batchIds), Seq(id), "left_semi"))
     if (live.count() == nBatch) {
-      require(IndexFs.exists(fs, marker),
+      require(idx.snapshot.ops.contains(digest),
         s"appendToIvfIndexIdempotent($path): every batch id is already " +
           "live but no commit marker exists for this exact id set — this " +
           "is NOT the replay of an append made through this op (the ids " +
@@ -541,8 +542,7 @@ object Similarity {
           "delete the ids and compact (or rebuild), then append")
       return // committed replay: no-op
     }
-    appendToIvfIndex(spark, path, batch, embCol, id)
-    IndexFs.writeUtf8(fs, marker, nBatch.toString)
+    append(idx, batch, embCol, id, Set(digest))
   }
 
   /** DELETE vectors from a prebuilt IVF index as TOMBSTONES — the third
@@ -556,8 +556,12 @@ object Similarity {
     * LSM/FAISS `remove_ids` trade). Idempotent: deleting an id twice
     * just duplicates a tombstone row; the anti-join is set-semantic. */
   def deleteFromIvfIndex(spark: SparkSession, path: String,
-      ids: DataFrame, id: String = "vec_id"): Unit =
-    ids.select(col(id)).write.mode("append").parquet(s"$path/tombstones")
+      ids: DataFrame, id: String = "vec_id"): Unit = {
+    val snap = IndexLog.snapshot(spark, path)
+    val added = IndexLog.write(ids.select(col(id)), path, "tombstones")
+    snap.commit("ivfdel",
+      Map("tombstones" -> snap.tables.get("tombstones").fold(added)(_ ++ added)))
+  }
 
   /** COMPACT a tombstoned IVF index: rewrite the cell-partitioned
     * corpus dropping tombstoned rows, then clear the tombstone list —
@@ -566,44 +570,24 @@ object Similarity {
     * query pays the anti-join; one partitioned rewrite makes reads
     * clean again). Serving before/after is identical by construction —
     * the compaction materializes exactly the anti-join the read path
-    * applies. Crash-safe without a transaction log: the compacted
-    * corpus is written BESIDE the live one, swapped in with two
-    * renames, and the tombstone list dropped LAST — an interrupt at
-    * any step leaves tombstones in place over whichever corpus is
-    * visible, so deleted rows can never be resurrected (worst case, a
-    * crash between the renames leaves no `corpus` dir and reads fail
-    * loud; `corpus.old` remains for manual restore). At 100 TB the
-    * rewrite is a narrow distributed copy — the input is already
-    * cell-partitioned, so partitionBy re-writes without a shuffle —
-    * not a re-index. */
+    * applies. One commit swaps the rewritten corpus in and drops the
+    * tombstone list together, so a reader sees either the tombstoned
+    * corpus or the compacted one, and a crash at any step leaves the
+    * last committed state. At 100 TB the rewrite is a narrow
+    * distributed copy — the input is already cell-partitioned, so
+    * partitionBy re-writes without a shuffle — not a re-index. */
   def compactIvfIndex(spark: SparkSession, path: String,
       id: String = "vec_id"): Unit = {
-    // all filesystem steps route through the Hadoop FS API so an
-    // hdfs:// (or file://) index root works — see IndexFs for the S3
-    // rename caveat
-    val fs = IndexFs.fs(spark, path)
     val idx = new IvfIndexReader(spark, path)
     if (idx.tombstones.isEmpty) return
-    val tmp = s"$path/corpus.compacting" // crash leftovers overwritten
-    idx.live(id).write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    // an all-rows-tombstoned compaction writes a part-file-less dir that
-    // every later read would REJECT (no footers to infer a schema from)
-    // — refuse and keep the servable tombstoned state instead of
-    // swapping in a bricked corpus
-    if (!IndexFs.anyFile(fs, tmp)(_.endsWith(".parquet"))) {
-      IndexFs.delete(fs, tmp)
-      throw new IllegalStateException(
-        s"compactIvfIndex($path): every corpus row is tombstoned — the " +
-          "compacted corpus would be empty and unreadable; delete the " +
-          "index directory instead of compacting it away")
-    }
-    val corpus = s"$path/corpus"
-    val old = s"$path/corpus.old"
-    if (IndexFs.exists(fs, old)) IndexFs.delete(fs, old)
-    IndexFs.rename(fs, corpus, old)
-    IndexFs.rename(fs, tmp, corpus)
-    IndexFs.delete(fs, s"$path/tombstones") // last: crash above never resurrects
-    IndexFs.delete(fs, old)
+    val corpus = IndexLog.write(idx.live(id), path, "corpus", Some("cell"))
+    // an all-rows-tombstoned compaction would commit an empty corpus —
+    // refuse and keep the servable tombstoned state
+    if (corpus.files.isEmpty) throw new IllegalStateException(
+      s"compactIvfIndex($path): every corpus row is tombstoned — the " +
+        "compacted corpus would be empty and unreadable; delete the " +
+        "index directory instead of compacting it away")
+    idx.snapshot.commit("ivfcompact", Map("corpus" -> corpus), drop = Set("tombstones"))
   }
 
   /** REBUILD a drifted IVF index in place: re-train the coarse
@@ -617,17 +601,11 @@ object Similarity {
     * tombstoned rows anyway, doubles as a compaction). kClusters and
     * dim are carried over from the existing index.
     *
-    * Crash-safe with the same rename discipline as
-    * [[compactIvfIndex]], extended to the centroid/corpus PAIR — the
-    * two must swap together or reads would score new cell assignments
-    * against old centroids (silently wrong probes). Both `.rebuilding`
-    * dirs are fully written first; then centroids and corpus are
-    * renamed away before either replacement lands, so every crash
-    * window leaves a MISSING directory (reads fail loud, `.old` kept
-    * for manual restore) rather than a mismatched pair; tombstones are
-    * dropped LAST (the rebuilt corpus already excludes them — an
-    * interrupt never resurrects a deleted row, the anti-join is
-    * idempotent).
+    * The centroid/corpus PAIR is swapped in by ONE commit (which also
+    * drops the tombstone list — the rebuilt corpus already excludes
+    * those rows), so no reader ever scores new cell assignments against
+    * old centroids, and a crash at any step leaves the last committed
+    * pair.
     *
     * 100 TB posture: same cost shape as [[buildIvfIndex]] — a bounded
     * driver-side training sample plus one distributed assignment
@@ -636,45 +614,23 @@ object Similarity {
     * drift report, not per-batch. */
   def rebuildIvfIndex(spark: SparkSession, path: String,
       embCol: String = "embedding", id: String = "vec_id"): Unit = {
-    import spark.implicits._
     val idx = new IvfIndexReader(spark, path)
     val oldCentroids = idx.centroids
     val kClusters = oldCentroids.length
     val dim = oldCentroids.head.length
-    val fs = IndexFs.fs(spark, path)
     val live = idx.live(id, _.drop("cell"))
     // an all-rows-tombstoned rebuild has nothing to train on — refuse
-    // BEFORE touching anything, keep the servable tombstoned state
+    // BEFORE writing anything, keep the servable tombstoned state
     // (limit-1 probe; rebuilds are rare admin ops)
     if (live.isEmpty) throw new IllegalStateException(
       s"rebuildIvfIndex($path): the live corpus is empty — the rebuilt " +
         "index would be unreadable; delete the index directory instead")
     val centroids = unitCentroids(kmeansCentroids(live, embCol, kClusters, dim = dim))
-    val tmpCentroids = s"$path/centroids.rebuilding"
-    val tmpCorpus = s"$path/corpus.rebuilding"
-    centroids.zipWithIndex.toIndexedSeq
-      .map { case (c, i) => (i, c.toSeq) }
-      .toDF("cell", "centroid")
-      .repartition(1).write.mode("overwrite").parquet(tmpCentroids)
-    // the live.isEmpty refusal above guarantees this write emits part
-    // files (unlike compactIvfIndex, which has no pre-check and keeps
-    // its post-write emptiness walk)
-    live.withColumn("cell", cellOf(centroids)(col(embCol)))
-      .write.mode("overwrite").partitionBy("cell").parquet(tmpCorpus)
-    val centroidsDir = s"$path/centroids"
-    val corpusDir = s"$path/corpus"
-    val oldC = s"$path/centroids.old"
-    val oldK = s"$path/corpus.old"
-    if (IndexFs.exists(fs, oldC)) IndexFs.delete(fs, oldC)
-    if (IndexFs.exists(fs, oldK)) IndexFs.delete(fs, oldK)
-    IndexFs.rename(fs, centroidsDir, oldC)
-    IndexFs.rename(fs, corpusDir, oldK)
-    IndexFs.rename(fs, tmpCentroids, centroidsDir)
-    IndexFs.rename(fs, tmpCorpus, corpusDir)
-    val tombDir = s"$path/tombstones"
-    if (IndexFs.exists(fs, tombDir)) IndexFs.delete(fs, tombDir)
-    IndexFs.delete(fs, oldC)
-    IndexFs.delete(fs, oldK)
+    idx.snapshot.commit("ivfrebuild", Map(
+      "centroids" -> writeCentroids(spark, path, centroids),
+      "corpus" -> IndexLog.write(live.withColumn("cell", cellOf(centroids)(col(embCol))),
+        path, "corpus", Some("cell"))),
+      drop = Set("tombstones"))
   }
 
   /** Per-cell occupancy of a prebuilt IVF index — the drift monitor

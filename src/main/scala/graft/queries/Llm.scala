@@ -41,8 +41,8 @@ object Llm {
     * (llm45's batch lookup, str12's streaming serving) — buildIvfIndex
     * is deterministic, so building once is both safe and the point:
     * one k-means training pass and one partitioned corpus write per
-    * scale factor, not one per query. The parquet _SUCCESS marker is
-    * the built-ness signal. */
+    * scale factor, not one per query. The index log's head is the
+    * built-ness signal. */
   // per-index-path build locks: first-use callers on different threads
   // (e.g. llm45 and str12 racing in a test runner) must not interleave
   // overwrite writes to the same parquet path
@@ -56,7 +56,7 @@ object Llm {
     val idx = graft.TmpDirs.scoped("graft-ivfidx-" + graft.TmpDirs.pathKey(dir))
     val lock = ivfBuildLocks.computeIfAbsent(idx, _ => new Object)
     lock.synchronized {
-      if (!new java.io.File(s"$idx/corpus/_SUCCESS").exists())
+      if (graft.ops.IndexLog.head(s, idx).isEmpty)
         Similarity.buildIvfIndex(Tables.load(s, dir, "embeddings"), idx,
           kClusters = 16)
     }
@@ -67,7 +67,7 @@ object Llm {
     * 90% of the corpus, then the held-out 10% APPENDED assignment-only
     * (Similarity.appendToIvfIndex) — same pid-scoped idempotent shape
     * as ensureIvfIndex, with an explicit _APPENDED marker because the
-    * corpus dir's _SUCCESS appears at BUILD time and an interrupted
+    * index has a head from its BUILD commit on, and an interrupted
     * append would otherwise serve a 90% index silently. */
   private[queries] def ensureIvfAppendIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
@@ -92,8 +92,8 @@ object Llm {
     * `StreamOps.ivfAppendStream` (assignment-only against the frozen
     * centroids; committed-replay micro-batches no-op through the
     * all-live check, so at-least-once delivery converges). Same
-    * _APPENDED-marker discipline as ensureIvfAppendIndex: the corpus
-    * dir's _SUCCESS appears at build time, so an interrupted stream
+    * _APPENDED-marker discipline as ensureIvfAppendIndex: the index
+    * has a head from its build commit on, so an interrupted stream
     * would otherwise serve a 90% index silently. */
   private[queries] def ensureStreamedIvfIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {

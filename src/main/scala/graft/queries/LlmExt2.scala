@@ -160,14 +160,13 @@ object LlmExt2 {
   /** The llm82 semantic-dedup index: the vec_id %% 10 != 0 corpus
     * assigned once into its Voronoi cells and persisted cell-
     * partitioned (Dedup.buildSemDedupIndex) — later batches probe only
-    * the cell directories they touch. `members/_SUCCESS` is the
-    * built-ness marker because members/ is the LAST artifact the
-    * builder writes. */
+    * the cells they touch. The index log's head is the built-ness
+    * marker: the build commits seeds and members together. */
   private[queries] def ensureSemDedupIndex(
       s: org.apache.spark.sql.SparkSession, dir: String): String = {
     val root = graft.TmpDirs.scoped("graft-semidx2-" + graft.TmpDirs.pathKey(dir))
     val idx = s"$root/index"
-    buildOnce(root)(new java.io.File(s"$idx/members/_SUCCESS").exists()) {
+    buildOnce(root)(graft.ops.IndexLog.head(s, idx).isDefined) {
       val emb = Tables.load(s, dir, "embeddings")
       Dedup.buildSemDedupIndex(emb.filter(col("vec_id") % 10 =!= 0), idx,
         "embedding", "vec_id",
@@ -342,13 +341,13 @@ object LlmExt2 {
     * half, built ONCE per JVM (the build-once lifecycle the operator
     * exists to demonstrate — rebuilding per query would re-sign the
     * whole corpus each run). Keyed on a 128-bit digest of the data dir;
-    * `shingles/_SUCCESS` is the built-ness marker because it is the
-    * LAST artifact the builder writes (params → buckets → shingles), so
-    * a half-built index is never trusted. */
+    * the index log's head is the built-ness marker: the build commits
+    * buckets, shingles and parameters together, so a half-built index
+    * is never trusted. */
   private def ensureNearDupIndex(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
     val idx = graft.TmpDirs.scoped("graft-ndidx-" + graft.TmpDirs.pathKey(dir))
-    buildOnce(idx)(new java.io.File(s"$idx/shingles/_SUCCESS").exists()) {
+    buildOnce(idx)(graft.ops.IndexLog.head(s, idx).isDefined) {
       Dedup.buildNearDupIndex(
         Tables.load(s, dir, "documents").filter(col("doc_id") % 10 =!= 0), idx)
     }
@@ -1488,7 +1487,7 @@ object LlmExt2 {
         |  true AS cells_bounded, CAST(1 AS BIGINT) AS max_files_per_cell
         |""".stripMargin) { (s, dir) =>
       val root = ensureRebuiltSemDedupIndex(s, dir)
-      val k = s.read.parquet(s"$root/index/seeds").count()
+      val k = graft.ops.IndexLog.snapshot(s, s"$root/index").frame("seeds").count()
       // one aggregation over the hygiene report carries every
       // reconciliation number (a crossJoin of 1-row aggregates would
       // plan a BroadcastNestedLoopJoin for nothing)

@@ -444,7 +444,7 @@ object StreamOps {
     * map-side pass + one per-doc count; a doc's grams all arrive in its
     * own batch, so update mode emits each contaminated doc exactly
     * once. */
-  /** The gate's quantizer, read + validated ONCE at stream start:
+  /** The gate's quantizer from one index snapshot, read + validated:
     * schema guards mirror `Dedup.assignCells`' probe path (an index
     * whose seeds were persisted as `array<double>` — legal for the
     * join-form batch ops — must refuse LOUD here, not surface as an
@@ -453,12 +453,10 @@ object StreamOps {
     * small by contract, but an uncapped collect of a mis-built index
     * would OOM the driver silently). */
   private def readGateSeeds(spark: SparkSession,
-      path: String): Array[(Long, Array[Float])] = {
+      snap: graft.ops.IndexLog.Snapshot): Array[(Long, Array[Float])] = {
     import org.apache.spark.sql.types._
-    // built-ness first: a crashed/in-flight build must refuse loud, not
-    // gate against partial (or stale-quantizer) members
-    graft.ops.Dedup.requireSemDedupIndexBuilt(spark, path)
-    val seeds = spark.read.parquet(s"$path/seeds")
+    val path = snap.root
+    val seeds = snap.frame("seeds")
     val idType = seeds.schema("seed_id").dataType
     require(Seq[DataType](ByteType, ShortType, IntegerType, LongType)
         .contains(idType),
@@ -498,11 +496,14 @@ object StreamOps {
     * with the streaming gate's micro-batches). */
   def semDedupGateBatch(spark: SparkSession, path: String,
       batch: DataFrame, embCol: String, id: String,
-      threshold: Double): DataFrame =
-    gateVerdicts(spark, path, batch, embCol, id, threshold,
-      readGateSeeds(spark, path))
+      threshold: Double): DataFrame = {
+    val snap = graft.ops.IndexLog.snapshot(spark, path)
+    gateVerdicts(snap, batch, embCol, id, threshold, readGateSeeds(spark, snap))
+  }
 
-  private def gateVerdicts(spark: SparkSession, path: String,
+  /** Gate verdicts of `batch` against `snap`'s members, with `seeds`
+    * read from that same snapshot. */
+  private def gateVerdicts(snap: graft.ops.IndexLog.Snapshot,
       batch: DataFrame, embCol: String, id: String, threshold: Double,
       seeds: Array[(Long, Array[Float])]): DataFrame = {
     import graft.functions.VectorFunctions._
@@ -513,7 +514,7 @@ object StreamOps {
       .localCheckpoint(true)
     val cells = assigned.select(col("cluster_id")).distinct()
       .collect().map(_.get(0))
-    val members = spark.read.parquet(s"$path/members")
+    val members = snap.frame("members")
       .filter(col("cell").isInCollection(cells.toSeq))
       .select(col("cell").as("__mcell"), col("__emb").as("__memb"))
     val cond = col("cluster_id") === col("__mcell") &&
@@ -544,26 +545,42 @@ object StreamOps {
     * O(corpus). The earlier stream-static-join form cached the WHOLE
     * members side (corpus-scale memory pinned for the stream's
     * lifetime) — invisible at test scale, the exact posture that
-    * breaks on a 100 TB index. The quantizer is read and validated
-    * once at stream start; `sink` receives each micro-batch's verdict
-    * frame `(id, cluster_id, is_dup)` with its batchId (idempotent
-    * sinks key on it). */
+    * breaks on a 100 TB index. Each micro-batch scores against the
+    * index's head snapshot at that trigger, so a commit landing while
+    * the stream runs is seen whole and an uncommitted write never; the
+    * quantizer is validated at stream start (a missing index refuses
+    * loud there) and re-read only when a commit replaced it. `sink`
+    * receives each micro-batch's verdict frame `(id, cluster_id,
+    * is_dup)` with its batchId (idempotent sinks key on it). */
   def semDedupGateStream(spark: SparkSession, path: String,
       arriving: DataFrame, embCol: String, id: String,
       threshold: Double,
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery = {
-    val seeds = readGateSeeds(spark, path)
-    arriving.writeStream
-      // RAM-backed ephemeral checkpoint: callers of this API get the
-      // same non-durable temp checkpoint Spark would create, minus the
-      // disk-backed /tmp fsyncs (a durable deployment wraps writeStream
-      // itself and passes a real checkpointLocation)
-      .option("checkpointLocation", graft.TmpDirs.ephemeralCheckpoint("semgate"))
+    val start = graft.ops.IndexLog.snapshot(spark, path)
+    var seeds = (start.table("seeds"), readGateSeeds(spark, start))
+    startEphemeral(arriving.writeStream
       .foreachBatch { (b: Dataset[Row], batchId: Long) =>
-        sink(gateVerdicts(spark, path, b.toDF(), embCol, id, threshold,
-          seeds), batchId)
-      }
-      .start()
+        val snap = graft.ops.IndexLog.snapshot(spark, path)
+        if (snap.table("seeds") != seeds._1)
+          seeds = (snap.table("seeds"), readGateSeeds(spark, snap))
+        sink(gateVerdicts(snap, b.toDF(), embCol, id, threshold, seeds._2),
+          batchId)
+      }, "semgate")
+  }
+
+  /** Start `w` on a fresh RAM-backed checkpoint that is deleted once
+    * the returned handle's `stop()` returns: callers of the index
+    * stream APIs get the same non-durable temp checkpoint Spark would
+    * create, minus the disk-backed /tmp fsyncs, and a long-lived JVM
+    * keeps no directory per stream (a durable deployment wraps
+    * writeStream itself and passes a real checkpointLocation). */
+  private def startEphemeral(w: org.apache.spark.sql.streaming.DataStreamWriter[Row],
+      tag: String): org.apache.spark.sql.streaming.StreamingQuery = {
+    val dir = graft.TmpDirs.ramCheckpointDir(tag)
+    def drop(): Unit = graft.TmpDirs.deleteRecursively(new java.io.File(dir))
+    val q = try w.option("checkpointLocation", dir).start()
+      catch { case e: Throwable => drop(); throw e }
+    org.apache.spark.sql.graftbridge.Bridge.onStop(q)(drop())
   }
 
   /** Streaming IVF index GROWTH — llm65's append lifecycle ONLINE: each
@@ -582,14 +599,11 @@ object StreamOps {
   def ivfAppendStream(spark: SparkSession, path: String,
       arriving: DataFrame, embCol: String = "embedding",
       id: String = "vec_id"): org.apache.spark.sql.streaming.StreamingQuery =
-    arriving.writeStream
-      // same ephemeral-checkpoint rationale as semDedupGateStream
-      .option("checkpointLocation", graft.TmpDirs.ephemeralCheckpoint("ivfappend"))
+    startEphemeral(arriving.writeStream
       .foreachBatch { (b: Dataset[Row], _: Long) =>
         graft.ops.Similarity.appendToIvfIndexIdempotent(spark, path,
           b.toDF(), embCol, id)
-      }
-      .start()
+      }, "ivfappend")
 
   /** Streaming semantic-dedup INGESTION over a persisted
     * `Dedup.buildSemDedupIndex` index — the admission gate's
@@ -608,14 +622,11 @@ object StreamOps {
   def semDedupIngestStream(spark: SparkSession, path: String,
       arriving: DataFrame, embCol: String, id: String, threshold: Double,
       sink: (DataFrame, Long) => Unit): org.apache.spark.sql.streaming.StreamingQuery =
-    arriving.writeStream
-      // same ephemeral-checkpoint rationale as semDedupGateStream
-      .option("checkpointLocation", graft.TmpDirs.ephemeralCheckpoint("semingest"))
+    startEphemeral(arriving.writeStream
       .foreachBatch { (b: Dataset[Row], batchId: Long) =>
         sink(graft.ops.Dedup.appendToSemDedupIndex(spark, path, b.toDF(),
           embCol, id, threshold), batchId)
-      }
-      .start()
+      }, "semingest")
 
   def decontaminateStream(evalDocs: DataFrame, arriving: DataFrame,
       n: Int = 8): DataFrame = {

@@ -340,11 +340,9 @@ object ScaleSmoke {
         graft.ops.Dedup.buildSemDedupIndex(corpus, root, "embedding",
           "vec_id", seeds = corpus.filter(col("vec_id") % (n / 1000) === 0),
           seedId = "vec_id", seedEmb = "embedding", probeAssign = true)
-        def cellState() = new java.io.File(s"$root/members").listFiles()
-          .filter(_.getName.startsWith("cell=")).map { d =>
-            d.getName -> d.listFiles().map(f =>
-              (f.getName, f.length())).toSet
-          }.toMap
+        def cellState() = graft.ops.IndexLog.snapshot(spark, root)
+          .table("members").files.groupBy(_.cell.get)
+          .map { case (c, fs) => c -> fs.map(f => (f.path, f.size)).toSet }
         // median-of-3 timed appends (disjoint fresh batches — each
         // appends new ids, so per-rep cost is flat): the STRUCTURAL pin
         // (changed dirs == touched cells) asserted per rep is the real
@@ -365,10 +363,10 @@ object ScaleSmoke {
           val changed = (before.keySet ++ after.keySet)
             .count(c => before.get(c) != after.get(c))
           assert(changed == cells,
-            s"append changed $changed cell dirs for $cells touched cells " +
+            s"append changed $changed cells' files for $cells touched cells " +
               "(of 1000) — writes are not cell-local")
           println(f"SCALE appendToSemDedupIndex($n) rep$rep: " +
-            f"append $dt%.1f s, $cells cells touched, $changed dirs changed")
+            f"append $dt%.1f s, $cells cells touched, $changed cells changed")
           dt
         }
         graft.TmpDirs.deleteRecursively(new java.io.File(root))

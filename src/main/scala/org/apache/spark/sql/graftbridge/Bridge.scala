@@ -40,6 +40,23 @@ object Bridge {
       case _ => None
     }
 
+  /** `schema` with every field, array element and map value nullable —
+    * the schema a file-source read reports. `private[spark]` in Spark,
+    * hence bridged. */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
+  /** `q` (a classic session's query) with `f` run once its `stop()`
+    * returns. The handle stays a `StreamingQueryWrapper`, so
+    * [[lastStreamingPlan]] still reads it. */
+  def onStop(q: org.apache.spark.sql.streaming.StreamingQuery)(f: => Unit)
+      : org.apache.spark.sql.streaming.StreamingQuery = {
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    new StreamingQueryWrapper(q.asInstanceOf[StreamingQueryWrapper].streamingQuery) {
+      override def stop(): Unit = try super.stop() finally f
+    }
+  }
+
   /** DataFrame over an RDD of Catalyst-INTERNAL rows (UTF8String /
     * micros-long / Decimal values) — the constructor a custom decoder
     * needs: CDC row decode already produces internal representations

@@ -750,9 +750,9 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
     }
     assert(e.getMessage.contains("duplicate"), e.getMessage)
     // the refusal left the corpus unchanged: the clean batch still appends
-    val before = spark.read.parquet(s"$idx/corpus").count()
+    val before = new Similarity.IvfIndexReader(spark, idx).stored.count()
     Similarity.appendToIvfIndex(spark, idx, fresh)
-    assert(spark.read.parquet(s"$idx/corpus").count() ==
+    assert(new Similarity.IvfIndexReader(spark, idx).stored.count() ==
       before + fresh.count())
     graft.TmpDirs.deleteRecursively(new java.io.File(idx))
   }
@@ -765,17 +765,19 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
     Similarity.deleteFromIvfIndex(spark, idx,
       emb.filter($"vec_id" % 11 === 5).select($"vec_id"))
     Similarity.compactIvfIndex(spark, idx)
-    val afterCompact = spark.read.parquet(s"$idx/corpus").count()
+    val afterCompact = new Similarity.IvfIndexReader(spark, idx).stored.count()
     val expected = emb.filter(!($"vec_id" % 11 === 5)).count()
     assert(afterCompact == expected)
-    assert(!new java.io.File(s"$local/tombstones").exists())
+    assert(!graft.ops.IndexLog.snapshot(spark, idx).tables.contains("tombstones") &&
+      IndexFsProbe.allFiles(spark, s"$idx/tombstones").forall(!_.endsWith(".parquet")))
     Similarity.deleteFromIvfIndex(spark, idx,
       emb.filter($"vec_id" % 13 === 2).select($"vec_id"))
     Similarity.rebuildIvfIndex(spark, idx)
-    val afterRebuild = spark.read.parquet(s"$idx/corpus").count()
+    val afterRebuild = new Similarity.IvfIndexReader(spark, idx).stored.count()
     assert(afterRebuild ==
       emb.filter(!($"vec_id" % 11 === 5) && !($"vec_id" % 13 === 2)).count())
-    assert(!new java.io.File(s"$local/tombstones").exists())
+    assert(!graft.ops.IndexLog.snapshot(spark, idx).tables.contains("tombstones") &&
+      IndexFsProbe.allFiles(spark, s"$idx/tombstones").forall(!_.endsWith(".parquet")))
     // serve still answers through the URI root
     val res = Similarity.ivfTopKFromIndex(spark, idx,
       emb.filter($"vec_id" % 100 === 0), k = 3, nProbe = 2)

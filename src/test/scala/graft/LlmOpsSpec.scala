@@ -749,6 +749,9 @@ class LlmOpsSpec extends SparkTestBase {
     assert(b1.values.forall(b => b >= 0 && b < 16))
   }
 
+  /** Every stored corpus row of the IVF index at `idx` (its head). */
+  private def stored(idx: String) = new Similarity.IvfIndexReader(spark, idx).stored
+
   test("IVF append refuses tombstoned and already-live ids loud; compact-then-re-append works") {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val idx = java.nio.file.Files.createTempDirectory("ivf-guard").toString
@@ -770,7 +773,7 @@ class LlmOpsSpec extends SparkTestBase {
     // re-append lands and SERVES
     Similarity.compactIvfIndex(spark, idx)
     Similarity.appendToIvfIndex(spark, idx, emb.filter($"vec_id" % 20 === 1))
-    val ids = spark.read.parquet(s"$idx/corpus").select($"vec_id")
+    val ids = stored(idx).select($"vec_id")
       .collect().map(_.getLong(0))
     assert(ids.length == ids.distinct.length, "duplicate ids after re-append")
     assert(ids.toSet == emb.filter($"vec_id" % 10 =!= 9)
@@ -787,11 +790,11 @@ class LlmOpsSpec extends SparkTestBase {
     Similarity.buildIvfIndex(emb.filter($"vec_id" % 10 =!= 9), idx, kClusters = 8)
     val batch = emb.filter($"vec_id" % 10 === 9)
     Similarity.appendToIvfIndexIdempotent(spark, idx, batch)
-    val files = spark.read.parquet(s"$idx/corpus").inputFiles.toSet
+    val files = stored(idx).inputFiles.toSet
     // the at-least-once replay: same batch again must be a no-op, not
     // the loud already-indexed refusal the raw append raises
     Similarity.appendToIvfIndexIdempotent(spark, idx, batch)
-    assert(spark.read.parquet(s"$idx/corpus").inputFiles.toSet == files,
+    assert(stored(idx).inputFiles.toSet == files,
       "committed replay changed corpus files")
     // a batch with SOME live ids is a crashed-append retry, not a
     // replay — still refuses loud inside the append
@@ -802,19 +805,17 @@ class LlmOpsSpec extends SparkTestBase {
       Similarity.appendToIvfIndexIdempotent(spark, idx, mixedBatch)
     }
     assert(ex.getMessage.contains("already indexed"), ex.getMessage)
-    // the FAILED append must not leave its digest marker behind (r16
-    // ADVICE: marker commits AFTER the append) — a stale intent marker
-    // would make a later batch reusing this exact id set silently
-    // no-op instead of refusing; only the one committed append's
-    // marker may exist here
-    assert(Option(new java.io.File(s"$idx/appends.idem").list())
-      .map(_.count(!_.startsWith("."))).getOrElse(0) == 1,
+    // the FAILED append must not leave its digest behind — a stale
+    // digest would make a later batch reusing this exact id set
+    // silently no-op instead of refusing; only the one committed
+    // append's digest may be recorded here
+    assert(graft.ops.IndexLog.snapshot(spark, idx).ops.size == 1,
       "failed append left a stale digest marker")
     // a genuinely fresh batch lands and serves
     val freshBatch = emb.filter($"vec_id" % 10 === 9).limit(2)
       .withColumn("vec_id", $"vec_id" + 2000000L)
     Similarity.appendToIvfIndexIdempotent(spark, idx, freshBatch)
-    assert(spark.read.parquet(s"$idx/corpus")
+    assert(stored(idx)
       .filter($"vec_id" >= 2000000L).count() == 2)
     // stored-but-TOMBSTONED ids are NOT "live": a re-delivery after a
     // delete must surface the raw append's loud compact-then-reappend
@@ -846,7 +847,7 @@ class LlmOpsSpec extends SparkTestBase {
     Similarity.buildIvfIndex(emb.filter($"vec_id" % 10 =!= 9), idx, kClusters = 8)
     Similarity.appendToIvfIndex(spark, idx, emb.filter($"vec_id" % 10 === 9))
     // the index now holds the FULL corpus
-    val n = spark.read.parquet(s"$idx/corpus").count()
+    val n = stored(idx).count()
     assert(n == emb.count(), s"index holds $n of ${emb.count()}")
     // appended vectors must be SERVED, not just stored: they appear as
     // neighbors (self-matches are excluded by design, so check the
@@ -902,10 +903,12 @@ class LlmOpsSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     Similarity.compactIvfIndex(spark, idx)
     // the list is gone and the corpus physically holds only live rows
-    assert(!new java.io.File(s"$idx/tombstones").exists(), "tombstones survive compaction")
-    assert(!new java.io.File(s"$idx/corpus.compacting").exists(), "tmp dir left behind")
-    assert(!new java.io.File(s"$idx/corpus.old").exists(), "old corpus left behind")
-    val stored = spark.read.parquet(s"$idx/corpus")
+    assert(!graft.ops.IndexLog.snapshot(spark, idx).tables.contains("tombstones") &&
+      IndexFsProbe.allFiles(spark, s"$idx/tombstones").forall(!_.endsWith(".parquet")),
+      "tombstones survive compaction")
+    assert(IndexFsProbe.unlisted(spark, idx, "corpus").isEmpty,
+      "old corpus left behind")
+    val stored = this.stored(idx)
     assert(stored.filter($"vec_id" % 5 === 2).count() == 0,
       "a tombstoned row survived the rewrite")
     assert(stored.count() == emb.filter($"vec_id" % 5 =!= 2).count())
@@ -924,7 +927,8 @@ class LlmOpsSpec extends SparkTestBase {
     Similarity.deleteFromIvfIndex(spark, idx, stored.select($"vec_id"))
     val ex = intercept[IllegalStateException] { Similarity.compactIvfIndex(spark, idx) }
     assert(ex.getMessage.contains("every corpus row is tombstoned"), ex.getMessage)
-    assert(new java.io.File(s"$idx/tombstones").exists(), "refusal must keep the tombstones")
+    assert(graft.ops.IndexLog.snapshot(spark, idx).tables.contains("tombstones"),
+      "refusal must keep the tombstones")
     assert(Similarity.ivfTopKFromIndex(spark, idx, queries, k = 5, nProbe = 8)
       .count() == 0, "the tombstoned index must still serve (empty) reads")
     graft.TmpDirs.deleteRecursively(new java.io.File(idx))
@@ -1016,10 +1020,11 @@ class LlmOpsSpec extends SparkTestBase {
     assert(r.getAs[Long]("total_live") ==
       emb.filter($"vec_id" % 11 =!= 5).count(),
       "rebuild must materialize the tombstoned deletes")
-    assert(!new java.io.File(s"$idx/tombstones").exists(),
+    assert(!graft.ops.IndexLog.snapshot(spark, idx).tables.contains("tombstones") &&
+      IndexFsProbe.allFiles(spark, s"$idx/tombstones").forall(!_.endsWith(".parquet")),
       "rebuild must drop the tombstone list")
-    assert(!new java.io.File(s"$idx/corpus.old").exists() &&
-      !new java.io.File(s"$idx/centroids.old").exists(), "swap leftovers remain")
+    assert(IndexFsProbe.unlisted(spark, idx, "corpus").isEmpty &&
+      IndexFsProbe.unlisted(spark, idx, "centroids").isEmpty, "swap leftovers remain")
     // the rebuilt index serves: deleted ids never surface, k fills
     val queries = emb.filter($"vec_id" % 50 === 0)
     val ann = Similarity.ivfTopKFromIndex(spark, idx, queries, k = 5, nProbe = 6)
@@ -1034,8 +1039,8 @@ class LlmOpsSpec extends SparkTestBase {
       Similarity.rebuildIvfIndex(spark, dead)
     }
     assert(ex.getMessage.contains("live corpus is empty"), ex.getMessage)
-    assert(new java.io.File(s"$dead/corpus").exists() &&
-      new java.io.File(s"$dead/tombstones").exists(),
+    assert(graft.ops.IndexLog.snapshot(spark, dead).tables.keySet ==
+      Set("centroids", "corpus", "tombstones"),
       "refusal must keep the servable tombstoned state")
     graft.TmpDirs.deleteRecursively(new java.io.File(idx))
     graft.TmpDirs.deleteRecursively(new java.io.File(dead))

@@ -14,9 +14,14 @@ import org.apache.hadoop.fs.{FileStatus, Path, RawLocalFileSystem}
   *     that quietly depended on rename would surface here, loud).
   * The log READ seam (LogFs) must serve scans byte-identically over
   * this — that is the `s3a://` story the README advertises, pinned
-  * without an object-store endpoint. WRITE-side ops (IndexFs-managed
-  * indexes, fan-out outputs) document a rename-capable store as a
-  * requirement, so they keep their local/HDFS roots in specs.
+  * without an object-store endpoint. The IVF, semantic-dedup and
+  * near-dup indexes commit through `IndexLog` without any rename of
+  * their own; their lifecycles run on [[RenameFreeFs]], which still
+  * allows the renames of Spark's file output committer under
+  * `_temporary/`. A run of those lifecycles here, where every rename is
+  * refused, needs a rename-free output committer and is out of scope.
+  * The cluster index and fan-out outputs still need a rename-capable
+  * store, so they keep their local/HDFS roots in specs.
   */
 final class ObjectStoreLikeFs extends RawLocalFileSystem {
   override def getScheme: String = "s3x"

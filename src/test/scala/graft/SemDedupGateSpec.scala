@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions._
   *     .maxSeeds (gate and probe-assign batch path both);
   *   - an index whose seeds were persisted as array<double> refuses
   *     loud (not an opaque ClassCastException);
-  *   - build→probe crash windows: every buildSemDedupIndex crash
-  *     leaves a visibly un-built index (probes and gate refuse on the
-  *     missing members/_SUCCESS) and a retried build converges to the
+  *   - build→probe crash windows: a buildSemDedupIndex crash over a
+  *     live index leaves probes and gate serving exactly the last
+  *     committed index, a crashed FIRST build leaves an index every
+  *     reader refuses loud, and a retried build converges to the
   *     two-frame incremental's verdicts.
   */
 class SemDedupGateSpec extends SparkTestBase {
@@ -64,7 +65,7 @@ class SemDedupGateSpec extends SparkTestBase {
     // file pruning: every members scan in the micro-batch plan selected
     // exactly the touched cell partitions, strictly fewer than the index has
     val cCells = verdicts.map(_._2).size
-    val totalCells = spark.read.parquet(s"$idx/members")
+    val totalCells = graft.ops.IndexLog.snapshot(spark, idx).frame("members")
       .select("cell").distinct().count()
     val memberScans = scans.filter(_._1.contains("members"))
     assert(memberScans.nonEmpty, s"no members scan found in $scans")
@@ -122,6 +123,48 @@ class SemDedupGateSpec extends SparkTestBase {
       graft.TmpDirs.deleteRecursively(new java.io.File(d)))
   }
 
+  test("streaming gate beside a crashed append scores each micro-batch against the last committed members") {
+    // the append lands its batch and dies writing its commit record (a
+    // filesystem that cuts that write); a gate started before the crash
+    // must keep serving the pre-append members, as semDedupGateBatch does
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set("fs.ccx.impl", classOf[CommitCutFs].getName)
+    val local = java.nio.file.Files.createTempDirectory("semgate-cut").toString
+    val idx = s"ccx://$local"
+    buildIdx(idx)
+    val appended = emb.filter($"vec_id" % 10 === 0)
+    // exact copies of the appended vectors under fresh ids: dups at this
+    // threshold only where the append's members are visible
+    val copies = appended.select(($"vec_id" + 90000000L).as("vec_id"), $"embedding")
+    val T = 0.999
+    val before = StreamOps.semDedupGateBatch(spark, idx, copies, "embedding",
+      "vec_id", T).collect().map(_.toString).sorted.toSeq
+    assert(before.count(_.endsWith("false]")) > before.length / 2,
+      "fixture: the copies must mostly be fresh before the append")
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Array[Float])]
+    val buf = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
+    val q = StreamOps.semDedupGateStream(spark, idx,
+      in.toDF().toDF("vec_id", "embedding"), "embedding", "vec_id", T,
+      sink = (out, _) => out.collect().foreach(buf.add))
+    try {
+      CommitCutFs.armed = true
+      try intercept[Exception] {
+        Dedup.appendToSemDedupIndex(spark, idx, appended, "embedding",
+          "vec_id", threshold = 0.4)
+      } finally CommitCutFs.armed = false
+      in.addData(copies.collect().map(r =>
+        (r.getLong(0), r.getSeq[Float](1).toArray)).toIndexedSeq)
+      q.processAllAvailable()
+    } finally q.stop()
+    val streamed = buf.asScala.map(_.toString).toSeq.sorted
+    assert(streamed == before,
+      s"the gate scored against an uncommitted append: " +
+        s"${streamed.count(_.endsWith("true]"))} dups vs ${before.count(_.endsWith("true]"))} before")
+    graft.TmpDirs.deleteRecursively(new java.io.File(local))
+  }
+
   test("gate and probe-assign quantizer collects are capped by spark.graft.semdedup.maxSeeds") {
     val idx = java.nio.file.Files.createTempDirectory("semgate-cap").toString
     buildIdx(idx)
@@ -146,10 +189,13 @@ class SemDedupGateSpec extends SparkTestBase {
 
   test("an index with array<double> seeds refuses loud (schema guard, not a CCE)") {
     val idx = java.nio.file.Files.createTempDirectory("semgate-dbl").toString
-    Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
-      .toDF("seed_id", "s_emb").write.parquet(s"$idx/seeds")
-    Seq((2L, 0L, Seq(1.0f, 0.0f))).toDF("vec_id", "cell", "__emb")
-      .write.partitionBy("cell").parquet(s"$idx/members")
+    // a hand-built index: array<double> seeds committed beside members
+    import graft.ops.IndexLog
+    IndexLog.commit(spark, idx, "test", None, Map(
+      "seeds" -> IndexLog.write(Seq((0L, Seq(1.0, 0.0)), (1L, Seq(0.0, 1.0)))
+        .toDF("seed_id", "s_emb"), idx, "seeds"),
+      "members" -> IndexLog.write(Seq((2L, 0L, Seq(1.0f, 0.0f)))
+        .toDF("vec_id", "cell", "__emb"), idx, "members", Some("cell"))))
     val batch = Seq((100L, Seq(1.0f, 0.0f))).toDF("vec_id", "embedding")
     val e = intercept[IllegalArgumentException] {
       StreamOps.semDedupGateBatch(spark, idx, batch, "embedding", "vec_id", 0.4)
@@ -165,20 +211,25 @@ class SemDedupGateSpec extends SparkTestBase {
     val newSeeds = emb.filter($"vec_id" % 20 === 0) // rebuild changes the quantizer
     def rebuild(): Unit = Dedup.buildSemDedupIndex(corpus, idx,
       "embedding", "vec_id", newSeeds, "vec_id", "embedding")
-    Seq("semdedup-after-members-delete", "semdedup-after-seeds").foreach { pt =>
+    def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toString).sorted.toSeq
+    Seq("semdedup-after-seeds", "semdedup-after-staging",
+        "semdedup-mid-commit").foreach { pt =>
+      val probed = sorted(Dedup.semDedupFromIndex(spark, idx, batch,
+        "embedding", "vec_id", 0.4))
+      val gated = sorted(StreamOps.semDedupGateBatch(spark, idx, batch,
+        "embedding", "vec_id", 0.4))
       Dedup.appendCrashPoint = Some(pt)
       try {
         val e = intercept[IllegalStateException](rebuild())
         assert(e.getMessage.contains(pt))
       } finally Dedup.appendCrashPoint = None
-      // the half-rebuilt index is visibly un-built: everything refuses
-      val p = intercept[IllegalArgumentException] {
-        Dedup.semDedupFromIndex(spark, idx, batch, "embedding", "vec_id", 0.4)
-      }
-      assert(p.getMessage.contains("members/_SUCCESS"), p.getMessage)
-      intercept[IllegalArgumentException] {
-        StreamOps.semDedupGateBatch(spark, idx, batch, "embedding", "vec_id", 0.4)
-      }
+      // the half-rebuilt index is invisible: probe and gate serve
+      // exactly the last committed index
+      assert(sorted(Dedup.semDedupFromIndex(spark, idx, batch,
+        "embedding", "vec_id", 0.4)) == probed, s"$pt: probe changed")
+      assert(sorted(StreamOps.semDedupGateBatch(spark, idx, batch,
+        "embedding", "vec_id", 0.4)) == gated, s"$pt: gate changed")
       // retry converges to the two-frame incremental's verdicts
       rebuild()
       val fromIdx = Dedup.semDedupFromIndex(spark, idx, batch,
@@ -188,11 +239,19 @@ class SemDedupGateSpec extends SparkTestBase {
         .collect().map(_.toString).sorted.toSeq
       assert(fromIdx == twoFrame)
     }
-    // a partial members write (simulated: _SUCCESS removed) refuses too
-    assert(new java.io.File(s"$idx/members/_SUCCESS").delete())
-    intercept[IllegalArgumentException] {
-      Dedup.semDedupFromIndex(spark, idx, batch, "embedding", "vec_id", 0.4)
+    // a FIRST build that crashed (nothing committed, a torn commit file
+    // on disk) is visibly un-built: probe and gate refuse loud
+    val fresh = java.nio.file.Files.createTempDirectory("semgate-crash-first").toString
+    Dedup.appendCrashPoint = Some("semdedup-mid-commit")
+    try intercept[IllegalStateException](buildIdx(fresh))
+    finally Dedup.appendCrashPoint = None
+    val p = intercept[IllegalArgumentException] {
+      Dedup.semDedupFromIndex(spark, fresh, batch, "embedding", "vec_id", 0.4)
     }
-    graft.TmpDirs.deleteRecursively(new java.io.File(idx))
+    assert(p.getMessage.contains("no committed version"), p.getMessage)
+    intercept[IllegalArgumentException] {
+      StreamOps.semDedupGateBatch(spark, fresh, batch, "embedding", "vec_id", 0.4)
+    }
+    Seq(idx, fresh).foreach(d => graft.TmpDirs.deleteRecursively(new java.io.File(d)))
   }
 }

@@ -196,6 +196,47 @@ class StreamStateSpec extends SparkTestBase {
     } finally q.stop()
   }
 
+  test("index streams delete their ephemeral checkpoint when stopped") {
+    implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val rnd = new scala.util.Random(5)
+    val emb = (0L until 200L).map(i => (i, Array.fill(8)(rnd.nextFloat() * 2 - 1)))
+      .toDF("vec_id", "embedding")
+    val ivf = java.nio.file.Files.createTempDirectory("ckpt-ivf").toString
+    graft.ops.Similarity.buildIvfIndex(emb.filter(col("vec_id") % 10 =!= 9), ivf,
+      kClusters = 4, dim = 8)
+    val sem = java.nio.file.Files.createTempDirectory("ckpt-sem").toString
+    graft.ops.Dedup.buildSemDedupIndex(emb.filter(col("vec_id") % 10 =!= 0), sem,
+      "embedding", "vec_id", seeds = emb.filter(col("vec_id") % 25 === 0),
+      seedId = "vec_id", seedEmb = "embedding")
+    def checkpointOf(q: StreamingQuery): java.io.File = new java.io.File(
+      new org.apache.hadoop.fs.Path(q.asInstanceOf[
+        org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.resolvedCheckpointRoot).toUri.getPath)
+    Seq[(String, org.apache.spark.sql.DataFrame => StreamingQuery,
+        org.apache.spark.sql.DataFrame)](
+      ("ivfAppendStream", in => StreamOps.ivfAppendStream(spark, ivf, in),
+        emb.filter(col("vec_id") % 10 === 9)),
+      ("semDedupIngestStream", in => StreamOps.semDedupIngestStream(spark, sem,
+        in, "embedding", "vec_id", 0.4, (_, _) => ()),
+        emb.filter(col("vec_id") % 10 === 0)),
+      ("semDedupGateStream", in => StreamOps.semDedupGateStream(spark, sem,
+        in, "embedding", "vec_id", 0.4, (_, _) => ()),
+        emb.filter(col("vec_id") % 100 === 0))
+    ).foreach { case (name, start, batch) =>
+      val in = MemoryStream[(Long, Array[Float])]
+      val q = start(in.toDF().toDF("vec_id", "embedding"))
+      val dir = try {
+        in.addData(batch.collect().map(r =>
+          (r.getLong(0), r.getSeq[Float](1).toArray)).toIndexedSeq)
+        q.processAllAvailable()
+        checkpointOf(q)
+      } finally q.stop()
+      assert(dir.getName.startsWith("graft-ckpt-"), s"$name: checkpoint at $dir")
+      assert(!dir.exists(), s"$name left its checkpoint $dir after stop()")
+    }
+    Seq(ivf, sem).foreach(d => graft.TmpDirs.deleteRecursively(new java.io.File(d)))
+  }
+
   test("tokenBudgetGateStream: budget enforced ACROSS micro-batches; rejected tokens still count") {
     implicit val sql: org.apache.spark.sql.SQLContext = spark.sqlContext
     val in = MemoryStream[(Long, String, String)] // (doc_id, lang, text)
