@@ -28,7 +28,8 @@ object TmpDirs {
   private val ckptCounter = new java.util.concurrent.atomic.AtomicLong()
 
   /** Fresh checkpoint dir for a synchronously-drained bounded stream,
-    * on the RAM-backed root. These checkpoints are ephemeral BY
+    * on the RAM-backed root, with no shutdown hook: the caller deletes
+    * it when its query stops. These checkpoints are ephemeral BY
     * CONSTRUCTION (memory/foreachBatch sinks drained to completion in
     * one call, checkpoint useless afterwards) — Spark's default temp
     * checkpoint lands in java.io.tmpdir, disk-backed here. RAM
@@ -42,22 +43,7 @@ object TmpDirs {
     *
     * Unique per CALL (atomic counter): reusing a checkpoint across
     * `start()`s would RESUME the query — a drained re-run would emit
-    * nothing instead of reprocessing. Deleted by the shutdown hook;
-    * callers that drain repeatedly (the bench) should delete eagerly
-    * after `stop()`. */
-  def ephemeralCheckpoint(tag: String): String = {
-    val p = ramCheckpointDir(tag)
-    synchronized {
-      if (registered.add(p)) {
-        sys.addShutdownHook(deleteRecursively(new java.io.File(p)))
-        ()
-      }
-    }
-    p
-  }
-
-  /** A fresh [[ephemeralCheckpoint]] path with no shutdown hook: for
-    * callers that delete it themselves when their query stops. */
+    * nothing instead of reprocessing. */
   private[graft] def ramCheckpointDir(tag: String): String =
     java.nio.file.Paths.get(ramRoot,
       s"graft-ckpt-$tag-${ProcessHandle.current().pid()}-${ckptCounter.incrementAndGet()}").toString

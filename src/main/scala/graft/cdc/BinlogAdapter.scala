@@ -57,7 +57,20 @@ trait RawEventSource extends Iterator[CdcCodec.RawEvent] with AutoCloseable
   * [[CdcCodec.RowDecoder]] for the reference semantics (TABLE_MAP
   * registry, GTID tracking, pruning mask, drift epochs). */
 trait CdcRowDecoder {
-  def decode(ev: CdcCodec.RawEvent): Seq[CdcCodec.CdcRow]
+  /** Decode one event, writing each of its target rows into `sink` in
+    * log order (an update's before image, then its after image). */
+  def decode(ev: CdcCodec.RawEvent, sink: RowSink): Unit
+
+  // widened by RowSink.begin to the widest row it has seen
+  private lazy val cdcRowSink = RowSink.forCdcRows(0)
+
+  /** The same rows as [[CdcCodec.CdcRow]] values: a thin adapter over
+    * the sink for callers that keep rows (fan-out, tools, tests). */
+  final def decode(ev: CdcCodec.RawEvent): Seq[CdcCodec.CdcRow] = {
+    cdcRowSink.clear()
+    decode(ev, cdcRowSink)
+    cdcRowSink.cdcRows
+  }
 }
 
 /** One pluggable binlog format: per-file event iteration + stateful

@@ -55,10 +55,12 @@ object CdcCodec {
   /** Epoch-drift decode plan, ONE policy shared by the GCDC and MySQL
     * decoders (they promise identical schemaDrift=epochs semantics —
     * sharing the construction keeps that true by construction):
-    * `remap(i)` = declared index feeding expected column i (-1 = this
-    * epoch doesn't carry it → null), `declaredNeeded` marks declared
-    * columns the query actually consumes (everything else byte-skips). */
-  private[cdc] final class EpochPlan(val remap: Array[Int],
+    * `target(j)` = the expected column declared column j feeds (-1 =
+    * the query has no same-named, same-typed column: it byte-skips),
+    * `declaredNeeded` marks declared columns the query actually
+    * consumes (everything else byte-skips). An expected column no
+    * declared column feeds reads null for the epoch's rows. */
+  private[cdc] final class EpochPlan(val target: Array[Int],
     val declaredNeeded: Array[Boolean])
 
   /** Match by (name, type): nullability and metadata don't affect the
@@ -68,38 +70,11 @@ object CdcCodec {
   private[cdc] def buildEpochPlan(expected: StructType,
       declaredNames: IndexedSeq[String], declaredTypes: IndexedSeq[DataType],
       needed: Int => Boolean): EpochPlan = {
-    val remap = expected.fields.map(ef =>
-      declaredNames.indices.indexWhere(j =>
-        declaredNames(j) == ef.name && declaredTypes(j) == ef.dataType))
-    val dn = new Array[Boolean](declaredNames.length)
-    remap.zipWithIndex.foreach { case (j, i) =>
-      if (j >= 0 && needed(i)) dn(j) = true
-    }
-    new EpochPlan(remap, dn)
+    val target = declaredNames.indices.map(j =>
+      expected.fields.indexWhere(ef =>
+        declaredNames(j) == ef.name && declaredTypes(j) == ef.dataType)).toArray
+    new EpochPlan(target, target.map(i => i >= 0 && needed(i)))
   }
-
-  /** Declared-order image → the expected schema's layout: epoch remap
-    * (same-named values land at their expected positions, unmapped
-    * expected columns null), or additive trailing-null padding when a
-    * pre-ALTER TABLE_MAP is narrower than the query schema (without
-    * this, projecting an added column on old-epoch rows would index
-    * past the declared-width array). Identity when neither applies. */
-  private[cdc] def shapeToExpected(vals: Array[Any], plan: EpochPlan,
-      expectedWidth: Int): Array[Any] =
-    if (plan != null) {
-      val out = new Array[Any](expectedWidth)
-      var i = 0
-      while (i < expectedWidth) {
-        val j = plan.remap(i)
-        if (j >= 0) out(i) = vals(j)
-        i += 1
-      }
-      out
-    } else if (expectedWidth > vals.length) {
-      val out = new Array[Any](expectedWidth)
-      System.arraycopy(vals, 0, out, 0, vals.length)
-      out
-    } else vals
 
   // ---------------------------------------------------------------- writer
 
@@ -414,7 +389,7 @@ object CdcCodec {
     * already guarantees whole payloads), and every count or length read
     * from the payload passes [[len]] before it sizes anything. `pos` is
     * the event's log offset, for the error. */
-  private final class BeCur(a: Array[Byte], pos: Long) {
+  private final class BeCur(val a: Array[Byte], pos: Long) {
     var p = 0
     def u8(): Int = { val v = a(p) & 0xff; p += 1; v }
     def s8(): Byte = { val v = a(p); p += 1; v }
@@ -507,8 +482,8 @@ object CdcCodec {
       driftEpochs: Boolean = false) extends CdcRowDecoder {
     private val tableMaps = scala.collection.mutable.Map.empty[Long, TableMap]
     // active epoch plan per table id (absent = identity/additive) —
-    // construction and shaping shared with the MySQL decoder
-    // ([[buildEpochPlan]]/[[shapeToExpected]]), one drift policy
+    // construction shared with the MySQL decoder ([[buildEpochPlan]]),
+    // one drift policy
     private val epochs = scala.collection.mutable.Map.empty[Long, EpochPlan]
     // per-table-id pre-resolved value type codes: the per-CELL work in
     // readRow becomes an Int tableswitch instead of a DataType pattern
@@ -525,7 +500,7 @@ object CdcCodec {
     // in this closed format reachable only through log surgery)
     private var seenGtid = false
 
-    def decode(ev: RawEvent): Seq[CdcRow] = {
+    def decode(ev: RawEvent, sink: RowSink): Unit = {
       val d = new BeCur(ev.payload, ev.pos)
       ev.tpe match {
         case EventType.TableMap =>
@@ -573,7 +548,6 @@ object CdcCodec {
           }
           tableMaps(tableId) = TableMap(tableId, db, table, schema)
           typeCodes(tableId) = schema.fields.map(f => tcode(f.dataType))
-          Nil
         case EventType.Gtid =>
           currentGtid = d.i64()
           seenGtid = true
@@ -583,36 +557,20 @@ object CdcCodec {
           currentSourceId =
             if (ev.payload.length > 8) UTF8String.fromString(d.str())
             else UTF8String.fromString(CdcSchema.AnonymousSourceId)
-          Nil
-        case EventType.WriteRows =>
-          rowsFor(d, ev)(readImagesFused(d, CdcSchema.Op.Insert))
-        case EventType.DeleteRows =>
-          rowsFor(d, ev)(readImagesFused(d, CdcSchema.Op.Delete))
-        case EventType.UpdateRows =>
-          rowsFor(d, ev) { (schema, codes, tm, plan) =>
-            val n = d.len(d.i32())
-            val out = new Array[CdcRow](n * 2)
-            var r = 0
-            while (r < n) {
-              // the 1→2 flatMap (§1.5): before image then after image —
-              // emitted atomically so a micro-batch can never split them
-              // (unlike the reference's cross-call stash at
-              // binlog_table_reader.cc:385-388).
-              out(r * 2) = envelope(readRow(d, schema, codes, plan),
-                CdcSchema.Op.UpdateBefore, tm, plan)
-              out(r * 2 + 1) = envelope(readRow(d, schema, codes, plan),
-                CdcSchema.Op.UpdateAfter, tm, plan)
-              r += 1
-            }
-            scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
-          }
-        case _ => Nil // Rotate + unknown: skipped like the ref's default branch
+        case EventType.WriteRows => rows(d, ev, sink, CdcSchema.Op.Insert)
+        case EventType.DeleteRows => rows(d, ev, sink, CdcSchema.Op.Delete)
+        case EventType.UpdateRows => rows(d, ev, sink, CdcSchema.Op.UpdateBefore)
+        case _ => // Rotate + unknown: skipped like the ref's default branch
       }
     }
 
-    /** Source-side table-identity predicate (binlog_table_reader.cc:178). */
-    private def rowsFor(d: BeCur, ev: RawEvent)(
-        f: (StructType, Array[Int], Long, EpochPlan) => Seq[CdcRow]): Seq[CdcRow] = {
+    /** One rows event of the target table (the source-side table-identity
+      * predicate, binlog_table_reader.cc:178) into `sink`; other tables'
+      * events are not read past their table id. An update's row count is
+      * of before/after PAIRS, emitted atomically so a micro-batch can
+      * never split them (unlike the reference's cross-call stash at
+      * binlog_table_reader.cc:385-388). */
+    private def rows(d: BeCur, ev: RawEvent, sink: RowSink, op: Int): Unit = {
       val tableId = d.i64()
       tableMaps.get(tableId) match {
         case Some(tm) if tm.db == targetDb && tm.table == targetTable =>
@@ -620,44 +578,48 @@ object CdcCodec {
             s"rows event for $targetDb.$targetTable at log offset ${ev.pos} " +
               "before any GTID event: a spliced or mid-transaction-truncated " +
               "log cannot yield a truthful __gtid")
-          f(tm.schema, typeCodes(tableId), DateTimeUtils.millisToMicros(ev.tsMs),
-            epochs.getOrElse(tableId, null))
-        case _ => Nil
+          val codes = typeCodes(tableId)
+          val tmMicros = DateTimeUtils.millisToMicros(ev.tsMs)
+          val plan = epochs.getOrElse(tableId, null)
+          val width = if (expectedWidth >= 0) expectedWidth else codes.length
+          val n = d.len(d.i32())
+          var r = 0
+          while (r < n) {
+            if (op == CdcSchema.Op.UpdateBefore) {
+              readRow(d, tm.schema, codes, plan, sink,
+                sink.begin(op, currentGtid, tmMicros, currentSourceId, null, width))
+              readRow(d, tm.schema, codes, plan, sink,
+                sink.begin(CdcSchema.Op.UpdateAfter, currentGtid, tmMicros,
+                  currentSourceId, null, width))
+            } else readRow(d, tm.schema, codes, plan, sink,
+              sink.begin(op, currentGtid, tmMicros, currentSourceId, null, width))
+            r += 1
+          }
+        case _ =>
       }
     }
 
-    /** One rows event's images decoded and enveloped in ONE pass (no
-      * intermediate row Vector, no second map pass). */
-    private def readImagesFused(d: BeCur, op: Int)(schema: StructType,
-        codes: Array[Int], tm: Long, plan: EpochPlan): Seq[CdcRow] = {
-      val n = d.len(d.i32())
-      val out = new Array[CdcRow](n)
-      var r = 0
-      while (r < n) {
-        out(r) = envelope(readRow(d, schema, codes, plan), op, tm, plan)
-        r += 1
-      }
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(out)
-    }
-
+    /** One row image into `sink` when `keep` (the sink's `begin` took the
+      * row), byte-skipped otherwise. The row is laid out in the DECLARED
+      * (epoch) schema order; under an epoch plan the mask is over
+      * declared columns and each value lands at its expected position. */
     private def readRow(d: BeCur, schema: StructType, codes: Array[Int],
-        plan: EpochPlan): Array[Any] = {
-      val n = schema.length
-      val nullBits = d.bytes((n + 7) / 8)
-      val vals = new Array[Any](n)
+        plan: EpochPlan, sink: RowSink, keep: Boolean): Unit = {
+      val n = codes.length
+      val nullStart = d.p
+      d.skip((n + 7) / 8)
       var i = 0
       while (i < n) {
-        val isNull = (nullBits(i / 8) & (1 << (i % 8))) != 0
+        val isNull = (d.a(nullStart + i / 8) & (1 << (i % 8))) != 0
         if (!isNull) {
-          // the row is laid out in the DECLARED (epoch) schema order;
-          // under an epoch plan the mask is over declared columns
-          val want = if (plan != null) plan.declaredNeeded(i) else needed(i)
-          if (want) vals(i) = readValue(d, codes(i), schema, i)
+          val want = keep && (if (plan != null) plan.declaredNeeded(i) else needed(i))
+          if (want) readValue(d, codes(i), schema, i,
+            if (plan != null) plan.target(i) else i, sink)
           else skipValue(d, codes(i))
         }
         i += 1
       }
-      vals
+      if (keep) sink.end()
     }
 
     private def skipValue(d: BeCur, code: Int): Unit = (code: @annotation.switch) match {
@@ -670,33 +632,30 @@ object CdcCodec {
       case _ => throw new IllegalStateException(s"bad type code $code")
     }
 
-    private def readValue(d: BeCur, code: Int, schema: StructType,
-        i: Int): Any = (code: @annotation.switch) match {
-      case TC.L | TC.Ts => d.i64()
-      case TC.I | TC.Dt => d.i32()
-      case TC.D => d.f64()
-      case TC.S => d.utf8()
-      case TC.B => d.bytes(d.i32())
-      case TC.F => d.f32()
-      case TC.Sh => d.i16()
-      case TC.By => d.s8()
-      case TC.Bo => d.bool()
+    private def readValue(d: BeCur, code: Int, schema: StructType, i: Int,
+        col: Int, sink: RowSink): Unit = (code: @annotation.switch) match {
+      case TC.L | TC.Ts => sink.setLong(col, d.i64())
+      case TC.I | TC.Dt => sink.setInt(col, d.i32())
+      case TC.D => sink.setDouble(col, d.f64())
+      case TC.S | TC.B =>
+        val n = d.len(d.i32())
+        if (code == TC.S) sink.setUtf8(col, d.a, d.p, n)
+        else sink.setBinary(col, d.a, d.p, n)
+        d.p += n
+      case TC.F => sink.setFloat(col, d.f32())
+      case TC.Sh => sink.setShort(col, d.i16())
+      case TC.By => sink.setByte(col, d.s8())
+      case TC.Bo => sink.setBoolean(col, d.bool())
       case TC.Dec =>
         val dec = schema(i).dataType.asInstanceOf[DecimalType]
         val scale = d.i32()
-        val b = d.bytes(d.i32())
-        Decimal(new java.math.BigDecimal(new java.math.BigInteger(b), scale),
-          dec.precision, dec.scale)
+        val n = d.len(d.i32())
+        sink.setDecimal(col, Decimal(new java.math.BigDecimal(
+          new java.math.BigInteger(d.bytes(n)), scale), dec.precision, dec.scale))
       case _ => throw new IllegalStateException(s"bad type code $code")
     }
 
     private val expectedWidth: Int = expectedSchema.map(_.length).getOrElse(-1)
-
-    private def envelope(vals: Array[Any], op: Int, tmMicros: Long,
-        plan: EpochPlan): CdcRow =
-      CdcRow(op, currentGtid, tmMicros, currentSourceId,
-        shapeToExpected(vals, plan, expectedWidth))
-
   }
 
   /** Last complete-event boundary in a log file. A producer (mysqld)

@@ -2,7 +2,6 @@ package graft.cdc
 
 import java.io.{BufferedOutputStream, EOFException, FileOutputStream, IOException}
 import java.nio.charset.StandardCharsets
-import java.time.LocalDateTime
 import java.util.zip.CRC32
 
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
@@ -294,8 +293,36 @@ object MysqlBinlog {
   private val MetaSetStrValue = 5
   private val MetaEnumStrValue = 6
 
-  private def pow10(e: Int): Long = {
-    var v = 1L; var i = 0; while (i < e) { v *= 10; i += 1 }; v
+  /** 10^0 .. 10^18: the digit bounds of long-backed decimals. */
+  private val Pow10: Array[Long] = Array.iterate(1L, 19)(_ * 10)
+
+  /** Days since 1970-01-01 of the proleptic-Gregorian date y-m-d (the
+    * days-from-civil arithmetic, as `LocalDate.toEpochDay` counts); a
+    * date no calendar has fails loud with the log offset. */
+  private def epochDay(y: Int, m: Int, d: Int, what: String, pos: Long): Long = {
+    val leap = (y % 4 == 0 && y % 100 != 0) || y % 400 == 0
+    val monthDays =
+      if (m == 2) (if (leap) 29 else 28)
+      else if (m == 4 || m == 6 || m == 9 || m == 11) 30
+      else 31
+    if (m < 1 || m > 12 || d < 1 || d > monthDays) throw new IOException(
+      s"$what at log offset $pos: impossible date $y-$m-$d")
+    val yy = (if (m <= 2) y - 1 else y).toLong
+    val era = Math.floorDiv(yy, 400L)
+    val yoe = yy - era * 400 // [0, 399]
+    val doy = (153 * ((m + 9) % 12) + 2) / 5 + d - 1 // March-based
+    era * 146097 + yoe * 365 + yoe / 4 - yoe / 100 + doy - 719468
+  }
+
+  /** Micros since the epoch of a zone-less date and time of day, as
+    * `DateTimeUtils.localDateTimeToMicros` counts them; an impossible
+    * date or time fails loud with the log offset. */
+  private def dateTimeMicros(y: Int, mo: Int, d: Int, h: Int, mi: Int, s: Int,
+      what: String, pos: Long): Long = {
+    if (h < 0 || h > 23 || mi < 0 || mi > 59 || s < 0 || s > 59)
+      throw new IOException(
+        s"$what at log offset $pos: impossible time of day $h:$mi:$s")
+    (epochDay(y, mo, d, what, pos) * 86400L + h * 3600L + mi * 60L + s) * 1000000L
   }
 
   // ------------------------------------------------------------ byte cursor
@@ -404,9 +431,40 @@ object MysqlBinlog {
     private var nextEvent: CdcCodec.RawEvent = _
     private var done = false
 
+    // reused per event: the payload is the only per-event allocation
+    private val header = new Array[Byte](HeaderLen)
+    private val crcBytes = new Array[Byte](4)
+    private val crc = new CRC32()
+    // events are read out of one unsynchronized buffer: three reads per
+    // event through BufferedInputStream's synchronized ones cost ~15% of
+    // a single-thread decode
+    private val buf = new Array[Byte](1 << 16)
+    private var bufPos = 0
+    private var bufEnd = 0
+
+    /** Up to `len` bytes into `dst` from `off`; fewer only at the end of
+      * the stream. */
+    private def read(dst: Array[Byte], off: Int, len: Int): Int = {
+      var got = 0
+      while (got < len) {
+        if (bufPos == bufEnd) {
+          if (len - got >= buf.length) return got + in.readNBytes(dst, off + got, len - got)
+          bufPos = 0
+          bufEnd = math.max(0, in.read(buf, 0, buf.length))
+          if (bufEnd == 0) return got
+        }
+        val n = math.min(len - got, bufEnd - bufPos)
+        System.arraycopy(buf, bufPos, dst, off + got, n)
+        bufPos += n
+        got += n
+      }
+      got
+    }
+
     private def advance(): Unit = {
-      val header = in.readNBytes(HeaderLen)
-      if (header.length < HeaderLen) { done = true; nextEvent = null; return }
+      if (read(header, 0, HeaderLen) < HeaderLen) {
+        done = true; nextEvent = null; return
+      }
       val h = new Cur(header)
       val tsSec = h.u32()
       val tpe = h.u8().toByte
@@ -426,8 +484,16 @@ object MysqlBinlog {
       h.u16() // flags
       if (eventSize < HeaderLen) { done = true; nextEvent = null; return }
       val bodyLen = (eventSize - HeaderLen).toInt
-      val body = in.readNBytes(bodyLen)
-      if (body.length < bodyLen) { done = true; nextEvent = null; return } // torn tail
+      // a checksummed body reads straight into its exact-size payload,
+      // then the 4 CRC bytes; the FORMAT_DESCRIPTION event declares the
+      // algorithm itself, so it is read whole and split below
+      val crcLen = if (checksummed && tpe != EventType.FormatDescription) 4 else 0
+      if (bodyLen < crcLen)
+        throw new IOException(s"$path: checksummed event shorter than its CRC")
+      val body = readBody(bodyLen - crcLen)
+      if (body == null || read(crcBytes, 0, crcLen) < crcLen) {
+        done = true; nextEvent = null; return // torn tail
+      }
       val start = pos
       pos += eventSize
 
@@ -467,10 +533,12 @@ object MysqlBinlog {
         val alg = if (body.length >= 5) body(body.length - 5) & 0xff else 0
         require(alg <= 1, s"$path: unsupported binlog checksum algorithm $alg")
         checksummed = alg == 1
-        if (checksummed) payload = verifyAndStrip(header, body, start)
-      } else if (checksummed) {
-        payload = verifyAndStrip(header, body, start)
-      }
+        if (checksummed) {
+          payload = java.util.Arrays.copyOf(body, body.length - 4)
+          System.arraycopy(body, body.length - 4, crcBytes, 0, 4)
+          verifyCrc(payload, start)
+        }
+      } else if (checksummed) verifyCrc(payload, start)
       // MariaDB encrypted binlog (encrypt_binlog=ON): START_ENCRYPTION
       // right after the FDE, everything later is ciphertext under the
       // server's key file — the MySQL twin of the 0xFD magic check
@@ -484,17 +552,37 @@ object MysqlBinlog {
         serverId)
     }
 
-    private def verifyAndStrip(header: Array[Byte], body: Array[Byte],
-        start: Long): Array[Byte] = {
-      require(body.length >= 4, s"$path: checksummed event shorter than its CRC")
-      val crc = new CRC32()
+    /** The next `n` stream bytes, or null at a torn tail. Up to 1 MiB
+      * reads into an exact-size array; a larger claimed size reads
+      * progressively, so a corrupt size field cannot allocate gigabytes
+      * before the stream ends. */
+    private def readBody(n: Int): Array[Byte] =
+      if (n >= 0 && n <= (1 << 20)) {
+        val b = new Array[Byte](n)
+        if (read(b, 0, n) < n) null else b
+      } else {
+        // the buffered head, then the stream's own progressive read
+        val head = new Array[Byte](math.max(0, math.min(n, bufEnd - bufPos)))
+        read(head, 0, head.length)
+        val rest = in.readNBytes(n - head.length)
+        if (head.length + rest.length < n) null
+        else if (head.length == 0) rest
+        else {
+          val b = java.util.Arrays.copyOf(head, n)
+          System.arraycopy(rest, 0, b, head.length, rest.length)
+          b
+        }
+      }
+
+    /** The CRC32 of header + payload must equal the stored `crcBytes`. */
+    private def verifyCrc(payload: Array[Byte], start: Long): Unit = {
+      crc.reset()
       crc.update(header)
-      crc.update(body, 0, body.length - 4)
-      val stored = new Cur(body, body.length - 4, body.length).u32()
+      crc.update(payload)
+      val stored = new Cur(crcBytes).u32()
       if (crc.getValue != stored)
         throw new IOException(f"$path: CRC32 mismatch at offset $start " +
           f"(stored 0x$stored%08x, computed 0x${crc.getValue}%08x) — corrupt event")
-      java.util.Arrays.copyOf(body, body.length - 4)
     }
 
     def hasNext: Boolean = { if (nextEvent == null && !done) advance(); nextEvent != null }
@@ -835,13 +923,28 @@ object MysqlBinlog {
       driftEpochs: Boolean = false,
       maria: Boolean = false) extends CdcRowDecoder {
 
-    private val tableMaps = scala.collection.mutable.Map.empty[Long, MysqlTableMap]
-    // active epoch plan per table id (absent = identity/additive) —
-    // construction and shaping shared with the GCDC decoder
-    // (CdcCodec.buildEpochPlan/shapeToExpected), one drift policy
-    private val epochs =
-      scala.collection.mutable.Map.empty[Long, CdcCodec.EpochPlan]
     private val expectedWidth: Int = expectedSchema.map(_.length).getOrElse(-1)
+
+    /** A table id's map in force, with the TABLE_MAP bytes it parsed
+      * from (the reuse test) and, for the target table, its decode plan,
+      * worked out once per map: which declared columns the query reads
+      * (`need`), the source column each lands in (`target`), and the
+      * source width of its rows. Under an epoch plan (shared with the
+      * GCDC decoder, [[CdcCodec.buildEpochPlan]]: one drift policy) the
+      * wire stays in DECLARED order and each value lands at its
+      * expected position. */
+    private final class MappedTable(val map: MysqlTableMap,
+        val bytes: Array[Byte], plan: CdcCodec.EpochPlan, isTarget: Boolean) {
+      private val n = if (isTarget) map.colTypes.length else 0
+      val need: Array[Boolean] =
+        if (plan != null) plan.declaredNeeded else Array.tabulate(n)(needed)
+      val target: Array[Int] = if (plan != null) plan.target else Array.range(0, n)
+      val rowWidth: Int = if (expectedWidth >= 0) expectedWidth else n
+      // ENUM/SET labels as UTF8String, built once per map, not per row
+      val enumUtf8: Map[Int, Array[UTF8String]] =
+        map.enumLabels.map { case (i, ls) => i -> ls.map(UTF8String.fromString).toArray }
+    }
+    private val tableMaps = scala.collection.mutable.Map.empty[Long, MappedTable]
     private var currentGtid = 0L
     private var currentSourceId: UTF8String =
       UTF8String.fromString(CdcSchema.AnonymousSourceId)
@@ -885,12 +988,20 @@ object MysqlBinlog {
     // transaction's rows. Null when the producer doesn't log them.
     private var currentRowsQuery: UTF8String = null
 
-    def decode(ev: CdcCodec.RawEvent): Seq[CdcCodec.CdcRow] = ev.tpe match {
+    def decode(ev: CdcCodec.RawEvent, sink: RowSink): Unit = ev.tpe match {
       case EventType.TableMap =>
-        val tm = parseTableMap(ev.payload)
-        if (tm.db == targetDb && tm.table == targetTable) checkSchema(tm, ev.pos)
-        tableMaps(tm.tableId) = tm
-        Nil
+        // mysqld writes the same TABLE_MAP before every transaction that
+        // touches the table: bytes equal to the map in force for this
+        // table id parse to the same map and pass the same schema check,
+        // so only a changed map is parsed and checked again
+        val tableId = new Cur(ev.payload).u48()
+        val prev = tableMaps.getOrElse(tableId, null)
+        if (prev == null || !java.util.Arrays.equals(prev.bytes, ev.payload)) {
+          val tm = parseTableMap(ev.payload)
+          val isTarget = tm.db == targetDb && tm.table == targetTable
+          tableMaps(tm.tableId) = new MappedTable(tm, ev.payload,
+            if (isTarget) checkSchema(tm, ev.pos) else null, isTarget)
+        }
       case EventType.Gtid =>
         val c = new Cur(ev.payload)
         c.u8() // flags (commit-ordered etc.)
@@ -901,7 +1012,7 @@ object MysqlBinlog {
         txnIdentityValid = true
         txnBodyOpen = false
         currentRowsQuery = null
-        Nil // trailing logical-timestamp fields (5.7+): ignored
+        // trailing logical-timestamp fields (5.7+): ignored
       case EventType.GtidTagged =>
         // MySQL 8.3+ tagged GTID (`UUID:tag:gno`, 8.4 LTS default-
         // capable): the (uuid, tag) PAIR is the source-stream identity
@@ -918,12 +1029,10 @@ object MysqlBinlog {
         txnIdentityValid = true
         txnBodyOpen = false
         currentRowsQuery = null
-        Nil
       case EventType.AnonymousGtid =>
         anonymousTxn = true
         txnBodyOpen = false
         currentRowsQuery = null
-        Nil
       case EventType.MariaGtid if maria =>
         // MariaDB GTID (type 162): the identity triple is
         // domain-server-seq — seq_no u64, domain_id u32, flags2 u8
@@ -952,10 +1061,9 @@ object MysqlBinlog {
         txnIdentityValid = true
         txnBodyOpen = (flags2 & 1) == 0 // FL_STANDALONE = 1
         currentRowsQuery = null
-        Nil
       case EventType.MariaGtidList | EventType.MariaBinlogCheckpoint
           if maria =>
-        Nil // file-start state / flush bookkeeping: planner-level only
+        // file-start state / flush bookkeeping: planner-level only
       case EventType.MariaQueryCompressed if maria =>
         // log_bin_compress=ON QUERY (type 165): the event is a plain
         // QUERY event whose STATEMENT tail is a compressed record
@@ -981,7 +1089,7 @@ object MysqlBinlog {
         val rebuilt = new Array[Byte](stmtStart + stmt.length)
         System.arraycopy(ev.payload, 0, rebuilt, 0, stmtStart)
         System.arraycopy(stmt, 0, rebuilt, stmtStart, stmt.length)
-        decode(ev.copy(tpe = EventType.Query, payload = rebuilt))
+        decode(ev.copy(tpe = EventType.Query, payload = rebuilt), sink)
       case EventType.MariaWriteRowsCompressed |
           EventType.MariaUpdateRowsCompressed |
           EventType.MariaDeleteRowsCompressed if maria =>
@@ -997,9 +1105,8 @@ object MysqlBinlog {
         // non-target tables (the table id is readable uncompressed).
         val tableId = new Cur(ev.payload).u48()
         val isTarget = tableMaps.get(tableId)
-          .exists(tm => tm.db == targetDb && tm.table == targetTable)
-        if (!isTarget) Nil
-        else {
+          .exists(t => t.map.db == targetDb && t.map.table == targetTable)
+        if (isTarget) {
           if (ev.payload.length < 8) throw new IOException(
             s"compressed rows event truncated at log offset ${ev.pos}")
           val body = inflateMariaRecord(ev.payload, 8, ev.pos)
@@ -1009,11 +1116,11 @@ object MysqlBinlog {
           val inflated = ev.copy(payload = rebuilt)
           ev.tpe match {
             case EventType.MariaWriteRowsCompressed =>
-              rowsEvent(inflated, CdcSchema.Op.Insert, images = 1, v1 = true)
+              rowsEvent(inflated, sink, CdcSchema.Op.Insert, images = 1, v1 = true)
             case EventType.MariaDeleteRowsCompressed =>
-              rowsEvent(inflated, CdcSchema.Op.Delete, images = 1, v1 = true)
+              rowsEvent(inflated, sink, CdcSchema.Op.Delete, images = 1, v1 = true)
             case _ =>
-              rowsEvent(inflated, CdcSchema.Op.UpdateBefore, images = 2,
+              rowsEvent(inflated, sink, CdcSchema.Op.UpdateBefore, images = 2,
                 v1 = true)
           }
         }
@@ -1024,7 +1131,6 @@ object MysqlBinlog {
         currentRowsQuery =
           if (ev.payload.isEmpty) null
           else UTF8String.fromBytes(ev.payload, 0, ev.payload.length)
-        Nil
       case EventType.Xid | EventType.XaPrepare =>
         // transaction commit (XID) or the binary XA_PREPARE event
         // (mysqld logs XA PREPARE / one-phase XA COMMIT as type 38,
@@ -1035,14 +1141,12 @@ object MysqlBinlog {
         anonymousTxn = false
         txnBodyOpen = false
         currentRowsQuery = null
-        Nil
       case EventType.RowsQuery =>
         // 1 length byte (capped at 255 — ignored, as real readers do),
         // then the statement text to end-of-body
         currentRowsQuery =
           if (ev.payload.length <= 1) null
           else UTF8String.fromBytes(ev.payload, 1, ev.payload.length - 1)
-        Nil
       case EventType.Query =>
         // Statement classification against the live transaction BODY:
         //  - `BEGIN` / `XA START …` OPEN a body (row-format / XA txn
@@ -1103,7 +1207,6 @@ object MysqlBinlog {
           txnBodyOpen = false
           currentRowsQuery = null
         }
-        Nil
       case EventType.Incident =>
         // the master itself declares the stream may be missing events
         // (LOST_EVENTS). The gap is not table-scoped, so continuity
@@ -1124,26 +1227,26 @@ object MysqlBinlog {
         // MariaDB logs rows events in the V1 layout (no extra-data
         // field) on every version — same images, null bitmaps, and
         // per-type value decode as V2 past the post-header
-        rowsEvent(ev, CdcSchema.Op.Insert, images = 1, v1 = true)
+        rowsEvent(ev, sink, CdcSchema.Op.Insert, images = 1, v1 = true)
       case EventType.DeleteRowsV1 if maria =>
-        rowsEvent(ev, CdcSchema.Op.Delete, images = 1, v1 = true)
+        rowsEvent(ev, sink, CdcSchema.Op.Delete, images = 1, v1 = true)
       case EventType.UpdateRowsV1 if maria =>
-        rowsEvent(ev, CdcSchema.Op.UpdateBefore, images = 2, v1 = true)
+        rowsEvent(ev, sink, CdcSchema.Op.UpdateBefore, images = 2, v1 = true)
       case EventType.WriteRowsV1 | EventType.UpdateRowsV1 |
           EventType.DeleteRowsV1 =>
         // pre-5.6 rows-event layout (no extra-data field): not decoded.
-        // Returning Nil for the target table would silently DROP its
+        // Skipping the event for the target table would silently DROP its
         // changes; the v1 post-header still leads with the 6-byte table
         // id, so target-ness is decidable without decoding the body.
         val tableId = new Cur(ev.payload).u48()
-        tableMaps.get(tableId) match {
+        tableMaps.get(tableId).map(_.map) match {
           case Some(tm) if tm.db == targetDb && tm.table == targetTable =>
             throw new IOException(
               s"v1 rows event (type ${ev.tpe}, pre-5.6 layout) for " +
                 s"$targetDb.$targetTable at log offset ${ev.pos}: only the " +
                 "v2 rows-event layout is supported — write the log with a " +
                 "MySQL 5.6+ server (binlog checksum-era format)")
-          case _ => Nil
+          case _ =>
         }
       case EventType.PartialUpdateRows =>
         // binlog_row_value_options=PARTIAL_JSON: the after-image may
@@ -1151,21 +1254,21 @@ object MysqlBinlog {
         // each diff applies against the BEFORE image's document
         // (readImage partialJson path). Decodes to the same
         // before/after pair surface as a v2 UPDATE.
-        rowsEvent(ev, CdcSchema.Op.UpdateBefore, images = 2,
+        rowsEvent(ev, sink, CdcSchema.Op.UpdateBefore, images = 2,
           partialJson = true)
       case EventType.WriteRowsV2 =>
-        rowsEvent(ev, CdcSchema.Op.Insert, images = 1)
+        rowsEvent(ev, sink, CdcSchema.Op.Insert, images = 1)
       case EventType.DeleteRowsV2 =>
-        rowsEvent(ev, CdcSchema.Op.Delete, images = 1)
+        rowsEvent(ev, sink, CdcSchema.Op.Delete, images = 1)
       case EventType.UpdateRowsV2 =>
-        rowsEvent(ev, CdcSchema.Op.UpdateBefore, images = 2)
+        rowsEvent(ev, sink, CdcSchema.Op.UpdateBefore, images = 2)
       case EventType.TransactionPayload =>
         // one whole transaction's inner events (TABLE_MAP + rows + XID),
         // zstd-compressed by the producer; the preceding outer GTID has
         // already set this txn's identity. Inner events carry the OUTER
         // event's offsets so streaming resume stays outer-granular.
-        unwrapPayload(ev).flatMap(decode)
-      case _ => Nil // FDE/ROTATE/HEARTBEAT/...: control or ignorable
+        unwrapPayload(ev).foreach(decode(_, sink))
+      case _ => // FDE/ROTATE/HEARTBEAT/...: control or ignorable
     }
 
     /** QUERY_EVENT statement-text peek (public layout: thread_id u32,
@@ -1179,9 +1282,12 @@ object MysqlBinlog {
       * prefix check requires the TO). A malformed body counts as
       * scope-closing: the conservative direction (identity closes,
       * later rows fail loud) — never the stale-stamp one. */
-    /** Uppercased statement text of a QUERY event ("" on a malformed
-      * payload — the caller's else-branch then closes the scope, the
-      * conservative read for bytes we can't parse). */
+    /** Uppercased statement text of a QUERY event, cut to its first 16
+      * characters: every test the caller makes is a prefix test or an
+      * equality with a shorter word, so the cut changes no answer and a
+      * long statement is not copied ("" on a malformed payload — the
+      * caller's else-branch then closes the scope, the conservative read
+      * for bytes we can't parse). */
     private def queryStatement(payload: Array[Byte]): String = {
       if (payload.length < 13) return ""
       val c = new Cur(payload)
@@ -1191,13 +1297,16 @@ object MysqlBinlog {
       val statusVarsLen = c.u16()
       val stmtStart = 13 + statusVarsLen + schemaLen + 1
       if (stmtStart > payload.length) return ""
-      new String(payload, stmtStart, payload.length - stmtStart,
+      new String(payload, stmtStart, math.min(16, payload.length - stmtStart),
         java.nio.charset.StandardCharsets.US_ASCII).toUpperCase
     }
 
 
-    private def checkSchema(tm: MysqlTableMap, pos: Long): Unit =
-      expectedSchema.foreach { exp =>
+    /** The target map against the query schema: null when it matches
+      * (or is an additive prefix of it), an epoch plan under
+      * `driftEpochs`, and a loud failure otherwise. */
+    private def checkSchema(tm: MysqlTableMap, pos: Long): CdcCodec.EpochPlan =
+      expectedSchema.fold(null: CdcCodec.EpochPlan) { exp =>
         val expP = exp.fields.map(f => (f.name, f.dataType)).toSeq
         val ok = tm.names match {
           case Some(ns) =>
@@ -1212,11 +1321,11 @@ object MysqlBinlog {
               expT.take(got.length) == got &&
               exp.fields.drop(got.length).forall(_.nullable))
         }
-        if (ok) epochs.remove(tm.tableId)
+        if (ok) null
         else if (driftEpochs && tm.names.isDefined)
           // names.length == colTypes.length by parseTableMap's TLV
           // validation, so the plan's declared mask is correctly sized
-          epochs(tm.tableId) = CdcCodec.buildEpochPlan(exp,
+          CdcCodec.buildEpochPlan(exp,
             tm.names.get, tm.sparkTypes.toIndexedSeq, needed)
         else if (driftEpochs)
           throw new IllegalStateException(
@@ -1234,80 +1343,81 @@ object MysqlBinlog {
               "needs FULL row metadata names)")
       }
 
-    private def rowsEvent(ev: CdcCodec.RawEvent, op: Int,
-        images: Int, partialJson: Boolean = false,
-        v1: Boolean = false): Seq[CdcCodec.CdcRow] = {
+    private def rowsEvent(ev: CdcCodec.RawEvent, sink: RowSink, op: Int,
+        images: Int, partialJson: Boolean = false, v1: Boolean = false): Unit = {
       val c = new Cur(ev.payload)
-      val tableId = c.u48()
-      tableMaps.get(tableId) match {
-        case Some(tm) if tm.db == targetDb && tm.table == targetTable =>
-          if (anonymousTxn) throw new IOException(
-            s"rows event for $targetDb.$targetTable at log offset ${ev.pos} " +
-              "inside an ANONYMOUS_GTID transaction (gtid_mode=OFF): the wire " +
-              "carries no transaction identity for __gtid — enable GTIDs on " +
-              "the producer (gtid_mode=ON) to read this table's changes")
-          if (!txnIdentityValid) throw new IOException(
-            s"rows event for $targetDb.$targetTable at log offset ${ev.pos} " +
-              "with no live transaction identity: no recognized GTID event " +
-              "opened this transaction (an identity event of an unrecognized " +
-              "future type, or a log spliced " +
-              "mid-transaction); decoding would stamp these rows with a " +
-              "stale __gtid, corrupting latest-image ordering")
-          c.u16() // flags
-          if (!v1) {
-            val extraLen = c.u16() // v2 extra-data length, includes these 2 bytes
-            c.skip(math.max(0, extraLen - 2))
+      val mapped = tableMaps.getOrElse(c.u48(), null)
+      if (mapped != null && mapped.map.db == targetDb &&
+          mapped.map.table == targetTable) {
+        val tm = mapped.map
+        if (anonymousTxn) throw new IOException(
+          s"rows event for $targetDb.$targetTable at log offset ${ev.pos} " +
+            "inside an ANONYMOUS_GTID transaction (gtid_mode=OFF): the wire " +
+            "carries no transaction identity for __gtid — enable GTIDs on " +
+            "the producer (gtid_mode=ON) to read this table's changes")
+        if (!txnIdentityValid) throw new IOException(
+          s"rows event for $targetDb.$targetTable at log offset ${ev.pos} " +
+            "with no live transaction identity: no recognized GTID event " +
+            "opened this transaction (an identity event of an unrecognized " +
+            "future type, or a log spliced " +
+            "mid-transaction); decoding would stamp these rows with a " +
+            "stale __gtid, corrupting latest-image ordering")
+        c.u16() // flags
+        if (!v1) {
+          val extraLen = c.u16() // v2 extra-data length, includes these 2 bytes
+          c.skip(math.max(0, extraLen - 2))
+        }
+        val width = c.lenenc().toInt
+        require(width == tm.colTypes.length,
+          s"rows event width $width != TABLE_MAP width ${tm.colTypes.length} " +
+            s"for ${tm.db}.${tm.table}")
+        val present1 = span(c, (width + 7) / 8, ev.pos)
+        val present2 = if (images == 2) span(c, (width + 7) / 8, ev.pos) else present1
+        val tmMicros = DateTimeUtils.millisToMicros(ev.tsMs)
+        val rowWidth = mapped.rowWidth
+        // PARTIAL_JSON: each after image's diffs apply to the documents
+        // of its own before image (declared order), kept here
+        val docs = if (partialJson) new Array[String](width) else null
+        // MySQL rows events carry no row count: parse images to the end.
+        // PROGRESS GUARD: a corrupted all-zero columns-present bitmap
+        // would make an image consume zero bytes — without the check
+        // the parse-to-end loop never terminates
+        var lastP = -1
+        while (c.remaining > 0) {
+          if (c.p == lastP)
+            throw new IOException(
+              s"rows event stalled at offset ${ev.pos}: zero-byte row image " +
+                "(corrupt columns-present bitmap?)")
+          lastP = c.p
+          if (images == 2) {
+            // images decode in DECLARED order (the wire layout; also
+            // what a PARTIAL_JSON diff's base document is indexed by)
+            if (docs != null) java.util.Arrays.fill(docs.asInstanceOf[Array[AnyRef]], null)
+            val before = sink.begin(CdcSchema.Op.UpdateBefore, currentGtid,
+              tmMicros, currentSourceId, currentRowsQuery, rowWidth)
+            readImage(c, mapped, present1, ev.pos,
+              if (before) sink else null, docs, partialAfter = false)
+            val after = sink.begin(CdcSchema.Op.UpdateAfter, currentGtid,
+              tmMicros, currentSourceId, currentRowsQuery, rowWidth)
+            readImage(c, mapped, present2, ev.pos,
+              if (after) sink else null, docs, partialAfter = partialJson)
+          } else {
+            val keep = sink.begin(op, currentGtid, tmMicros, currentSourceId,
+              currentRowsQuery, rowWidth)
+            readImage(c, mapped, present1, ev.pos,
+              if (keep) sink else null, null, partialAfter = false)
           }
-          val width = c.lenenc().toInt
-          require(width == tm.colTypes.length,
-            s"rows event width $width != TABLE_MAP width ${tm.colTypes.length} " +
-              s"for ${tm.db}.${tm.table}")
-          val present1 = c.bytes((width + 7) / 8)
-          val present2 = if (images == 2) c.bytes((width + 7) / 8) else present1
-          val tmMicros = DateTimeUtils.millisToMicros(ev.tsMs)
-          val plan = epochs.getOrElse(tableId, null)
-          val out = Seq.newBuilder[CdcCodec.CdcRow]
-          // MySQL rows events carry no row count: parse images to the end.
-          // PROGRESS GUARD: a corrupted all-zero columns-present bitmap
-          // would make an image consume zero bytes — without the check
-          // the parse-to-end loop never terminates
-          var lastP = -1
-          while (c.remaining > 0) {
-            if (c.p == lastP)
-              throw new IOException(
-                s"rows event stalled at offset ${ev.pos}: zero-byte row image " +
-                  "(corrupt columns-present bitmap?)")
-            lastP = c.p
-            if (images == 2) {
-              // images decode in DECLARED order (the wire layout; also
-              // what a PARTIAL_JSON diff's base document is indexed by)
-              // and are shaped to the expected schema only at emission
-              val before = readImage(c, tm, present1, ev.pos, plan = plan)
-              val after =
-                if (partialJson) readImage(c, tm, present2, ev.pos,
-                  partialBase = before, plan = plan)
-                else readImage(c, tm, present2, ev.pos, plan = plan)
-              out += CdcCodec.CdcRow(CdcSchema.Op.UpdateBefore, currentGtid,
-                tmMicros, currentSourceId, shape(before, plan), currentRowsQuery)
-              out += CdcCodec.CdcRow(CdcSchema.Op.UpdateAfter, currentGtid,
-                tmMicros, currentSourceId, shape(after, plan), currentRowsQuery)
-            } else {
-              out += CdcCodec.CdcRow(op, currentGtid, tmMicros, currentSourceId,
-                shape(readImage(c, tm, present1, ev.pos, plan = plan), plan),
-                currentRowsQuery)
-            }
-          }
-          out.result()
-        case _ => Nil // other table, or rows before any TABLE_MAP: skip
-      }
+        }
+      } // other table, or rows before any TABLE_MAP: skip
     }
-
-    private def shape(vals: Array[Any], plan: CdcCodec.EpochPlan): Array[Any] =
-      CdcCodec.shapeToExpected(vals, plan, expectedWidth)
 
     /** One row image: null bitmap over PRESENT columns (bit j = j-th
       * present column, LSB-first), then values for present non-null
-      * columns in column order.
+      * columns in column order. The needed values go into `sink` at
+      * their expected positions, then `sink.end()`; with no sink (a row
+      * the sink dropped) every value is byte-skipped, except that a
+      * PARTIAL_JSON before image still decodes the documents its after
+      * image diffs against.
       *
       * Partial row images (`binlog_row_image=MINIMAL`/`NOBLOB`: before
       * images carry only the PK, after images only changed columns —
@@ -1320,33 +1430,25 @@ object MysqlBinlog {
       * as SQL NULL would be indistinguishable from a true NULL and
       * silently corrupt latest-image compaction, the same corruption
       * class PARTIAL_JSON and anonymous-GTID fail loud on. */
-    private def readImage(c: Cur, tm: MysqlTableMap,
-        present: Array[Byte], pos: Long,
-        partialBase: Array[Any] = null,
-        plan: CdcCodec.EpochPlan = null): Array[Any] = {
-      // under an active epoch plan the wire (and this decode loop) is in
-      // DECLARED column order, so the consume/skip mask is the plan's
-      // declared-needed projection of the query's expected-order mask.
-      // A local def, not a Function1 of the array: the per-column check
-      // runs in the decode hot path and must not box or allocate.
-      def need(i: Int): Boolean =
-        if (plan == null) needed(i) else plan.declaredNeeded(i)
+    private def readImage(c: Cur, mt: MappedTable, present: Int, pos: Long,
+        sink: RowSink, docs: Array[String], partialAfter: Boolean): Unit = {
+      val tm = mt.map
+      val a = c.a
+      val need = mt.need
+      def isPresent(i: Int): Boolean = (a(present + i / 8) & (1 << (i % 8))) != 0
+      val capture = docs != null && !partialAfter
       val n = tm.colTypes.length
       var presentCount = 0
       var i = 0
-      while (i < n) {
-        if ((present(i / 8) & (1 << (i % 8))) != 0) presentCount += 1
-        i += 1
-      }
-      // PARTIAL_UPDATE_ROWS after-image only (partialBase != null):
-      // value_options (packed int) precedes the null bitmap; when its
-      // PARTIAL_JSON bit is set, a partial_bits bitmap follows — one
-      // bit per JSON column INCLUDED in this image, marking whether
-      // that column's bytes are a diff vector (1) or a full value (0).
-      // Unknown option bits fail loud: each one changes the layout of
-      // everything after it.
-      var partialBits: Array[Byte] = null
-      if (partialBase != null) {
+      while (i < n) { if (isPresent(i)) presentCount += 1; i += 1 }
+      // PARTIAL_UPDATE_ROWS after-image only: value_options (packed
+      // int) precedes the null bitmap; when its PARTIAL_JSON bit is set,
+      // a partial_bits bitmap follows — one bit per JSON column INCLUDED
+      // in this image, marking whether that column's bytes are a diff
+      // vector (1) or a full value (0). Unknown option bits fail loud:
+      // each one changes the layout of everything after it.
+      var partialBits = -1
+      if (partialAfter) {
         val valueOptions = c.lenenc()
         if ((valueOptions & ~1L) != 0L)
           throw new IOException(
@@ -1358,21 +1460,19 @@ object MysqlBinlog {
           var nJson = 0
           i = 0
           while (i < n) {
-            if ((present(i / 8) & (1 << (i % 8))) != 0 &&
-                tm.colTypes(i) == ColType.Json) nJson += 1
+            if (isPresent(i) && tm.colTypes(i) == ColType.Json) nJson += 1
             i += 1
           }
-          partialBits = c.bytes((nJson + 7) / 8)
+          partialBits = span(c, (nJson + 7) / 8, pos)
         }
       }
-      val nulls = c.bytes((presentCount + 7) / 8)
-      val vals = new Array[Any](n)
+      val nulls = span(c, (presentCount + 7) / 8, pos)
       var j = 0 // ordinal among present columns
       var jj = 0 // ordinal among present JSON columns (partial_bits index)
       i = 0
       while (i < n) {
-        if ((present(i / 8) & (1 << (i % 8))) == 0) {
-          if (need(i)) {
+        if (!isPresent(i)) {
+          if (sink != null && need(i)) {
             val colName = tm.names.map(_(i)).getOrElse(s"column #$i")
             throw new IOException(
               s"partial row image for ${tm.db}.${tm.table} at log offset " +
@@ -1383,24 +1483,18 @@ object MysqlBinlog {
                 "image carries, or write the log with binlog_row_image=FULL")
           }
         } else {
-          val isNull = (nulls(j / 8) & (1 << (j % 8))) != 0
-          val isJson = tm.colTypes(i) == ColType.Json
-          val isPartial = isJson && partialBits != null &&
-            (partialBits(jj / 8) & (1 << (jj % 8))) != 0
+          val isNull = (a(nulls + j / 8) & (1 << (j % 8))) != 0
+          val t = tm.colTypes(i)
+          val isJson = t == ColType.Json
           if (!isNull) {
-            if (isPartial) {
+            val col = mt.target(i)
+            if (isJson && partialBits >= 0 &&
+                (a(partialBits + jj / 8) & (1 << (jj % 8))) != 0) {
               // diff vector in the JSON column's length-prefixed slot,
               // applied against the BEFORE image's document
-              val diffLen = (tm.colMeta(i) match {
-                case 1 => c.u8().toLong
-                case 2 => c.u16().toLong
-                case 3 => c.u24().toLong
-                case 4 => c.u32()
-                case m => throw new IOException(s"bad JSON length-byte count $m")
-              }).toInt
-              val diffBytes = c.bytes(diffLen)
-              if (need(i)) {
-                val base = partialBase(i)
+              val diffAt = span(c, lengthPrefix(c, tm.colMeta(i), "JSON"), pos)
+              if (sink != null && need(i)) {
+                val base = docs(i)
                 if (base == null) {
                   val colName = tm.names.map(_(i)).getOrElse(s"column #$i")
                   throw new IOException(
@@ -1411,99 +1505,110 @@ object MysqlBinlog {
                       "after value cannot be reconstructed from the log " +
                       "alone; write the log with binlog_row_image=FULL")
                 }
-                vals(i) = UTF8String.fromString(
-                  JsonBinary.applyDiffs(base.toString, diffBytes))
+                sink.setString(col, UTF8String.fromString(JsonBinary.applyDiffs(
+                  base, java.util.Arrays.copyOfRange(a, diffAt, c.p))))
               }
-            } else if (need(i))
-              vals(i) = tm.colTypes(i) match {
-                case ColType.Enum => readEnum(c, tm, i)
-                case ColType.SetT => readSet(c, tm, i)
-                case t => readValue(c, t, tm.colMeta(i), tm.unsigned(i))
+            } else if (isJson && need(i) && (sink != null || capture)) {
+              val at = span(c, lengthPrefix(c, tm.colMeta(i), "JSON"), pos)
+              // real mysqld emits a zero-length value for null JSON
+              // documents in some binlog paths (CDC clients special-case
+              // empty → null)
+              if (c.p > at) {
+                val text = JsonBinary.decode(java.util.Arrays.copyOfRange(a, at, c.p))
+                if (capture) docs(i) = text
+                if (sink != null) sink.setString(col, UTF8String.fromString(text))
               }
-            else skipValue(c, tm.colTypes(i), tm.colMeta(i))
+            } else if (sink != null && need(i))
+              readValue(c, t, tm.colMeta(i), tm.unsigned(i), mt, i, col, sink, pos)
+            else skipValue(c, t, tm.colMeta(i))
           }
           j += 1
           if (isJson) jj += 1
         }
         i += 1
       }
-      vals
+      if (sink != null) sink.end()
     }
 
-    /** Unsigned integers decode into the widened Spark type the
-      * SIGNEDNESS-aware schema declared (u64 → DECIMAL(20,0): the raw
-      * two's-complement long reinterprets through BigInteger + 2^64).
-      * Byte widths are sign-independent, so skipValue needs no flag. */
-    private def readValue(c: Cur, tpe: Int, meta: Int,
-        unsigned: Boolean): Any =
-      if (!unsigned) readValue(c, tpe, meta)
-      else tpe match {
-        case ColType.Tiny => c.u8().toShort
-        case ColType.Short => c.u16()
-        case ColType.Int24 => c.u24() // 0..2^24-1 fits the signed Int surface
-        case ColType.Long => c.u32()
-        case ColType.LongLong =>
-          val v = c.i64()
+    /** The offset of the next `n` bytes, which the cursor then passes: a
+      * length past the payload fails loud here, before any sink copies
+      * from it. */
+    private def span(c: Cur, n: Long, pos: Long): Int = {
+      if (n < 0 || n > c.remaining) throw new IOException(
+        s"corrupt rows event at log offset $pos: length $n with " +
+          s"${c.remaining} payload bytes left")
+      val at = c.p
+      c.skip(n.toInt)
+      at
+    }
+
+    /** The 1-4 byte little-endian length of a BLOB/JSON/GEOMETRY value
+      * (`meta` = its width). */
+    private def lengthPrefix(c: Cur, meta: Int, what: String): Long = meta match {
+      case 1 => c.u8().toLong
+      case 2 => c.u16().toLong
+      case 3 => c.u24().toLong
+      case 4 => c.u32()
+      case m => throw new IOException(s"bad $what length-byte count $m")
+    }
+
+    /** One non-null value of wire type `t` into `sink` at `col`, in the
+      * Spark type [[MysqlTableMap.sparkTypes]] declares for it. Unsigned
+      * integers decode into the widened type the SIGNEDNESS-aware schema
+      * declared (u64 → DECIMAL(20,0): the raw two's-complement long
+      * reinterprets through BigInteger + 2^64). A zero date or datetime
+      * sets nothing: it reads null. */
+    private def readValue(c: Cur, t: Int, meta: Int, unsigned: Boolean,
+        mt: MappedTable, i: Int, col: Int, sink: RowSink, pos: Long): Unit = t match {
+      case ColType.Tiny =>
+        if (unsigned) sink.setShort(col, c.u8().toShort)
+        else sink.setByte(col, c.u8().toByte)
+      case ColType.Short =>
+        if (unsigned) sink.setInt(col, c.u16()) else sink.setShort(col, c.u16().toShort)
+      case ColType.Int24 =>
+        // unsigned 0..2^24-1 fits the signed Int surface; signed
+        // sign-extends 24→32
+        val v = c.u24()
+        sink.setInt(col, if (!unsigned && (v & 0x800000) != 0) v | 0xff000000 else v)
+      case ColType.Long =>
+        if (unsigned) sink.setLong(col, c.u32()) else sink.setInt(col, c.i32())
+      case ColType.LongLong =>
+        val v = c.i64()
+        if (!unsigned) sink.setLong(col, v)
+        else {
           val bd = if (v >= 0) java.math.BigDecimal.valueOf(v)
             else new java.math.BigDecimal(java.math.BigInteger.valueOf(v)
               .add(java.math.BigInteger.ONE.shiftLeft(64)))
-          Decimal(bd, 20, 0)
-        case _ => readValue(c, tpe, meta)
-      }
-
-    private def readValue(c: Cur, tpe: Int, meta: Int): Any = tpe match {
-      case ColType.Tiny => c.u8().toByte
-      case ColType.Short => c.u16().toShort
-      case ColType.Int24 =>
-        val v = c.u24()
-        if ((v & 0x800000) != 0) v | 0xff000000 else v // sign-extend 24→32
-      case ColType.Long => c.i32()
-      case ColType.LongLong => c.i64()
-      case ColType.Float => java.lang.Float.intBitsToFloat(c.i32())
-      case ColType.Double => java.lang.Double.longBitsToDouble(c.i64())
+          sink.setDecimal(col, Decimal(bd, 20, 0))
+        }
+      case ColType.Float => sink.setFloat(col, java.lang.Float.intBitsToFloat(c.i32()))
+      case ColType.Double =>
+        sink.setDouble(col, java.lang.Double.longBitsToDouble(c.i64()))
       case ColType.Varchar | ColType.String254 =>
-        val len = if (meta < 256) c.u8() else c.u16()
-        UTF8String.fromBytes(c.bytes(len))
+        val at = span(c, if (meta < 256) c.u8() else c.u16(), pos)
+        sink.setUtf8(col, c.a, at, c.p - at)
       case ColType.Blob | ColType.Geometry =>
-        val len = meta match {
-          case 1 => c.u8().toLong
-          case 2 => c.u16().toLong
-          case 3 => c.u24().toLong
-          case 4 => c.u32()
-          case m => throw new IOException(s"bad BLOB length-byte count $m")
-        }
-        c.bytes(len.toInt)
-      case ColType.Json =>
-        val len = meta match {
-          case 1 => c.u8().toLong
-          case 2 => c.u16().toLong
-          case 3 => c.u24().toLong
-          case 4 => c.u32()
-          case m => throw new IOException(s"bad JSON length-byte count $m")
-        }
-        // real mysqld emits a zero-length value for null JSON documents
-        // in some binlog paths (CDC clients special-case empty → null)
-        if (len == 0L) null
-        else UTF8String.fromString(JsonBinary.decode(c.bytes(len.toInt)))
+        val at = span(c, lengthPrefix(c, meta, "BLOB"), pos)
+        sink.setBinary(col, c.a, at, c.p - at)
       case ColType.Date =>
         // 3-byte LE packed: day + month*32 + year*512 -> Spark epoch days
         val v = c.u24()
         val day = v & 31; val month = (v >> 5) & 15; val year = v >> 9
         // zero-date AND zero-in-date ('2024-00-15', legal when sql_mode
         // omits NO_ZERO_IN_DATE): no epoch-day representation -> null
-        if (month == 0 || day == 0) null
-        else java.time.LocalDate.of(year, month, day).toEpochDay.toInt
+        if (month != 0 && day != 0)
+          sink.setInt(col, epochDay(year, month, day, "DATE", pos).toInt)
       case ColType.Year =>
         // 1 byte, year-1900; 0 is the literal year 0000
         val v = c.u8()
-        (if (v == 0) 0 else 1900 + v).toShort
+        sink.setShort(col, (if (v == 0) 0 else 1900 + v).toShort)
       case ColType.Timestamp =>
         // legacy TIMESTAMP: 4-byte LE unix seconds (no fractional part).
         // 0 is the zero-date, NOT epoch 0 — TIMESTAMP's valid range
         // starts at 1970-01-01 00:00:01, so mysqld uses 0 for
         // '0000-00-00 00:00:00' -> SQL null
         val s = c.u32()
-        if (s == 0L) null else s * 1000000L
+        if (s != 0L) sink.setLong(col, s * 1000000L)
       case ColType.Time =>
         // legacy TIME: 3-byte LE signed ±(H*10000 + M*100 + S) — same
         // signed-microseconds surface as TIME2
@@ -1516,19 +1621,18 @@ object MysqlBinlog {
         if (mm >= 60 || ss >= 60 || hh > 838)
           throw new IOException(s"legacy TIME out of range: ${hh}:${mm}:${ss}")
         val micros = (hh * 3600L + mm * 60L + ss) * 1000000L
-        if (v < 0) -micros else micros
+        sink.setLong(col, if (v < 0) -micros else micros)
       case ColType.DateTime =>
         // legacy DATETIME: 8-byte LE decimal YYYYMMDDHHMMSS
         val v = c.i64()
         val d = (v / 1000000L).toInt; val t = (v % 1000000L).toInt
         // zero-datetime and zero-in-date parts -> null (see ColType.Date)
-        if (d / 100 % 100 == 0 || d % 100 == 0) null
-        else DateTimeUtils.localDateTimeToMicros(LocalDateTime.of(
-          d / 10000, d / 100 % 100, d % 100,
-          t / 10000, t / 100 % 100, t % 100))
+        if (d / 100 % 100 != 0 && d % 100 != 0)
+          sink.setLong(col, dateTimeMicros(d / 10000, d / 100 % 100, d % 100,
+            t / 10000, t / 100 % 100, t % 100, "DATETIME", pos))
       case ColType.Bit =>
         // big-endian bitfield in ceil(bits/8) bytes (meta = bit width)
-        c.beU((meta + 7) / 8)
+        sink.setLong(col, c.beU((meta + 7) / 8))
       case ColType.Time2 =>
         // packed = ±((hour<<12|min<<6|sec) << 24 | frac-µs); negative
         // durations are the arithmetic negation, so |packed| splits
@@ -1562,7 +1666,7 @@ object MysqlBinlog {
         val m = (intpart >> 6) & 0x3f
         val s = intpart & 0x3f
         val micros = (h * 3600L + m * 60L + s) * 1000000L + frac
-        if (raw < 0) -micros else micros
+        sink.setLong(col, if (raw < 0) -micros else micros)
       case ColType.Timestamp2 =>
         // 4-byte BE unix seconds + big-endian fractional (fsp in meta).
         // seconds 0 = the zero-date (TIMESTAMP's range starts at
@@ -1570,11 +1674,9 @@ object MysqlBinlog {
         // under zero seconds is not a value mysqld can store
         val sec = c.beU(4)
         val frac = readFrac(c, meta)
-        if (sec == 0L) {
-          if (frac != 0L) throw new IOException(
-            s"TIMESTAMP2 zero seconds with nonzero fraction $frac")
-          null
-        } else sec * 1000000L + frac
+        if (sec != 0L) sink.setLong(col, sec * 1000000L + frac)
+        else if (frac != 0L) throw new IOException(
+          s"TIMESTAMP2 zero seconds with nonzero fraction $frac")
       case ColType.Datetime2 =>
         // 5-byte BE packed intpart (offset by 0x8000000000) + fractional
         val packed = c.beU(5) - 0x8000000000L
@@ -1584,43 +1686,72 @@ object MysqlBinlog {
         val frac = readFrac(c, meta) // consume even when the value nulls
         // mysqld stores '0000-00-00 00:00:00' (and zero-in-date parts)
         // as a real DATETIME2 value — packed 0 is the zero-datetime;
-        // month/day 0 have no LocalDateTime form -> SQL null (a naive
-        // LocalDateTime.of here throws on every zero-date, crashing the
-        // scan of any permissive-sql_mode server's log)
-        if (ym % 13 == 0 || (ymd & 31) == 0) null
-        else {
-          val ldt = LocalDateTime.of(ym / 13, ym % 13, ymd & 31,
-            hms >> 12, (hms >> 6) & 63, hms & 63)
-          DateTimeUtils.localDateTimeToMicros(ldt) + frac
-        }
-      case ColType.NewDecimal =>
-        val precision = meta >> 8; val scale = meta & 0xff
-        val raw = c.bytes(ColType.decimalBinSize(precision, scale))
-        val negative = (raw(0) & 0x80) == 0 // MSB set ⇒ positive
-        raw(0) = (raw(0) ^ 0x80).toByte
-        if (negative) { var i = 0; while (i < raw.length) { raw(i) = (~raw(i)).toByte; i += 1 } }
-        val rc = new Cur(raw)
-        val intg = precision - scale
-        val sb = new java.lang.StringBuilder(precision + 1)
-        val intgX = intg % 9
-        if (intgX > 0) sb.append(rc.beU(ColType.Dig2Bytes(intgX)))
-        var g = intg / 9
-        while (g > 0) { appendGroup(sb, rc.beU(4), pad = sb.length > 0); g -= 1 }
-        if (sb.length == 0) sb.append('0')
-        g = scale / 9
-        while (g > 0) { appendGroup(sb, rc.beU(4), pad = true); g -= 1 }
-        val fracX = scale % 9
-        if (fracX > 0) {
-          val v = rc.beU(ColType.Dig2Bytes(fracX))
-          val s = java.lang.Long.toString(v)
-          var p = fracX - s.length; while (p > 0) { sb.append('0'); p -= 1 }
-          sb.append(s)
-        }
-        val unscaled = new java.math.BigInteger(sb.toString)
-        val bd = new java.math.BigDecimal(
-          if (negative) unscaled.negate() else unscaled, scale)
-        Decimal(bd, precision, scale)
+        // month/day 0 have no calendar form -> SQL null
+        if (ym % 13 != 0 && (ymd & 31) != 0)
+          sink.setLong(col, dateTimeMicros(ym / 13, ym % 13, ymd & 31,
+            hms >> 12, (hms >> 6) & 63, hms & 63, "DATETIME2", pos) + frac)
+      case ColType.NewDecimal => readDecimal(c, meta, col, sink, pos)
+      case ColType.Enum => readEnum(c, mt, i, col, sink)
+      case ColType.SetT => readSet(c, mt.map, i, col, sink)
       case other => throw new IOException(s"unsupported MySQL column type $other")
+    }
+
+    // the NEWDECIMAL walk's cursor and accumulators (decoder-local, so
+    // the per-group step allocates nothing)
+    private var decAt = 0
+    private var decLong = 0L
+    private var decBig: java.math.BigInteger = null
+
+    /** NEWDECIMAL (the decimal2bin layout, see [[ColType]]): precision
+      * <= 18 decodes straight from the digit groups into the unscaled
+      * long of Spark's compact Decimal; wider values accumulate in a
+      * BigInteger. A group at or past 10^digits is bytes mysqld's
+      * bin2decimal rejects too: without a CRC nothing else would catch
+      * it, so it fails loud here. */
+    private def readDecimal(c: Cur, meta: Int, col: Int, sink: RowSink,
+        pos: Long): Unit = {
+      val precision = meta >> 8; val scale = meta & 0xff
+      val intg = precision - scale
+      val start = span(c, ColType.decimalBinSize(precision, scale), pos)
+      // MSB clear ⇒ negative: every byte is complemented
+      val mask = if ((c.a(start) & 0x80) == 0) 0xff else 0
+      decAt = start
+      decLong = 0L
+      decBig = if (precision > 18) java.math.BigInteger.ZERO else null
+      val intgX = intg % 9
+      if (intgX > 0) decGroup(c.a, mask, 0x80, ColType.Dig2Bytes(intgX), intgX, pos)
+      var g = intg / 9 + scale / 9
+      while (g > 0) {
+        decGroup(c.a, mask, if (decAt == start) 0x80 else 0, 4, 9, pos)
+        g -= 1
+      }
+      val fracX = scale % 9
+      if (fracX > 0)
+        decGroup(c.a, mask, if (decAt == start) 0x80 else 0,
+          ColType.Dig2Bytes(fracX), fracX, pos)
+      if (decBig == null)
+        sink.setDecimal(col, if (mask != 0) -decLong else decLong, precision, scale)
+      else sink.setDecimal(col, Decimal(new java.math.BigDecimal(
+        if (mask != 0) decBig.negate() else decBig, scale), precision, scale))
+    }
+
+    /** One big-endian digit group of `nBytes` at `decAt`, unmasked
+      * (`flip` = 0x80 for the value's first group: its first byte's
+      * sign bit), checked against its digit count and folded into the
+      * accumulator. */
+    private def decGroup(a: Array[Byte], mask: Int, flip: Int, nBytes: Int,
+        digits: Int, pos: Long): Unit = {
+      var v = ((a(decAt) ^ mask ^ flip) & 0xff).toLong
+      var k = 1
+      while (k < nBytes) { v = (v << 8) | ((a(decAt + k) ^ mask) & 0xff); k += 1 }
+      decAt += nBytes
+      val bound = Pow10(digits)
+      if (v >= bound) throw new IOException(
+        s"NEWDECIMAL at log offset $pos: digit group $v does not fit " +
+          s"$digits digits — corrupt value (mysqld's bin2decimal rejects it)")
+      if (decBig == null) decLong = decLong * bound + v
+      else decBig = decBig.multiply(java.math.BigInteger.valueOf(bound))
+        .add(java.math.BigInteger.valueOf(v))
     }
 
     /** ENUM: 1/2-byte 1-based member index. With FULL metadata the
@@ -1628,20 +1759,21 @@ object MysqlBinlog {
       * surfaces as the empty string — the same text mysql renders);
       * under MINIMAL the raw index does. An index past the member list
       * fails loud rather than guessing. */
-    private def readEnum(c: Cur, tm: MysqlTableMap, i: Int): Any = {
-      val idx = tm.colMeta(i) match {
+    private def readEnum(c: Cur, mt: MappedTable, i: Int, col: Int,
+        sink: RowSink): Unit = {
+      val idx = mt.map.colMeta(i) match {
         case 1 => c.u8()
         case 2 => c.u16()
         case m => throw new IOException(s"bad ENUM pack length $m")
       }
-      tm.enumLabels.get(i) match {
-        case None => idx
+      mt.enumUtf8.get(i) match {
+        case None => sink.setInt(col, idx)
         case Some(labels) =>
-          if (idx == 0) UTF8String.EMPTY_UTF8
-          else if (idx <= labels.length) UTF8String.fromString(labels(idx - 1))
+          if (idx == 0) sink.setString(col, UTF8String.EMPTY_UTF8)
+          else if (idx <= labels.length) sink.setString(col, labels(idx - 1))
           else throw new IOException(
             s"ENUM index $idx out of range (${labels.length} members) " +
-              s"in ${tm.db}.${tm.table} col $i")
+              s"in ${mt.map.db}.${mt.map.table} col $i")
       }
     }
 
@@ -1649,13 +1781,14 @@ object MysqlBinlog {
       * member). With FULL metadata the comma-joined member list in
       * declaration order surfaces (mysql's text form); under MINIMAL
       * the raw bitmask does. Bits past the member list fail loud. */
-    private def readSet(c: Cur, tm: MysqlTableMap, i: Int): Any = {
+    private def readSet(c: Cur, tm: MysqlTableMap, i: Int, col: Int,
+        sink: RowSink): Unit = {
       val bytes = tm.colMeta(i)
       var bits = 0L
       var b = 0
       while (b < bytes) { bits |= (c.u8().toLong << (8 * b)); b += 1 }
       tm.setLabels.get(i) match {
-        case None => bits
+        case None => sink.setLong(col, bits)
         case Some(labels) =>
           if (labels.length < 64 && (bits >>> labels.length) != 0)
             throw new IOException(
@@ -1670,17 +1803,8 @@ object MysqlBinlog {
             }
             m += 1
           }
-          UTF8String.fromString(sb.toString)
+          sink.setString(col, UTF8String.fromString(sb.toString))
       }
-    }
-
-    /** Append one base-10^9 group as exactly 9 digits (zero-padded) when
-      * higher-order digits exist, minimal digits otherwise. */
-    private def appendGroup(sb: java.lang.StringBuilder, v: Long,
-        pad: Boolean): Unit = {
-      val s = java.lang.Long.toString(v)
-      if (pad) { var p = 9 - s.length; while (p > 0) { sb.append('0'); p -= 1 } }
-      sb.append(s)
     }
 
     /** Fractional seconds: ceil(fsp/2) big-endian bytes holding the
@@ -1692,11 +1816,7 @@ object MysqlBinlog {
       * misdecode every DATETIME(3) fraction by 10x. */
     private def readFrac(c: Cur, fsp: Int): Long = {
       val bytes = (fsp + 1) / 2
-      if (bytes == 0) 0L
-      else {
-        val raw = c.beU(bytes)
-        raw * pow10(6 - 2 * bytes)
-      }
+      if (bytes == 0) 0L else c.beU(bytes) * Pow10(6 - 2 * bytes)
     }
     private def skipValue(c: Cur, tpe: Int, meta: Int): Unit = tpe match {
       case ColType.Tiny => c.skip(1)
@@ -2904,7 +3024,7 @@ object MysqlBinlog {
       * neighbor's unit). */
     private def writeFrac(b: ByteBuf, fracMicros: Long, fsp: Int): Unit = {
       val bytes = (fsp + 1) / 2
-      if (bytes > 0) b.beU(fracMicros / pow10(6 - 2 * bytes), bytes)
+      if (bytes > 0) b.beU(fracMicros / Pow10(6 - 2 * bytes), bytes)
     }
 
     private def writeValue(b: ByteBuf, f: StructField, v: Any): Unit =
@@ -2953,7 +3073,7 @@ object MysqlBinlog {
       else if (timeCols(f.name) || timeFsp.contains(f.name)) {
         val fsp = timeFsp.getOrElse(f.name, 6)
         val micros = v.asInstanceOf[Long]
-        require(micros % pow10(6 - fsp) == 0L,
+        require(micros % Pow10(6 - fsp) == 0L,
           s"${f.name}: $micros µs not representable at TIME($fsp)")
         val abs = math.abs(micros)
         val frac = abs % 1000000L
@@ -3089,14 +3209,14 @@ object MysqlBinlog {
           val micros = v.asInstanceOf[Long]
           require(micros >= 0, "TIMESTAMP2 cannot encode pre-1970 instants")
           val fsp = dtFsp.getOrElse(f.name, 6)
-          require(micros % pow10(6 - fsp) == 0L,
+          require(micros % Pow10(6 - fsp) == 0L,
             s"${f.name}: $micros µs not representable at TIMESTAMP($fsp)")
           b.beU(micros / 1000000L, 4)
           writeFrac(b, micros % 1000000L, fsp)
         case ColType.Datetime2 =>
           val micros = v.asInstanceOf[Long]
           val fsp = dtFsp.getOrElse(f.name, 6)
-          require(micros % pow10(6 - fsp) == 0L,
+          require(micros % Pow10(6 - fsp) == 0L,
             s"${f.name}: $micros µs not representable at DATETIME($fsp)")
           val ldt = DateTimeUtils.microsToLocalDateTime(micros)
           val ymd = ((ldt.getYear * 13 + ldt.getMonthValue) << 5) | ldt.getDayOfMonth

@@ -146,7 +146,7 @@ object Cdc {
         .option("database", CdcFixture.Db)
         .option("table", CdcFixture.Table)
         .load()
-      val ckpt = graft.TmpDirs.ephemeralCheckpoint("cdc08")
+      val ckpt = graft.TmpDirs.ramCheckpointDir("cdc08")
       graft.streaming.EphemeralCkpt.withoutChecksums(s) {
         val q = stream.writeStream.format("memory").queryName(name)
           .option("checkpointLocation", ckpt)

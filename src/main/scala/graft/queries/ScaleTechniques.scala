@@ -29,7 +29,7 @@ object ScaleTechniques {
   // JVM-unique suffix: managed-table locations under spark-warehouse
   // persist across JVMs while the in-memory catalog doesn't — unique
   // names avoid LOCATION_ALREADY_EXISTS on re-runs
-  private lazy val jvmTag: String =
+  private[graft] lazy val jvmTag: String =
     java.lang.Long.toHexString(System.nanoTime()).takeRight(8)
 
   private def deleteRecursively(f: java.io.File): Unit = {
@@ -188,7 +188,7 @@ object ScaleTechniques {
         .groupBy(window(col("ts"), "2 hours", "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(col("window.start").as("window_start"), col("event_type"), col("n"))
-      val ckpt = graft.TmpDirs.ephemeralCheckpoint("str04")
+      val ckpt = graft.TmpDirs.ramCheckpointDir("str04")
       graft.streaming.EphemeralCkpt.withoutChecksums(s) {
         val q = agg.writeStream.format("memory").queryName(name)
           .option("checkpointLocation", ckpt)

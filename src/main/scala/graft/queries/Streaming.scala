@@ -30,8 +30,8 @@ object Streaming {
     // stop) with checkpoint-file checksums off for its lifetime — the
     // checksum sidecar await on every state-commit close, not raw disk
     // I/O, was the measured bulk of the stateful stage's non-CPU time
-    // (see EphemeralCkpt / TmpDirs.ephemeralCheckpoint)
-    val ckpt = graft.TmpDirs.ephemeralCheckpoint(name)
+    // (see EphemeralCkpt / TmpDirs.ramCheckpointDir)
+    val ckpt = graft.TmpDirs.ramCheckpointDir(name)
     graft.streaming.EphemeralCkpt.withoutChecksums(spark) {
       val q = try {
         spark.conf.set("spark.sql.shuffle.partitions",
@@ -112,7 +112,7 @@ object Streaming {
       // clobber each other, repeated runs don't leak sink copies
       val out = graft.TmpDirs.scoped(
         "graft-str07-" + java.lang.Integer.toHexString(dir.hashCode))
-      val ckpt = graft.TmpDirs.ephemeralCheckpoint("str07")
+      val ckpt = graft.TmpDirs.ramCheckpointDir("str07")
       graft.streaming.EphemeralCkpt.withoutChecksums(s) {
         val q = StreamOps.eventsStream(s, dir)
           .select(col("event_type"))

@@ -5,9 +5,9 @@ import java.util
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
-import graft.cdc.{BinlogFormatAdapter, BinlogFormats, CdcCodec, CdcSchema, RawEventSource}
+import graft.cdc.{BinlogFormatAdapter, BinlogFormats, CdcCodec, CdcSchema, EnvelopePred, RawEventSource, RowSink}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
@@ -17,6 +17,7 @@ import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, 
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Spark DataSourceV2 CDC source — the Tier-A surface of SURVEY.md §2.A,
   * re-expressed on Spark's connector API.
@@ -489,98 +490,62 @@ class CdcPartitionReader(part: CdcInputPartition, db: String, table: String,
   private val adapter = BinlogFormats.forName(format)
 
   // validated: envelope block at the END, no source column reusing a
-  // reserved name — so the name-keyed projection below is unambiguous
+  // reserved name — so the name-keyed layout below is unambiguous
   private val sourceWidth = CdcSchema.sourceWidth(full)
-  // projection map: required field -> source column index, or negative
-  // envelope codes (-1 __op, -2 __gtid, -3 __tm, -4 __source_id,
-  // -5 __query)
-  private val proj: Array[Int] = required.fields.map { f =>
-    f.name match {
-      case CdcSchema.OpCol => -1
-      case CdcSchema.GtidCol => -2
-      case CdcSchema.TmCol => -3
-      case CdcSchema.SourceIdCol => -4
-      case CdcSchema.QueryCol => -5
-      case n =>
-        val i = full.fieldIndex(n)
-        require(i < sourceWidth, s"unexpected column $n")
-        i
-    }
-  }
-  private val neededMask: Array[Boolean] = {
-    val m = new Array[Boolean](sourceWidth)
-    proj.foreach(i => if (i >= 0) m(i) = true)
-    m
-  }
-  private val predicate = EnvelopePredicate.compile(filters)
+  required.fieldNames.foreach(n =>
+    require(full.fieldNames.contains(n), s"unexpected column $n"))
+  // source column -> its ordinal in the output row (-1: not read)
+  private val outOrd: Array[Int] =
+    Array.tabulate(sourceWidth)(i => required.fieldNames.indexOf(full(i).name))
   private val src = adapter.open(part.path)
   private val events =
     CdcPartitionReader.rangeEvents(adapter, src, part.startPos, part.endPos)
-  private val sourceSchema = org.apache.spark.sql.types.StructType(full.fields.take(sourceWidth))
-  private val decoder = adapter.decoder(db, table, i => neededMask(i),
+  private val sourceSchema = StructType(full.fields.take(sourceWidth))
+  private val decoder = adapter.decoder(db, table, i => outOrd(i) >= 0,
     expectedSchema = Some(sourceSchema), driftEpochs = driftEpochs)
-  private var queue: Iterator[CdcCodec.CdcRow] = Iterator.empty
-  private var current: InternalRow = _
 
-  private var emitted = 0
-  private var skipped = 0L
   private var eventsDecoded = 0L
   private var rowsEmitted = 0L
+
+  // The decoder writes each admitted row straight into `rows` as an
+  // UnsafeRow in `required` order; next() points `current` at each in
+  // turn and refills `rows`, one event at a time, once all are out. The
+  // pushed envelope predicate, the pushed OFFSET residual (the boundary
+  // file discards its part of the skipped prefix) and the pushed LIMIT
+  // (Spark applies the global limit above) admit rows before the
+  // decoder reads their images.
+  private val rows = RowSink.unsafeRows(outOrd,
+    Array(CdcSchema.OpCol, CdcSchema.GtidCol, CdcSchema.TmCol,
+      CdcSchema.SourceIdCol, CdcSchema.QueryCol).map(required.fieldNames.indexOf(_)),
+    required.length, EnvelopePredicate.compile(filters), part.skipRows,
+    limit.fold(Long.MaxValue)(_.toLong))
+  private var read = 0
+  private val current = new UnsafeRow(required.length)
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
     Array(CdcMetrics.TaskMetric("cdcEventsDecoded", eventsDecoded),
       CdcMetrics.TaskMetric("cdcRowsEmitted", rowsEmitted))
 
   override def next(): Boolean = {
-    // pushed LIMIT: stop decoding this partition once `limit`
-    // post-filter rows are out (Spark applies the global limit above)
-    if (limit.exists(emitted >= _)) return false
-    while (true) {
-      while (queue.hasNext) {
-        val r = queue.next()
-        if (predicate(r.op, r.gtid, r.tmMicros, r.sourceId)) {
-          // pushed OFFSET residual: the boundary file discards its part
-          // of the skipped prefix without materializing rows
-          if (skipped < part.skipRows) skipped += 1
-          else {
-            current = project(r)
-            emitted += 1
-            rowsEmitted += 1
-            return true
-          }
-        }
-      }
-      var refilled = false
+    if (limit.exists(rowsEmitted >= _)) return false
+    if (read == rows.size) {
+      rows.clear()
+      read = 0
       // skipped row events never reach here: the metric is decode work,
       // not reads. Control events decode to no rows (state only).
-      while (!refilled && events.hasNext) {
+      while (rows.size == 0 && events.hasNext) {
         eventsDecoded += 1
-        val rows = decoder.decode(events.next())
-        if (rows.nonEmpty) { queue = rows.iterator; refilled = true }
+        decoder.decode(events.next(), rows)
       }
-      if (!refilled) return false
+      if (rows.size == 0) return false
     }
-    false // unreachable
+    rows.pointTo(current, read)
+    read += 1
+    rowsEmitted += 1
+    true
   }
 
   override def get(): InternalRow = current
-
-  private def project(r: CdcCodec.CdcRow): InternalRow = {
-    val out = new Array[Any](proj.length)
-    var i = 0
-    while (i < proj.length) {
-      out(i) = proj(i) match {
-        case -1 => r.op
-        case -2 => r.gtid
-        case -3 => r.tmMicros
-        case -4 => r.sourceId
-        case -5 => r.query
-        case j => r.values(j)
-      }
-      i += 1
-    }
-    new GenericInternalRow(out)
-  }
 
   override def close(): Unit = src.close()
 }
@@ -723,22 +688,24 @@ object EnvelopePredicate {
     case other => throw new IllegalArgumentException(s"bad numeric literal: $other")
   }
 
-  /** Row predicate over the full envelope: (op, gtid, tmMicros, sourceId). */
-  type Pred = (Int, Long, Long, org.apache.spark.unsafe.types.UTF8String) => Boolean
-
-  def compile(filters: Array[Filter]): Pred = {
-    if (filters.isEmpty) return (_, _, _, _) => true
+  /** Row predicate over the full envelope. */
+  def compile(filters: Array[Filter]): EnvelopePred = {
+    if (filters.isEmpty) return EnvelopePred.All
     val ps = filters.map(one)
-    (op, gtid, tm, src) => ps.forall(_(op, gtid, tm, src))
+    (op, gtid, tm, src) => {
+      var i = 0
+      while (i < ps.length && ps(i)(op, gtid, tm, src)) i += 1
+      i == ps.length
+    }
   }
 
-  private def utf8(v: Any): org.apache.spark.unsafe.types.UTF8String = v match {
-    case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-    case u: org.apache.spark.unsafe.types.UTF8String => u
+  private def utf8(v: Any): UTF8String = v match {
+    case s: String => UTF8String.fromString(s)
+    case u: UTF8String => u
     case other => throw new IllegalArgumentException(s"bad __source_id literal: $other")
   }
 
-  private def one(f: Filter): Pred = f match {
+  private def one(f: Filter): EnvelopePred = f match {
     case EqualTo(CdcSchema.SourceIdCol, v) =>
       val rhs = utf8(v); (_, _, _, s) => rhs == s
     case In(CdcSchema.SourceIdCol, vs) =>
@@ -753,7 +720,8 @@ object EnvelopePredicate {
         case CdcSchema.TmCol => vs.map(toMicros).toSet
         case _ => vs.map(num).toSet
       }
-      sel(a) match { case get => (op, g, t, _) => set.contains(get(op, g, t)) }
+      val col = field(a)
+      (op, g, t, _) => set.contains(pick(col, op, g, t))
     case And(l, r) =>
       val (pl, pr) = (one(l), one(r)); (o, g, t, s) => pl(o, g, t, s) && pr(o, g, t, s)
     case Or(l, r) =>
@@ -764,19 +732,23 @@ object EnvelopePredicate {
     case other => throw new IllegalArgumentException(s"unsupported pushed filter: $other")
   }
 
-  private def sel(a: String): (Int, Long, Long) => Long = a match {
-    case CdcSchema.OpCol => (op, _, _) => op.toLong
-    case CdcSchema.GtidCol => (_, g, _) => g
-    case CdcSchema.TmCol => (_, _, t) => t
+  /** Numeric envelope column → 0 (__op), 1 (__gtid) or 2 (__tm). */
+  private def field(a: String): Int = a match {
+    case CdcSchema.OpCol => 0
+    case CdcSchema.GtidCol => 1
+    case CdcSchema.TmCol => 2
   }
 
-  private def cmp(a: String, v: Any, op: (Long, Long) => Boolean): Pred = {
+  private def pick(field: Int, op: Int, gtid: Long, tm: Long): Long =
+    if (field == 0) op.toLong else if (field == 1) gtid else tm
+
+  private def cmp(a: String, v: Any, op: (Long, Long) => Boolean): EnvelopePred = {
     val rhs = a match {
       case CdcSchema.TmCol => toMicros(v)
       case _ => num(v)
     }
-    val get = sel(a)
-    (o, g, t, _) => op(get(o, g, t), rhs)
+    val col = field(a)
+    (o, g, t, _) => op(pick(col, o, g, t), rhs)
   }
 }
 

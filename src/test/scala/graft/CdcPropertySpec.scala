@@ -137,7 +137,10 @@ class CdcPropertySpec extends AnyFunSuite {
       neg <- Gen.oneOf(true, false)
     } yield (p, s,
       new java.math.BigDecimal(if (neg) unscaled.negate() else unscaled, s))
-    check(Prop.forAll(genCase) { case (p, s, bd) =>
+    // precision <= 18 decodes to a long-backed Decimal, wider values
+    // through BigInteger: p 1-38 spans both sides of the split, and the
+    // widest long-backed values are checked at every scale
+    def roundTrips(p: Int, s: Int, bd: java.math.BigDecimal): Boolean = {
       val bytes = MysqlBinlog.encodeDecimal(bd, p, s)
       // size invariant: exactly the declared wire width
       val sized = bytes.length == MysqlBinlog.ColType.decimalBinSize(p, s)
@@ -161,7 +164,11 @@ class CdcPropertySpec extends AnyFunSuite {
       val got = rows.head.values(0)
         .asInstanceOf[org.apache.spark.sql.types.Decimal].toJavaBigDecimal
       sized && got.compareTo(bd) == 0
-    })
+    }
+    check(Prop.forAll(genCase) { case (p, s, bd) => roundTrips(p, s, bd) })
+    val edge = java.math.BigInteger.TEN.pow(18).subtract(java.math.BigInteger.ONE)
+    for (s <- Seq(0, 2, 9, 18); v <- Seq(edge, edge.negate()))
+      assert(roundTrips(18, s, new java.math.BigDecimal(v, s)), s"p=18 s=$s $v")
   }
 
   test("property: encode→decode round-trips arbitrary row batches") {
@@ -309,7 +316,7 @@ class CdcPropertySpec extends AnyFunSuite {
   }
 
   /** The drift-epoch policy is promised IDENTICAL across formats (one
-    * shared buildEpochPlan/shapeToExpected) — this pins it end to end:
+    * shared buildEpochPlan and one row sink) — this pins it end to end:
     * the same random ALTER case written as a GCDC log and as a REAL
     * MySQL binlog (FULL metadata) must decode to the same (op, gtid,
     * values) sequence under driftEpochs. Catches any divergence in the

@@ -118,6 +118,19 @@ class GoldenBinlogSpec extends SparkTestBase {
       (2L, null, CdcSchema.Op.Delete, 3L, 1700000300L, Sid)))
   }
 
+  test("authored binlogs read the same through the scan and decode(ev)") {
+    val golden = materialize()
+    DecodeParity.check(spark, Map("indexFile" -> s"$golden/binlog.index",
+      "database" -> "gd", "table" -> "t", "binlogFormat" -> "mysql"))
+    for ((hexStr, label) <- Seq((PayloadZstdHex, "zstd"), (PayloadNoneHex, "none"))) {
+      val dir = Files.createTempDirectory(s"golden-parity-$label").toString
+      Files.write(Paths.get(dir, "golden-bin.000001"), hex(hexStr))
+      Files.writeString(Paths.get(dir, "binlog.index"), "golden-bin.000001\n")
+      DecodeParity.check(spark, Map("indexFile" -> s"$dir/binlog.index",
+        "database" -> "gd", "table" -> "t", "binlogFormat" -> "mysql"))
+    }
+  }
+
   test("event framing: every event's byte offsets match the authored layout") {
     val dir = materialize()
     def offsets(f: String): Seq[(Long, Long)] = {

@@ -326,6 +326,127 @@ class MysqlBinlogSpec extends SparkTestBase {
     }
   }
 
+  test("NEWDECIMAL: an impossible digit group fails loud, naming the log offset") {
+    // DECIMAL(20,0) packs [2-digit partial group: 1 byte][9 digits: 4 bytes]
+    // [9 digits: 4 bytes]. With binlog_checksum=NONE no CRC guards the
+    // bytes, so a 4-byte group of 1,500,000,000 (ten digits) must be
+    // refused like mysqld's bin2decimal refuses it — read as written it
+    // would splice ten digits into nine and decode 1500000000000000001
+    val schema = StructType(Seq(StructField("d", DecimalType(20, 0))))
+    val path = s"${tmpDir()}/mysql-bin.000001"
+    val w = new MysqlBinlog.Writer(path)
+    w.tableMap(1000L, 3L, "db", "t", schema)
+    w.gtid(1000L, 1L, Sid)
+    w.writeRows(1000L, 3L, schema,
+      Seq(Array[Any](new java.math.BigDecimal("123456789"))))
+    w.close()
+    val good = MysqlBinlog.encodeDecimal(new java.math.BigDecimal("123456789"), 20, 0)
+    val bytes = Files.readAllBytes(Paths.get(path))
+    val at = bytes.indexOfSlice(good.toSeq)
+    assert(at > 0 && bytes.indexOfSlice(good.toSeq, at + 1) < 0)
+    // the first full group: 1,500,000,000 big-endian
+    Array(0x59, 0x68, 0x2f, 0x00).zipWithIndex.foreach { case (b, i) =>
+      bytes(at + 1 + i) = b.toByte }
+    Files.write(Paths.get(path), bytes)
+    val ex = intercept[java.io.IOException](decodeAll(path, "db", "t"))
+    assert(ex.getMessage.contains("NEWDECIMAL at log offset") &&
+      ex.getMessage.contains("1500000000"), ex.getMessage)
+    // the same for a leading partial group past its digit count (2
+    // digits in one byte: 100 is three), on the long-backed side too
+    val small = StructType(Seq(StructField("d", DecimalType(11, 0))))
+    val p2 = s"${tmpDir()}/mysql-bin.000001"
+    val w2 = new MysqlBinlog.Writer(p2)
+    w2.tableMap(1000L, 3L, "db", "t", small)
+    w2.gtid(1000L, 1L, Sid)
+    w2.writeRows(1000L, 3L, small,
+      Seq(Array[Any](new java.math.BigDecimal("987654321"))))
+    w2.close()
+    val good2 = MysqlBinlog.encodeDecimal(new java.math.BigDecimal("987654321"), 11, 0)
+    val bytes2 = Files.readAllBytes(Paths.get(p2))
+    val at2 = bytes2.indexOfSlice(good2.toSeq)
+    assert(at2 > 0)
+    bytes2(at2) = (100 ^ 0x80).toByte // positive: sign bit set
+    Files.write(Paths.get(p2), bytes2)
+    val ex2 = intercept[java.io.IOException](decodeAll(p2, "db", "t"))
+    assert(ex2.getMessage.contains("NEWDECIMAL at log offset"), ex2.getMessage)
+  }
+
+  test("a row a pushed __gtid filter drops is never decoded") {
+    // the envelope predicate runs before any image byte is decoded:
+    // gtid 1's row carries an impossible DATE (2024-02-30, no CRC to
+    // catch it), so only a scan that decodes it fails
+    val schema = StructType(Seq(StructField("id", LongType), StructField("d", DateType)))
+    val dir = tmpDir()
+    val path = s"$dir/mysql-bin.000001"
+    val w = new MysqlBinlog.Writer(path)
+    w.tableMap(1000L, 3L, "db", "t", schema)
+    w.gtid(1000L, 1L, Sid)
+    w.writeRows(1000L, 3L, schema,
+      Seq(Array[Any](1L, java.time.LocalDate.of(2024, 2, 29).toEpochDay.toInt)))
+    w.gtid(2000L, 2L, Sid)
+    w.writeRows(2000L, 3L, schema,
+      Seq(Array[Any](2L, java.time.LocalDate.of(2024, 3, 1).toEpochDay.toInt)))
+    w.close()
+    Files.writeString(Paths.get(dir, "binlog.index"), "mysql-bin.000001\n")
+    // DATE packs day + month*32 + year*512, 3 bytes little-endian
+    val feb29 = Seq(0x5d, 0xd0, 0x0f).map(_.toByte)
+    val bytes = Files.readAllBytes(Paths.get(path))
+    val at = bytes.indexOfSlice(feb29)
+    assert(at > 0 && bytes.indexOfSlice(feb29, at + 1) < 0)
+    bytes(at) = 0x5e // day 30
+    Files.write(Paths.get(path), bytes)
+    val df = spark.read.format("binlogcdc")
+      .option("indexFile", s"$dir/binlog.index")
+      .option("database", "db").option("table", "t")
+      .option("binlogFormat", "mysql").load()
+    assert(df.filter(col(CdcSchema.GtidCol) === 2L).select("id", "d").collect()
+      .map(r => (r.getLong(0), r.getDate(1).toLocalDate)).toSeq ==
+      Seq((2L, java.time.LocalDate.of(2024, 3, 1))))
+    val ex = intercept[Exception](df.select("id", "d").collect())
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("impossible date 2024-2-30")), ex)
+  }
+
+  test("TABLE_MAP reuse: a re-mapped table id decodes under the map in force") {
+    // mysqld writes the same TABLE_MAP before every transaction; the
+    // decoder skips re-parsing bytes equal to the map in force. One
+    // table id re-mapped to a different column list, then back, must
+    // decode every rows event under the map in force at that point
+    val a = StructType(Seq(StructField("id", LongType), StructField("s", StringType)))
+    val b = StructType(Seq(StructField("id", LongType), StructField("n", IntegerType),
+      StructField("x", DoubleType)))
+    val path = s"${tmpDir()}/mysql-bin.000001"
+    val w = new MysqlBinlog.Writer(path)
+    var gno = 0L
+    def txn(schema: StructType, row: Array[Any]): Unit = {
+      gno += 1
+      w.tableMap(1000L * gno, 7L, "db", "t", schema)
+      w.gtid(1000L * gno, gno, Sid)
+      w.writeRows(1000L * gno, 7L, schema, Seq(row))
+    }
+    txn(a, Array[Any](1L, "one"))
+    txn(a, Array[Any](2L, "two")) // identical map bytes: reused
+    txn(b, Array[Any](3L, 30, 3.5)) // same id, new column list
+    txn(b, Array[Any](4L, 40, 4.5))
+    txn(a, Array[Any](5L, "five")) // back to the first map
+    w.close()
+    val rows = decodeAll(path, "db", "t").map(_.values.toSeq)
+    assert(rows == Seq(
+      Seq(1L, UTF8String.fromString("one")), Seq(2L, UTF8String.fromString("two")),
+      Seq(3L, 30, 3.5), Seq(4L, 40, 4.5), Seq(5L, UTF8String.fromString("five"))))
+    // under the default drift policy the changed map still fails loud,
+    // at its own offset
+    val firstB = {
+      val r = MysqlBinlogAdapter.open(path)
+      try r.filter(_.tpe == MysqlBinlog.EventType.TableMap).drop(2).next().pos
+      finally r.close()
+    }
+    val ex = intercept[IllegalStateException](decodeAll(path, "db", "t",
+      expected = Some(a)))
+    assert(ex.getMessage.contains(s"schema drift for db.t at log offset $firstB"),
+      ex.getMessage)
+  }
+
   test("compressed transactions: zstd payload decodes to the identical stream") {
     // the same storyline written plain and with binlog_transaction_
     // compression semantics must decode to byte-identical rows
