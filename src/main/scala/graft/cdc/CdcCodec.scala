@@ -30,6 +30,8 @@ object CdcCodec {
   val Magic: Int = 0x47434443 // "GCDC"
   val Version: Int = 1
   val HeaderLen: Int = 8
+  /** Bytes before each event's payload: type u8, timestamp i64, length i32. */
+  val EventHeaderLen: Int = 1 + 8 + 4
 
   object EventType {
     val TableMap = 1: Byte
@@ -356,11 +358,11 @@ object CdcCodec {
         // before readFully ever hits EOF. A length beyond the file's
         // remaining bytes can only be a torn tail or corruption — fail
         // via EOF semantics (stop at the last complete event).
-        if (len < 0 || len > fileLen - pos - 13) throw new EOFException()
+        if (len < 0 || len > fileLen - pos - EventHeaderLen) throw new EOFException()
         val payload = new Array[Byte](len)
         in.readFully(payload)
         val start = pos
-        pos += 1 + 8 + 4 + len
+        pos += EventHeaderLen + len
         nextEvent = RawEvent(tpe, tsMs, payload, start, pos)
       } catch { case _: EOFException => done = true; nextEvent = null }
     }
@@ -583,16 +585,20 @@ object CdcCodec {
           val plan = epochs.getOrElse(tableId, null)
           val width = if (expectedWidth >= 0) expectedWidth else codes.length
           val n = d.len(d.i32())
+          // each image's byte offset in the file: __pos
+          val payloadPos = ev.pos + EventHeaderLen
           var r = 0
           while (r < n) {
             if (op == CdcSchema.Op.UpdateBefore) {
               readRow(d, tm.schema, codes, plan, sink,
-                sink.begin(op, currentGtid, tmMicros, currentSourceId, null, width))
+                sink.begin(op, currentGtid, tmMicros, currentSourceId, null,
+                  width, payloadPos + d.p))
               readRow(d, tm.schema, codes, plan, sink,
                 sink.begin(CdcSchema.Op.UpdateAfter, currentGtid, tmMicros,
-                  currentSourceId, null, width))
+                  currentSourceId, null, width, payloadPos + d.p))
             } else readRow(d, tm.schema, codes, plan, sink,
-              sink.begin(op, currentGtid, tmMicros, currentSourceId, null, width))
+              sink.begin(op, currentGtid, tmMicros, currentSourceId, null,
+                width, payloadPos + d.p))
             r += 1
           }
         case _ =>

@@ -54,6 +54,13 @@ object CdcSchema {
 
   val queryField: StructField = StructField(QueryCol, StringType, nullable = true)
 
+  /** Hidden metadata column of every `binlogcdc` table: the row image's
+    * place in the log, (file ordinal in the index) << 32 | (byte offset
+    * of the image in its file) — strictly increasing in log order. Read
+    * only when a query names it (`df.metadataColumn("__pos")`); never
+    * part of `SELECT *`. Latest-image compaction orders by it. */
+  val PosCol = "__pos"
+
   /** CDC table schema = source columns (binlog column order) + envelope
     * (+ `__query` when the source is opened with `rowsQuery=true`). */
   def withEnvelope(source: StructType, rowsQuery: Boolean = false): StructType =
@@ -64,7 +71,8 @@ object CdcSchema {
     * sit at the END, and no source column may reuse a reserved name —
     * projection and width lookups are by NAME, so a source column
     * called `__op`/`__query` would otherwise be silently hijacked by
-    * the envelope instead of failing loud. */
+    * the envelope instead of failing loud (and one called `__pos`
+    * would shadow the hidden log-position column). */
   def sourceWidth(full: StructType): Int = {
     val names = full.fieldNames
     val hasQuery = names.nonEmpty && names.last == QueryCol
@@ -73,7 +81,7 @@ object CdcSchema {
     require(w >= 0 && names.drop(w).sameElements(expected),
       s"binlogcdc: CDC schema must end with the envelope columns " +
         s"${expected.mkString(", ")} (got ${names.mkString(", ")})")
-    val reserved = envelope.map(_.name).toSet + QueryCol
+    val reserved = envelope.map(_.name).toSet + QueryCol + PosCol
     names.take(w).find(reserved) match {
       case Some(n) => throw new IllegalArgumentException(
         s"binlogcdc: source column '$n' collides with a reserved envelope " +

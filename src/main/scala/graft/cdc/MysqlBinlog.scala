@@ -987,6 +987,11 @@ object MysqlBinlog {
     // closes, so a statement can never be stamped onto another
     // transaction's rows. Null when the producer doesn't log them.
     private var currentRowsQuery: UTF8String = null
+    // A row image inside a compressed container (a TRANSACTION_PAYLOAD,
+    // a MariaDB compressed rows event) has no byte of its own in the
+    // file: its __pos offset is the container's offset plus the image's
+    // rank among the container's images (-1: not in a container).
+    private var containerRank = -1L
 
     def decode(ev: CdcCodec.RawEvent, sink: RowSink): Unit = ev.tpe match {
       case EventType.TableMap =>
@@ -1114,6 +1119,7 @@ object MysqlBinlog {
           System.arraycopy(ev.payload, 0, rebuilt, 0, 8)
           System.arraycopy(body, 0, rebuilt, 8, body.length)
           val inflated = ev.copy(payload = rebuilt)
+          containerRank = 0L
           ev.tpe match {
             case EventType.MariaWriteRowsCompressed =>
               rowsEvent(inflated, sink, CdcSchema.Op.Insert, images = 1, v1 = true)
@@ -1123,6 +1129,7 @@ object MysqlBinlog {
               rowsEvent(inflated, sink, CdcSchema.Op.UpdateBefore, images = 2,
                 v1 = true)
           }
+          containerRank = -1L
         }
       case EventType.MariaAnnotateRows if maria =>
         // the statement text (binlog_annotate_row_events=ON), written
@@ -1267,7 +1274,9 @@ object MysqlBinlog {
         // zstd-compressed by the producer; the preceding outer GTID has
         // already set this txn's identity. Inner events carry the OUTER
         // event's offsets so streaming resume stays outer-granular.
+        containerRank = 0L
         unwrapPayload(ev).foreach(decode(_, sink))
+        containerRank = -1L
       case _ => // FDE/ROTATE/HEARTBEAT/...: control or ignorable
     }
 
@@ -1394,22 +1403,41 @@ object MysqlBinlog {
             // what a PARTIAL_JSON diff's base document is indexed by)
             if (docs != null) java.util.Arrays.fill(docs.asInstanceOf[Array[AnyRef]], null)
             val before = sink.begin(CdcSchema.Op.UpdateBefore, currentGtid,
-              tmMicros, currentSourceId, currentRowsQuery, rowWidth)
+              tmMicros, currentSourceId, currentRowsQuery, rowWidth,
+              imagePos(ev, c, sink))
             readImage(c, mapped, present1, ev.pos,
               if (before) sink else null, docs, partialAfter = false)
             val after = sink.begin(CdcSchema.Op.UpdateAfter, currentGtid,
-              tmMicros, currentSourceId, currentRowsQuery, rowWidth)
+              tmMicros, currentSourceId, currentRowsQuery, rowWidth,
+              imagePos(ev, c, sink))
             readImage(c, mapped, present2, ev.pos,
               if (after) sink else null, docs, partialAfter = partialJson)
           } else {
             val keep = sink.begin(op, currentGtid, tmMicros, currentSourceId,
-              currentRowsQuery, rowWidth)
+              currentRowsQuery, rowWidth, imagePos(ev, c, sink))
             readImage(c, mapped, present1, ev.pos,
               if (keep) sink else null, null, partialAfter = false)
           }
         }
       } // other table, or rows before any TABLE_MAP: skip
     }
+
+    /** The byte offset in the file of the image starting at `c.p`: the
+      * payload follows the event's 19-byte header. Inside a compressed
+      * container the images take the container's offsets in order, so
+      * they stay between the rows before and after it; a container with
+      * more images than bytes cannot be ordered that way, which fails
+      * loud when the scan reads `__pos`. */
+    private def imagePos(ev: CdcCodec.RawEvent, c: Cur, sink: RowSink): Long =
+      if (containerRank < 0) ev.pos + HeaderLen + c.p
+      else {
+        val p = ev.pos + containerRank
+        containerRank += 1
+        if (p >= ev.endPos && sink.wantsPos) throw new IOException(
+          s"compressed event at log offset ${ev.pos} holds more row images " +
+            s"than its ${ev.endPos - ev.pos} bytes: __pos cannot order them")
+        p
+      }
 
     /** One row image: null bitmap over PRESENT columns (bit j = j-th
       * present column, LSB-first), then values for present non-null

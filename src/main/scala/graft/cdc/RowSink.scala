@@ -20,8 +20,10 @@ object EnvelopePred {
   * row the scan returns to Spark. [[CdcRowDecoder.decode(ev)]] reads the
   * same rows back as [[CdcCodec.CdcRow]]s ([[cdcRows]]).
   *
-  * A row is `begin`, setters, `end`. `begin` carries the envelope and
-  * the row's source width; when it returns false the row is dropped and
+  * A row is `begin`, setters, `end`. `begin` carries the envelope, the
+  * row's source width and the byte offset of its image in the log file
+  * (written as `__pos` under the file's ordinal, and only when the scan
+  * reads that column); when it returns false the row is dropped and
   * the decoder byte-skips its image, so `admit`, the pushed OFFSET
   * residual (`skipRows`) and the pushed LIMIT (`limit` admitted rows)
   * all decide before any value is decoded. Column indices are source
@@ -39,7 +41,8 @@ object EnvelopePred {
   * speed. */
 final class RowSink private (private var outOrd: Array[Int],
     private var envelope: Array[Int], private var numFields: Int,
-    admit: EnvelopePred, skipRows: Long, limit: Long, private var capacity: Int) {
+    admit: EnvelopePred, skipRows: Long, limit: Long, private var capacity: Int,
+    fileBase: Long) {
   import RowSink._
 
   private val arena = new UnsafeRowWriter(0, 1 << 12)
@@ -76,8 +79,12 @@ final class RowSink private (private var outOrd: Array[Int],
   def pointTo(row: UnsafeRow, i: Int): Unit =
     row.pointTo(arena.getBuffer, rowStart(i).toLong, rowSize(i))
 
+  /** Does the scan read `__pos`? A decoder runs its own checks on a
+    * position only when it is read. */
+  def wantsPos: Boolean = envelope(Pos) >= 0
+
   def begin(op: Int, gtid: Long, tmMicros: Long, sourceId: UTF8String,
-      query: UTF8String, width: Int): Boolean = {
+      query: UTF8String, width: Int, pos: Long): Boolean = {
     if (!admit(op, gtid, tmMicros, sourceId)) return false
     if (skipped < skipRows) { skipped += 1; return false }
     if (admitted >= limit) return false
@@ -101,6 +108,14 @@ final class RowSink private (private var outOrd: Array[Int],
     if (envelope(Query) >= 0) {
       if (query == null) writer.setNullAt(envelope(Query))
       else writer.write(envelope(Query), query)
+    }
+    if (envelope(Pos) >= 0) {
+      // v4 headers carry 32-bit positions: a MySQL/MariaDB file cannot
+      // pass this; a gcdc file can, and must not wrap into the ordinal
+      if ((pos >>> 32) != 0) throw new java.io.IOException(
+        s"row image at byte offset $pos: __pos packs the offset into 32 " +
+          "bits, so a log file read with __pos must stay under 4 GiB")
+      writer.write(envelope(Pos), fileBase | pos)
     }
     true
   }
@@ -215,6 +230,7 @@ final class RowSink private (private var outOrd: Array[Int],
 object RowSink {
   /** Envelope column slots of [[unsafeRows]]' `envelope` array. */
   val Op = 0; val Gtid = 1; val Tm = 2; val SourceId = 3; val Query = 4
+  val Pos = 5
 
   // which setter wrote an ordinal
   private final val KBoolean = 0
@@ -230,16 +246,18 @@ object RowSink {
 
   /** The scan's sink: UnsafeRows of `numFields` fields, source column
     * `i` at ordinal `outOrd(i)` (-1: not read), envelope column `e` at
-    * `envelope(e)` (-1: not read). */
+    * `envelope(e)` (-1: not read), rows of the file at `fileOrdinal` in
+    * the index. */
   def unsafeRows(outOrd: Array[Int], envelope: Array[Int], numFields: Int,
-      admit: EnvelopePred, skipRows: Long, limit: Long): RowSink =
+      admit: EnvelopePred, skipRows: Long, limit: Long,
+      fileOrdinal: Int): RowSink =
     new RowSink(outOrd, envelope, numFields, admit, skipRows, limit,
-      capacity = Int.MaxValue)
+      capacity = Int.MaxValue, fileBase = fileOrdinal.toLong << 32)
 
   /** The CdcRow adapter's sink: every row admitted, source column `i`
     * at ordinal `i`, the layout widened to the widest row seen (`width`
     * to start with). */
   def forCdcRows(width: Int): RowSink =
-    new RowSink(Array.range(0, width), Array.fill(5)(-1), width,
-      EnvelopePred.All, 0L, Long.MaxValue, capacity = width)
+    new RowSink(Array.range(0, width), Array.fill(6)(-1), width,
+      EnvelopePred.All, 0L, Long.MaxValue, capacity = width, fileBase = 0L)
 }

@@ -163,28 +163,37 @@ object Cdc {
     }
   )
 
-  /** CDC→table compaction: latest image per primary key ordered by
-    * (__gtid, __op), dropping before-images and deletes.
-    *
-    * Implemented as max_by over a (gtid, op) ordering struct — a plain
-    * hash aggregation with map-side partials, so each map task reduces
-    * its events to one candidate per key BEFORE the shuffle and no sort
-    * ever happens. Strictly better than the window-function formulation
-    * (sort + WindowGroupLimit) at any scale; both yield identical rows
-    * (see latestImageWindow + the equivalence spec). */
   /** Every envelope column by name — so compaction stays correct when
     * the envelope grows (it did: __source_id). */
   private val envelopeNames: Set[String] = CdcSchema.envelope.map(_.name).toSet
 
+  /** CDC→table compaction: the latest image per primary key in log
+    * order, dropping before-images and keys whose latest image is a
+    * delete. One window: each key's rows ranked by the scan's hidden
+    * `__pos` (file ordinal, byte offset), rank 1 kept unless a delete.
+    * Log order decides inside a transaction too (an update then a
+    * delete of one key in one GTID leaves it deleted). Spark plans one
+    * shuffle with a sort on each side of it (a partial
+    * `WindowGroupLimit` keeps one row per key per task before it) and
+    * no `SortAggregate`; only the columns the consumer reads reach the
+    * scan, and the `__op` filter drops before-images before they are
+    * decoded. DESIGN.md "Compaction order" has the measured
+    * alternatives.
+    *
+    * `cdc` must be a `binlogcdc` read, filtered or not: anything else
+    * has no `__pos` and fails loud. */
   def latestImage(cdc: DataFrame, pk: Seq[String]): DataFrame = {
-    val dataCols = cdc.columns.filterNot(envelopeNames)
-    val image = struct((dataCols.toIndexedSeq.map(col) :+ col(CdcSchema.OpCol).as("__last_op")): _*)
-    val order = struct(col(CdcSchema.GtidCol), col(CdcSchema.OpCol))
-    val winner = cdc.filter(col("__op") =!= CdcSchema.Op.UpdateBefore)
-      .groupBy(pk.map(col): _*)
-      .agg(max_by(image, order).as("__img"))
-    winner.filter(col("__img.__last_op") =!= CdcSchema.Op.Delete)
-      .select(dataCols.toIndexedSeq.map(c => col(s"__img.$c").as(c)): _*)
+    val pos =
+      try cdc.metadataColumn(CdcSchema.PosCol)
+      catch { case e: org.apache.spark.sql.AnalysisException =>
+        throw new IllegalArgumentException("latestImage needs a binlogcdc " +
+          s"read: its input has no ${CdcSchema.PosCol} log position", e)
+      }
+    val last = Window.partitionBy(pk.map(col): _*).orderBy(pos.desc)
+    cdc.filter(col(CdcSchema.OpCol) =!= CdcSchema.Op.UpdateBefore)
+      .withColumn("__rn", row_number().over(last))
+      .filter(col("__rn") === 1 && col(CdcSchema.OpCol) =!= CdcSchema.Op.Delete)
+      .select(cdc.columns.filterNot(envelopeNames).toIndexedSeq.map(col): _*)
   }
 
   /** Typed view of the orders CDC stream (SURVEY §1.1: Dataset[CdcRecord]
@@ -198,16 +207,5 @@ object Cdc {
       .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
         col(CdcSchema.OpCol), col(CdcSchema.GtidCol))
       .as[OrderChange]
-  }
-
-  /** Window-function formulation of the same compaction (kept for the
-    * equivalence spec and as the shape that generalizes to top-N). */
-  def latestImageWindow(cdc: DataFrame, pk: Seq[String]): DataFrame = {
-    val w = Window.partitionBy(pk.map(col): _*)
-      .orderBy(col("__gtid").desc, col("__op").desc)
-    cdc.filter(col("__op") =!= CdcSchema.Op.UpdateBefore)
-      .withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col("__op") =!= CdcSchema.Op.Delete)
-      .drop("__rn" +: envelopeNames.toSeq: _*)
   }
 }

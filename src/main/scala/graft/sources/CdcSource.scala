@@ -9,13 +9,13 @@ import graft.cdc.{BinlogFormatAdapter, BinlogFormats, CdcCodec, CdcSchema, Envel
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeRow}
 import org.apache.spark.sql.catalyst.util.DateTimeUtils
-import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, Transform}
 import org.apache.spark.sql.connector.expressions.aggregate.{Aggregation, CountStar, Max, Min}
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, SupportsAdmissionControl}
 import org.apache.spark.sql.sources._
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{DataType, LongType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -99,12 +99,13 @@ object CdcTableProvider {
 }
 
 class CdcTable(tableSchema: StructType, properties: util.Map[String, String])
-    extends Table with SupportsRead {
+    extends Table with SupportsRead with SupportsMetadataColumns {
   override def name(): String = {
     val o = new CaseInsensitiveStringMap(properties)
     s"binlogcdc:${o.get("database")}.${o.get("table")}"
   }
   override def schema(): StructType = tableSchema
+  override def metadataColumns(): Array[MetadataColumn] = Array(CdcTable.Pos)
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
   override def newScanBuilder(runtime: CaseInsensitiveStringMap): ScanBuilder = {
@@ -157,6 +158,17 @@ class CdcTable(tableSchema: StructType, properties: util.Map[String, String])
       Option(options.get("startingTimestamp")).map(v =>
         GreaterThanOrEqual(CdcSchema.TmCol, v.toLong): Filter)).flatten
     new CdcScanBuilder(idx, db, tbl, tableSchema, maxBytes, drift, format, bounds)
+  }
+}
+
+object CdcTable {
+  /** `__pos`: see [[CdcSchema.PosCol]]. */
+  object Pos extends MetadataColumn {
+    override def name(): String = CdcSchema.PosCol
+    override def dataType(): DataType = LongType
+    override def isNullable: Boolean = false
+    override def comment(): String =
+      "log position: file ordinal << 32 | byte offset of the row image"
   }
 }
 
@@ -401,22 +413,23 @@ class CdcScan private[sources] (log: CdcLogSnapshot, db: String, table: String,
     * second call — Spark re-plans after a runtime filter — reads no
     * metadata again. */
   override def planInputPartitions(): Array[InputPartition] = {
-    val files = log.files
-    // (file, rows of the skipped prefix it still discards)
-    val kept: Seq[(String, Long)] = offset match {
+    val files = log.files.zipWithIndex.map { case ((f, meta), i) => (f, i, meta) }
+    // (file, its ordinal in the index: the high half of __pos, rows of
+    // the skipped prefix it still discards)
+    val kept: Seq[(String, Int, Long)] = offset match {
       case Some((o, stats)) =>
         // pushed OFFSET: whole files inside the skipped prefix drop out
         // by row count alone; the boundary file carries the residual
         // skip. CdcScanBuilder pushed it only with no filters, on the
         // snapshot's per-file stats (aligned with `files`).
         var remaining = o
-        files.zip(stats).flatMap { case ((f, _), st) =>
+        files.zip(stats).flatMap { case ((f, i, _), st) =>
           val rows = st.fold(0L)(_.rows)
           if (remaining >= rows) { remaining -= rows; None }
           else {
             val skip = remaining
             remaining = 0L
-            Some(f -> skip)
+            Some((f, i, skip))
           }
         }
       case None =>
@@ -427,13 +440,13 @@ class CdcScan private[sources] (log: CdcLogSnapshot, db: String, table: String,
         // zero rows for it (skip outright, filters or not), and the
         // table's own gtid/time bounds are tighter than the file-global
         // ones in a multi-table log
-        files.collect { case (f, meta)
-            if EnvelopePredicate.keepsFile(db, table, allFilters, meta) => f -> 0L }
+        files.collect { case (f, i, meta)
+            if EnvelopePredicate.keepsFile(db, table, allFilters, meta) => (f, i, 0L) }
     }
     prunedFiles = files.length - kept.length
     val headerLen = BinlogFormats.forName(format).headerLen
-    kept.map { case (f, skip) =>
-      CdcInputPartition(f, headerLen, Long.MaxValue, skip): InputPartition
+    kept.map { case (f, i, skip) =>
+      CdcInputPartition(f, i, headerLen, Long.MaxValue, skip): InputPartition
     }.toArray
   }
 
@@ -466,9 +479,10 @@ class CdcScan private[sources] (log: CdcLogSnapshot, db: String, table: String,
 /** Byte range [startPos, endPos) of one log file at event boundaries.
   * Control events (TABLE_MAP/GTID) before startPos are replayed for state
   * but emit no rows — so a range never splits an update pair and never
-  * misses schema/txn state (SURVEY.md §7.3.1-2). */
-final case class CdcInputPartition(path: String, startPos: Long, endPos: Long,
-    skipRows: Long = 0L)
+  * misses schema/txn state (SURVEY.md §7.3.1-2). `fileOrdinal` is the
+  * file's place in the index, the high half of `__pos`. */
+final case class CdcInputPartition(path: String, fileOrdinal: Int,
+    startPos: Long, endPos: Long, skipRows: Long = 0L)
     extends InputPartition
 
 final case class CdcReaderFactory(db: String, table: String,
@@ -493,7 +507,8 @@ class CdcPartitionReader(part: CdcInputPartition, db: String, table: String,
   // reserved name — so the name-keyed layout below is unambiguous
   private val sourceWidth = CdcSchema.sourceWidth(full)
   required.fieldNames.foreach(n =>
-    require(full.fieldNames.contains(n), s"unexpected column $n"))
+    require(full.fieldNames.contains(n) || n == CdcSchema.PosCol,
+      s"unexpected column $n"))
   // source column -> its ordinal in the output row (-1: not read)
   private val outOrd: Array[Int] =
     Array.tabulate(sourceWidth)(i => required.fieldNames.indexOf(full(i).name))
@@ -516,9 +531,10 @@ class CdcPartitionReader(part: CdcInputPartition, db: String, table: String,
   // decoder reads their images.
   private val rows = RowSink.unsafeRows(outOrd,
     Array(CdcSchema.OpCol, CdcSchema.GtidCol, CdcSchema.TmCol,
-      CdcSchema.SourceIdCol, CdcSchema.QueryCol).map(required.fieldNames.indexOf(_)),
+      CdcSchema.SourceIdCol, CdcSchema.QueryCol, CdcSchema.PosCol)
+      .map(required.fieldNames.indexOf(_)),
     required.length, EnvelopePredicate.compile(filters), part.skipRows,
-    limit.fold(Long.MaxValue)(_.toLong))
+    limit.fold(Long.MaxValue)(_.toLong), part.fileOrdinal)
   private var read = 0
   private val current = new UnsafeRow(required.length)
 
@@ -932,7 +948,7 @@ class CdcMicroBatchStream(indexFile: String, db: String, table: String,
     while (i <= e.fileIdx && i < fs.length) {
       val startPos = if (i == s.fileIdx) s.pos else adapter.headerLen
       val endPos = if (i == e.fileIdx) e.pos else graft.cdc.LogFs.lenOrZero(fs(i))
-      if (endPos > startPos) parts += CdcInputPartition(fs(i), startPos, endPos)
+      if (endPos > startPos) parts += CdcInputPartition(fs(i), i, startPos, endPos)
       i += 1
     }
     parts.toArray

@@ -17,6 +17,10 @@ package graft.tools
   *
   *   - CartesianProduct        — unbounded pair blowup
   *   - BroadcastNestedLoopJoin — O(n*m) compare without an equi-key
+  *   - SortAggregate           — an aggregate whose buffer Spark cannot
+  *     hash (a struct, array or string `max_by`/`first`): every input
+  *     row is sorted by the group key on both sides of the shuffle,
+  *     where a hash aggregate or one window does one sort or none
   *   - Exchange SinglePartition over NON-reduced input — a one-task
   *     stage that serializes the whole input through one core (a
   *     global window / repartition(1) shape). The partials-merge form
@@ -89,12 +93,17 @@ object PlanLint {
         ("llm23_sequence_pack", sp) -> (cumsum, 1),
         ("llm43_multimodal_pairs", sp) -> (cumsum, 1),
         ("llm55_token_budget", sp) -> (cumsum, 1))
-    }
+    } ++ Map(
+      ("llm18_knn_lsh_multitable", "SortAggregate") ->
+        ("dropDuplicates over LSH candidate pairs keeps each pair's array " +
+          "embeddings through first(), whose buffer is not hashable; partial " +
+          "and final sides of the one dedup over the LSH-pruned candidates", 2))
   }
 
   private val Patterns = Seq(
     "CartesianProduct",
-    "BroadcastNestedLoopJoin")
+    "BroadcastNestedLoopJoin",
+    "SortAggregate")
 
   /** Count of non-overlapping occurrences of `pat` in `plan`. */
   private[graft] def countOccurrences(plan: String, pat: String): Int = {

@@ -6,13 +6,12 @@ import graft.cdc.{CdcCodec, CdcSchema}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
-import org.scalatest.funsuite.AnyFunSuite
 
 /** Property-based specs (SURVEY.md §5.2.2): random row batches encode to
   * a CDC log and decode back to exactly the input ⊎ envelope; random op
   * sequences compacted by latest-image equal a model-based fold.
   */
-class CdcPropertySpec extends AnyFunSuite {
+class CdcPropertySpec extends SparkTestBase {
 
   private def check(prop: Prop): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(30), prop)
@@ -196,51 +195,24 @@ class CdcPropertySpec extends AnyFunSuite {
     })
   }
 
-  /** Model: fold an op sequence per key into the surviving image. */
+  /** Model: fold an op sequence per key into the surviving image. The
+    * engine side is a `binlogcdc` read compacted by `Cdc.latestImage`,
+    * in every wire format, and a transaction may change one key several
+    * times. */
   test("property: latest-image compaction equals a model fold") {
-    // op stream over a small key space: (key, op, value); op 1=insert,
-    // 3=update-after (with 2 before), 0=delete
+    // steps over a small key space: (key, op, value); op 1=insert,
+    // 3=update-after (with 2 before), 0=delete; 1-4 steps per GTID
     val genStep = for {
       key <- Gen.chooseNum(0L, 5L)
-      op <- Gen.oneOf(1, 3, 0)
+      op <- Gen.oneOf(CdcSchema.Op.Insert, CdcSchema.Op.UpdateAfter, CdcSchema.Op.Delete)
       v <- Gen.chooseNum(-1000.0, 1000.0)
     } yield (key, op, v)
+    val genTxn = Gen.chooseNum(1, 4).flatMap(n => Gen.listOfN(n, genStep))
+    val genFormat = Gen.oneOf(ChangeLogs.formats)
 
-    check(Prop.forAll(Gen.nonEmptyListOf(genStep)) { steps =>
-      val dir = Files.createTempDirectory("cdc-prop2").toString
-      val f = s"$dir/log.0"
-      val w = new CdcCodec.LogWriter(f)
-      w.tableMap(0L, 1L, "db", "t", schema)
-      steps.zipWithIndex.foreach { case ((key, op, v), i) =>
-        val row = Array[Any](key, v, UTF8String.fromString(s"s$key"), true)
-        w.gtid(i.toLong, i.toLong)
-        op match {
-          case 1 => w.writeRows(i.toLong, 1L, schema, Seq(row))
-          case 3 => w.updateRows(i.toLong, 1L, schema, Seq((row, row)))
-          case 0 => w.deleteRows(i.toLong, 1L, schema, Seq(row))
-        }
-      }
-      w.close()
-
-      // model: last op wins per key; delete removes the key
-      val model = steps.zipWithIndex.foldLeft(Map.empty[Long, Double]) {
-        case (m, ((key, 0, _), _)) => m - key
-        case (m, ((key, _, v), _)) => m.updated(key, v)
-      }
-
-      // engine: decode + compact (same rule as queries.Cdc.latestImage)
-      val r = new CdcCodec.EventReader(f)
-      val dec = new CdcCodec.RowDecoder("db", "t")
-      val rows = try r.flatMap(dec.decode).toList finally r.close()
-      val compacted = rows
-        .filter(_.op != CdcSchema.Op.UpdateBefore)
-        .groupBy(_.values(0).asInstanceOf[Long])
-        .flatMap { case (key, rs) =>
-          val last = rs.maxBy(r => (r.gtid, r.op))
-          if (last.op == CdcSchema.Op.Delete) None
-          else Some(key -> last.values(1).asInstanceOf[Double])
-        }
-      compacted == model
+    check(Prop.forAll(Gen.nonEmptyListOf(genTxn), genFormat) { (txns, format) =>
+      val index = ChangeLogs.write(format, txns)
+      ChangeLogs.latest(ChangeLogs.read(spark, format, index)) == ChangeLogs.fold(txns)
     })
   }
 

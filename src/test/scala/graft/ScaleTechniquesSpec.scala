@@ -43,15 +43,15 @@ class ScaleTechniquesSpec extends SparkTestBase {
       s"exactly the aggregation exchange:\n$plan")
   }
 
-  test("cdc07 plan: max_by partial agg + broadcast dim, no window (audited shape)") {
+  test("cdc07 plan: one window + broadcast dim, no SortAggregate (audited shape)") {
     val plan = finalPlan(
       graft.SparkEntry.queries("cdc07_current_join_agg")(spark, "/root/testdata/sf0.001"))
-    // latest-image via map-side-combining max_by, never a global window
-    assert(plan.contains("partial_max_by"), s"expected partial max_by:\n$plan")
-    assert(!plan.contains("Window ["), s"window formulation crept back:\n$plan")
+    // latest-image via one row_number window over __pos per key
+    assert(occurrences(plan, "Window [row_number()") == 1, s"expected one window:\n$plan")
+    assert(!plan.contains("SortAggregate"), s"sort-based aggregate crept back:\n$plan")
     assert(plan.contains("BroadcastHashJoin"), s"customer must broadcast:\n$plan")
     assert(occurrences(plan, "Exchange hashpartitioning") == 2,
-      s"one shuffle for the key agg, one for the segment agg:\n$plan")
+      s"one shuffle for the key window, one for the segment agg:\n$plan")
   }
 
   test("llm09 plan: per-partition top-k bounds rows before the shuffle (audited shape)") {
@@ -85,18 +85,6 @@ class ScaleTechniquesSpec extends SparkTestBase {
       .groupBy("c_mktsegment").agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(salted == plain)
-  }
-
-  test("latest-image agg formulation equals window formulation") {
-    val sfDir = "/root/testdata/sf0.001"
-    val cdc = graft.queries.Cdc.scan(spark, sfDir)
-    val a = graft.queries.Cdc.latestImage(cdc, Seq("o_orderkey"))
-      .orderBy("o_orderkey").collect().map(_.toSeq)
-    val cols = graft.queries.Cdc.latestImage(cdc, Seq("o_orderkey")).columns
-    val b = graft.queries.Cdc.latestImageWindow(cdc, Seq("o_orderkey"))
-      .select(cols.toIndexedSeq.map(col): _*)
-      .orderBy("o_orderkey").collect().map(_.toSeq)
-    assert(a.toSeq == b.toSeq)
   }
 
   test("seeded sample lands near the requested fraction") {
