@@ -42,8 +42,6 @@ object CdcCodec {
     val Rotate = 6: Byte
   }
 
-  final case class TableMap(tableId: Long, db: String, table: String, schema: StructType)
-
   /** One decoded change-row in Catalyst-internal value representation
     * (UTF8String / micros-long / Decimal / …), envelope included.
     * `sourceId` is the originating server's identity from the GTID event
@@ -482,17 +480,26 @@ object CdcCodec {
       needed: Int => Boolean = _ => true,
       expectedSchema: Option[StructType] = None,
       driftEpochs: Boolean = false) extends CdcRowDecoder {
-    private val tableMaps = scala.collection.mutable.Map.empty[Long, TableMap]
-    // active epoch plan per table id (absent = identity/additive) —
-    // construction shared with the MySQL decoder ([[buildEpochPlan]]),
-    // one drift policy
-    private val epochs = scala.collection.mutable.Map.empty[Long, EpochPlan]
-    // per-table-id pre-resolved value type codes: the per-CELL work in
-    // readRow becomes an Int tableswitch instead of a DataType pattern
-    // match (reference-equality chain per cell — measured 0.95 Mrows/s
-    // vs the mysql decoder's 1.67 on the same-density smoke; the int
-    // dispatch is the same fix that decoder shipped with)
-    private val typeCodes = scala.collection.mutable.Map.empty[Long, Array[Int]]
+    private val expectedWidth: Int = expectedSchema.map(_.length).getOrElse(-1)
+
+    /** A table id's map in force and, for the target table, its decode
+      * plan, worked out once per TABLE_MAP as the MySQL decoder does:
+      * each column's value type code (the per-cell dispatch is an Int
+      * tableswitch, not a DataType match), which declared columns the
+      * query reads (`need`), the row position each lands in (`target`)
+      * and the row width. Under an epoch plan (shared with the MySQL
+      * decoder, [[buildEpochPlan]]: one drift policy) the wire stays in
+      * DECLARED order and each value lands at its expected position. */
+    private final class MappedTable(val db: String, val table: String,
+        val schema: StructType, plan: EpochPlan, isTarget: Boolean) {
+      val codes: Array[Int] = schema.fields.map(f => tcode(f.dataType))
+      private val n = if (isTarget) codes.length else 0
+      val need: Array[Boolean] =
+        if (plan != null) plan.declaredNeeded else Array.tabulate(n)(needed)
+      val target: Array[Int] = if (plan != null) plan.target else Array.range(0, n)
+      val rowWidth: Int = if (expectedWidth >= 0) expectedWidth else codes.length
+    }
+    private val tableMaps = scala.collection.mutable.Map.empty[Long, MappedTable]
     private var currentGtid: Long = 0L
     private var currentSourceId: UTF8String =
       UTF8String.fromString(CdcSchema.AnonymousSourceId)
@@ -526,30 +533,28 @@ object CdcCodec {
           // Any other disagreement — rename, type change, drop, insert
           // in the middle — would silently corrupt decode (the
           // reference's behavior): fail loud with position context.
-          if (db == targetDb && table == targetTable) {
-            expectedSchema.foreach { exp =>
-              // names + types define decode compatibility (nullability
-              // and metadata don't affect the byte layout)
-              val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
-              val expP = exp.fields.map(f => (f.name, f.dataType)).toSeq
-              val additive = got.length < expP.length &&
-                expP.take(got.length) == got &&
-                exp.fields.drop(got.length).forall(_.nullable)
-              if (got == expP || additive) epochs.remove(tableId)
-              else if (driftEpochs)
-                epochs(tableId) = buildEpochPlan(exp,
-                  schema.fields.map(_.name), schema.fields.map(_.dataType),
-                  needed)
-              else
-                throw new IllegalStateException(
-                  s"schema drift for $db.$table at log offset ${ev.pos}: " +
-                    s"stream declares ${schema.simpleString}, query expects ${exp.simpleString}; " +
-                    "restart the query to pick up the new schema " +
-                    "(or read with option schemaDrift=epochs)")
-            }
+          val isTarget = db == targetDb && table == targetTable
+          val plan = expectedSchema.filter(_ => isTarget).fold(null: EpochPlan) { exp =>
+            // names + types define decode compatibility (nullability
+            // and metadata don't affect the byte layout)
+            val got = schema.fields.map(f => (f.name, f.dataType)).toSeq
+            val expP = exp.fields.map(f => (f.name, f.dataType)).toSeq
+            val additive = got.length < expP.length &&
+              expP.take(got.length) == got &&
+              exp.fields.drop(got.length).forall(_.nullable)
+            if (got == expP || additive) null
+            else if (driftEpochs)
+              buildEpochPlan(exp,
+                schema.fields.map(_.name), schema.fields.map(_.dataType),
+                needed)
+            else
+              throw new IllegalStateException(
+                s"schema drift for $db.$table at log offset ${ev.pos}: " +
+                  s"stream declares ${schema.simpleString}, query expects ${exp.simpleString}; " +
+                  "restart the query to pick up the new schema " +
+                  "(or read with option schemaDrift=epochs)")
           }
-          tableMaps(tableId) = TableMap(tableId, db, table, schema)
-          typeCodes(tableId) = schema.fields.map(f => tcode(f.dataType))
+          tableMaps(tableId) = new MappedTable(db, table, schema, plan, isTarget)
         case EventType.Gtid =>
           currentGtid = d.i64()
           seenGtid = true
@@ -580,23 +585,21 @@ object CdcCodec {
             s"rows event for $targetDb.$targetTable at log offset ${ev.pos} " +
               "before any GTID event: a spliced or mid-transaction-truncated " +
               "log cannot yield a truthful __gtid")
-          val codes = typeCodes(tableId)
           val tmMicros = DateTimeUtils.millisToMicros(ev.tsMs)
-          val plan = epochs.getOrElse(tableId, null)
-          val width = if (expectedWidth >= 0) expectedWidth else codes.length
+          val width = tm.rowWidth
           val n = d.len(d.i32())
           // each image's byte offset in the file: __pos
           val payloadPos = ev.pos + EventHeaderLen
           var r = 0
           while (r < n) {
             if (op == CdcSchema.Op.UpdateBefore) {
-              readRow(d, tm.schema, codes, plan, sink,
+              readRow(d, tm, sink,
                 sink.begin(op, currentGtid, tmMicros, currentSourceId, null,
                   width, payloadPos + d.p))
-              readRow(d, tm.schema, codes, plan, sink,
+              readRow(d, tm, sink,
                 sink.begin(CdcSchema.Op.UpdateAfter, currentGtid, tmMicros,
                   currentSourceId, null, width, payloadPos + d.p))
-            } else readRow(d, tm.schema, codes, plan, sink,
+            } else readRow(d, tm, sink,
               sink.begin(op, currentGtid, tmMicros, currentSourceId, null,
                 width, payloadPos + d.p))
             r += 1
@@ -607,10 +610,11 @@ object CdcCodec {
 
     /** One row image into `sink` when `keep` (the sink's `begin` took the
       * row), byte-skipped otherwise. The row is laid out in the DECLARED
-      * (epoch) schema order; under an epoch plan the mask is over
-      * declared columns and each value lands at its expected position. */
-    private def readRow(d: BeCur, schema: StructType, codes: Array[Int],
-        plan: EpochPlan, sink: RowSink, keep: Boolean): Unit = {
+      * schema order; `tm`'s plan says which values are read and where
+      * each lands. */
+    private def readRow(d: BeCur, tm: MappedTable, sink: RowSink,
+        keep: Boolean): Unit = {
+      val codes = tm.codes; val need = tm.need; val target = tm.target
       val n = codes.length
       val nullStart = d.p
       d.skip((n + 7) / 8)
@@ -618,9 +622,7 @@ object CdcCodec {
       while (i < n) {
         val isNull = (d.a(nullStart + i / 8) & (1 << (i % 8))) != 0
         if (!isNull) {
-          val want = keep && (if (plan != null) plan.declaredNeeded(i) else needed(i))
-          if (want) readValue(d, codes(i), schema, i,
-            if (plan != null) plan.target(i) else i, sink)
+          if (keep && need(i)) readValue(d, codes(i), tm.schema, i, target(i), sink)
           else skipValue(d, codes(i))
         }
         i += 1
@@ -660,8 +662,6 @@ object CdcCodec {
           new java.math.BigInteger(d.bytes(n)), scale), dec.precision, dec.scale))
       case _ => throw new IllegalStateException(s"bad type code $code")
     }
-
-    private val expectedWidth: Int = expectedSchema.map(_.length).getOrElse(-1)
   }
 
   /** Last complete-event boundary in a log file. A producer (mysqld)

@@ -649,23 +649,25 @@ object Dedup {
       .select(col(id), col("canon_id"), col("score"), col("keep"))
   }
 
-  /** Persist a near-dup CLUSTER INDEX at `path`: `verdicts/` holds one
-    * row per document — cluster label, cluster size, quality score,
-    * survivor decision (`id, canon_id, cluster_size, score, keep`) —
-    * plus the candidate-generation artifacts [[appendToClusterIndex]]
-    * maintains incrementally: `params/` (threshold, shingleN),
-    * `dfreq/` (the shingle document-frequency map, FROZEN at build
-    * time — every member array before and after any append is ordered
-    * by this one map, which is all the prefix-filter guarantee needs;
-    * order quality drifts as the corpus grows, which is an efficiency
-    * concern, never a correctness one, and the rebuild trigger),
-    * `shingles/` (per-member canonical + lexicographic shingle
-    * arrays), and `prefix/` (the prefix-filter inverted index).
+  /** Persist a near-dup CLUSTER INDEX at `path`, committed through
+    * [[IndexLog]]: table `verdicts` holds one row per document — cluster
+    * label, cluster size, quality score, survivor decision (`id,
+    * canon_id, cluster_size, score, keep`) — plus the
+    * candidate-generation artifacts [[appendToClusterIndex]] maintains
+    * incrementally: `dfreq` (the shingle document-frequency map, FROZEN
+    * at build time — every member array before and after any append is
+    * ordered by this one map, which is all the prefix-filter guarantee
+    * needs; order quality drifts as the corpus grows, which is an
+    * efficiency concern, never a correctness one, and the rebuild
+    * trigger), `shingles` (per-member canonical + lexicographic shingle
+    * arrays), and `prefix` (the prefix-filter inverted index). The
+    * threshold, shingle size and bucket count ride in the commit's
+    * params. A build over an existing index replaces it in one commit.
     *
     * The build-once/serve-many form of the CC family: the transitive
     * closure (the expensive part — candidate join + fixed point) runs
     * ONCE at build time, every curation query after it is a plain
-    * parquet scan of `verdicts/`, and a new crawl batch folds in via
+    * scan of `verdicts`, and a new crawl batch folds in via
     * [[appendToClusterIndex]] without re-pairing the corpus — exactly
     * how a production lake consumes dedup at 100 TB. The closure and
     * scoring are [[bestOfCluster]]'s (one CC pass). */
@@ -673,53 +675,47 @@ object Dedup {
       id: String = "doc_id", threshold: Double = 0.8,
       shingleN: Int = 3, nBuckets: Int = 16): Unit = {
     val spark = df.sparkSession
-    import spark.implicits._
     require(nBuckets > 0,
       s"buildClusterIndex: nBuckets must be positive, got $nBuckets")
-    // a rebuild clears every append-era artifact FIRST: stale per-append
-    // shingle/prefix partitions, the append journal, and crashed-swap
-    // leftovers from a previous index at this path would otherwise
-    // poison the fresh one. This is also the documented compaction
-    // point for artifact orphans left by abandoned (never-retried)
-    // appends — rebuild reclaims them wholesale.
-    val fs = IndexFs.fs(spark, path)
-    Seq("shingles", "prefix", "appends", "verdicts.old", "verdicts.appending")
-      .foreach(d => IndexFs.delete(fs, s"$path/$d"))
+    val base = IndexLog.head(spark, path)
     val wc = Window.partitionBy(col("canon_id"))
-    // verdicts are PARTITIONED by vb = pmod(canon_id, nBuckets) so that
-    // appendToClusterIndex can rewrite only the buckets whose clusters
-    // an append touches (O(affected) per append, not O(corpus) — the
-    // 100 TB maintenance posture; at lake scale pass nBuckets in the
-    // thousands). repartition(vb) keeps file count at one per bucket
-    // per shuffle partition instead of buckets x partitions.
-    bestOfCluster(df, textCol, id, threshold, shingleN)
+    // verdicts are cell-partitioned by vb = pmod(canon_id, nBuckets) so
+    // that appendToClusterIndex can rewrite only the buckets whose
+    // clusters an append touches (O(affected) per append, not O(corpus)
+    // — the 100 TB maintenance posture; at lake scale pass nBuckets in
+    // the thousands). repartition(vb) keeps file count at one per
+    // bucket per shuffle partition instead of buckets x partitions.
+    val verdicts = IndexLog.write(bestOfCluster(df, textCol, id, threshold, shingleN)
       .withColumn("cluster_size", count(lit(1)).over(wc))
       .select(col(id), col("canon_id"), col("cluster_size"), col("score"),
         col("keep"))
       .withColumn("vb", verdictBucket(col("canon_id"), nBuckets))
-      .repartition(col("vb"))
-      .write.mode("overwrite").partitionBy("vb").parquet(s"$path/verdicts")
-    Seq((threshold, shingleN, nBuckets))
-      .toDF("threshold", "shingleN", "nBuckets")
-      .repartition(1).write.mode("overwrite").parquet(s"$path/params")
-    // two consumers below (dfreq + member artifacts) — checkpoint or
-    // each re-runs the corpus tokenize+shingle scan (the
+      .repartition(col("vb")), path, "verdicts", Some("vb"))
+    // two consumers each (dfreq + member arrays; the dfreq write + the
+    // arrays' join) — checkpoint or each re-runs its input (the
     // jaccardSelfJoinExact discipline)
     val distinctSh = memberShingles(df, textCol, id, shingleN)
       .localCheckpoint(true)
-    distinctSh.select(col("__mid"), explode(col("sh")).as("shingle"))
+    val dfreq = distinctSh.select(col("__mid"), explode(col("sh")).as("shingle"))
       .groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-      .write.mode("overwrite").parquet(s"$path/dfreq")
-    writeMemberArtifacts(spark, path, BuildAppId, distinctSh, threshold)
+      .localCheckpoint(true)
+    IndexLog.commit(spark, path, "clusterbuild", base,
+      writeMemberArtifacts(path, base.fold(1L)(_.version + 1), distinctSh,
+        dfreq, threshold)._1 ++
+        Map("verdicts" -> verdicts, "dfreq" -> IndexLog.write(dfreq, path, "dfreq")),
+      params = Map("threshold" -> threshold.toString,
+        "shingleN" -> shingleN.toString, "nBuckets" -> nBuckets.toString))
   }
 
-  /** The build's artifact-partition id (see [[writeMemberArtifacts]]). */
-  private val BuildAppId = "build"
+  /** (threshold, shingleN, nBuckets) of a cluster index's commit. */
+  private def clusterParams(snap: IndexLog.Snapshot): (Double, Int, Int) =
+    (snap.params("threshold").toDouble, snap.params("shingleN").toInt,
+      snap.params("nBuckets").toInt)
 
-  /** verdicts/ partition of a cluster label — ONE formula with
-    * [[bucketOf]] (Spark side / driver side): the affected-bucket set
-    * and the written partition column must agree or the per-bucket swap
-    * replaces the wrong directories. */
+  /** verdicts cell of a cluster label — ONE formula with [[bucketOf]]
+    * (Spark side / driver side): the affected-bucket set and the
+    * written partition column must agree or a commit replaces the
+    * wrong buckets' files. */
   private def verdictBucket(label: Column, nBuckets: Int): Column =
     pmod(label, lit(nBuckets.toLong)).cast("int")
 
@@ -735,43 +731,36 @@ object Dedup {
       .select(col("__mid"), array_distinct(
         TextAnalysis.shinglesFromTokens(col("__tk"), shingleN)).as("sh"))
 
-  /** Write a member batch's `shingles/` + `prefix/` artifacts, arrays
-    * ordered by the index's FROZEN df map (shingles the map has never
-    * seen order first at df 0 — consistency, not the particular order,
-    * is what prefix-filter completeness needs).
-    *
-    * Each batch lands in its own `__app=<appendId>` PARTITION directory
-    * (the build under [[BuildAppId]]), written with overwrite: a
-    * RETRIED append replaces its own partition instead of appending
-    * duplicate rows forever, so crash-retry leaves the artifact dirs
-    * clean. An abandoned never-retried append leaves one orphan
-    * partition — harmless to correctness (orphans have no verdict row,
-    * no commit marker — [[verifyAgainstShingles]] excludes unmarked
-    * partitions — and a dead candidate can never become an edge through
-    * the inner join against live verdicts) and reclaimed wholesale by
-    * the next [[buildClusterIndex]] rebuild or [[gcClusterIndex]]. */
-  private def writeMemberArtifacts(spark: SparkSession, path: String,
-      appId: String, distinctSh: DataFrame, threshold: Double): Unit = {
-    val canon = canonicalMemberArrays(spark, path, distinctSh)
-      .localCheckpoint(true) // two writers below
-    canon.select(col("__mid"), col("s"), col("ss"))
-      .write.mode("overwrite").parquet(s"$path/shingles/__app=$appId")
-    canon.select(col("__mid"),
-        explode(expr(prefixSliceExpr(threshold))).as("shingle"))
-      .write.mode("overwrite").parquet(s"$path/prefix/__app=$appId")
-  }
-
-  /** (__mid, s = df-canonical array, ss = lexicographic array). */
-  private def canonicalMemberArrays(spark: SparkSession, path: String,
-      distinctSh: DataFrame): DataFrame = {
-    val dfreq = spark.read.parquet(s"$path/dfreq")
-    distinctSh.select(col("__mid"), explode(col("sh")).as("shingle"))
+  /** Write a member batch's `shingles` + `prefix` files, arrays ordered
+    * by the index's FROZEN df map (shingles the map has never seen
+    * order first at df 0 — consistency, not the particular order, is
+    * what prefix-filter completeness needs). Every row lands in cell
+    * `__app` = `version`, the commit version of the op that writes it,
+    * so an id's freshest arrays are those in its highest cell
+    * ([[freshest]]). Returns the written tables and the batch's
+    * `(__mid, s, ss, __app)` rows (checkpointed), which the op itself
+    * reads before its commit lists the files. */
+  private def writeMemberArtifacts(path: String, version: Long,
+      distinctSh: DataFrame, dfreq: DataFrame,
+      threshold: Double): (Map[String, IndexLog.Table], DataFrame) = {
+    val canon = distinctSh.select(col("__mid"), explode(col("sh")).as("shingle"))
       .join(dfreq, Seq("shingle"), "left")
       .na.fill(0L, Seq("df"))
       .groupBy(col("__mid"))
       .agg(expr(CanonicalSortExpr).as("s"),
         expr("array_sort(collect_list(shingle))").as("ss"))
+      .withColumn("__app", lit(version))
+      .localCheckpoint(true) // two writers below, and the op's own reads
+    (Map("shingles" -> IndexLog.write(canon, path, "shingles", Some("__app")),
+      "prefix" -> IndexLog.write(prefixRows(canon, threshold), path, "prefix",
+        Some("__app"))),
+      canon)
   }
+
+  /** `(__mid, shingle, __app)` prefix-filter rows of member arrays. */
+  private def prefixRows(canon: DataFrame, threshold: Double): DataFrame =
+    canon.select(col("__mid"),
+      explode(expr(prefixSliceExpr(threshold))).as("shingle"), col("__app"))
 
   /** The (df asc, shingle asc) canonical ordering and the
     * prefix-filter slice — ONE definition each: the index's candidate
@@ -785,12 +774,12 @@ object Dedup {
 
   /** Fold a NEW document batch into a persisted cluster index — the
     * incremental maintenance op next to build, with FULL-REBUILD
-    * EQUIVALENCE: the resulting `verdicts/` is row-identical to
+    * EQUIVALENCE: the resulting `verdicts` are row-identical to
     * [[buildClusterIndex]] over corpus ∪ batch (llm74 pins it against
     * DuckDB's from-scratch closure; the spec pins it against a Spark
     * full rebuild). Equivalence holds because candidates are EXACT
     * (the same zero-false-negative prefix filter as the build, batch
-    * prefixes joined against the persisted `prefix/` inverted index
+    * prefixes joined against the persisted `prefix` inverted index
     * plus a batch-internal exact self-join), labels are min-reachable
     * ids under both procedures (a batch doc BRIDGING two existing
     * clusters merges them — old rows relabel), and size/score/keep
@@ -800,32 +789,24 @@ object Dedup {
     * clusters) — the corpus is never re-paired; corpus-wide reads are
     * confined to COLUMN-PRUNED id/label scans (the identity audit and
     * the candidate semi-joins), and the verdict REWRITE touches only
-    * the `vb` bucket partitions whose clusters the append affects
-    * (relabel sources, merge targets, batch labels), swapped in with a
-    * journaled per-bucket old/live rename through the Hadoop FS API
-    * (hdfs:// roots work; see [[IndexFs]] for the S3 rename caveat).
-    * The merge union-find runs driver-side over the batch-bounded edge
-    * set (the llm44 incremental contract), bounded loud by
+    * the `vb` buckets whose clusters the append affects (relabel
+    * sources, merge targets, batch labels). The merge union-find runs
+    * driver-side over the batch-bounded edge set (the llm44
+    * incremental contract), bounded loud by
     * `spark.graft.dedup.appendEdgeCap`.
     *
-    * Crash safety, single-writer by contract: member artifacts land
-    * FIRST in an idempotent per-append partition ([[writeMemberArtifacts]]);
-    * the staged buckets are journaled (`appends/<id>.intent`) before
-    * any rename, and a commit marker (`appends/<id>.committed`,
-    * carrying the op's commit sequence) after all of them. A retried
-    * append (same batch => same deterministic append id) ROLLS a
-    * crashed swap FORWARD from the journal, rolls an unjournaled
-    * staging write back, and short-circuits when the commit marker
-    * exists AND every batch id is live — marker-plus-liveness, not the
-    * marker alone, because the marker is stale after a later delete of
-    * the same ids (the documented append -> delete -> re-append
-    * lifecycle re-executes; a retry of the committed append no-ops) —
-    * so any crash-retry interleaving converges on exactly-once
-    * semantics (spec-pinned at every failpoint). During the swap window
-    * itself a concurrent reader can observe a bucket mid-rename; serve
-    * reads are snapshot-consistent outside that window, same contract
-    * as the previous whole-table swap but narrowed to the affected
-    * buckets. */
+    * Crash safety, single-writer by contract: the batch's artifacts and
+    * the affected buckets' new verdicts land in fresh writes, and ONE
+    * [[IndexLog]] commit lists them in place of those buckets' old
+    * files (every other bucket's files carried over), recording the
+    * batch's deterministic op id (a digest of its id set). Every reader
+    * sees the index before or after the append, never a bucket set in
+    * between; a crash before the commit leaves the append unapplied,
+    * and its retry redoes it. A retry short-circuits when the op id is
+    * recorded AND every batch id is live — the op id alone is stale
+    * after a later delete of the same ids (the documented append ->
+    * delete -> re-append lifecycle re-executes; a retry of the
+    * committed append no-ops). */
   def appendToClusterIndex(spark: SparkSession, path: String,
       batch: DataFrame, textCol: String = "text",
       id: String = "doc_id"): Unit = {
@@ -835,22 +816,15 @@ object Dedup {
         org.apache.spark.sql.types.LongType,
       s"appendToClusterIndex: $id must be LongType (the driver-side " +
         s"merge union-find is long-keyed), got ${batch.schema(id).dataType}")
-    val fs = IndexFs.fs(spark, path)
-    // crash recovery FIRST: finish (or discard) whatever a previous
-    // append attempt left behind, so this attempt starts from a
-    // consistent live index
-    recoverClusterIndexAppend(fs, path)
-    val p = spark.read.parquet(s"$path/params").head()
-    val (threshold, shingleN, nBuckets) = (p.getAs[Double]("threshold"),
-      p.getAs[Int]("shingleN"), p.getAs[Int]("nBuckets"))
+    val snap = IndexLog.snapshot(spark, path)
+    val (threshold, shingleN, nBuckets) = clusterParams(snap)
     val batchSh = memberShingles(batch, textCol, id, shingleN)
       .localCheckpoint(true) // consumed by id collect + artifacts + joins
     val batchIds = batchSh.select(col("__mid")).collect().map(_.getLong(0))
     // the append id is DETERMINISTIC in the batch's id set, so a retry
-    // of the same batch addresses the same journal entry and the same
-    // artifact partition
+    // of the same batch finds it among the commit's op ids
     val appId = appendIdOf(batchIds)
-    val verdicts = spark.read.parquet(s"$path/verdicts")
+    val verdicts = snap.frame("verdicts")
     // which batch ids are currently indexed? One column-pruned verdict
     // id scan. Orientation matters for shuffle posture: the corpus-
     // sized verdict id scan STREAMS against the broadcast batch ids (a
@@ -861,16 +835,16 @@ object Dedup {
     val live = verdicts.select(col(id))
       .join(broadcast(batchIdsDf), Seq(id), "left_semi")
       .collect().map(_.getLong(0))
-    // idempotent-retry no-op requires the marker AND liveness: the
-    // marker alone is STALE after a later delete of the same ids (the
+    // idempotent-retry no-op requires the recorded op id AND liveness:
+    // the op id alone is STALE after a later delete of the same ids (the
     // documented append -> delete -> re-append lifecycle would
-    // otherwise silently no-op on the first append's marker and leave
-    // the docs unindexed). Marker + all-live = a retry of the committed
-    // append; marker + none-live = a genuinely new re-append after a
-    // delete (proceed); marker + some-live = ambiguous partial state —
-    // fall through to the loud already-indexed check below.
-    if (IndexFs.exists(fs, s"$path/appends/$appId.committed") &&
-        live.length == batchIds.length)
+    // otherwise silently no-op on the first append's op id and leave
+    // the docs unindexed). Recorded + all-live = a retry of the
+    // committed append; recorded + none-live = a genuinely new
+    // re-append after a delete (proceed); recorded + some-live =
+    // ambiguous partial state — fall through to the loud
+    // already-indexed check below.
+    if (snap.ops.contains(appId) && live.length == batchIds.length)
       return // this exact batch committed and is fully live — retry no-op
     // an id is the document's identity: appending one that is already
     // indexed — or twice within one batch — would split its verdict
@@ -882,29 +856,24 @@ object Dedup {
     require(batchDup.isEmpty,
       s"appendToClusterIndex($path): batch contains duplicate $id ${batchDup.headOption.map(_.get(0))}")
 
-    // artifacts FIRST (see crash-safety note above)
-    writeMemberArtifacts(spark, path, appId, batchSh, threshold)
-    maybeCrash("after-artifacts")
-
+    val (artifacts, batchArrays) = writeMemberArtifacts(path, snap.version + 1,
+      batchSh, snap.frame("dfreq"), threshold)
     // exact candidates: batch prefixes vs the persisted inverted index
     // (cross) and vs themselves (batch-internal). Shuffle posture: the
     // batch prefix frame is batch-bounded — BROADCAST it so the
     // corpus-sized inverted index STREAMS through the probe (un-hinted,
     // this sort-merge-joined the whole prefix index per append); the
-    // live-ids semi-join rides the same streamed pass with the batch
-    // ids broadcast. One corpus-linear SCAN of prefix/ per append is
+    // anti-join rides the same streamed pass with the batch ids
+    // broadcast. One corpus-linear SCAN of prefix per append is
     // intrinsic (the probe target); corpus-linear SHUFFLE is not.
-    val batchPrefix = spark.read.parquet(s"$path/prefix")
-      .join(broadcast(batchIdsDf.select(col(id).as("__mid"))),
-        Seq("__mid"), "left_semi")
-      .localCheckpoint(true)
-    // the anti-batch filter keeps the batch's own just-landed artifacts
-    // out of the cross probe (batch-internal pairs are candsSelf's
-    // job). Dead oids — orphan-append artifacts and deleted docs — may
-    // still surface as candidates here: they verify wastefully but can
-    // never become edges, because the crossEdges join below is an
-    // INNER join against live verdicts (gc/rebuild bounds the waste).
-    val indexPrefix = spark.read.parquet(s"$path/prefix")
+    val batchPrefix = prefixRows(batchArrays, threshold)
+    // the anti-batch filter keeps a re-appended id's stale rows out of
+    // the cross probe (batch-internal pairs are candsSelf's job).
+    // Deleted docs may still surface as candidates here: they verify
+    // wastefully but can never become edges, because the crossEdges
+    // join below is an INNER join against live verdicts (compaction
+    // bounds the waste).
+    val indexPrefix = snap.frame("prefix")
       .join(broadcast(batchIdsDf.select(col(id).as("__mid"))),
         Seq("__mid"), "left_anti")
     val candsCross = broadcast(
@@ -916,12 +885,10 @@ object Dedup {
       .filter(col("bid") < col("oid"))
       .select(col("bid"), col("oid")).distinct()
     // exact verify over lexicographic arrays (sorted-merge count); the
-    // current append's just-landed artifact partition is pre-commit, so
-    // name it explicitly as the freshest source for this batch's ids
-    val markerSeqs = commitSeqs(fs, path)
+    // batch's own arrays are not listed yet, and sit in the highest cell
+    val shingles = snap.frame("shingles").unionByName(batchArrays)
     def verified(cands: DataFrame): DataFrame =
-      verifyAgainstShingles(spark, path, cands, threshold,
-        currentApp = Some(appId), seqs = Some(markerSeqs))
+      verifyAgainstShingles(shingles, cands, threshold)
     // edges to EXISTING members map to their cluster labels. The edge
     // set is batch-bounded by the incremental contract, but a
     // pathological batch (every doc near-dup of many distinct clusters)
@@ -961,7 +928,7 @@ object Dedup {
     // `affected` (merge targets and batch labels — their buckets gain
     // rows or recompute size/keep). Rows in any other bucket are never
     // read and never rewritten — the O(affected) claim, spec-pinned by
-    // byte-identity of untouched bucket files.
+    // the untouched buckets' files carrying over unchanged.
     val affectedBuckets: Seq[Int] =
       (labelRemap.map(_._1) ++ affected.toSeq)
         .map(bucketOf(_, nBuckets)).distinct.sorted
@@ -996,18 +963,18 @@ object Dedup {
         .select(col(id), col("canon_id"), col("cluster_size"), col("score"),
           col("keep"))
         .withColumn("vb", verdictBucket(col("canon_id"), nBuckets))
-    stageSwapCommit(fs, path, appId, newVerdicts, affectedBuckets,
-      seqs = Some(markerSeqs))
+    commitVerdicts(snap, "clusterapp", appId, newVerdicts, affectedBuckets,
+      artifacts.map { case (t, added) => t -> (snap.table(t) ++ added) })
   }
 
   /** Exact-Jaccard verification of candidate `(bid, oid)` pairs against
-    * the persisted lexicographic shingle arrays (`shingles/`) — ONE
-    * formula shared by [[appendToClusterIndex]] and
-    * [[deleteFromClusterIndex]] (a sorted-merge intersection count; a
-    * drifted copy would silently break full-rebuild equivalence on one
-    * of the two maintenance paths).
+    * the lexicographic shingle arrays of `shingles` — ONE formula
+    * shared by [[appendToClusterIndex]] and [[deleteFromClusterIndex]]
+    * (a sorted-merge intersection count; a drifted copy would silently
+    * break full-rebuild equivalence on one of the two maintenance
+    * paths).
     *
-    * Shuffle posture: `shingles/` is CORPUS-sized while the candidate
+    * Shuffle posture: `shingles` is CORPUS-sized while the candidate
     * set is batch/affected-bounded by contract, so the array frame is
     * pruned FIRST with a broadcast semi-join against the candidate
     * participant ids and the array joins carry broadcast hints — the
@@ -1016,52 +983,17 @@ object Dedup {
     * ScaleSmoke's 1x-vs-10x shuffle-byte pin).
     *
     * An id can hold MORE than one artifact row: a delete leaves the
-    * deleted id's rows behind in their committed `__app` partition, so
-    * a later re-append of that id (possibly with DIFFERENT text) adds a
-    * second set — verifying against the stale arrays would silently
-    * break full-rebuild equivalence. Each participant id therefore
-    * RESOLVES to its single freshest row: committed partitions rank by
-    * the marker's commit sequence ([[commitSeqs]]), `currentApp` (the
-    * in-flight op's own pre-commit partition) ranks above everything,
-    * and orphan partitions — crashed appends that never committed — are
-    * excluded outright (a LIVE id always has a committed row: its
-    * verdict came from a committed op, and that op wrote its
-    * artifacts first). The rank join is a broadcast of the tiny
-    * (appId, seq) map over the already-pruned candidate-participant
-    * frame — no posture change. */
-  /** The ONE freshness key for duplicate artifact rows of an id:
-    * commit rank DESC, then `__app` ASC on rank ties (ties arise only
-    * on legacy pre-sequence indexes, where empty markers and the build
-    * all parse to rank 0). Expressed as a MIN-key struct so windowed
-    * `min(...)` aggregation ([[compactClusterIndexArtifacts]],
-    * [[clusterIndexArtifactReport]]) and the row-filter form
-    * ([[verifyAgainstShingles]]) resolve the SAME row — the three
-    * sites had drifted to (rank desc, app asc) vs max(rank, app) =
-    * app DESC, so compaction could keep a different row than
-    * verification resolves to on a legacy index. */
-  private def freshnessKey: Column =
-    struct((-col("__rank")).as("nr"), col("__app").as("ap"))
-
-  private def verifyAgainstShingles(spark: SparkSession, path: String,
-      cands: DataFrame, threshold: Double,
-      currentApp: Option[String] = None,
-      seqs: Option[Map[String, Long]] = None): DataFrame = {
-    import spark.implicits._
-    // callers that verify more than once pass the marker map in —
-    // commitSeqs is manifest-cached (one read + one listing) but
-    // re-deriving from an in-hand map is free
-    val rank = seqs.getOrElse(commitSeqs(IndexFs.fs(spark, path), path)) ++
-      currentApp.map(_ -> Long.MaxValue)
-    val rankDf = rank.toSeq.toDF("__app", "__rank")
+    * deleted id's rows behind, so a later re-append of that id
+    * (possibly with DIFFERENT text) adds a second set — verifying
+    * against the stale arrays would silently break full-rebuild
+    * equivalence. Each participant id therefore resolves to its
+    * [[freshest]] row, the one its latest writer committed. */
+  private def verifyAgainstShingles(shingles: DataFrame, cands: DataFrame,
+      threshold: Double): DataFrame = {
     val c = cands.localCheckpoint(true) // two id pulls + the verify join
     val partIds = c.select(col("bid").as("__mid"))
       .union(c.select(col("oid").as("__mid"))).distinct()
-    val ss = spark.read.parquet(s"$path/shingles")
-      .join(broadcast(partIds), Seq("__mid"), "left_semi")
-      .join(broadcast(rankDf), Seq("__app")) // inner: orphan apps drop
-      .withColumn("__best",
-        min(freshnessKey).over(Window.partitionBy(col("__mid"))))
-      .filter(freshnessKey === col("__best"))
+    val ss = freshest(shingles.join(broadcast(partIds), Seq("__mid"), "left_semi"))
       .select(col("__mid"), col("ss"))
     c
       .join(broadcast(ss.select(col("__mid").as("bid"), col("ss").as("sh_a"))),
@@ -1075,40 +1007,37 @@ object Dedup {
       .select(col("bid"), col("oid"))
   }
 
-  /** The crash-safe verdict-rewrite tail shared by
-    * [[appendToClusterIndex]] and [[deleteFromClusterIndex]]: stage the
-    * new affected-bucket rows, journal the intent, swap per bucket,
-    * write the commit marker, clean up — every step re-runnable by
-    * [[recoverClusterIndexAppend]]. */
-  private def stageSwapCommit(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, opId: String, newVerdicts: DataFrame,
-      affectedBuckets: Seq[Int],
-      seqs: Option[Map[String, Long]] = None): Unit = {
-    val stagingApp = s"$path/verdicts.appending/$opId"
-    newVerdicts.repartition(col("vb"))
-      .write.mode("overwrite").partitionBy("vb").parquet(stagingApp)
-    maybeCrash("after-staging")
-    // a relabel can EMPTY a bucket (all its rows moved to the merge
-    // target's bucket, or deleted outright): staged=0 in the journal
-    // means the bucket's new state is "absent", and the swap retires
-    // the live dir without a replacement
-    val bucketFlags = affectedBuckets.map(k =>
-      (k, IndexFs.exists(fs, s"$stagingApp/vb=$k")))
-    IndexFs.writeUtf8(fs, s"$path/appends/$opId.intent",
-      bucketFlags.map { case (k, s) => s"$k ${if (s) 1 else 0}" }
-        .mkString("\n"))
-    maybeCrash("after-intent")
-    swapVerdictBuckets(fs, path, opId, bucketFlags)
-    writeCommitMarker(fs, path, opId, seqs)
-    IndexFs.delete(fs, s"$path/verdicts.old/$opId")
-    IndexFs.delete(fs, stagingApp)
-    IndexFs.delete(fs, s"$path/appends/$opId.intent")
+  /** Each id's artifact rows from its highest `__app` cell — the arrays
+    * of the last committed op that wrote the id. ONE freshness rule for
+    * verification and compaction; [[clusterIndexArtifactReport]] ranks
+    * with the same key. */
+  private def freshest(artifacts: DataFrame): DataFrame =
+    artifacts
+      .withColumn("__best", max(col("__app")).over(Window.partitionBy(col("__mid"))))
+      .filter(col("__app") === col("__best")).drop("__best")
+
+  /** The verdict-rewrite tail shared by [[appendToClusterIndex]] and
+    * [[deleteFromClusterIndex]]: write the affected buckets' new rows,
+    * then commit them in place of those buckets' files — every other
+    * bucket's files carried over — together with `tables` and `opId`.
+    * A bucket the op empties writes no file: dropping its old files is
+    * its new state. */
+  private def commitVerdicts(snap: IndexLog.Snapshot, tag: String,
+      opId: String, newVerdicts: DataFrame, affectedBuckets: Seq[Int],
+      tables: Map[String, IndexLog.Table] = Map.empty): Unit = {
+    val touched = affectedBuckets.map(_.toString).toSet
+    val old = snap.table("verdicts")
+    val written = IndexLog.write(newVerdicts.repartition(col("vb")), snap.root,
+      "verdicts", Some("vb"))
+    snap.commit(tag, tables + ("verdicts" ->
+      (old.copy(files = old.files.filterNot(_.cell.exists(touched))) ++ written)),
+      newOps = Set(opId))
   }
 
   /** Remove a document batch from a persisted cluster index — the
     * retirement half of the incremental lifecycle (build / append /
     * serve / DELETE), with the same FULL-REBUILD EQUIVALENCE contract
-    * as [[appendToClusterIndex]]: the resulting `verdicts/` is
+    * as [[appendToClusterIndex]]: the resulting `verdicts` are
     * row-identical to [[buildClusterIndex]] over corpus ∖ batch (llm75
     * pins it against DuckDB's from-scratch closure; the spec pins it
     * against a Spark full rebuild). The hard semantic is the SPLIT:
@@ -1133,24 +1062,21 @@ object Dedup {
     * new (post-split) labels. The remaining-member and verified-edge
     * driver pulls are bounded LOUD (`spark.graft.dedup.deleteMemberCap`,
     * `spark.graft.dedup.appendEdgeCap`). Deleted documents' artifact
-    * rows (`shingles/`, `prefix/`) stay behind in their committed
-    * `__app` partitions — stale prefix rows only ever ADD candidates
-    * (harmless: verification decides), and [[verifyAgainstShingles]]
-    * resolves every participant id to its freshest COMMITTED artifact
-    * row by marker commit sequence, so a later re-append of a deleted
-    * id (even with different text) verifies against the re-appended
-    * arrays, never the stale ones. The next [[buildClusterIndex]]
-    * rebuild reclaims stale rows wholesale ([[gcClusterIndex]] reclaims
-    * whole abandoned-append partitions without a rebuild).
+    * rows (`shingles`, `prefix`) stay listed — stale prefix rows only
+    * ever ADD candidates (harmless: verification decides), and
+    * [[verifyAgainstShingles]] resolves every participant id to its
+    * freshest rows, so a later re-append of a deleted id (even with
+    * different text) verifies against the re-appended arrays, never
+    * the stale ones. [[compactClusterIndexArtifacts]] or the next
+    * [[buildClusterIndex]] rebuild reclaims stale rows.
     *
-    * Crash safety: the same journaled per-bucket swap as append, with
-    * a deterministic op id namespaced under `del:` so a delete can
-    * never short-circuit on a committed APPEND of the same id set. A
-    * retry no-ops only when the commit marker exists AND none of the
-    * ids are live — marker-plus-deadness, not the marker alone, because
-    * the marker is stale after the same ids were re-appended (the
-    * documented delete -> re-append -> delete-again lifecycle — a
-    * repeated single-id takedown — re-executes). An id deleted here may
+    * Crash safety: the same single commit as append, with a
+    * deterministic op id namespaced under `del:` so a delete can never
+    * short-circuit on a committed APPEND of the same id set. A retry
+    * no-ops only when the op id is recorded AND none of the ids are
+    * live — the op id alone is stale after the same ids were
+    * re-appended (the documented delete -> re-append -> delete-again
+    * lifecycle — a repeated single-id takedown — re-executes). An id deleted here may
     * be re-appended later (the append-side "already indexed" check
     * consults live verdicts only). */
   def deleteFromClusterIndex(spark: SparkSession, path: String,
@@ -1161,15 +1087,12 @@ object Dedup {
         org.apache.spark.sql.types.LongType,
       s"deleteFromClusterIndex: $id must be LongType (the driver-side " +
         s"union-find is long-keyed), got ${delIds.schema(id).dataType}")
-    val fs = IndexFs.fs(spark, path)
-    recoverClusterIndexAppend(fs, path)
-    val p = spark.read.parquet(s"$path/params").head()
-    val (threshold, nBuckets) =
-      (p.getAs[Double]("threshold"), p.getAs[Int]("nBuckets"))
+    val snap = IndexLog.snapshot(spark, path)
+    val (threshold, _, nBuckets) = clusterParams(snap)
     val ids = delIds.select(col(id)).distinct()
       .collect().map(_.getLong(0)).sorted
     val opId = graft.TmpDirs.pathKey("del:" + ids.mkString(","))
-    val verdicts = spark.read.parquet(s"$path/verdicts")
+    val verdicts = snap.frame("verdicts")
     val idsDf = ids.toSeq.toDF(id)
     // which of the ids are currently indexed? One column-pruned verdict
     // id STREAM against the broadcast batch ids (an ids⋉verdicts
@@ -1178,28 +1101,25 @@ object Dedup {
     val present = verdicts.select(col(id))
       .join(broadcast(idsDf), Seq(id), "left_semi")
       .collect().map(_.getLong(0)).toSet
-    // idempotent-retry no-op requires the marker AND deadness: the
-    // marker alone is STALE after the same ids were re-appended (the
+    // idempotent-retry no-op requires the recorded op id AND deadness:
+    // the op id alone is STALE after the same ids were re-appended (the
     // documented delete -> re-append -> delete-again lifecycle — a
     // repeated single-id takedown — would otherwise silently no-op on
-    // the first delete's marker and leave the doc indexed). Marker +
-    // none-live = a retry of the committed delete; marker + all-live =
-    // a genuinely new delete after a re-append (proceed); marker +
+    // the first delete's op id and leave the doc indexed). Recorded +
+    // none-live = a retry of the committed delete; recorded + all-live
+    // = a genuinely new delete after a re-append (proceed); recorded +
     // some-live = ambiguous partial state — fall through to the loud
     // not-indexed check below.
-    if (IndexFs.exists(fs, s"$path/appends/$opId.committed") &&
-        present.isEmpty)
+    if (snap.ops.contains(opId) && present.isEmpty)
       return // this exact delete committed and the ids are dead — retry no-op
     // deleting an id that is not indexed would silently diverge from
     // the rebuild contract (the caller thinks it removed something) —
     // fail loud
     require(present.size == ids.length,
       s"deleteFromClusterIndex($path): $id ${ids.find(!present(_))} is not indexed")
-    // deleting EVERY indexed doc would leave an empty verdicts/ dir —
-    // unreadable parquet (no files to infer a schema from), so every
-    // later serve/append would crash confusingly. Refuse loud; clearing
-    // an index is a rebuild-over-the-new-corpus (or rm) operation.
-    // parquet footer count — no data pages read
+    // deleting EVERY indexed doc would leave an index with no verdicts;
+    // clearing an index is a rebuild-over-the-new-corpus (or rm)
+    // operation. Parquet footer count — no data pages read
     val total = verdicts.count()
     require(total > ids.length,
       s"deleteFromClusterIndex($path): deleting all $total indexed docs " +
@@ -1209,8 +1129,8 @@ object Dedup {
       .select(col("canon_id")).distinct().collect().map(_.getLong(0))
     val memberCap = spark.conf
       .get("spark.graft.dedup.deleteMemberCap", "4000000").toInt
-    // the affected clusters' rows all live in their labels' vb
-    // partitions — the filter prunes the read to O(affected buckets)
+    // the affected clusters' rows all live in their labels' vb cells —
+    // the filter prunes the read to O(affected buckets)
     val remaining = verdicts
       .filter(col("vb").isInCollection(
         affectedOld.map(bucketOf(_, nBuckets)).distinct.toSeq))
@@ -1226,7 +1146,7 @@ object Dedup {
     // prefix inverted index (zero false negatives under the frozen
     // consistent order)
     val remDf = remaining.toSeq.toDF("__mid")
-    val remPrefix = spark.read.parquet(s"$path/prefix")
+    val remPrefix = snap.frame("prefix")
       .join(broadcast(remDf), Seq("__mid"), "left_semi")
       .localCheckpoint(true) // self-joined below
     val cands = remPrefix.select(col("__mid").as("bid"), col("shingle"))
@@ -1235,9 +1155,7 @@ object Dedup {
       .select(col("bid"), col("oid")).distinct()
     val edgeCap = spark.conf
       .get("spark.graft.dedup.appendEdgeCap", "4000000").toInt
-    val markerSeqs = commitSeqs(fs, path)
-    val edges = verifyAgainstShingles(spark, path, cands, threshold,
-        seqs = Some(markerSeqs))
+    val edges = verifyAgainstShingles(snap.frame("shingles"), cands, threshold)
       .limit(edgeCap + 1)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
     require(edges.length <= edgeCap,
@@ -1282,166 +1200,120 @@ object Dedup {
         .select(col(id), col("canon_id"), col("cluster_size"), col("score"),
           col("keep"))
         .withColumn("vb", verdictBucket(col("canon_id"), nBuckets))
-    stageSwapCommit(fs, path, opId, newVerdicts, affectedBuckets,
-      seqs = Some(markerSeqs))
+    commitVerdicts(snap, "clusterdel", opId, newVerdicts, affectedBuckets)
   }
 
-  /** Reclaim ORPHAN artifact partitions: `shingles/__app=X` and
-    * `prefix/__app=X` directories whose append id X never committed —
-    * the leftovers of crashed appends that were never retried. Crash
-    * recovery runs FIRST, so a journaled-but-uncommitted append rolls
-    * FORWARD (its artifacts become committed) rather than being reaped.
-    * The build partition and every committed op's partition are never
-    * touched. Correctness never depended on this sweep (orphans have no
-    * verdict rows and every candidate path semi-joins against live
-    * ids) — gc bounds the artifact-join cost growth from crashed
-    * appends without paying a full rebuild. */
+  /** Reclaim what no commit lists: delete every write directory under
+    * the index's tables that the head does not list — the files of ops
+    * that crashed before their commit and were never retried (a retry
+    * writes fresh directories). Correctness never depended on this
+    * sweep (every reader and op reads only listed files); it bounds
+    * the disk crashed ops leave behind without a rebuild. Single-writer
+    * by contract: an op in flight has not listed its files yet. */
   def gcClusterIndex(spark: SparkSession, path: String): Unit = {
+    val snap = IndexLog.snapshot(spark, path)
     val fs = IndexFs.fs(spark, path)
-    recoverClusterIndexAppend(fs, path)
-    val committed = IndexFs.listNames(fs, s"$path/appends")
-      .filter(_.endsWith(".committed"))
-      .map(_.stripSuffix(".committed")).toSet + BuildAppId
-    Seq("shingles", "prefix").foreach { d =>
-      IndexFs.listNames(fs, s"$path/$d")
-        .filter(_.startsWith("__app="))
-        .map(_.stripPrefix("__app="))
-        .filterNot(committed)
-        .foreach(x => IndexFs.delete(fs, s"$path/$d/__app=$x"))
-    }
+    snap.tables.keys.foreach(t =>
+      unlistedDirs(fs, snap, t).foreach(IndexFs.delete(fs, _)))
   }
 
-  /** COMPACT the cluster index's artifact store: rewrite `shingles/`
-    * and `prefix/` keeping exactly ONE row set per LIVE doc — the row
-    * set [[verifyAgainstShingles]] would resolve to — and dropping
-    * everything else: dead rows (deleted docs), shadowed rows (an id's
-    * stale sets superseded by a re-append), and orphan partitions
-    * (crashed never-retried appends). The bounded-growth escape for
-    * takedown/reingest churn: [[gcClusterIndex]] only reclaims whole
-    * orphan partitions, and before this op the only way to reclaim
-    * stale rows inside COMMITTED partitions was a full
+  /** Write directories under `$root/<table>` that `snap` lists no file
+    * of. */
+  private def unlistedDirs(fs: org.apache.hadoop.fs.FileSystem,
+      snap: IndexLog.Snapshot, table: String): Seq[String] = {
+    val listed = snap.table(table).files.map(_.path.split('/')(1)).toSet
+    IndexFs.listNames(fs, s"${snap.root}/$table").filterNot(listed)
+      .map(d => s"${snap.root}/$table/$d")
+  }
+
+  /** COMPACT the cluster index's artifact store: rewrite `shingles` and
+    * `prefix` keeping exactly ONE row set per LIVE doc — the
+    * [[freshest]] set verification resolves to — and dropping
+    * everything else: dead rows (deleted docs) and shadowed rows (an
+    * id's stale sets superseded by a re-append). The bounded-growth
+    * escape for takedown/reingest churn without a full
     * [[buildClusterIndex]] rebuild — which re-pays the transitive
-    * closure. Compaction is one corpus-linear pass per artifact dir
+    * closure. Compaction is one corpus-linear pass per artifact table
     * (a resolve-and-copy, no re-pairing, no closure), the exact
     * analogue of [[Similarity.compactIvfIndex]].
     *
-    * Layout after compaction: all surviving rows consolidate under the
-    * `__app=build` partition (commit rank 0). That is always correct:
-    * ties are impossible with one row per id, and any LATER re-append
-    * of a doc (necessarily after a delete) lands in a fresh partition
-    * whose commit sequence exceeds 0, so it shadows the consolidated
-    * row. Commit markers are KEPT — retry idempotence and the sequence
-    * counter continue across a compaction.
-    *
-    * Crash safety: per dir, the compacted copy is staged BESIDE the
-    * live one, verified non-empty, and swapped in with two renames
-    * (`<dir>` -> `<dir>.precompact` -> live), all through the Hadoop FS
-    * API. [[recoverClusterIndexAppend]] — which every maintenance op
-    * runs first — rolls a crash between the renames FORWARD (staged is
-    * complete by construction once the live dir was retired) and
-    * discards half-staged leftovers, so no manual restore is ever
-    * needed. The dirs swap independently: a crash between the shingles
-    * swap and the prefix swap is safe because stale PREFIX rows only
-    * ever add candidates (verification decides against resolved
-    * shingle arrays). */
+    * ONE commit replaces both tables' files (every surviving row in the
+    * compaction's own `__app` cell — one row set per id leaves nothing
+    * to rank, and any later re-append, necessarily after a delete, lands
+    * in a higher cell), so readers see the old store or the new one; a
+    * crash before the commit leaves the old store, and the retry redoes
+    * the compaction. Recorded op ids carry over, so retry idempotence
+    * continues across a compaction. Once committed, the files of
+    * crashed ops are reclaimed as by [[gcClusterIndex]]. */
   def compactClusterIndexArtifacts(spark: SparkSession, path: String,
       id: String = "doc_id"): Unit = {
-    import spark.implicits._
-    val fs = IndexFs.fs(spark, path)
-    recoverClusterIndexAppend(fs, path)
-    val rankDf = commitSeqs(fs, path).toSeq.toDF("__app", "__rank")
-    val live = spark.read.parquet(s"$path/verdicts")
-      .select(col(id).as("__mid"))
-    Seq("shingles", "prefix").foreach { d =>
-      val liveDir = s"$path/$d"
-      val staged = s"$path/$d.compacting"
-      val retired = s"$path/$d.precompact"
-      val w = Window.partitionBy(col("__mid"))
-      // committed rows of live ids, resolved to the freshest set per id
-      // (the same (rank, app) ordering verifyAgainstShingles uses); one
-      // corpus co-shuffle on __mid — the intrinsic compaction cost
-      spark.read.parquet(liveDir)
-        .join(broadcast(rankDf), Seq("__app")) // inner: orphans drop
+    val snap = IndexLog.snapshot(spark, path)
+    val live = snap.frame("verdicts").select(col(id).as("__mid"))
+    // the freshest rows of live ids: one corpus co-shuffle on __mid per
+    // table — the intrinsic compaction cost
+    snap.commit("clustercompact", Seq("shingles", "prefix").map { t =>
+      t -> IndexLog.write(freshest(snap.frame(t))
         .join(live, Seq("__mid"), "left_semi") // dead rows drop
-        // resolve to the SAME row verification resolves to
-        // ([[freshnessKey]] — rank desc, app asc on legacy ties)
-        .withColumn("__best", min(freshnessKey).over(w))
-        .filter(freshnessKey === col("__best"))
-        .drop("__app", "__rank", "__best")
-        .write.mode("overwrite").parquet(s"$staged/__app=$BuildAppId")
-      maybeCrash(s"after-compact-staging-$d")
-      // an empty artifact dir would be unreadable parquet — and live
-      // docs always have committed artifacts, so emptiness here means
-      // the index is corrupt: refuse and keep the servable state
-      if (!IndexFs.anyFile(fs, staged)(_.endsWith(".parquet"))) {
-        IndexFs.delete(fs, staged)
-        throw new IllegalStateException(
-          s"compactClusterIndexArtifacts($path): compacted $d/ is empty " +
-            "— no live doc resolved to a committed artifact row; the " +
-            "index is inconsistent, rebuild it")
-      }
-      if (IndexFs.exists(fs, retired)) IndexFs.delete(fs, retired)
-      IndexFs.rename(fs, liveDir, retired)
-      maybeCrash(s"mid-compact-swap-$d")
-      IndexFs.rename(fs, staged, liveDir)
-      IndexFs.delete(fs, retired)
-    }
+        .withColumn("__app", lit(snap.version + 1)), path, t, Some("__app"))
+    }.toMap)
+    gcClusterIndex(spark, path)
   }
 
   /** Artifact HYGIENE report for a persisted cluster index — the
     * observability [[compactClusterIndexArtifacts]] is scheduled from:
-    * every `shingles/` and `prefix/` row classified as
+    * every `shingles` and `prefix` row classified as
     *
     *   - `live_current`: the row set verification resolves to (exactly
-    *     one per live doc per dir when the store is clean);
-    *   - `shadowed`: a committed row superseded by a fresher committed
-    *     set for the same id (delete -> re-append churn);
-    *   - `dead`: a committed row whose id has no live verdict (takedown
+    *     one per live doc per table when the store is clean);
+    *   - `shadowed`: a row superseded by a fresher set for the same id
+    *     (delete -> re-append churn);
+    *   - `dead`: a row whose id has no live verdict (takedown
     *     leftovers);
-    *   - `orphan`: rows in partitions without a commit marker (crashed
-    *     never-retried appends — [[gcClusterIndex]]'s target).
+    *   - `orphan`: rows in files no commit lists (ops that crashed
+    *     before their commit and were never retried —
+    *     [[gcClusterIndex]]'s target).
     *
     * Output is one row per (dir, kind), all eight always present (zeros
     * included) so the report schema is fixed. Reads are column-pruned
     * to (`__mid`, `__app`) — the shingle/prefix ARRAYS are never read —
     * so the report costs two slim corpus scans plus a co-shuffle on
-    * id. */
+    * id, and a footer count of any unlisted files. */
   def clusterIndexArtifactReport(spark: SparkSession, path: String,
       id: String = "doc_id"): DataFrame = {
     import spark.implicits._
+    val snap = IndexLog.snapshot(spark, path)
     val fs = IndexFs.fs(spark, path)
-    val rankDf = commitSeqs(fs, path).toSeq.toDF("__app", "__rank")
-    val live = spark.read.parquet(s"$path/verdicts")
+    val live = snap.frame("verdicts")
       .select(col(id).as("__mid"), lit(1).as("__live"))
     val perDir = Seq("shingles", "prefix").map { d =>
-      val w = Window.partitionBy(col("__mid"))
-      spark.read.parquet(s"$path/$d").select(col("__mid"), col("__app"))
-        .join(broadcast(rankDf), Seq("__app"), "left") // null rank = orphan
+      snap.frame(d).select(col("__mid"), col("__app"))
         .join(live, Seq("__mid"), "left")
-        // best among QUALIFYING (committed + live) rows only, under the
-        // shared [[freshnessKey]] order verification resolves with
-        .withColumn("__best",
-          min(when(col("__rank").isNotNull && col("__live").isNotNull,
-            freshnessKey)).over(w))
+        // the [[freshest]] key: an id's highest cell
+        .withColumn("__best", max(col("__app")).over(Window.partitionBy(col("__mid"))))
         .withColumn("kind",
-          when(col("__rank").isNull, "orphan")
-            .when(col("__live").isNull, "dead")
-            .when(freshnessKey === col("__best"), "live_current")
+          when(col("__live").isNull, "dead")
+            .when(col("__app") === col("__best"), "live_current")
             .otherwise("shadowed"))
         .groupBy(col("kind")).agg(count(lit(1)).as("n_rows"))
         .withColumn("dir", lit(d))
     }.reduce(_ unionByName _)
+    val orphans = Seq("shingles", "prefix").map { d =>
+      val dirs = unlistedDirs(fs, snap, d)
+      val schema = org.apache.spark.sql.types.DataType.fromJson(snap.table(d).schema)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      (d, "orphan",
+        if (dirs.isEmpty) 0L else spark.read.schema(schema).parquet(dirs: _*).count())
+    }.toDF("dir", "kind", "n_rows")
     val kinds = Seq("shingles", "prefix").flatMap(d =>
       Seq("live_current", "shadowed", "dead", "orphan").map(k => (d, k)))
       .toDF("dir", "kind")
-    kinds.join(perDir, Seq("dir", "kind"), "left")
+    kinds.join(perDir.unionByName(orphans), Seq("dir", "kind"), "left")
       .select(col("dir"), col("kind"),
         coalesce(col("n_rows"), lit(0L)).as("n_rows"))
   }
 
-  /** Deterministic append id of a batch: a 128-bit digest of the sorted
-    * id set, so a RETRY of the same batch addresses the same journal
-    * entry, artifact partition, and staging dir. */
+  /** Deterministic op id of a batch: a 128-bit digest of the sorted id
+    * set, so a RETRY of the same batch finds its id in the commit. */
   private def appendIdOf(batchIds: Array[Long]): String =
     graft.TmpDirs.pathKey(batchIds.sorted.mkString(","))
 
@@ -1464,173 +1336,6 @@ object Dedup {
     def union(a: Long, b: Long): Unit = {
       val ra = find(a); val rb = find(b)
       if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-    }
-  }
-
-  /** appId -> commit SEQUENCE for every committed op (marker content),
-    * the total order [[verifyAgainstShingles]] resolves duplicate
-    * artifact rows with. The build ranks 0; legacy empty markers (pre-
-    * sequence indexes) parse as 0 — ties there reproduce the old
-    * behavior, and every marker written since carries a strictly
-    * increasing sequence.
-    *
-    * Metadata cost: the per-op `.committed` files stay the COMMIT
-    * POINT (one atomic create each), but their contents are cached in
-    * ONE manifest file (`appends/_manifest`, rewritten per commit), so
-    * a lifetime of N ops costs one manifest read + one dir listing per
-    * call — not N marker reads (real latency on an object store as the
-    * op count grows). Marker EXISTENCE stays authoritative for
-    * membership (a manifest entry whose marker is gone is dropped;
-    * markers missing from the manifest — a crash between marker and
-    * manifest write, or a legacy pre-manifest index — are read
-    * individually and healed into the manifest at the next commit). */
-  private def commitSeqs(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Map[String, Long] = {
-    val cached = readManifest(fs, path)
-    val names = IndexFs.listNames(fs, s"$path/appends")
-      .filter(_.endsWith(".committed")).map(_.stripSuffix(".committed"))
-    val stragglers = names.filterNot(cached.contains).map { a =>
-      val s = IndexFs.readUtf8(fs, s"$path/appends/$a.committed").trim
-      a -> (if (s.isEmpty) 0L else s.toLong)
-    }
-    val nameSet = names.toSet
-    cached.filter(kv => nameSet(kv._1)) ++ stragglers + (BuildAppId -> 0L)
-  }
-
-  private def readManifest(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Map[String, Long] = {
-    val p = s"$path/appends/_manifest"
-    if (!IndexFs.exists(fs, p)) Map.empty
-    else IndexFs.readUtf8(fs, p).linesIterator.filter(_.nonEmpty).map { l =>
-      val i = l.lastIndexOf(' ')
-      l.substring(0, i) -> l.substring(i + 1).toLong
-    }.toMap
-  }
-
-  /** Rewrite the manifest cache (stage-then-swap: a crash at any point
-    * leaves either the old manifest, none, or the new one — commitSeqs
-    * self-heals all three from the marker files). The build's implicit
-    * rank-0 entry is never materialized (it has no marker file, and
-    * membership reconciliation would drop it). */
-  private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, seqs: Map[String, Long]): Unit = {
-    val live = s"$path/appends/_manifest"
-    val tmp = s"$live.tmp"
-    IndexFs.writeUtf8(fs, tmp, (seqs - BuildAppId).toSeq.sortBy(_._1)
-      .map { case (a, s) => s"$a $s" }.mkString("\n"))
-    IndexFs.delete(fs, live)
-    IndexFs.rename(fs, tmp, live)
-  }
-
-  /** Write (or on appId reuse, OVERWRITE) the op's commit marker with
-    * the next commit sequence — single-writer by contract, so the
-    * max+1 read-modify-write is safe. An appId is reused when the
-    * exact same id set is re-appended after a delete: the artifact
-    * partition was overwritten with the new batch's rows, and bumping
-    * the marker's sequence is what attributes the partition's content
-    * to NOW rather than to the original append. Callers that already
-    * hold the marker map pass it in (`seqs`) — the manifest makes a
-    * fresh read cheap, but re-deriving from the in-hand map is free.
-    *
-    * The marker lands FIRST (today's commit point, unchanged), then
-    * the manifest cache is rewritten to include it. A crash between
-    * the two leaves a straggler marker that commitSeqs reads directly;
-    * the one window where a REUSED appId's manifest entry goes stale
-    * (marker bumped, manifest not) is benign for freshness resolution:
-    * reuse means the same artifact partition was overwritten, so the
-    * id has a single artifact row and no tie to resolve. */
-  private def writeCommitMarker(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, opId: String,
-      seqs: Option[Map[String, Long]] = None): Unit = {
-    val known = seqs.getOrElse(commitSeqs(fs, path))
-    val seq = known.values.foldLeft(0L)(math.max) + 1L
-    IndexFs.writeUtf8(fs, s"$path/appends/$opId.committed", seq.toString)
-    writeManifest(fs, path, known + (opId -> seq))
-  }
-
-  /** Test-only failpoint shared with [[IndexLog]]: when set, the index
-    * writers throw at the named point to simulate a crash (the recovery
-    * specs drive every window). Production code never sets it. */
-  private[graft] def appendCrashPoint: Option[String] = IndexLog.crashPoint
-  private[graft] def appendCrashPoint_=(p: Option[String]): Unit =
-    IndexLog.crashPoint = p
-  private def maybeCrash(point: String): Unit = IndexLog.maybeCrash(point)
-
-  /** Idempotent per-bucket old/live/staged swap — re-runnable from any
-    * crash window: each bucket independently reaches (old = previous
-    * live content, live = staged content, or absent when the bucket
-    * emptied). Buckets whose staged dir is already gone were swapped by
-    * a previous attempt and are left alone. */
-  private def swapVerdictBuckets(fs: org.apache.hadoop.fs.FileSystem,
-      path: String, appId: String, buckets: Seq[(Int, Boolean)]): Unit = {
-    IndexFs.mkdirs(fs, s"$path/verdicts.old/$appId")
-    buckets.zipWithIndex.foreach { case ((k, staged), i) =>
-      val liveP = s"$path/verdicts/vb=$k"
-      val stagedP = s"$path/verdicts.appending/$appId/vb=$k"
-      val oldP = s"$path/verdicts.old/$appId/vb=$k"
-      val stagedNow = staged && IndexFs.exists(fs, stagedP)
-      // retire the live dir iff this bucket's swap has not run yet
-      // (for a staged bucket, a missing staged dir means "already
-      // swapped in"; for an emptied bucket the retire IS the swap)
-      if (IndexFs.exists(fs, liveP) && (!staged || stagedNow)) {
-        if (IndexFs.exists(fs, oldP)) IndexFs.delete(fs, oldP)
-        IndexFs.rename(fs, liveP, oldP)
-      }
-      if (stagedNow) IndexFs.rename(fs, stagedP, liveP)
-      maybeCrash(s"after-bucket-swap-$i")
-    }
-  }
-
-  /** Crash recovery for [[appendToClusterIndex]], run at the top of
-    * every append (single-writer by contract): a journaled intent
-    * without a commit marker means the staged data was complete — ROLL
-    * FORWARD (finish the bucket swaps, write the marker); staging
-    * without an intent means the staging write died — roll back (delete
-    * it; the retry rewrites it). Leftover old/staging/intent files of
-    * committed appends are swept. */
-  private def recoverClusterIndexAppend(fs: org.apache.hadoop.fs.FileSystem,
-      path: String): Unit = {
-    val appendsDir = s"$path/appends"
-    IndexFs.listNames(fs, appendsDir).filter(_.endsWith(".intent"))
-      .foreach { f =>
-        val appId = f.stripSuffix(".intent")
-        if (!IndexFs.exists(fs, s"$appendsDir/$appId.committed")) {
-          val buckets = IndexFs.readUtf8(fs, s"$appendsDir/$f").linesIterator
-            .filter(_.nonEmpty).map { l =>
-              val parts = l.split(' ')
-              (parts(0).toInt, parts(1) == "1")
-            }.toSeq
-          swapVerdictBuckets(fs, path, appId, buckets)
-          writeCommitMarker(fs, path, appId)
-        }
-        IndexFs.delete(fs, s"$path/verdicts.old/$appId")
-        IndexFs.delete(fs, s"$path/verdicts.appending/$appId")
-        IndexFs.delete(fs, s"$appendsDir/$f")
-      }
-    // staging dirs with no intent: the staging write crashed before the
-    // journal — discard (a retried append rewrites them from scratch)
-    IndexFs.listNames(fs, s"$path/verdicts.appending")
-      .foreach(d => IndexFs.delete(fs, s"$path/verdicts.appending/$d"))
-    // artifact-compaction swaps ([[compactClusterIndexArtifacts]]): the
-    // live dir is only ever retired AFTER the staged copy verified
-    // complete, so live-missing + staged-present rolls FORWARD;
-    // live-missing + staged-missing (a pre-verification crash never
-    // retires live, so this is unreachable short of manual damage)
-    // restores the retired copy; leftovers next to a live dir are
-    // discarded (half-staged writes, completed swaps)
-    Seq("shingles", "prefix").foreach { d =>
-      val liveDir = s"$path/$d"
-      val staged = s"$path/$d.compacting"
-      val retired = s"$path/$d.precompact"
-      if (!IndexFs.exists(fs, liveDir) && IndexFs.exists(fs, staged)) {
-        IndexFs.rename(fs, staged, liveDir)
-        IndexFs.delete(fs, retired)
-      } else if (!IndexFs.exists(fs, liveDir) && IndexFs.exists(fs, retired)) {
-        IndexFs.rename(fs, retired, liveDir)
-      } else {
-        IndexFs.delete(fs, staged)
-        IndexFs.delete(fs, retired)
-      }
     }
   }
 
@@ -2157,7 +1862,7 @@ object Dedup {
     val seedsT = IndexLog.write(
       seeds.select(col(seedId).as("seed_id"), col(seedEmb).as("s_emb"))
         .repartition(1), path, "seeds")
-    maybeCrash("semdedup-after-seeds")
+    IndexLog.maybeCrash("semdedup-after-seeds")
     IndexLog.commit(spark, path, "semdedup", base, Map("seeds" -> seedsT,
       "members" -> writeMembers(
         assignCells(corpus, embCol, id, seeds, seedId, seedEmb, probeAssign)

@@ -4,26 +4,20 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Hadoop-FileSystem-routed primitives for the persisted indexes (the
-  * [[IndexLog]] behind the IVF, semantic-dedup and near-dup indexes,
-  * and the near-dup cluster index in [[Dedup]]):
+  * [[IndexLog]] behind the IVF, semantic-dedup, near-dup and near-dup
+  * cluster indexes) and the fan-out's incremental state:
   * exists/rename/delete/read/write resolve against whatever filesystem
-  * the index root names — a bare local path, a `file://` URI, `hdfs://`
-  * — instead of `java.io.File`, which silently assumes a local root. A
+  * the root names — a bare local path, a `file://` URI, `hdfs://` —
+  * instead of `java.io.File`, which silently assumes a local root. A
   * production index over a 100 TB corpus lives on HDFS or an object
   * store, so index maintenance must speak the Hadoop FS API end to end.
   *
-  * S3 caveat (documented, not papered over). The IVF, semantic-dedup
-  * and near-dup indexes commit through [[IndexLog]]: graft renames
-  * nothing there, and the commit point is the create-if-absent of one
-  * small file. Their data files are still written by Spark's file
-  * output committer, whose own renames under `_temporary/` are O(bytes)
-  * copies on S3; a rename-free committer would remove that last
-  * dependency. The cluster index still swaps directories by RENAME,
-  * which is atomic on HDFS and local filesystems but not on S3 (S3A
-  * rename = server-side copy + delete, and a crash mid-rename can leave
-  * both or neither path): on an S3 root, treat its marker files
-  * (`appends/<id>.committed`) as the commit point and re-run the
-  * documented recovery, or front it with a rename-atomic store.
+  * S3 caveat (documented, not papered over). The indexes commit through
+  * [[IndexLog]]: graft renames nothing there, and the commit point is
+  * the create-if-absent of one small file. Their data files are still
+  * written by Spark's file output committer, whose own renames under
+  * `_temporary/` are O(bytes) copies on S3; a rename-free committer
+  * would remove that last dependency.
   */
 private[graft] object IndexFs {
 
@@ -38,7 +32,7 @@ private[graft] object IndexFs {
     * a half-swapped index that reads as data loss later). */
   def rename(fs: FileSystem, src: String, dst: String): Unit =
     require(fs.rename(new Path(src), new Path(dst)),
-      s"IndexFs.rename: '$src' -> '$dst' failed " +
+      s"rename '$src' -> '$dst' failed " +
         "(source missing, or destination already exists)")
 
   def delete(fs: FileSystem, p: String): Unit = {
@@ -54,16 +48,6 @@ private[graft] object IndexFs {
   def listNames(fs: FileSystem, dir: String): Seq[String] =
     if (!exists(fs, dir)) Seq.empty
     else fs.listStatus(new Path(dir)).toIndexedSeq.map(_.getPath.getName)
-
-  /** True iff any file under `dir` (recursive) satisfies `pred` on its
-    * name — the part-file presence probe compaction uses before
-    * swapping in a rewritten corpus. */
-  def anyFile(fs: FileSystem, dir: String)(pred: String => Boolean): Boolean = {
-    if (!exists(fs, dir)) return false
-    val it = fs.listFiles(new Path(dir), true)
-    while (it.hasNext) if (pred(it.next().getPath.getName)) return true
-    false
-  }
 
   /** Small UTF-8 marker/journal writes (overwrite). The stream closes
     * before return, so a reader that sees the file sees all of it on

@@ -10,7 +10,8 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The commit log of a persisted index (the IVF index in [[Similarity]],
-  * the semantic-dedup and near-dup indexes in [[Dedup]]) — the binlog's
+  * the semantic-dedup, near-dup and near-dup cluster indexes in
+  * [[Dedup]]) — the binlog's
   * own shape (an index file enumerating immutable files) applied to
   * graft's indexes.
   *

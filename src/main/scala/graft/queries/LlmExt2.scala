@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{QDef, Tables}
-import graft.ops.{Dedup, TextAnalysis}
+import graft.ops.{Dedup, IndexLog, TextAnalysis}
 import org.apache.spark.sql.functions._
 
 /** Third tranche of LLM-pipeline operators: Simpson token diversity,
@@ -105,7 +105,7 @@ object LlmExt2 {
       Dedup.appendToClusterIndex(s, s"$root/index",
         churn.select(col("doc_id"), col("text")))
       // materialize BEFORE compacting: the report is lazy, and the
-      // compaction swap replaces the very files its scan listed
+      // compaction commit deletes the very files its scan listed
       val before = Dedup.clusterIndexArtifactReport(s, s"$root/index")
         .withColumn("stage", lit("before"))
         .localCheckpoint(true)
@@ -1032,7 +1032,7 @@ object LlmExt2 {
         |FROM lab l JOIN cl USING (canon_id) JOIN sc s USING (doc_id)"""
         .stripMargin) { (s, dir) =>
       val idx = ensureClusterIndex(s, dir)
-      s.read.parquet(s"$idx/verdicts")
+      IndexLog.snapshot(s, idx).frame("verdicts")
         .select(col("doc_id"), col("canon_id"), col("cluster_size"),
           col("score"), col("keep"))
     },
@@ -1060,7 +1060,7 @@ object LlmExt2 {
         |FROM lab l JOIN cl USING (canon_id) JOIN sc s USING (doc_id)"""
         .stripMargin) { (s, dir) =>
       val idx = ensureAppendedClusterIndex(s, dir)
-      s.read.parquet(s"$idx/verdicts")
+      IndexLog.snapshot(s, idx).frame("verdicts")
         .select(col("doc_id"), col("canon_id"), col("cluster_size"),
           col("score"), col("keep"))
     },
@@ -1089,7 +1089,7 @@ object LlmExt2 {
         |FROM lab l JOIN cl USING (canon_id) JOIN sc s USING (doc_id)"""
         .stripMargin) { (s, dir) =>
       val idx = ensureDeletedClusterIndex(s, dir)
-      s.read.parquet(s"$idx/verdicts")
+      IndexLog.snapshot(s, idx).frame("verdicts")
         .select(col("doc_id"), col("canon_id"), col("cluster_size"),
           col("score"), col("keep"))
     },
@@ -1180,8 +1180,8 @@ object LlmExt2 {
       val oldIdx = ensureClusterIndex(s, dir)
       val newIdx = ensureDeletedClusterIndex(s, dir)
       Dedup.clusterIndexTransitions(
-        s.read.parquet(s"$oldIdx/verdicts"),
-        s.read.parquet(s"$newIdx/verdicts"))
+        IndexLog.snapshot(s, oldIdx).frame("verdicts"),
+        IndexLog.snapshot(s, newIdx).frame("verdicts"))
     },
 
     // INCREMENTAL semantic dedup — the semantic family's llm44: a new
@@ -1487,7 +1487,7 @@ object LlmExt2 {
         |  true AS cells_bounded, CAST(1 AS BIGINT) AS max_files_per_cell
         |""".stripMargin) { (s, dir) =>
       val root = ensureRebuiltSemDedupIndex(s, dir)
-      val k = graft.ops.IndexLog.snapshot(s, s"$root/index").frame("seeds").count()
+      val k = IndexLog.snapshot(s, s"$root/index").frame("seeds").count()
       // one aggregation over the hygiene report carries every
       // reconciliation number (a crossJoin of 1-row aggregates would
       // plan a BroadcastNestedLoopJoin for nothing)

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{QDef, Tables}
 import graft.cdc.CdcFixture
+import graft.ops.IndexLog
 import graft.streaming.StreamOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -429,8 +430,8 @@ object Streaming {
     // streaming cluster-index maintenance: llm74's lifecycle ONLINE — a
     // foreachBatch sink folds each arriving micro-batch into the
     // persisted near-dup cluster index with appendToClusterIndex (exact
-    // candidates vs the persisted inverted index, crash-safe per-bucket
-    // swap). Appends compose under full-rebuild equivalence, so the
+    // candidates vs the persisted inverted index, one commit per
+    // micro-batch). Appends compose under full-rebuild equivalence, so the
     // served verdicts match the from-scratch closure over the FULL
     // corpus regardless of how the stream sliced the batches — llm74's
     // oracle verbatim.
@@ -448,7 +449,7 @@ object Streaming {
         |FROM lab l JOIN cl USING (canon_id) JOIN sc s USING (doc_id)"""
         .stripMargin) { (s, dir) =>
       val idx = LlmExt2.ensureStreamedClusterIndex(s, dir)
-      s.read.parquet(s"$idx/verdicts")
+      IndexLog.snapshot(s, idx).frame("verdicts")
         .select(col("doc_id"), col("canon_id"), col("cluster_size"),
           col("score"), col("keep"))
     },
@@ -457,8 +458,8 @@ object Streaming {
     // ONLINE — opt-out/PII-purge requests arrive as a stream and a
     // foreachBatch sink removes each micro-batch with
     // deleteFromClusterIndex (bridge-splitting connectivity recompute
-    // over the affected clusters, crash-safe per-bucket swap, replays
-    // no-op through the liveness-gated marker). Deletes compose under
+    // over the affected clusters, one commit per micro-batch, replays
+    // no-op through the liveness-gated op id). Deletes compose under
     // full-rebuild equivalence, so the served verdicts match the
     // from-scratch closure over the REMAINING corpus regardless of how
     // the stream sliced the requests — llm75's oracle verbatim.
@@ -476,7 +477,7 @@ object Streaming {
         |FROM lab l JOIN cl USING (canon_id) JOIN sc s USING (doc_id)"""
         .stripMargin) { (s, dir) =>
       val idx = LlmExt2.ensureStreamedTakedownIndex(s, dir)
-      s.read.parquet(s"$idx/verdicts")
+      IndexLog.snapshot(s, idx).frame("verdicts")
         .select(col("doc_id"), col("canon_id"), col("cluster_size"),
           col("score"), col("keep"))
     },

@@ -48,7 +48,7 @@ object CdcFanout {
   private[graft] val filesDecoded = new java.util.concurrent.atomic.AtomicLong
 
   /** Test-only failpoint for [[appendTables]]' crash windows (the
-    * cluster-index appendCrashPoint idiom). Production never sets it. */
+    * `IndexLog.crashPoint` idiom). Production never sets it. */
   private[graft] var fanoutCrashPoint: Option[String] = None
   private def maybeCrash(point: String): Unit =
     if (fanoutCrashPoint.contains(point))

@@ -378,9 +378,17 @@ class CdcScan private[sources] (log: CdcLogSnapshot, db: String, table: String,
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
+  /** Spark builds a stream's scan without column pruning, so it never
+    * says whether the query reads `__pos`: a stream's rows always carry
+    * it, last, where Spark's metadata output puts it (a query that does
+    * not read it projects its own columns off the row). A position the
+    * stream cannot order therefore fails loud even when the query never
+    * reads it. */
   override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-    new CdcMicroBatchStream(indexFile, db, table, full, required, filters,
-      maxBytesPerTrigger, driftEpochs, format)
+    new CdcMicroBatchStream(indexFile, db, table, full,
+      if (required.fieldNames.contains(CdcSchema.PosCol)) required
+      else required.add(CdcTable.Pos.name(), CdcTable.Pos.dataType(), nullable = false),
+      filters, maxBytesPerTrigger, driftEpochs, format)
 
   /** Runtime filtering (the DPP analogue for a log source): when the CDC
     * table joins a filtered build side on an envelope column, Spark hands

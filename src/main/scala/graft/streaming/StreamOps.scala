@@ -175,45 +175,37 @@ object StreamOps {
   case class OrderImage(o_orderkey: Long, o_custkey: Long, o_totalprice: Double,
       gtid: Long, deleted: Boolean)
 
-  /** Streaming CDC latest-image via flatMapGroupsWithState: per key keep
-    * the image with the highest (gtid, op); emit the state each batch.
-    * The streaming twin of queries.Cdc.latestImage (SURVEY.md M4). */
+  /** Streaming CDC latest-image via flatMapGroupsWithState: per key,
+    * each micro-batch's rows fold in log order (the scan's hidden
+    * `__pos`), so the last image in the log wins, inside a transaction
+    * too (an update then a delete of one key in one GTID leaves it
+    * deleted); emit the state each batch. The streaming twin of
+    * queries.Cdc.latestImage (SURVEY.md M4); `cdc` must be a
+    * `binlogcdc` stream. */
   def latestImageStream(cdc: DataFrame): Dataset[OrderImage] = {
     val spark = cdc.sparkSession
     import spark.implicits._
     val typed = cdc.select(
       col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-      col(CdcSchema.GtidCol).as("gtid"), col(CdcSchema.OpCol).as("op"))
-      .as[(Long, Long, Double, Long, Int)]
+      col(CdcSchema.GtidCol).as("gtid"), col(CdcSchema.OpCol).as("op"),
+      cdc.metadataColumn(CdcSchema.PosCol))
+      .filter(col("op") =!= CdcSchema.Op.UpdateBefore)
+      .as[(Long, Long, Double, Long, Int, Long)]
 
     typed.groupByKey(_._1)
       .flatMapGroupsWithState[OrderImage, OrderImage](
         OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        case (key, rows, state: GroupState[OrderImage]) =>
-          var cur = state.getOption.orNull
-          // BOUNDED-BATCH CONTRACT: toSeq buffers ONE key's micro-batch
-          // rows to sort by (gtid, op) — memory is O(max per-key events
-          // per batch), bounded here by admission control (CDC batches
-          // are byte-budgeted; one key's events per batch are few). The
-          // sort exists because a micro-batch's iterator order is not
-          // gtid order across files; the FOLD below is otherwise
-          // order-free (max by (gtid, op) is associative), so an input
-          // pre-sorted by log position could skip the buffer entirely —
-          // if a deployment ever sees giant single-key batches, drop the
-          // sortBy and keep the same fold (same winner; the before-image
-          // guard only needs per-gtid pair adjacency, which log order
-          // guarantees).
-          rows.toSeq.sortBy(r => (r._4, r._5)).foreach { case (k, ck, price, gtid, op) =>
-            if (cur == null || gtid > cur.gtid || (gtid == cur.gtid && op != CdcSchema.Op.UpdateBefore)) {
-              op match {
-                case 0 => cur = OrderImage(k, ck, price, gtid, deleted = true)
-                case 1 | 3 => cur = OrderImage(k, ck, price, gtid, deleted = false)
-                case 2 => // before-image never advances state
-              }
-            }
+        case (_, rows, state: GroupState[OrderImage]) =>
+          // micro-batches arrive in log order, so the batch's last
+          // image replaces the state; no buffering of the key's rows
+          rows.maxByOption(_._6) match {
+            case Some((k, ck, price, gtid, op, _)) =>
+              val cur = OrderImage(k, ck, price, gtid,
+                deleted = op == CdcSchema.Op.Delete)
+              state.update(cur)
+              Iterator.single(cur)
+            case None => Iterator.empty
           }
-          if (cur != null) { state.update(cur); Iterator.single(cur) }
-          else Iterator.empty
       }
   }
 

@@ -646,7 +646,7 @@ object ScaleSmoke {
         }
         val dt = (System.nanoTime() - t0) / 1e9
         // split correctness at scale: chain 0 now has exactly two labels
-        val labels = spark.read.parquet(s"$idx/verdicts")
+        val labels = graft.ops.IndexLog.snapshot(spark, idx).frame("verdicts")
           .filter(col("doc_id") >= nTriple && col("doc_id") < nTriple + 32L)
           .select(col("canon_id")).distinct().count()
         assert(labels == 2L, s"bridge delete must split chain 0 in two, " +

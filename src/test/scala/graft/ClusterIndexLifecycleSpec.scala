@@ -1,18 +1,19 @@
 package graft
 
-import graft.ops.{Dedup, Similarity}
-import org.apache.spark.sql.functions._
+import graft.ops.{Dedup, IndexLog, Similarity}
 
 /** Lifecycle specs for the persisted cluster index's O(affected) append
-  * and the Hadoop-FS-routed index swaps:
+  * and its [[IndexLog]] commits:
   *
-  *   - an append must leave every UNTOUCHED verdict bucket's files
-  *     byte-identical (name/length/mtime) — the proof that per-append
-  *     cost is O(affected buckets), not O(corpus);
-  *   - a crash at ANY failpoint (after artifacts, after staging, after
-  *     the journal intent, mid-swap) followed by a retry of the same
-  *     batch converges to exactly the full-rebuild verdicts, with NO
-  *     duplicate artifact rows (the idempotent per-append partitions);
+  *   - an append must carry every UNTOUCHED verdict bucket's files over
+  *     unchanged (path/length/mtime) — the proof that per-append cost is
+  *     O(affected buckets), not O(corpus);
+  *   - a crash before the commit (`<op>-after-staging`, a torn commit at
+  *     `<op>-mid-commit`) leaves readers on exactly the previous
+  *     verdicts, even when the op moves rows between buckets, and a
+  *     retry of the same batch — after any failpoint, `-after-commit`
+  *     included — converges to exactly the full-rebuild verdicts, with
+  *     NO duplicate artifact rows;
   *   - a retry of an already-committed append is a silent no-op;
   *   - the driver union-find edge collect fails loud past
   *     spark.graft.dedup.appendEdgeCap;
@@ -22,7 +23,6 @@ import org.apache.spark.sql.functions._
   */
 class ClusterIndexLifecycleSpec extends SparkTestBase {
   import spark.implicits._
-  import scala.jdk.CollectionConverters._
 
   /** ~10-token docs built so that sharing the first 9 tokens puts
     * 3-shingle Jaccard at 7/9 ≈ 0.78 (>= the 0.7 threshold) while
@@ -32,25 +32,44 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
 
   private val thr = 0.7
 
+  /** The head's verdict rows, one tuple per row (a doc read twice
+    * would collapse here — [[verdictRows]] keeps the multiset). */
   private def readVerdicts(path: String): Set[(Long, Long, Long, Double, Boolean)] =
-    spark.read.parquet(s"$path/verdicts")
-      .select("doc_id", "canon_id", "cluster_size", "score", "keep")
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
-        r.getBoolean(4))).toSet
+    verdictRows(path).toSet
 
-  /** (relative path -> (length, mtime)) for every file under dir. */
-  private def fileStamps(dir: String): Map[String, (Long, Long)] = {
-    val root = java.nio.file.Paths.get(dir)
-    if (!java.nio.file.Files.exists(root)) return Map.empty
-    val walk = java.nio.file.Files.walk(root)
-    try walk.iterator().asScala
-      .filter(java.nio.file.Files.isRegularFile(_))
-      .map(p => root.relativize(p).toString ->
-        (java.nio.file.Files.size(p),
-          java.nio.file.Files.getLastModifiedTime(p).toMillis))
-      .toMap
-    finally walk.close()
+  private def verdictRows(path: String): Seq[(Long, Long, Long, Double, Boolean)] =
+    IndexLog.snapshot(spark, path).frame("verdicts")
+      .select("doc_id", "canon_id", "cluster_size", "score", "keep")
+      .collect().toSeq
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
+        r.getBoolean(4)))
+
+  /** The head's verdict files: relative path -> (bucket, length, mtime),
+    * each checked against the file on disk. */
+  private def verdictFiles(idx: String): Map[String, (String, Long, Long)] =
+    IndexLog.snapshot(spark, idx).table("verdicts").files.map { f =>
+      val onDisk = new java.io.File(s"$idx/${f.path}")
+      assert(onDisk.length() == f.size && onDisk.lastModified() == f.mtime,
+        s"listed file ${f.path} changed on disk")
+      f.path -> (f.cell.get, f.size, f.mtime)
+    }.toMap
+
+  /** Write directories under `$idx/$table` (listed or not). */
+  private def writeDirs(idx: String, table: String): Set[String] =
+    Option(new java.io.File(s"$idx/$table").list()).map(_.toSet)
+      .getOrElse(Set.empty)
+
+  /** No table of the index holds a data file its head does not list. */
+  private def noLeftovers(idx: String): Boolean =
+    Seq("verdicts", "shingles", "prefix", "dfreq")
+      .forall(IndexFsProbe.unlisted(spark, idx, _).isEmpty)
+
+  private def crashAt(point: String)(op: => Unit): Unit = {
+    IndexLog.crashPoint = Some(point)
+    try {
+      val ex = intercept[IllegalStateException](op)
+      assert(ex.getMessage.contains(point), ex.getMessage)
+    } finally IndexLog.crashPoint = None
   }
 
   test("append rewrites ONLY affected buckets: untouched bucket files byte-identical") {
@@ -61,18 +80,19 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val idx = java.nio.file.Files.createTempDirectory("clidx-bytes").toString
     Dedup.buildClusterIndex(corpus, idx, threshold = thr)
-    val before = fileStamps(s"$idx/verdicts")
+    val before = verdictFiles(idx)
     assert((0 until 10).forall(k =>
-      before.keys.exists(_.startsWith(s"vb=$k/"))), s"fixture: ${before.keys}")
+      before.values.exists(_._1 == k.toString)), s"fixture: ${before.keys}")
     Dedup.appendToClusterIndex(spark, idx,
       Seq((20L, doc("c4x", "zz"))).toDF("doc_id", "text"))
-    val after = fileStamps(s"$idx/verdicts")
-    val beforeUntouched = before.filterNot(_._1.startsWith("vb=4/"))
-    val afterUntouched = after.filterNot(_._1.startsWith("vb=4/"))
+    val after = verdictFiles(idx)
+    def bucket4(fs: Map[String, (String, Long, Long)]) = fs.filter(_._2._1 == "4")
+    val beforeUntouched = before -- bucket4(before).keys
+    val afterUntouched = after -- bucket4(after).keys
     assert(afterUntouched == beforeUntouched,
       s"untouched buckets moved:\n before=$beforeUntouched\n after=$afterUntouched")
-    assert(after.keys.exists(_.startsWith("vb=4/")) &&
-      after.filter(_._1.startsWith("vb=4/")) != before.filter(_._1.startsWith("vb=4/")),
+    assert(bucket4(after).nonEmpty &&
+      bucket4(after).keySet.intersect(bucket4(before).keySet).isEmpty,
       "the affected bucket must actually have been rewritten")
     // and the verdicts equal a full rebuild
     val rebuilt = java.nio.file.Files.createTempDirectory("clidx-bytes-rb").toString
@@ -80,15 +100,10 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
       corpus.union(Seq((20L, doc("c4x", "zz"))).toDF("doc_id", "text")),
       rebuilt, threshold = thr)
     assert(readVerdicts(idx) == readVerdicts(rebuilt))
-    // swap bookkeeping cleaned up; the committed marker is the durable
-    // record of the appended batch
-    assert(java.nio.file.Files.list(
-      java.nio.file.Paths.get(s"$idx/appends")).iterator().asScala
-      .map(_.getFileName.toString).toSeq
-      .filterNot(_.startsWith(".")) // Hadoop local-FS .crc sidecars
-      .forall(n => n.endsWith(".committed") || n == "_manifest"))
-    assert(!new java.io.File(s"$idx/verdicts.old").exists() ||
-      new java.io.File(s"$idx/verdicts.old").list().isEmpty)
+    // the replaced bucket's old files are deleted with the commit; the
+    // commit records the appended batch's op id
+    assert(noLeftovers(idx))
+    assert(IndexLog.snapshot(spark, idx).ops.size == 1)
     Seq(idx, rebuilt).foreach(d =>
       graft.TmpDirs.deleteRecursively(new java.io.File(d)))
   }
@@ -104,11 +119,12 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     val idx = java.nio.file.Files.createTempDirectory("clidx-empty").toString
     Dedup.buildClusterIndex(corpus, idx, threshold = thr)
-    assert(new java.io.File(s"$idx/verdicts/vb=4").exists())
+    assert(verdictFiles(idx).values.exists(_._1 == "4"))
     val batch = Seq((3L, doc("ax", "t2"))).toDF("doc_id", "text")
     Dedup.appendToClusterIndex(spark, idx, batch)
-    assert(!new java.io.File(s"$idx/verdicts/vb=4").exists(),
-      "emptied bucket dir must be retired")
+    assert(!verdictFiles(idx).values.exists(_._1 == "4"),
+      "the emptied bucket's files must be dropped from the commit")
+    assert(noLeftovers(idx), "the emptied bucket's files must be deleted")
     val rebuilt = java.nio.file.Files.createTempDirectory("clidx-empty-rb").toString
     Dedup.buildClusterIndex(corpus.union(batch), rebuilt, threshold = thr)
     assert(readVerdicts(idx) == readVerdicts(rebuilt))
@@ -116,6 +132,34 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
     assert(labels(100L) == 3L && labels(101L) == 3L && labels(3L) == 3L)
     Seq(idx, rebuilt).foreach(d =>
       graft.TmpDirs.deleteRecursively(new java.io.File(d)))
+  }
+
+  test("snapshot-consistent reads: an append that moves rows between buckets, crashed between its bucket writes, leaves readers on the pre-append verdicts") {
+    // cluster {100, 101} (label 100, bucket 4) merges under batch id 3
+    // (bucket 3): the append rewrites bucket 3 with the relabelled rows
+    // and empties bucket 4. Crashed after those writes, before (or
+    // while writing) its commit, a reader must see every doc exactly
+    // once, with its pre-append verdict — never a relabelled row twice
+    // or missing
+    val corpus = Seq(
+      (100L, doc("ax", "t0")), (101L, doc("ax", "t1")),
+      (16L, doc("f0x", "u0")), (17L, doc("f1x", "u1")))
+      .toDF("doc_id", "text")
+    val batch = Seq((3L, doc("ax", "t2"))).toDF("doc_id", "text")
+    val rebuilt = java.nio.file.Files.createTempDirectory("clidx-snap-rb").toString
+    Dedup.buildClusterIndex(corpus.union(batch), rebuilt, threshold = thr)
+    Seq("clusterapp-after-staging", "clusterapp-mid-commit").foreach { point =>
+      val idx = java.nio.file.Files.createTempDirectory("clidx-snap").toString
+      Dedup.buildClusterIndex(corpus, idx, threshold = thr)
+      val before = verdictRows(idx).sorted
+      assert(before.map(_._1) == Seq(16L, 17L, 100L, 101L))
+      crashAt(point)(Dedup.appendToClusterIndex(spark, idx, batch))
+      assert(verdictRows(idx).sorted == before, s"$point: a reader saw a partial append")
+      Dedup.appendToClusterIndex(spark, idx, batch)
+      assert(verdictRows(idx).sorted == verdictRows(rebuilt).sorted, s"$point: the retry diverged")
+      graft.TmpDirs.deleteRecursively(new java.io.File(idx))
+    }
+    graft.TmpDirs.deleteRecursively(new java.io.File(rebuilt))
   }
 
   test("crash at every failpoint, then retry: converges to the rebuild, no duplicate artifacts") {
@@ -132,22 +176,16 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
     val rebuilt = java.nio.file.Files.createTempDirectory("clidx-crash-rb").toString
     Dedup.buildClusterIndex(corpus.union(batch), rebuilt, threshold = thr)
     val want = readVerdicts(rebuilt)
-    Seq("after-artifacts", "after-staging", "after-intent",
-      "after-bucket-swap-0").foreach { point =>
+    Seq("clusterapp-after-staging", "clusterapp-mid-commit",
+      "clusterapp-after-commit").foreach { point =>
       val idx = java.nio.file.Files.createTempDirectory(s"clidx-crash").toString
       Dedup.buildClusterIndex(corpus, idx, threshold = thr)
-      Dedup.appendCrashPoint = Some(point)
-      try {
-        val ex = intercept[IllegalStateException] {
-          Dedup.appendToClusterIndex(spark, idx, batch)
-        }
-        assert(ex.getMessage.contains(point), ex.getMessage)
-      } finally Dedup.appendCrashPoint = None
+      crashAt(point)(Dedup.appendToClusterIndex(spark, idx, batch))
       // retry of the SAME batch converges
       Dedup.appendToClusterIndex(spark, idx, batch)
       assert(readVerdicts(idx) == want, s"failpoint $point diverged")
       // idempotent artifacts: exactly one shingle row per doc id
-      val shCounts = spark.read.parquet(s"$idx/shingles")
+      val shCounts = IndexLog.snapshot(spark, idx).frame("shingles")
         .groupBy($"__mid").count().filter($"count" > 1).collect()
       assert(shCounts.isEmpty,
         s"failpoint $point left duplicate artifact rows: ${shCounts.toSeq}")
@@ -216,7 +254,7 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
     // fixture sanity: {1,2,3} is ONE cluster through the bridge
     val before = readVerdicts(idx).map(t => t._1 -> t._2).toMap
     assert(before(1L) == 1L && before(2L) == 1L && before(3L) == 1L, before)
-    val stampsBefore = fileStamps(s"$idx/verdicts")
+    val stampsBefore = verdictFiles(idx)
     Dedup.deleteFromClusterIndex(spark, idx, Seq(2L).toDF("doc_id"))
     // the cluster split: A and B are singletons again
     val after = readVerdicts(idx)
@@ -231,11 +269,11 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
       threshold = 0.5)
     assert(readVerdicts(idx) == readVerdicts(rebuilt))
     // O(affected buckets): only buckets 1 (labels 1 and old cluster) and
-    // 3 (the split-off label) may move; 7 and 8's buckets byte-identical
-    val touched = Set("vb=1/", "vb=3/")
-    val stampsAfter = fileStamps(s"$idx/verdicts")
-    assert(stampsAfter.filterNot(s => touched.exists(s._1.startsWith)) ==
-      stampsBefore.filterNot(s => touched.exists(s._1.startsWith)),
+    // 3 (the split-off label) may move; 7 and 8's files carry over
+    val touched = Set("1", "3")
+    val stampsAfter = verdictFiles(idx)
+    assert(stampsAfter.filterNot(s => touched(s._2._1)) ==
+      stampsBefore.filterNot(s => touched(s._2._1)),
       "untouched buckets moved")
     Seq(idx, rebuilt).foreach(d =>
       graft.TmpDirs.deleteRecursively(new java.io.File(d)))
@@ -250,16 +288,11 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
     Dedup.buildClusterIndex(corpus.filter($"doc_id" =!= 2L), rebuilt,
       threshold = 0.5)
     val want = readVerdicts(rebuilt)
-    Seq("after-staging", "after-intent", "after-bucket-swap-0").foreach { point =>
+    Seq("clusterdel-after-staging", "clusterdel-mid-commit",
+      "clusterdel-after-commit").foreach { point =>
       val idx = java.nio.file.Files.createTempDirectory("clidx-delc").toString
       Dedup.buildClusterIndex(corpus, idx, threshold = 0.5)
-      Dedup.appendCrashPoint = Some(point)
-      try {
-        val ex = intercept[IllegalStateException] {
-          Dedup.deleteFromClusterIndex(spark, idx, Seq(2L).toDF("doc_id"))
-        }
-        assert(ex.getMessage.contains(point), ex.getMessage)
-      } finally Dedup.appendCrashPoint = None
+      crashAt(point)(Dedup.deleteFromClusterIndex(spark, idx, Seq(2L).toDF("doc_id")))
       Dedup.deleteFromClusterIndex(spark, idx, Seq(2L).toDF("doc_id"))
       assert(readVerdicts(idx) == want, s"failpoint $point diverged")
       // a FURTHER retry of the committed delete is a silent no-op
@@ -322,25 +355,20 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
     val idx = java.nio.file.Files.createTempDirectory("clidx-gc").toString
     Dedup.buildClusterIndex(corpus, idx, threshold = thr)
     // one COMMITTED append, then one append CRASHED right after its
-    // artifacts landed and never retried — the orphan gc exists for
+    // files landed and never retried — the orphans gc exists for
     Dedup.appendToClusterIndex(spark, idx,
       Seq((10L, doc("ax", "t1"))).toDF("doc_id", "text"))
-    Dedup.appendCrashPoint = Some("after-artifacts")
-    try intercept[IllegalStateException] {
-      Dedup.appendToClusterIndex(spark, idx,
-        Seq((11L, doc("bx", "u1"))).toDF("doc_id", "text"))
-    } finally Dedup.appendCrashPoint = None
-    def appParts(d: String): Set[String] =
-      Option(new java.io.File(s"$idx/$d").list()).map(_.toSet)
-        .getOrElse(Set.empty).filter(_.startsWith("__app="))
-    assert(appParts("shingles").size == 3 && appParts("prefix").size == 3,
-      s"fixture: ${appParts("shingles")}") // build + committed + orphan
+    crashAt("clusterapp-after-staging")(Dedup.appendToClusterIndex(spark, idx,
+      Seq((11L, doc("bx", "u1"))).toDF("doc_id", "text")))
+    assert(writeDirs(idx, "shingles").size == 3 && writeDirs(idx, "prefix").size == 3,
+      s"fixture: ${writeDirs(idx, "shingles")}") // build + committed + orphan
     val verdictsBefore = readVerdicts(idx)
     Dedup.gcClusterIndex(spark, idx)
-    // the orphan partition is gone; build + committed remain; verdicts
+    // the orphan writes are gone; build + committed remain; verdicts
     // untouched; and the index still appends fine afterwards
-    assert(appParts("shingles").size == 2 && appParts("prefix").size == 2,
-      s"after gc: ${appParts("shingles")}")
+    assert(writeDirs(idx, "shingles").size == 2 && writeDirs(idx, "prefix").size == 2,
+      s"after gc: ${writeDirs(idx, "shingles")}")
+    assert(noLeftovers(idx))
     assert(readVerdicts(idx) == verdictsBefore)
     Dedup.appendToClusterIndex(spark, idx,
       Seq((11L, doc("bx", "u1"))).toDF("doc_id", "text"))
@@ -353,45 +381,45 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
     val corpus = Seq((1L, doc("ax", "t0"))).toDF("doc_id", "text")
     val idx = java.nio.file.Files.createTempDirectory("clidx-gc-fwd").toString
     Dedup.buildClusterIndex(corpus, idx, threshold = thr)
-    // crash AFTER the intent journal: the staged data is complete, so
-    // gc's recovery must finish the swap (artifacts become committed),
-    // not reap the partition
-    Dedup.appendCrashPoint = Some("after-intent")
-    try intercept[IllegalStateException] {
-      Dedup.appendToClusterIndex(spark, idx,
-        Seq((5L, doc("ax", "t1"))).toDF("doc_id", "text"))
-    } finally Dedup.appendCrashPoint = None
+    val before = readVerdicts(idx)
+    // crash while writing the commit: every file landed, the commit is
+    // torn, so the append is unapplied until retried — gc reaps its
+    // files instead of finishing it
+    val batch = Seq((5L, doc("ax", "t1"))).toDF("doc_id", "text")
+    crashAt("clusterapp-mid-commit")(Dedup.appendToClusterIndex(spark, idx, batch))
     Dedup.gcClusterIndex(spark, idx)
+    assert(readVerdicts(idx) == before)
+    assert(writeDirs(idx, "shingles").size == 1, writeDirs(idx, "shingles"))
+    // the retry replaces the torn commit and applies the append
+    Dedup.appendToClusterIndex(spark, idx, batch)
     val labels = readVerdicts(idx).map(t => t._1 -> t._2).toMap
-    assert(labels(5L) == 1L, labels) // rolled forward
-    val parts = Option(new java.io.File(s"$idx/shingles").list())
-      .map(_.toSet).getOrElse(Set.empty).filter(_.startsWith("__app="))
-    assert(parts.size == 2, parts) // build + the rolled-forward append
+    assert(labels(5L) == 1L, labels)
+    assert(writeDirs(idx, "shingles").size == 2) // build + the retried append
     graft.TmpDirs.deleteRecursively(new java.io.File(idx))
   }
 
   test("commit markers are liveness-gated: delete -> re-append -> delete-again executes (and the mirror)") {
-    // the marker alone is STALE across the inverse op: the first
-    // delete's marker must not swallow the second delete after a
+    // the recorded op id alone is STALE across the inverse op: the
+    // first delete's op id must not swallow the second delete after a
     // re-append (a repeated single-id takedown), and the first append's
-    // marker must not swallow a re-append of the exact same batch after
+    // op id must not swallow a re-append of the exact same batch after
     // a delete. Both directions, pinned against rebuilds.
     val corpus = Seq((1L, doc("ax", "t0")), (2L, doc("bx", "u0")))
       .toDF("doc_id", "text")
     val idx = java.nio.file.Files.createTempDirectory("clidx-liveness").toString
     Dedup.buildClusterIndex(corpus, idx, threshold = thr)
     val batch = Seq((5L, doc("ax", "t9"))).toDF("doc_id", "text")
-    Dedup.appendToClusterIndex(spark, idx, batch) // marker(append{5}) lands
+    Dedup.appendToClusterIndex(spark, idx, batch) // op id append{5} recorded
     assert(readVerdicts(idx).map(_._1) == Set(1L, 2L, 5L))
-    Dedup.deleteFromClusterIndex(spark, idx, Seq(5L).toDF("doc_id")) // marker(del:5)
+    Dedup.deleteFromClusterIndex(spark, idx, Seq(5L).toDF("doc_id")) // op id del:5 recorded
     assert(readVerdicts(idx).map(_._1) == Set(1L, 2L))
-    // re-append the EXACT same batch: append marker exists but 5 is
+    // re-append the EXACT same batch: append op id recorded but 5 is
     // dead — must execute, not silently no-op
     Dedup.appendToClusterIndex(spark, idx, batch)
     val labels = readVerdicts(idx).map(t => t._1 -> t._2).toMap
     assert(labels.keySet == Set(1L, 2L, 5L) && labels(5L) == 1L,
       s"re-append after delete silently no-opped: $labels")
-    // delete AGAIN: delete marker exists but 5 is live — must execute
+    // delete AGAIN: delete op id recorded but 5 is live — must execute
     Dedup.deleteFromClusterIndex(spark, idx, Seq(5L).toDF("doc_id"))
     assert(readVerdicts(idx).map(_._1) == Set(1L, 2L),
       "second delete of a re-appended id silently no-opped")
@@ -414,7 +442,7 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
       .toDF("doc_id", "text")
     Dedup.appendToClusterIndex(spark, idx, batch)
     Dedup.deleteFromClusterIndex(spark, idx, Seq(10L).toDF("doc_id"))
-    // append{10,11}'s marker exists; 11 live, 10 dead -> ambiguous
+    // append{10,11}'s op id is recorded; 11 live, 10 dead -> ambiguous
     // partial state must fail loud on the live id, not no-op or re-add
     val ex = intercept[IllegalArgumentException] {
       Dedup.appendToClusterIndex(spark, idx, batch)
@@ -488,11 +516,8 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
     Dedup.deleteFromClusterIndex(spark, idx, Seq(3L, 4L).toDF("doc_id"))
     Dedup.appendToClusterIndex(spark, idx,
       Seq((3L, doc("bx", "u9"))).toDF("doc_id", "text"))
-    Dedup.appendCrashPoint = Some("after-artifacts")
-    try intercept[IllegalStateException] {
-      Dedup.appendToClusterIndex(spark, idx,
-        Seq((9L, doc("cx", "w0"))).toDF("doc_id", "text"))
-    } finally Dedup.appendCrashPoint = None
+    crashAt("clusterapp-after-staging")(Dedup.appendToClusterIndex(spark, idx,
+      Seq((9L, doc("cx", "w0"))).toDF("doc_id", "text")))
     def shingleReport(): Map[String, Long] =
       Dedup.clusterIndexArtifactReport(spark, idx)
         .filter($"dir" === "shingles")
@@ -503,11 +528,13 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
     Dedup.compactClusterIndexArtifacts(spark, idx)
     assert(shingleReport() == Map("live_current" -> 3L, "shadowed" -> 0L,
       "dead" -> 0L, "orphan" -> 0L), shingleReport())
-    // physically: one consolidated row per live doc, all under build
-    val sh = spark.read.parquet(s"$idx/shingles")
-      .select($"__mid", $"__app").collect()
-    assert(sh.map(_.getLong(0)).toSet == Set(1L, 2L, 3L) &&
-      sh.map(_.getString(1)).toSet == Set("build"), sh.toSeq)
+    // physically: one row per live doc, all in the compaction's cell,
+    // and no file left that the head does not list
+    val head = IndexLog.snapshot(spark, idx)
+    val sh = head.frame("shingles").select($"__mid", $"__app").collect()
+    assert(sh.map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L) &&
+      sh.map(_.getLong(1)).toSet == Set(head.version), sh.toSeq)
+    assert(noLeftovers(idx))
     assert(readVerdicts(idx) == verdictsBefore, "compaction touched verdicts")
     // maintenance after compaction: verification resolves against the
     // consolidated arrays (3 re-clusters with 2 on a fresh probe), and
@@ -528,23 +555,17 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
     val corpus = Seq(
       (1L, doc("ax", "t0")), (2L, doc("bx", "u0")), (3L, doc("ax", "t9")))
       .toDF("doc_id", "text")
-    Seq("after-compact-staging-shingles", "mid-compact-swap-shingles",
-      "after-compact-staging-prefix", "mid-compact-swap-prefix")
+    Seq("clustercompact-after-staging", "clustercompact-mid-commit",
+      "clustercompact-after-commit")
       .foreach { point =>
         val idx = java.nio.file.Files.createTempDirectory("clidx-cc").toString
         Dedup.buildClusterIndex(corpus, idx, threshold = thr)
         Dedup.deleteFromClusterIndex(spark, idx, Seq(3L).toDF("doc_id"))
         Dedup.appendToClusterIndex(spark, idx,
           Seq((3L, doc("bx", "u9"))).toDF("doc_id", "text"))
-        Dedup.appendCrashPoint = Some(point)
-        try {
-          val ex = intercept[IllegalStateException] {
-            Dedup.compactClusterIndexArtifacts(spark, idx)
-          }
-          assert(ex.getMessage.contains(point), ex.getMessage)
-        } finally Dedup.appendCrashPoint = None
-        // a maintenance op right after the crash heals the store via
-        // recovery and lands correctly
+        crashAt(point)(Dedup.compactClusterIndexArtifacts(spark, idx))
+        // a maintenance op right after the crash reads the last
+        // committed store and lands correctly
         Dedup.appendToClusterIndex(spark, idx,
           Seq((5L, doc("ax", "t8"))).toDF("doc_id", "text"))
         val rebuilt = java.nio.file.Files.createTempDirectory("clidx-cc-rb").toString
@@ -570,25 +591,23 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
     // this property covers their INTERLEAVINGS: a random sequence of
     // append / delete / compact / gc where each op may crash at a
     // random failpoint and then be RETRIED — or ABANDONED entirely.
-    // An abandoned crash in a pre-journal window (rollback points) must
-    // leave the op unapplied; one in a post-journal window (forward
-    // points) must be completed by the NEXT op's recovery. The index
-    // must stay row-identical to a from-scratch rebuild over the
-    // driver-side mirror of the live corpus (gc runs before each
-    // compare to flush pending roll-forwards — itself a legit
-    // lifecycle op). Re-appends of deleted ids carry NEW text, so
-    // artifact resolution is exercised under churn too.
+    // An abandoned crash before the commit (rollback points) must leave
+    // the op unapplied until retried; one after it (forward points)
+    // leaves it applied. The index must stay row-identical to a
+    // from-scratch rebuild over the driver-side mirror of the live
+    // corpus (gc runs before each compare — itself a legit lifecycle
+    // op). Re-appends of deleted ids carry NEW text, so artifact
+    // resolution is exercised under churn too.
     val vocab = Seq("a", "b", "c", "d")
     def randText(rnd: scala.util.Random): String =
       Seq.fill(rnd.nextInt(16) + 4)(vocab(rnd.nextInt(vocab.length)))
         .mkString(" ")
-    val appendRollback = Seq("after-artifacts", "after-staging")
-    val appendForward = Seq("after-intent", "after-bucket-swap-0")
-    val deleteRollback = Seq("after-staging")
-    val deleteForward = Seq("after-intent", "after-bucket-swap-0")
-    val compactPoints = Seq("after-compact-staging-shingles",
-      "mid-compact-swap-shingles", "after-compact-staging-prefix",
-      "mid-compact-swap-prefix")
+    val appendRollback = Seq("clusterapp-after-staging", "clusterapp-mid-commit")
+    val appendForward = Seq("clusterapp-after-commit")
+    val deleteRollback = Seq("clusterdel-after-staging", "clusterdel-mid-commit")
+    val deleteForward = Seq("clusterdel-after-commit")
+    val compactPoints = Seq("clustercompact-after-staging",
+      "clustercompact-mid-commit", "clustercompact-after-commit")
     for (seed <- Seq(11, 29)) {
       val rnd = new scala.util.Random(seed)
       var nextId = 0L
@@ -601,12 +620,6 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
       freshIds(20).foreach(i => mirror(i) = randText(rnd))
       Dedup.buildClusterIndex(mirror.toSeq.toDF("doc_id", "text"), idx,
         threshold = 0.5, nBuckets = 8)
-      def crashAt(p: String)(op: => Unit): Unit = {
-        Dedup.appendCrashPoint = Some(p)
-        try { val e = intercept[IllegalStateException](op)
-          assert(e.getMessage.contains(p), e.getMessage) }
-        finally Dedup.appendCrashPoint = None
-      }
       /** Runs op under one of: clean; crash+retry; crash+abandon.
         * Returns true iff the op is (eventually) APPLIED. */
       def runOp(rollback: Seq[String], forward: Seq[String])
@@ -616,22 +629,14 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
           val all = rollback ++ forward
           crashAt(all(rnd.nextInt(all.length)))(op)
           op; true
-        case 3 => // abandon in a pre-journal window: never applied
+        case 3 => // abandon before the commit: never applied
           crashAt(rollback(rnd.nextInt(rollback.length)))(op)
           false
-        case 4 => // abandon post-journal: next recovery rolls it forward
+        case 4 => // abandon after the commit: applied
           if (forward.isEmpty) { op; true }
           else { crashAt(forward(rnd.nextInt(forward.length)))(op); true }
       }
       (0 until 6).foreach { step =>
-        // manifest chaos: the sequence cache may vanish at any point
-        // (object-store eviction, manual cleanup) — ops must keep
-        // resolving from the marker files and re-heal it
-        if (rnd.nextInt(3) == 0) {
-          new java.io.File(s"$idx/appends/_manifest").delete()
-          new java.io.File(s"$idx/appends/._manifest.crc").delete()
-          ()
-        }
         rnd.nextInt(4) match {
           case 0 => // append: mix of fresh ids and deleted ids, new text
             val back = retired.toSeq.sorted.filter(_ => rnd.nextBoolean())
@@ -661,7 +666,7 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
             Dedup.gcClusterIndex(spark, idx)
         }
         if (step % 2 == 1 || step == 5) {
-          Dedup.gcClusterIndex(spark, idx) // flush pending roll-forwards
+          Dedup.gcClusterIndex(spark, idx)
           val rb = java.nio.file.Files.createTempDirectory(s"clidx-chaos-rb").toString
           Dedup.buildClusterIndex(mirror.toSeq.toDF("doc_id", "text"), rb,
             threshold = 0.5, nBuckets = 8)
@@ -673,71 +678,6 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
       }
       graft.TmpDirs.deleteRecursively(new java.io.File(idx))
     }
-  }
-
-  test("commit-marker manifest caches sequences; missing/stale manifest and tmp leftovers self-heal") {
-    val corpus = (0 until 8).map(i => (i.toLong, doc(s"m${i}x", s"t$i")))
-      .toDF("doc_id", "text")
-    val idx = java.nio.file.Files.createTempDirectory("clidx-manifest").toString
-    Dedup.buildClusterIndex(corpus, idx, threshold = thr)
-    Dedup.appendToClusterIndex(spark, idx,
-      Seq((20L, doc("m1x", "aa"))).toDF("doc_id", "text"))
-    Dedup.appendToClusterIndex(spark, idx,
-      Seq((21L, doc("m2x", "bb"))).toDF("doc_id", "text"))
-    def markerSeqs(): Map[String, Long] = {
-      val dir = new java.io.File(s"$idx/appends")
-      dir.listFiles().filter(_.getName.endsWith(".committed")).map { f =>
-        val s = java.nio.file.Files.readString(f.toPath).trim
-        f.getName.stripSuffix(".committed") -> (if (s.isEmpty) 0L else s.toLong)
-      }.toMap
-    }
-    def manifestSeqs(): Map[String, Long] =
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$idx/appends/_manifest"))
-        .linesIterator.filter(_.nonEmpty).map { l =>
-          val i = l.lastIndexOf(' ')
-          l.substring(0, i) -> l.substring(i + 1).toLong
-        }.toMap
-    // the manifest mirrors the marker files exactly (2 appends)
-    assert(markerSeqs().size == 2)
-    assert(manifestSeqs() == markerSeqs())
-    // LEGACY path: a pre-manifest index (manifest deleted) still reads
-    // its sequences from the markers, and the next commit re-heals the
-    // manifest with every committed op
-    assert(new java.io.File(s"$idx/appends/_manifest").delete())
-    new java.io.File(s"$idx/appends/._manifest.crc").delete() // hadoop local-FS sidecar
-    // a stale tmp leftover (crash between stage and swap) is harmless
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$idx/appends/_manifest.tmp"), "junk junk")
-    Dedup.appendToClusterIndex(spark, idx,
-      Seq((22L, doc("m3x", "cc"))).toDF("doc_id", "text"))
-    assert(markerSeqs().size == 3)
-    assert(manifestSeqs() == markerSeqs(),
-      "manifest must re-heal to the full marker set after deletion")
-    // a STRAGGLER marker (committed op whose manifest write crashed —
-    // simulated by evicting its entry) is read directly and re-healed
-    val full = manifestSeqs()
-    val evicted = full - full.keys.head
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$idx/appends/_manifest"),
-      evicted.map { case (a, s) => s"$a $s" }.mkString("\n"))
-    new java.io.File(s"$idx/appends/._manifest.crc").delete() // stale sidecar
-    // maintenance still resolves every artifact correctly: compaction
-    // + report see all three appends' sequences (straggler included)
-    Dedup.compactClusterIndexArtifacts(spark, idx)
-    val rep = Dedup.clusterIndexArtifactReport(spark, idx)
-      .filter(col("kind") =!= "live_current")
-      .agg(sum(col("n_rows"))).collect()(0).getLong(0)
-    assert(rep == 0L, s"non-current artifact rows after compaction: $rep")
-    // and the verdicts still equal a full rebuild
-    val rebuilt = java.nio.file.Files.createTempDirectory("clidx-manifest-rb").toString
-    Dedup.buildClusterIndex(
-      corpus.union(Seq((20L, doc("m1x", "aa")), (21L, doc("m2x", "bb")),
-        (22L, doc("m3x", "cc"))).toDF("doc_id", "text")),
-      rebuilt, threshold = thr)
-    assert(readVerdicts(idx) == readVerdicts(rebuilt))
-    Seq(idx, rebuilt).foreach(d =>
-      graft.TmpDirs.deleteRecursively(new java.io.File(d)))
   }
 
   test("IVF append refuses an intra-batch duplicate id loud") {

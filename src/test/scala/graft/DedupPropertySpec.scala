@@ -280,7 +280,7 @@ class DedupPropertySpec extends SparkTestBase {
 
   /** (doc_id, canon_id, cluster_size, score, keep) rows of an index. */
   private def verdictRows(path: String): Set[(Long, Long, Long, Double, Boolean)] =
-    spark.read.parquet(s"$path/verdicts")
+    graft.ops.IndexLog.snapshot(spark, path).frame("verdicts")
       .select("doc_id", "canon_id", "cluster_size", "score", "keep")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3),
@@ -487,7 +487,7 @@ class DedupPropertySpec extends SparkTestBase {
         graft.ops.Dedup.deleteFromClusterIndex(spark, newIdx,
           delIndexed.toDF("doc_id"))
       def labelsOf(p: String): Map[Long, Long] =
-        spark.read.parquet(s"$p/verdicts").select("doc_id", "canon_id")
+        graft.ops.IndexLog.snapshot(spark, p).frame("verdicts").select("doc_id", "canon_id")
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val lo = labelsOf(oldIdx); val ln = labelsOf(newIdx)
       // driver-side reference classification
@@ -511,8 +511,8 @@ class DedupPropertySpec extends SparkTestBase {
       ref("docs_added") += ln.keys.count(!lo.contains(_))
       ref("docs_carried") += lo.keys.count(ln.contains)
       val got = graft.ops.Dedup.clusterIndexTransitions(
-          spark.read.parquet(s"$oldIdx/verdicts"),
-          spark.read.parquet(s"$newIdx/verdicts"))
+          graft.ops.IndexLog.snapshot(spark, oldIdx).frame("verdicts"),
+          graft.ops.IndexLog.snapshot(spark, newIdx).frame("verdicts"))
         .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
       val want = Seq("old_removed", "old_split", "old_intact",
         "new_newborn", "new_merged", "new_enlarged", "new_carried",

@@ -3,11 +3,12 @@ package graft
 import graft.ops.{Dedup, IndexLog, Similarity}
 import org.apache.spark.sql.DataFrame
 
-/** The commit log behind the IVF, semantic-dedup and near-dup indexes:
+/** The commit log behind the IVF, semantic-dedup, near-dup and near-dup
+  * cluster indexes:
   *
-  *   - the three lifecycles (build → append → delete → compact →
-  *     rebuild, as far as each index has the ops) run on a store that
-  *     refuses every rename outside Spark's own `_temporary/`, and
+  *   - the four lifecycles (build → append → delete → compact →
+  *     rebuild or gc, as far as each index has the ops) run on a store
+  *     that refuses every rename outside Spark's own `_temporary/`, and
   *     serve exactly what the same lifecycle serves on a local root;
   *   - a second writer of one version fails loud; a torn commit reads
   *     as not committed and the next writer replaces it;
@@ -77,7 +78,21 @@ class IndexLogSpec extends SparkTestBase {
     Dedup.buildNearDupIndex(docs.filter($"doc_id" % 10 =!= 0), nd)
     val first = near()
     Dedup.buildNearDupIndex(docs.filter($"doc_id" % 10 =!= 0), nd, k = 12, bands = 6)
-    ivfOut ++ semOut ++ Seq(first, near())
+    val ndOut = Seq(first, near())
+
+    val cl = s"$root/cl"
+    def verdicts() = rows(IndexLog.snapshot(spark, cl).frame("verdicts"))
+    def report() = rows(Dedup.clusterIndexArtifactReport(spark, cl))
+    Dedup.buildClusterIndex(docs.filter($"doc_id" % 10 =!= 0), cl,
+      threshold = 0.5, nBuckets = 8)
+    Dedup.appendToClusterIndex(spark, cl, docs.filter($"doc_id" % 10 === 0))
+    val clAppended = verdicts()
+    Dedup.deleteFromClusterIndex(spark, cl,
+      docs.filter($"doc_id" % 7 === 3).select($"doc_id"))
+    val clOut = Seq(clAppended, verdicts(), report())
+    Dedup.compactClusterIndexArtifacts(spark, cl)
+    Dedup.gcClusterIndex(spark, cl)
+    ivfOut ++ semOut ++ ndOut ++ clOut ++ Seq(verdicts(), report())
   }
 
   test("IVF, semantic-dedup and near-dup lifecycles run on a store that refuses every rename outside _temporary/") {

@@ -201,4 +201,71 @@ class LatestImageSpec extends SparkTestBase
       sink.begin(Insert, 1L, 0L, null, null, 1, 1L << 32))
     assert(e.getMessage.contains("4 GiB"), e.getMessage)
   }
+
+  test("__pos: a stream reads the same positions as the batch scan") {
+    val index = ChangeLogs.write("mysql", Seq(
+      Seq((1L, Insert, 1.0), (2L, Insert, 2.0)),
+      Seq((1L, UpdateAfter, 3.0), (2L, Delete, 0.0))))
+    def withPos(df: DataFrame): DataFrame =
+      df.select(col("id"), col(CdcSchema.OpCol), df.metadataColumn(CdcSchema.PosCol))
+    def rows(df: DataFrame): Seq[(Long, Int, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSeq.sorted
+    val batch = rows(withPos(ChangeLogs.read(spark, "mysql", index)))
+    assert(batch.map(_._3).distinct.length == batch.length)
+    val stream = spark.readStream.format("binlogcdc").option("indexFile", index)
+      .option("database", "db").option("table", "t").option("binlogFormat", "mysql")
+      .load()
+    val dir = Files.createTempDirectory("cdc-stream-pos").toString
+    val q = withPos(stream).writeStream.format("memory").queryName("stream_pos")
+      .option("checkpointLocation", dir).start()
+    try q.processAllAvailable() finally q.stop()
+    assert(rows(spark.table("stream_pos")) == batch)
+    graft.TmpDirs.deleteRecursively(new java.io.File(dir))
+  }
+
+  test("streaming latest image folds in log order: same-transaction update→delete and insert→delete") {
+    // the orders shape latestImageStream reads; gtid 2 updates then
+    // deletes key 1, inserts then deletes key 5, updates key 2 twice
+    val schema = StructType(Seq(StructField("o_orderkey", LongType),
+      StructField("o_custkey", LongType), StructField("o_totalprice", DoubleType)))
+    val dir = Files.createTempDirectory("cdc-stream-latest").toString
+    val w = new MysqlBinlog.Writer(s"$dir/mysql-bin.000001")
+    def row(k: Long, price: Double): Array[Any] = Array[Any](k, 10L * k, price)
+    w.gtid(1000L, 1L, "3e11fa47-71ca-11e1-9e33-c80aa9429562")
+    w.tableMap(1000L, 7L, "db", "orders", schema)
+    w.writeRows(1000L, 7L, schema, Seq(row(1, 1.0), row(2, 1.0), row(3, 1.0)))
+    w.xid(1000L, 1L)
+    w.gtid(2000L, 2L, "3e11fa47-71ca-11e1-9e33-c80aa9429562")
+    w.tableMap(2000L, 7L, "db", "orders", schema)
+    w.updateRows(2000L, 7L, schema, Seq((row(1, 1.0), row(1, 2.0))))
+    w.writeRows(2000L, 7L, schema, Seq(row(5, 5.0)))
+    w.updateRows(2000L, 7L, schema, Seq((row(2, 1.0), row(2, 2.0))))
+    w.deleteRows(2000L, 7L, schema, Seq(row(1, 2.0), row(5, 5.0)))
+    w.updateRows(2000L, 7L, schema, Seq((row(2, 2.0), row(2, 3.0))))
+    w.xid(2000L, 2L)
+    w.close()
+    Files.writeString(Paths.get(dir, "binlog.index"), "mysql-bin.000001\n")
+    val opts = Map("indexFile" -> s"$dir/binlog.index", "database" -> "db",
+      "table" -> "orders", "binlogFormat" -> "mysql")
+    val want = Cdc.latestImage(spark.read.format("binlogcdc").options(opts).load(),
+        Seq("o_orderkey"))
+      .select("o_orderkey", "o_totalprice").collect()
+      .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    assert(want == Map(2L -> 3.0, 3L -> 1.0))
+    val q = graft.streaming.StreamOps.latestImageStream(
+        spark.readStream.format("binlogcdc").options(opts).load())
+      .writeStream.format("memory").queryName("latest_image_log_order")
+      .outputMode("update").option("checkpointLocation", s"$dir/ckpt").start()
+    val got = try {
+      q.processAllAvailable()
+      // update-mode rows in batch order: the last one per key is its state
+      spark.table("latest_image_log_order").collect()
+        .foldLeft(Map.empty[Long, (Boolean, Double)]) { (m, r) =>
+          m.updated(r.getAs[Long]("o_orderkey"),
+            (r.getAs[Boolean]("deleted"), r.getAs[Double]("o_totalprice")))
+        }.collect { case (k, (false, price)) => k -> price }
+    } finally q.stop()
+    assert(got == want)
+    graft.TmpDirs.deleteRecursively(new java.io.File(dir))
+  }
 }

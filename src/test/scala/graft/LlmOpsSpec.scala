@@ -133,18 +133,18 @@ class LlmOpsSpec extends SparkTestBase {
     val thr = 0.7
     val idx = java.nio.file.Files.createTempDirectory("clidx-app").toString
     Dedup.buildClusterIndex(corpus, idx, threshold = thr)
-    val before = spark.read.parquet(s"$idx/verdicts")
+    val before = graft.ops.IndexLog.snapshot(spark, idx).frame("verdicts")
       .select("doc_id", "canon_id")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(before(9000L) != before(9001L),
       "fixture defect: A and B must start in separate clusters")
     Dedup.appendToClusterIndex(spark, idx, batch)
-    val got = spark.read.parquet(s"$idx/verdicts")
+    val got = graft.ops.IndexLog.snapshot(spark, idx).frame("verdicts")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getBoolean(4))).toSet
     val rebuilt = java.nio.file.Files.createTempDirectory("clidx-full").toString
     Dedup.buildClusterIndex(corpus.union(batch), rebuilt, threshold = thr)
-    val want = spark.read.parquet(s"$rebuilt/verdicts")
+    val want = graft.ops.IndexLog.snapshot(spark, rebuilt).frame("verdicts")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getBoolean(4))).toSet
     assert(got == want,
@@ -164,10 +164,10 @@ class LlmOpsSpec extends SparkTestBase {
     val rebuilt2 = java.nio.file.Files.createTempDirectory("clidx-full2").toString
     Dedup.buildClusterIndex(corpus.union(batch).union(batch2), rebuilt2,
       threshold = thr)
-    val got2 = spark.read.parquet(s"$idx/verdicts")
+    val got2 = graft.ops.IndexLog.snapshot(spark, idx).frame("verdicts")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getBoolean(4))).toSet
-    val want2 = spark.read.parquet(s"$rebuilt2/verdicts")
+    val want2 = graft.ops.IndexLog.snapshot(spark, rebuilt2).frame("verdicts")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
         r.getDouble(3), r.getBoolean(4))).toSet
     assert(got2 == want2, "second append diverged from the 3-way rebuild")

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, IndexLog}
 import graft.streaming.StreamOps
 import org.apache.spark.sql.functions._
 
@@ -219,11 +219,11 @@ class SemDedupGateSpec extends SparkTestBase {
         "embedding", "vec_id", 0.4))
       val gated = sorted(StreamOps.semDedupGateBatch(spark, idx, batch,
         "embedding", "vec_id", 0.4))
-      Dedup.appendCrashPoint = Some(pt)
+      IndexLog.crashPoint = Some(pt)
       try {
         val e = intercept[IllegalStateException](rebuild())
         assert(e.getMessage.contains(pt))
-      } finally Dedup.appendCrashPoint = None
+      } finally IndexLog.crashPoint = None
       // the half-rebuilt index is invisible: probe and gate serve
       // exactly the last committed index
       assert(sorted(Dedup.semDedupFromIndex(spark, idx, batch,
@@ -242,9 +242,9 @@ class SemDedupGateSpec extends SparkTestBase {
     // a FIRST build that crashed (nothing committed, a torn commit file
     // on disk) is visibly un-built: probe and gate refuse loud
     val fresh = java.nio.file.Files.createTempDirectory("semgate-crash-first").toString
-    Dedup.appendCrashPoint = Some("semdedup-mid-commit")
+    IndexLog.crashPoint = Some("semdedup-mid-commit")
     try intercept[IllegalStateException](buildIdx(fresh))
-    finally Dedup.appendCrashPoint = None
+    finally IndexLog.crashPoint = None
     val p = intercept[IllegalArgumentException] {
       Dedup.semDedupFromIndex(spark, fresh, batch, "embedding", "vec_id", 0.4)
     }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.ops.Dedup
+import graft.ops.{Dedup, IndexLog}
 import org.apache.spark.sql.functions._
 
 /** Lifecycle of the persisted semantic-dedup index past the build:
@@ -149,9 +149,9 @@ class SemDedupIndexLifecycleSpec extends SparkTestBase {
         "semapp-after-commit" -> (postProbe, expectedMembers))) {
       val root = freshRoot(s"crash-$point")
       buildIdx(root, corpus)
-      Dedup.appendCrashPoint = Some(point)
+      IndexLog.crashPoint = Some(point)
       try intercept[IllegalStateException] { append(root, batch) }
-      finally Dedup.appendCrashPoint = None
+      finally IndexLog.crashPoint = None
       assert(probe(root, rest) == seenProbe,
         s"$point: readers do not see exactly the last committed state")
       assert(membersSet(root) == seenMembers, s"$point: members diverge")
@@ -276,10 +276,10 @@ class SemDedupIndexLifecycleSpec extends SparkTestBase {
         "semdel-mid-commit" -> preProbe, "semdel-after-commit" -> postProbe)) {
       val root = freshRoot(s"delc-$point")
       buildIdx(root, corpus)
-      Dedup.appendCrashPoint = Some(point)
+      IndexLog.crashPoint = Some(point)
       try intercept[IllegalStateException] {
         Dedup.deleteFromSemDedupIndex(spark, root, delIds, "vec_id")
-      } finally Dedup.appendCrashPoint = None
+      } finally IndexLog.crashPoint = None
       assert(probe(root, arrivals) == seen,
         s"$point: readers do not see exactly the last committed state")
       Dedup.deleteFromSemDedupIndex(spark, root, delIds, "vec_id")
@@ -304,10 +304,10 @@ class SemDedupIndexLifecycleSpec extends SparkTestBase {
     Dedup.deleteFromSemDedupIndex(spark, root, delIds, "vec_id")
     append(root, batch) // re-append (marker stale from here on)
     val reappended = membersSet(root)
-    Dedup.appendCrashPoint = Some("semdel-mid-commit")
+    IndexLog.crashPoint = Some("semdel-mid-commit")
     try intercept[IllegalStateException] {
       Dedup.deleteFromSemDedupIndex(spark, root, delIds, "vec_id")
-    } finally Dedup.appendCrashPoint = None
+    } finally IndexLog.crashPoint = None
     assert(membersSet(root) == reappended,
       "readers do not see exactly the last committed state")
     Dedup.deleteFromSemDedupIndex(spark, root, delIds, "vec_id") // retry
@@ -329,9 +329,9 @@ class SemDedupIndexLifecycleSpec extends SparkTestBase {
     Dedup.deleteFromSemDedupIndex(spark, root, batch.select($"vec_id"),
       "vec_id")
     val afterDelete = membersSet(root)
-    Dedup.appendCrashPoint = Some("semapp-after-staging")
+    IndexLog.crashPoint = Some("semapp-after-staging")
     try intercept[IllegalStateException] { append(root, batch) }
-    finally Dedup.appendCrashPoint = None
+    finally IndexLog.crashPoint = None
     assert(membersSet(root) == afterDelete,
       "readers do not see exactly the last committed state")
     val retried = append(root, batch) // must redo, not wedge
@@ -384,14 +384,14 @@ class SemDedupIndexLifecycleSpec extends SparkTestBase {
     val root = freshRoot("rebuild-mixed")
     buildIdx(root, corpus)
     val beforeRows = membersSet(root).map(t => (t._1, t._3))
-    Dedup.appendCrashPoint = Some("semrebuild-mid-commit")
+    IndexLog.crashPoint = Some("semrebuild-mid-commit")
     try intercept[IllegalStateException] {
       Dedup.rebuildSemDedupIndex(spark, root)
-    } finally Dedup.appendCrashPoint = None
-    Dedup.appendCrashPoint = Some("semrebuild-after-staging")
+    } finally IndexLog.crashPoint = None
+    IndexLog.crashPoint = Some("semrebuild-after-staging")
     try intercept[IllegalStateException] {
       Dedup.rebuildSemDedupIndex(spark, root) // replaces the torn commit's attempt, then crashes
-    } finally Dedup.appendCrashPoint = None
+    } finally IndexLog.crashPoint = None
     val sd = seedsOf(root).collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1))).sortBy(_._1)
     def cellOf(v: Seq[Float]): Long =
@@ -486,10 +486,10 @@ class SemDedupIndexLifecycleSpec extends SparkTestBase {
           .collect().map(r =>
             (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet
       def crashAt(p: String)(op: => Unit): Unit = {
-        Dedup.appendCrashPoint = Some(p)
+        IndexLog.crashPoint = Some(p)
         try { val e = intercept[IllegalStateException](op)
           assert(e.getMessage.contains(p), e.getMessage) }
-        finally Dedup.appendCrashPoint = None
+        finally IndexLog.crashPoint = None
       }
       /** clean run, or crash-at-random-failpoint (readers must serve
         * exactly the mirror, i.e. the last committed state) then retry. */
@@ -685,10 +685,10 @@ class SemDedupIndexLifecycleSpec extends SparkTestBase {
       val root = freshRoot(s"rebuild-$point")
       buildIdx(root, corpus)
       val beforeRows = membersSet(root).map(t => (t._1, t._3))
-      Dedup.appendCrashPoint = Some(point)
+      IndexLog.crashPoint = Some(point)
       try intercept[IllegalStateException] {
         Dedup.rebuildSemDedupIndex(spark, root)
-      } finally Dedup.appendCrashPoint = None
+      } finally IndexLog.crashPoint = None
       // readers serve exactly the last committed pair: the old one
       // before the commit, the rebuilt one after it
       assert(probe(root, tiny) == seen, s"$point: readers see a mixed or uncommitted pair")
@@ -711,10 +711,10 @@ class SemDedupIndexLifecycleSpec extends SparkTestBase {
       val probeBatch = arrivals.limit(1)
         .withColumn("vec_id", $"vec_id" + 30000000L)
       val before = probe(root, probeBatch)
-      Dedup.appendCrashPoint = Some(point)
+      IndexLog.crashPoint = Some(point)
       try intercept[IllegalStateException] {
         Dedup.compactSemDedupIndex(spark, root)
-      } finally Dedup.appendCrashPoint = None
+      } finally IndexLog.crashPoint = None
       // readers serve exactly the last committed state (compaction
       // changes no row, so it is the same state on either side of the
       // commit)
@@ -739,9 +739,9 @@ class SemDedupIndexLifecycleSpec extends SparkTestBase {
     val batch = arrivals.filter($"vec_id" % 20 === 0)
     val other = arrivals.filter($"vec_id" % 20 =!= 0)
     val victim = corpus.select($"vec_id").orderBy($"vec_id").limit(1)
-    Dedup.appendCrashPoint = Some("semapp-after-staging")
+    IndexLog.crashPoint = Some("semapp-after-staging")
     try intercept[IllegalStateException] { append(root, batch) }
-    finally Dedup.appendCrashPoint = None
+    finally IndexLog.crashPoint = None
     Dedup.deleteFromSemDedupIndex(spark, root, victim, "vec_id")
     Dedup.deleteFromSemDedupIndex(spark, ref, victim, "vec_id")
     assert(membersSet(root) == membersSet(ref),
@@ -749,11 +749,11 @@ class SemDedupIndexLifecycleSpec extends SparkTestBase {
     assert(append(root, batch) == append(ref, batch),
       "the crashed append's retry diverged")
 
-    Dedup.appendCrashPoint = Some("semdel-mid-commit")
+    IndexLog.crashPoint = Some("semdel-mid-commit")
     try intercept[IllegalStateException] {
       Dedup.deleteFromSemDedupIndex(spark, root, batch.select($"vec_id"),
         "vec_id")
-    } finally Dedup.appendCrashPoint = None
+    } finally IndexLog.crashPoint = None
     assert(append(root, other) == append(ref, other),
       "an append beside a crashed delete diverged from the no-crash append")
     Dedup.deleteFromSemDedupIndex(spark, root, batch.select($"vec_id"),
