@@ -1203,28 +1203,16 @@ object Dedup {
     commitVerdicts(snap, "clusterdel", opId, newVerdicts, affectedBuckets)
   }
 
-  /** Reclaim what no commit lists: delete every write directory under
-    * the index's tables that the head does not list — the files of ops
+  /** Reclaim what no commit lists ([[IndexLog.gc]]): the files of ops
     * that crashed before their commit and were never retried (a retry
-    * writes fresh directories). Correctness never depended on this
-    * sweep (every reader and op reads only listed files); it bounds
-    * the disk crashed ops leave behind without a rebuild. Single-writer
-    * by contract: an op in flight has not listed its files yet. */
-  def gcClusterIndex(spark: SparkSession, path: String): Unit = {
-    val snap = IndexLog.snapshot(spark, path)
-    val fs = IndexFs.fs(spark, path)
-    snap.tables.keys.foreach(t =>
-      unlistedDirs(fs, snap, t).foreach(IndexFs.delete(fs, _)))
-  }
-
-  /** Write directories under `$root/<table>` that `snap` lists no file
-    * of. */
-  private def unlistedDirs(fs: org.apache.hadoop.fs.FileSystem,
-      snap: IndexLog.Snapshot, table: String): Seq[String] = {
-    val listed = snap.table(table).files.map(_.path.split('/')(1)).toSet
-    IndexFs.listNames(fs, s"${snap.root}/$table").filterNot(listed)
-      .map(d => s"${snap.root}/$table/$d")
-  }
+    * writes fresh directories), and the files a commit dropped but did
+    * not delete because it crashed right after committing. Correctness
+    * never depended on this sweep (every reader and op reads only
+    * listed files); it bounds the disk crashed ops leave behind without
+    * a rebuild. Single-writer by contract: an op in flight has not
+    * listed its files yet. */
+  def gcClusterIndex(spark: SparkSession, path: String): Unit =
+    IndexLog.gc(spark, path)
 
   /** COMPACT the cluster index's artifact store: rewrite `shingles` and
     * `prefix` keeping exactly ONE row set per LIVE doc — the
@@ -1269,8 +1257,9 @@ object Dedup {
     *     (delete -> re-append churn);
     *   - `dead`: a row whose id has no live verdict (takedown
     *     leftovers);
-    *   - `orphan`: rows in files no commit lists (ops that crashed
-    *     before their commit and were never retried —
+    *   - `orphan`: rows in files the head does not list (ops that
+    *     crashed before their commit and were never retried, files a
+    *     crashed commit dropped but did not delete —
     *     [[gcClusterIndex]]'s target).
     *
     * Output is one row per (dir, kind), all eight always present (zeros
@@ -1282,7 +1271,6 @@ object Dedup {
       id: String = "doc_id"): DataFrame = {
     import spark.implicits._
     val snap = IndexLog.snapshot(spark, path)
-    val fs = IndexFs.fs(spark, path)
     val live = snap.frame("verdicts")
       .select(col(id).as("__mid"), lit(1).as("__live"))
     val perDir = Seq("shingles", "prefix").map { d =>
@@ -1298,11 +1286,13 @@ object Dedup {
         .withColumn("dir", lit(d))
     }.reduce(_ unionByName _)
     val orphans = Seq("shingles", "prefix").map { d =>
-      val dirs = unlistedDirs(fs, snap, d)
+      val paths = snap.unlisted(d)
       val schema = org.apache.spark.sql.types.DataType.fromJson(snap.table(d).schema)
         .asInstanceOf[org.apache.spark.sql.types.StructType]
       (d, "orphan",
-        if (dirs.isEmpty) 0L else spark.read.schema(schema).parquet(dirs: _*).count())
+        if (paths.isEmpty) 0L
+        else spark.read.schema(schema).option("recursiveFileLookup", "true")
+          .parquet(paths: _*).count())
     }.toDF("dir", "kind", "n_rows")
     val kinds = Seq("shingles", "prefix").flatMap(d =>
       Seq("live_current", "shadowed", "dead", "orphan").map(k => (d, k)))

@@ -11,7 +11,8 @@ import org.apache.spark.sql.types.{DataType, StructType}
 
 /** The commit log of a persisted index (the IVF index in [[Similarity]],
   * the semantic-dedup, near-dup and near-dup cluster indexes in
-  * [[Dedup]]) — the binlog's
+  * [[Dedup]], the multi-table fan-out's replica in
+  * [[graft.sources.CdcFanout]]) — the binlog's
   * own shape (an index file enumerating immutable files) applied to
   * graft's indexes.
   *
@@ -35,6 +36,9 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *     deletes them once it has landed, together with the older commit
   *     files — the one window where a reader that took the previous
   *     snapshot can lose its files.
+  *   - [[gc]] deletes whatever the head does not list: the files of ops
+  *     that crashed before their commit, and the files a commit dropped
+  *     but never deleted because it crashed right after committing.
   *
   * No rename anywhere, so the protocol needs only atomic
   * create-if-absent of one small file from its store. The version is
@@ -107,6 +111,20 @@ private[graft] object IndexLog {
       IndexLog.commit(spark, root, tag, Some(this),
         commit.tables -- drop ++ tables, params, ops ++ newOps)
 
+    /** Paths under `$root/$table` this snapshot does not list: each
+      * write directory none of whose files it lists, and each unlisted
+      * `.parquet` file of the directories it does list. */
+    def unlisted(table: String): Seq[String] = {
+      val listed = this.table(table).files.map(_.path).toSet
+      val liveDirs = listed.map(writeDir)
+      IndexFs.listNames(fs, s"$root/$table").flatMap { d =>
+        val dir = s"$table/$d"
+        if (!liveDirs(dir)) Seq(s"$root/$dir")
+        else dataFiles(fs, root, s"$root/$dir").map(_._1).filterNot(listed)
+          .map(p => s"$root/$p")
+      }
+    }
+
     private lazy val qroot = fs.makeQualified(new Path(root))
     private lazy val blockSize = fs.getDefaultBlockSize(qroot)
   }
@@ -138,21 +156,49 @@ private[graft] object IndexLog {
     val w = df.write.mode("errorifexists")
     partitionCol.fold(w)(w.partitionBy(_)).parquet(dir)
     val fs = IndexFs.fs(df.sparkSession, root)
+    val out = dataFiles(fs, root, dir).map { case (path, st) =>
+      DataFile(path, partitionCol.map(c => ExternalCatalogUtils.unescapePathName(
+          st.getPath.getParent.getName.stripPrefix(s"$c="))),
+        st.getLen, st.getModificationTime)
+    }.sortBy(_.path)
+    if (out.isEmpty) IndexFs.delete(fs, dir)
+    Table(df.schema.json, partitionCol, out)
+  }
+
+  /** The `.parquet` data files under `dir`, each with its path relative
+    * to `root`. */
+  private def dataFiles(fs: FileSystem, root: String,
+      dir: String): Seq[(String, FileStatus)] = {
     val rootPath = fs.makeQualified(new Path(root)).toUri.getPath.stripSuffix("/")
     val listed = fs.listFiles(new Path(dir), true)
-    val files = Seq.newBuilder[DataFile]
+    val files = Seq.newBuilder[(String, FileStatus)]
     while (listed.hasNext) {
       val st = listed.next()
       val name = st.getPath.getName
       if (name.endsWith(".parquet") && !name.startsWith(".") && !name.startsWith("_"))
-        files += DataFile(st.getPath.toUri.getPath.stripPrefix(rootPath + "/"),
-          partitionCol.map(c => ExternalCatalogUtils.unescapePathName(
-            st.getPath.getParent.getName.stripPrefix(s"$c="))),
-          st.getLen, st.getModificationTime)
+        files += (st.getPath.toUri.getPath.stripPrefix(rootPath + "/") -> st)
     }
-    val out = files.result().sortBy(_.path)
-    if (out.isEmpty) IndexFs.delete(fs, dir)
-    Table(df.schema.json, partitionCol, out)
+    files.result()
+  }
+
+  /** Delete what the head does not list — every table directory of the
+    * root that names none of its tables (a table a commit dropped),
+    * [[Snapshot.unlisted]] of each of its tables — and every commit file
+    * older than the head. A table directory is one that holds only
+    * write directories, so a file or a foreign directory beside the
+    * index (a landed log, say) is never touched. Readers and ops only
+    * ever read listed files, so this bounds the disk that crashed ops
+    * leave behind; correctness never depends on it. Single writer: run
+    * it when no op is in flight (an op's files are unlisted until it
+    * commits). A root with no commit is left as it is. */
+  def gc(spark: SparkSession, root: String): Unit = head(spark, root).foreach { snap =>
+    val fs = IndexFs.fs(spark, root)
+    fs.listStatus(new Path(root)).filter(_.isDirectory).map(_.getPath.getName)
+      .filterNot(n => n == "_log" || snap.tables.contains(n))
+      .filter(n => IndexFs.listNames(fs, s"$root/$n").forall(isWriteId))
+      .foreach(n => IndexFs.delete(fs, s"$root/$n"))
+    snap.tables.keys.toSeq.flatMap(snap.unlisted).foreach(IndexFs.delete(fs, _))
+    deleteCommitsBefore(fs, root, snap.version)
   }
 
   /** Commit version `base.version + 1` (1 without a base) holding
@@ -208,11 +254,18 @@ private[graft] object IndexLog {
         if (liveDirs(dir)) paths.foreach(p => IndexFs.delete(fs, s"$root/$p"))
         else IndexFs.delete(fs, s"$root/$dir")
       }
-      IndexFs.listNames(fs, s"$root/_log").flatMap(versionOf)
-        .filter(_ < next.version)
-        .foreach(v => IndexFs.delete(fs, logFile(root, v)))
+      deleteCommitsBefore(fs, root, next.version)
     }
   }
+
+  private[graft] def deleteCommitsBefore(fs: FileSystem, root: String, version: Long): Unit =
+    IndexFs.listNames(fs, s"$root/_log").flatMap(versionOf)
+      .filter(_ < version)
+      .foreach(v => IndexFs.delete(fs, logFile(root, v)))
+
+  /** Whether `name` is a write directory's name ([[write]]'s UUID). */
+  private def isWriteId(name: String): Boolean =
+    name.length == 36 && scala.util.Try(java.util.UUID.fromString(name)).isSuccess
 
   /** `<table>/<write id>` of a listed file's relative path. */
   private def writeDir(rel: String): String = rel.split('/').take(2).mkString("/")

@@ -32,9 +32,9 @@ object CdcExt {
 
   /** One-pass multi-table materialization of the fixture log
     * ([[graft.sources.CdcFanout]]): orders + audit from ONE decode,
-    * built once per JVM per sfDir. Returns the per-table frame paths. */
+    * built once per JVM per sfDir. Returns the per-table frames. */
   private[queries] def ensureFanout(s: org.apache.spark.sql.SparkSession,
-      dir: String): Map[(String, String), String] = {
+      dir: String): Map[(String, String), org.apache.spark.sql.DataFrame] = {
     val root = graft.TmpDirs.scoped("graft-cdcfan-" + graft.TmpDirs.pathKey(dir))
     val lock = fanoutLocks.computeIfAbsent(root, _ => new Object)
     lock.synchronized {
@@ -47,10 +47,7 @@ object CdcExt {
         ()
       }
     }
-    Map(
-      (CdcFixture.Db, CdcFixture.Table) ->
-        s"$root/${CdcFixture.Db}__${CdcFixture.Table}",
-      (CdcFixture.Db, "audit") -> s"$root/${CdcFixture.Db}__audit")
+    graft.sources.CdcFanout.frames(s, root)
   }
 
   /** The INCREMENTAL fan-out fixture: the same orders+audit frames, but
@@ -59,7 +56,7 @@ object CdcExt {
     * the full index — only the new files are walked the second time).
     * Equality with the one-shot frames is the operator's contract. */
   private[queries] def ensureIncrFanout(s: org.apache.spark.sql.SparkSession,
-      dir: String): Map[(String, String), String] = {
+      dir: String): Map[(String, String), org.apache.spark.sql.DataFrame] = {
     val root = graft.TmpDirs.scoped("graft-cdcfani-" + graft.TmpDirs.pathKey(dir))
     val lock = fanoutLocks.computeIfAbsent(root, _ => new Object)
     val tables = Seq((CdcFixture.Db, CdcFixture.Table), (CdcFixture.Db, "audit"))
@@ -77,10 +74,7 @@ object CdcExt {
         ()
       }
     }
-    Map(
-      (CdcFixture.Db, CdcFixture.Table) ->
-        s"$root/out/${CdcFixture.Db}__${CdcFixture.Table}",
-      (CdcFixture.Db, "audit") -> s"$root/out/${CdcFixture.Db}__audit")
+    graft.sources.CdcFanout.frames(s, s"$root/out")
   }
 
   /** The LAND-THEN-READ replication fixture: the mysql fixture's files
@@ -89,10 +83,10 @@ object CdcExt {
     * interleaved — consumed by [[graft.sources.ReplicaTail]]: raw event
     * bytes land in a binlog directory (O(one event) driver memory, no
     * row buffering), folded incrementally through the distributed
-    * fan-out decode into a per-table parquet frame. Built once per JVM
-    * per sfDir; returns the materialized orders-frame path. */
+    * fan-out decode into the replica. Built once per JVM per sfDir;
+    * returns the replica's orders frame. */
   private[queries] def ensureReplicaTail(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
+      dir: String): org.apache.spark.sql.DataFrame = {
     val root = graft.TmpDirs.scoped("graft-cdcrt-" + graft.TmpDirs.pathKey(dir))
     val lock = fanoutLocks.computeIfAbsent(root, _ => new Object)
     lock.synchronized {
@@ -114,7 +108,7 @@ object CdcExt {
         ()
       }
     }
-    s"$root/out/${CdcFixture.Db}__${CdcFixture.Table}"
+    graft.sources.CdcFanout.frames(s, s"$root/out")((CdcFixture.Db, CdcFixture.Table))
   }
 
   /** Register (idempotently) a CdcTableCatalog over `index` and return
@@ -1466,7 +1460,7 @@ object CdcExt {
 
     // multi-table shared-scan materialization: orders + audit land from
     // ONE decode pass over the log (CdcFanout — N tables, one log
-    // read), then the query joins ACROSS the two materialized frames:
+    // read), then the query joins ACROSS the two replica frames:
     // each audit row's batch id against that batch's insert rows. The
     // from-scratch per-table oracle is valid because the fan-out frames
     // are spec-pinned row-identical to the per-table scans.
@@ -1481,9 +1475,9 @@ object CdcExt {
         |  COUNT(*) AS n_batch
         |FROM a JOIN ins ON ins.g = a.audit_id
         |GROUP BY 1, 2""".stripMargin) { (s, dir) =>
-      val paths = ensureFanout(s, dir)
-      val orders = s.read.parquet(paths((CdcFixture.Db, CdcFixture.Table)))
-      val audit = s.read.parquet(paths((CdcFixture.Db, "audit")))
+      val frames = ensureFanout(s, dir)
+      val orders = frames((CdcFixture.Db, CdcFixture.Table))
+      val audit = frames((CdcFixture.Db, "audit"))
       audit.select(col("audit_id"), col("note"))
         .join(orders.filter(col(CdcSchema.OpCol) === CdcSchema.Op.Insert)
           .select(col(CdcSchema.GtidCol).as("audit_id")), Seq("audit_id"))
@@ -1493,7 +1487,7 @@ object CdcExt {
 
     // the INCREMENTAL fan-out (appendTables): the replication loop's
     // per-run shape — decode only the log bytes past the committed
-    // offsets, append per-table, commit offsets last. The fixture
+    // offsets and commit them with the advanced offsets. The fixture
     // materializes in TWO increments (half the files, then the rest);
     // the same oracle as cdc53 holds because increments compose to the
     // one-shot materialization (spec-pinned, incl. mid-file resume).
@@ -1508,9 +1502,9 @@ object CdcExt {
         |  COUNT(*) AS n_batch
         |FROM a JOIN ins ON ins.g = a.audit_id
         |GROUP BY 1, 2""".stripMargin) { (s, dir) =>
-      val paths = ensureIncrFanout(s, dir)
-      val orders = s.read.parquet(paths((CdcFixture.Db, CdcFixture.Table)))
-      val audit = s.read.parquet(paths((CdcFixture.Db, "audit")))
+      val frames = ensureIncrFanout(s, dir)
+      val orders = frames((CdcFixture.Db, CdcFixture.Table))
+      val audit = frames((CdcFixture.Db, "audit"))
       audit.select(col("audit_id"), col("note"))
         .join(orders.filter(col(CdcSchema.OpCol) === CdcSchema.Op.Insert)
           .select(col(CdcSchema.GtidCol).as("audit_id")), Seq("audit_id"))
@@ -1597,12 +1591,12 @@ object CdcExt {
     // into a binlog directory (contiguity-checked appends, zero driver
     // row buffering) and folds them incrementally through the
     // distributed CdcFanout.appendTables decode. The query reads the
-    // MATERIALIZED per-table frame — executors decoded it, not the
+    // replica's per-table frame — executors decoded it, not the
     // driver — and must hash-equal the same oracle as the file scan
     // (cdc21) and the driver-decode wire gate (cdc56).
     QDef("cdc57_replica_tail",
       s"${Cdc.eventsCte} SELECT * FROM cdc_tm") { (s, dir) =>
-      s.read.parquet(ensureReplicaTail(s, dir))
+      ensureReplicaTail(s, dir)
     },
 
     QDef("cdc55_scheme_root_scan",

@@ -1,6 +1,7 @@
 package graft.sources
 
 import graft.cdc.{BinlogFormats, CdcCodec, CdcSchema}
+import graft.ops.{IndexFs, IndexLog}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -9,8 +10,8 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** MULTI-TABLE shared-scan materialization: decode a CDC log ONCE and
-  * land one typed change-frame per table.
+/** MULTI-TABLE shared-scan replication: decode a CDC log ONCE and
+  * serve one typed change-frame per table.
   *
   * A catalog user replicating N tables from one log through the
   * per-table `binlogcdc` scans pays N full passes over the log bytes —
@@ -26,18 +27,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * decoders — control events (TABLE_MAP, GTID) update every decoder's
   * state, row events are decoded exactly once by the owning table's
   * decoder and byte-skipped by the rest. The decoded rows land in a
-  * UNION-schema staging frame `(envelope, __tbl, __t0 … __tN struct)`
-  * written as parquet PARTITIONED BY `__tbl`, so the per-table
-  * extraction pass is partition-pruned (reads only its own directory)
-  * AND column-pruned (its own struct column; the other tables' struct
-  * columns are all-null in its partition and never read). Total cost:
-  * one log read + one row-data write + one partition/column-pruned
-  * re-read per table — instead of N log reads.
+  * UNION-schema frame `(envelope, __tbl, __t0 … __tN struct)`, written
+  * once as the `rows` table of an [[IndexLog]] index at the output
+  * root, cell-partitioned by `__tbl`. The commit's params pin the table
+  * set and, for [[appendTables]], each log file's high-water offset.
+  * Total cost: one log read + one row-data write — instead of N log
+  * reads.
   *
-  * The per-table frames carry exactly the `binlogcdc` scan's schema
-  * (source columns in binlog order, then the §1.5 envelope), so a
-  * consumer can swap a per-table scan for a materialized frame
-  * verbatim (spec-pinned frame equality).
+  * A per-table frame ([[frames]]) is a read-time projection over one
+  * snapshot: pruned to the table's `__tbl` cell (the snapshot's file
+  * index lists only that cell's files) and to its own struct column
+  * (the other tables' struct columns are all-null in its cell and never
+  * read). It carries exactly the `binlogcdc` scan's schema (source
+  * columns in binlog order, then the §1.5 envelope), so a consumer can
+  * swap a per-table scan for a replica frame verbatim (spec-pinned
+  * frame equality).
   */
 object CdcFanout {
 
@@ -47,43 +51,47 @@ object CdcFanout {
     * spec reads it directly. */
   private[graft] val filesDecoded = new java.util.concurrent.atomic.AtomicLong
 
-  /** Test-only failpoint for [[appendTables]]' crash windows (the
-    * `IndexLog.crashPoint` idiom). Production never sets it. */
-  private[graft] var fanoutCrashPoint: Option[String] = None
-  private def maybeCrash(point: String): Unit =
-    if (fanoutCrashPoint.contains(point))
-      throw new IllegalStateException(s"test crash at $point")
+  private implicit val formats: org.json4s.Formats = org.json4s.DefaultFormats
 
-  private def sanitize(s: String): String =
-    s.map(c => if (c.isLetterOrDigit || c == '_') c else '_')
+  private val Rows = "rows"
+  private val OffsetParam = "offset:"
 
   /** Materialize `tables` (as (database, table) pairs) from the log at
-    * `indexFile` into `$outRoot/<db>__<table>` parquet frames, decoding
-    * the log exactly once. Returns the per-table output paths. The
-    * staging frame is left under `$outRoot/shared.decoded` (it IS the
-    * one-pass product; callers may delete it after extraction). */
+    * `indexFile` into the replica at `outRoot`, decoding the log exactly
+    * once over whole files, and return the per-table frames. A commit
+    * over an existing replica replaces it. The commit records no log
+    * offsets, so [[appendTables]] refuses this root. */
   def materializeTables(spark: SparkSession, indexFile: String,
       tables: Seq[(String, String)], outRoot: String,
-      format: String = "gcdc"): Map[(String, String), String] = {
+      format: String = "gcdc"): Map[(String, String), DataFrame] = {
     val adapter = BinlogFormats.forName(format)
     val targets = resolveTargets(adapter, indexFile, tables)
     val files = CdcCodec.readIndex(indexFile)
     require(files.nonEmpty, s"cdcFanout: empty CDC log index $indexFile")
-
-    decodeToStaging(spark, format, targets,
-      files.map(f => (f, adapter.headerLen, Long.MaxValue)),
-      s"$outRoot/shared.decoded")
-
-    // per-table extraction: partition-pruned (its own __tbl directory)
-    // + column-pruned (its own struct column) — no second log decode
-    targets.zipWithIndex.map { case ((db, tbl, sch), i) =>
-      val dest = s"$outRoot/${sanitize(db)}__${sanitize(tbl)}"
-      extractTable(spark, s"$outRoot/shared.decoded", db, tbl, sch, i,
-          stagedSchema(targets))
-        .write.mode("overwrite").parquet(dest)
-      (db, tbl) -> dest
-    }.toMap
+    val rows = IndexLog.write(decode(spark, format, targets,
+      files.map(f => (f, adapter.headerLen, Long.MaxValue))), outRoot, Rows, Some("__tbl"))
+    framesOf(IndexLog.commit(spark, outRoot, "fanout", IndexLog.head(spark, outRoot),
+      Map(Rows -> rows), Map("tables" -> tableKey(tables))))
   }
+
+  /** The per-table frames of the replica at `outRoot`, all from its head
+    * snapshot: rows a later fold commits are not in them. */
+  def frames(spark: SparkSession, outRoot: String): Map[(String, String), DataFrame] =
+    framesOf(IndexLog.snapshot(spark, outRoot))
+
+  private def framesOf(snap: IndexLog.Snapshot): Map[(String, String), DataFrame] = {
+    val rows = snap.frame(Rows)
+    org.json4s.jackson.Serialization.read[Seq[Seq[String]]](snap.params("tables"))
+      .zipWithIndex.map { case (Seq(db, tbl), i) =>
+        val sch = rows.schema(s"__t$i").dataType.asInstanceOf[StructType]
+        (db, tbl) -> rows.filter(col("__tbl") === s"$db.$tbl")
+          .select(sch.fieldNames.toSeq.map(n => col(s"__t$i").getField(n).as(n)) ++
+            CdcSchema.envelope.map(f => col(f.name)): _*)
+      }.toMap
+  }
+
+  private def tableKey(tables: Seq[(String, String)]): String =
+    org.json4s.jackson.Serialization.write(tables.map { case (d, t) => Seq(d, t) })
 
   private def resolveTargets(adapter: graft.cdc.BinlogFormatAdapter,
       indexFile: String,
@@ -100,32 +108,22 @@ object CdcFanout {
     }
   }
 
-  /** The union staging schema for a target set — also handed to the
-    * staging READ explicitly: an increment that decodes ZERO rows for
-    * every table (a fold window holding only control events — FDE,
-    * TABLE_MAP, GTID — the live tail's steady-state shape between row
-    * batches) writes a parquet directory with no data files, and a
-    * schema-inferring read of it would fail instead of no-opping. */
-  private def stagedSchema(
-      targets: Seq[(String, String, StructType)]): StructType =
-    StructType(
+  /** The ONE decode pass: walk each `(path, startPos, endPos)` range
+    * once, feeding every event to all N per-table decoders, into the
+    * union-schema frame. The range follows the batch scan's rule
+    * ([[CdcPartitionReader.rangeEvents]]): row events below `startPos`
+    * are skipped without decode (already-consumed prefix — the
+    * incremental path), control events always replay, and iteration
+    * stops at `endPos` (the torn-tail admission boundary). */
+  private def decode(spark: SparkSession, format: String,
+      targets: Seq[(String, String, StructType)],
+      ranges: Seq[(String, Long, Long)]): DataFrame = {
+    val union = StructType(
       CdcSchema.envelope ++
         Seq(StructField("__tbl", StringType, nullable = false)) ++
         targets.zipWithIndex.map { case ((_, _, sch), i) =>
           StructField(s"__t$i", sch, nullable = true)
         })
-
-  /** The ONE decode pass: walk each `(path, startPos, endPos)` range
-    * once, feeding every event to all N per-table decoders, and land
-    * the union-schema staging frame at `dest`. The range follows the
-    * batch scan's rule ([[CdcPartitionReader.rangeEvents]]): row events
-    * below `startPos` are skipped without decode (already-consumed
-    * prefix — the incremental path), control events always replay, and
-    * iteration stops at `endPos` (the torn-tail admission boundary). */
-  private def decodeToStaging(spark: SparkSession, format: String,
-      targets: Seq[(String, String, StructType)],
-      ranges: Seq[(String, Long, Long)], dest: String): Unit = {
-    val staged = stagedSchema(targets)
     val fmt = format
     val serTargets = targets.toArray // (db, table, schema): all serializable
     val nSlots = serTargets.length
@@ -166,78 +164,56 @@ object CdcFanout {
           }
         }
       }
-    Bridge.internalCreateDataFrame(spark, rdd, staged)
-      .write.mode("overwrite").partitionBy("__tbl").parquet(dest)
+    Bridge.internalCreateDataFrame(spark, rdd, union)
   }
-
-  /** One table's typed frame out of a staging dataset: partition-pruned
-    * to its `__tbl` directory, column-pruned to its own struct,
-    * exactly the `binlogcdc` scan's column order. */
-  private def extractTable(spark: SparkSession, stagingPath: String,
-      db: String, tbl: String, sch: StructType, slot: Int,
-      staged: StructType) =
-    spark.read.schema(staged).parquet(stagingPath)
-      .filter(col("__tbl") === s"$db.$tbl")
-      .select(sch.fieldNames.toSeq.map(n =>
-        col(s"__t$slot").getField(n).as(n)) ++
-        CdcSchema.envelope.map(f => col(f.name)): _*)
 
   /** INCREMENTAL fan-out — the replication loop's per-run shape: decode
     * only the log bytes PAST the committed high-water offsets (one walk
-    * feeding all N tables, exactly [[materializeTables]]' contract) and
-    * APPEND the new rows to the per-table frames. Offsets commit LAST
-    * (staged `_offsets` + rename), so every crash window replays
-    * idempotently: a retry deletes the uncommitted increment's staging
-    * and its `seq<n>-` files from the live dirs, then redoes the whole
-    * increment from the committed offsets. Growing tail files resume
-    * from their consumed prefix (control events replay for TABLE_MAP
-    * state, row events below the high-water byte-skip — the batch
-    * scan's range semantics); `lastCompleteOffset` bounds the walk so a
-    * producer's in-flight append is never torn. Readers during the op
-    * may observe a partial suffix of the in-flight increment (the
-    * mode("append") semantics every append-shaped index op here has);
-    * committed state is always a prefix-consistent replica.
+    * feeding all N tables, exactly [[materializeTables]]' contract),
+    * write them once and commit them with the advanced offsets in one
+    * [[IndexLog]] commit; returns the per-table frames of that commit.
+    * A crash anywhere before the commit leaves files no commit lists:
+    * readers stay on the previous fold for every table, and the retry
+    * redoes the fold from the committed offsets. Growing tail files
+    * resume from their consumed prefix (control events replay for
+    * TABLE_MAP state, row events below the high-water byte-skip — the
+    * batch scan's range semantics); `lastCompleteOffset` bounds the walk
+    * so a producer's in-flight append is never torn.
     *
-    * The table SET is pinned in the offsets manifest: an increment with
-    * a different set refuses loud (a late-added table would silently
-    * miss its history — rebuild with [[materializeTables]] instead). */
+    * The table SET is pinned in the commit: an increment with a
+    * different set refuses loud (a late-added table would silently miss
+    * its history — rebuild with [[materializeTables]] instead), and so
+    * does a root [[materializeTables]] built (it records no offsets). */
   def appendTables(spark: SparkSession, indexFile: String,
       tables: Seq[(String, String)], outRoot: String,
-      format: String = "gcdc"): Map[(String, String), String] = {
-    import graft.ops.IndexFs
+      format: String = "gcdc"): Map[(String, String), DataFrame] =
+    framesOf(fold(spark, indexFile, tables, outRoot, format))
+
+  /** One [[appendTables]] increment; returns the head after it (the
+    * same version when nothing grew). */
+  private def fold(spark: SparkSession, indexFile: String,
+      tables: Seq[(String, String)], outRoot: String,
+      format: String): IndexLog.Snapshot = {
     val adapter = BinlogFormats.forName(format)
     val targets = resolveTargets(adapter, indexFile, tables)
-    val fs = IndexFs.fs(spark, outRoot)
-    val offPath = s"$outRoot/_offsets"
-    val tableKey = tables.map { case (d, t) => s"$d.$t" }.mkString(",")
-    val (seq, committed) =
-      if (!IndexFs.exists(fs, offPath)) (0L, Map.empty[String, Long])
-      else {
-        val lines = IndexFs.readUtf8(fs, offPath).linesIterator
-          .filter(_.nonEmpty).toSeq
-        require(lines.head.startsWith("seq "), s"corrupt $offPath")
-        require(lines(1) == s"tables $tableKey",
-          s"cdcFanout.appendTables($outRoot): table set changed " +
-            s"(committed '${lines(1).stripPrefix("tables ")}', requested " +
-            s"'$tableKey') — a late-added table would miss its history; " +
-            "rebuild with materializeTables")
-        (lines.head.stripPrefix("seq ").trim.toLong,
-          lines.drop(2).map { l =>
-            val i = l.lastIndexOf(' ')
-            l.substring(0, i) -> l.substring(i + 1).toLong
-          }.toMap)
-      }
-    val n = seq + 1
-    val dests = targets.map { case (db, tbl, _) =>
-      (db, tbl) -> s"$outRoot/${sanitize(db)}__${sanitize(tbl)}"
-    }.toMap
-    // sweep a crashed attempt of THIS increment: its staging and any
-    // seq<n>- files that already moved into the live dirs
-    val stagingRoot = s"$outRoot/incr.staging"
-    IndexFs.delete(fs, stagingRoot)
-    dests.values.foreach { d =>
-      IndexFs.listNames(fs, d).filter(_.startsWith(s"seq$n-"))
-        .foreach(f => IndexFs.delete(fs, s"$d/$f"))
+    val head = IndexLog.head(spark, outRoot)
+    val key = tableKey(tables)
+    val committed = head.fold(Map.empty[String, Long])(_.params.collect {
+      case (k, v) if k.startsWith(OffsetParam) => k.stripPrefix(OffsetParam) -> v.toLong
+    })
+    head.foreach { h =>
+      // every fold commits an offset for each range it decoded; a
+      // materialize commit records none
+      require(committed.nonEmpty,
+        s"cdcFanout.appendTables($outRoot): materializeTables built this " +
+          "root and recorded no log offsets — an increment would re-decode " +
+          "the whole log into it as duplicates; append to a root " +
+          "appendTables built")
+      require(h.params("tables") == key,
+        s"cdcFanout.appendTables($outRoot): table set changed " +
+          s"(committed '${h.params("tables")}', requested '$key') — a " +
+          "late-added table would miss its history; rebuild with " +
+          "materializeTables")
     }
     val ranges = CdcCodec.readIndex(indexFile).flatMap { f =>
       val start = committed.getOrElse(f, adapter.headerLen)
@@ -252,69 +228,57 @@ object CdcFanout {
         if (end > start) Some((f, start, end)) else None
       }
     }
-    if (ranges.isEmpty) return dests // nothing new; offsets unchanged
-    val stagingData = s"$stagingRoot/seq=$n"
-    decodeToStaging(spark, format, targets, ranges, stagingData)
-    maybeCrash("fanout-after-staging")
-    targets.zipWithIndex.foreach { case ((db, tbl, sch), i) =>
-      val live = dests((db, tbl))
-      val xstg = s"$stagingRoot/extract-$i"
-      extractTable(spark, stagingData, db, tbl, sch, i,
-          stagedSchema(targets))
-        .write.mode("overwrite").parquet(xstg)
-      IndexFs.mkdirs(fs, live)
-      // atomic per-file renames: a reader never sees a torn part file
-      IndexFs.listNames(fs, xstg).filter(_.endsWith(".parquet"))
-        .foreach(f => IndexFs.rename(fs, s"$xstg/$f", s"$live/seq$n-$f"))
-      maybeCrash(s"fanout-mid-moves-$i")
+    head match {
+      case Some(h) if ranges.isEmpty => h // nothing new; offsets unchanged
+      case _ =>
+        val rows = IndexLog.write(decode(spark, format, targets, ranges),
+          outRoot, Rows, Some("__tbl"))
+        val offsets = committed ++ ranges.map { case (f, _, e) => f -> e }
+        val next = IndexLog.commit(spark, outRoot, "fanout", head,
+          Map(Rows -> head.fold(rows)(_.table(Rows) ++ rows)),
+          offsets.map { case (f, p) => s"$OffsetParam$f" -> p.toString } +
+            ("tables" -> key))
+        // a fold drops no file, so the commit deletes no older commit
+        // file; keep the one below the new head (a reader that listed
+        // `_log` just before this commit still finds it) and delete the
+        // rest, so `_log` stays two commits long however many folds run
+        IndexLog.deleteCommitsBefore(IndexFs.fs(spark, outRoot),
+          outRoot, next.version - 1)
+        next
     }
-    maybeCrash("fanout-after-moves")
-    // commit: merged high-water offsets, staged then swapped in
-    val newOff = committed ++ ranges.map { case (f, _, e) => f -> e }
-    val tmp = s"$offPath.tmp"
-    IndexFs.writeUtf8(fs, tmp,
-      (Seq(s"seq $n", s"tables $tableKey") ++
-        newOff.toSeq.sorted.map { case (f, p) => s"$f $p" }).mkString("\n"))
-    IndexFs.delete(fs, offPath)
-    IndexFs.rename(fs, tmp, offPath)
-    IndexFs.delete(fs, stagingRoot)
-    dests
   }
 
   /** CONTINUOUS multi-table replication — the reference's daemon loop
     * re-expressed over [[appendTables]]: poll the log, fold any new
-    * bytes into the per-table frames (one decode feeding all N tables),
-    * sleep, repeat. Stops after `maxIdlePolls` consecutive no-growth
-    * polls; `maxIdlePolls <= 0` runs until the thread is interrupted
-    * (the production shape — tests bound it). Killing the daemon
-    * anywhere is safe because each iteration IS [[appendTables]]: the
-    * offsets manifest commits LAST, so the next start replays the
-    * interrupted increment idempotently; readers of the per-table
-    * frames never see a torn file (per-file renames). Growth is
-    * detected by offsets-manifest change, so a poll that decodes
-    * nothing costs one manifest read plus the per-file length
-    * fast-path — O(#files) metadata, no log bytes.
+    * bytes into the replica (one decode feeding all N tables), sleep,
+    * repeat. Stops after `maxIdlePolls` consecutive no-growth polls;
+    * `maxIdlePolls <= 0` runs until the thread is interrupted (the
+    * production shape — tests bound it). Killing the daemon anywhere is
+    * safe because each iteration IS an [[appendTables]] fold: nothing is
+    * visible until its commit, so the next start redoes the interrupted
+    * fold from the committed offsets, after one [[IndexLog.gc]] deletes
+    * the files the interrupted attempt left. Growth is detected by a
+    * change of the head version, so a poll that decodes nothing costs
+    * one head read plus the per-file length fast-path — O(#files)
+    * metadata, no log bytes.
     *
     * Returns the number of increments applied. */
   def tailTables(spark: SparkSession, indexFile: String,
       tables: Seq[(String, String)], outRoot: String,
       format: String = "gcdc", pollIntervalMs: Long = 1000,
       maxIdlePolls: Int = 3): Int = {
-    import graft.ops.IndexFs
-    val fs = IndexFs.fs(spark, outRoot)
-    val offPath = s"$outRoot/_offsets"
-    def off(): String =
-      if (IndexFs.exists(fs, offPath)) IndexFs.readUtf8(fs, offPath) else ""
+    IndexLog.gc(spark, outRoot)
+    var version = IndexLog.head(spark, outRoot).map(_.version)
     var idle = 0
     var applied = 0
     while (maxIdlePolls <= 0 || idle < maxIdlePolls) {
-      val before = off()
-      appendTables(spark, indexFile, tables, outRoot, format)
-      if (off() == before) {
+      val v = Some(fold(spark, indexFile, tables, outRoot, format).version)
+      if (v == version) {
         idle += 1
         if (maxIdlePolls <= 0 || idle < maxIdlePolls)
           Thread.sleep(pollIntervalMs)
       } else {
+        version = v
         idle = 0
         applied += 1
       }

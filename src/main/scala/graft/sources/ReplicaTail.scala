@@ -5,7 +5,7 @@ import java.io.{File, FileOutputStream, IOException}
 import graft.cdc.{MysqlBinlogAdapter, MysqlReplica}
 import graft.cdc.MysqlBinlog.{Magic, MagicLen}
 import graft.cdc.MysqlReplica.DumpItem
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** LIVE replication ingestion — the land-then-read loop that turns
   * [[graft.cdc.MysqlReplica]] from a protocol client into an ingestion
@@ -21,9 +21,9 @@ import org.apache.spark.sql.SparkSession
   * `maxBytesPerFold` landed bytes — and on every idle heartbeat with
   * bytes pending — the loop FOLDS the landed growth through
   * [[CdcFanout.appendTables]]: a DISTRIBUTED incremental decode (one
-  * log walk feeding all N tables, executors do the work, offsets
-  * manifest commits last), so analytics read per-table parquet frames
-  * that are always a prefix-consistent replica. Driver memory is O(one
+  * log walk feeding all N tables, executors do the work, one commit
+  * per fold), so analytics read per-table frames that are always a
+  * prefix-consistent replica. Driver memory is O(one
   * event): no row ever buffers on the driver — the bound the cdc56
   * wire-parity gate can't offer is this loop's whole point.
   *
@@ -39,11 +39,11 @@ import org.apache.spark.sql.SparkSession
   *   - socket loss reconnects up to `maxReconnects` times (fresh
   *     handshake, resume from landed state); heartbeats are liveness
   *     only and never advance landing state;
-  *   - each fold is [[CdcFanout.appendTables]]' idempotent increment:
-  *     a crash anywhere replays that increment exactly once (offsets
-  *     manifest commits last), so a killed-and-restarted tail
-  *     re-decodes at most one fold's bytes and replays ZERO rows into
-  *     the frames.
+  *   - each fold is one [[CdcFanout.appendTables]] commit: a crash
+  *     before it leaves files no commit lists, so a killed-and-
+  *     restarted tail re-decodes at most one fold's bytes and replays
+  *     ZERO rows into the frames; the restart's [[graft.ops.IndexLog.gc]]
+  *     deletes the crashed fold's files.
   *
   * Deployment: `landRoot` must be an append-capable filesystem shared
   * with the executors (local disk under local[k], NFS or HDFS-style
@@ -61,19 +61,19 @@ object ReplicaTail {
 
   final case class TailResult(folds: Int, reconnects: Int,
       eventsLanded: Long, bytesLanded: Long, heartbeats: Long,
-      foldSeconds: Double, tables: Map[(String, String), String]) {
+      foldSeconds: Double, tables: Map[(String, String), DataFrame]) {
     def indexFile(landRoot: String): String = s"$landRoot/mysql-bin.index"
   }
 
-  /** Per-source applied-GTID high-water marks of a materialized change
-    * frame (any frame carrying the envelope's `__source_id`/`__gtid`
+  /** Per-source applied-GTID high-water marks of a replica change frame
+    * (any frame carrying the envelope's `__source_id`/`__gtid`
     * columns): the executed set to hand `MysqlReplica.dumpFrom` so the
     * server SKIPS every already-applied transaction (auto-position
     * resume — zero replayed rows even when no landed log exists, e.g.
     * a consumer that keeps frames but rotated the raw log away). The
     * driver collect is bounded by the number of distinct source server
     * uuids — topology-sized, not data-sized. */
-  def executedGtids(frame: org.apache.spark.sql.DataFrame): Map[String, Long] = {
+  def executedGtids(frame: DataFrame): Map[String, Long] = {
     import org.apache.spark.sql.functions.{col, max}
     import graft.cdc.CdcSchema
     frame.groupBy(col(CdcSchema.SourceIdCol))
@@ -88,7 +88,7 @@ object ReplicaTail {
   /** Default fold granularity: `spark.graft.replica.maxBytesPerFold`
     * (bytes of landed log per incremental decode), 64 MiB — small
     * enough that analytics lag the wire by seconds, large enough that
-    * fold overhead (one Spark job + offsets commit) amortizes. */
+    * fold overhead (one Spark job + one commit) amortizes. */
   private def foldBytes(spark: SparkSession, explicit: Long): Long =
     if (explicit > 0) explicit
     else spark.conf.get("spark.graft.replica.maxBytesPerFold",
@@ -101,6 +101,7 @@ object ReplicaTail {
     require(tables.nonEmpty, "replicaTail: no tables requested")
     val maxFold = foldBytes(spark, maxBytesPerFold)
     val lander = new Lander(landRoot)
+    graft.ops.IndexLog.gc(spark, outRoot)
     var folds = 0
     var reconnects = 0
     var heartbeats = 0L
@@ -295,7 +296,7 @@ object ReplicaTail {
     }
 
     /** Durability point before each fold: landed bytes reach the disk
-      * before the fold's offsets manifest can commit past them. */
+      * before the fold's commit can record offsets past them. */
     def sync(): Unit = if (curOut != null) {
       curOut.flush()
       curOut.getFD.sync()

@@ -162,12 +162,13 @@ object MaintPlanLint {
     in("semRebuild") { Dedup.rebuildSemDedupIndex(spark, sidx) }
 
     // ---- the multi-table fan-out (one log decode -> N frames): the
-    // staged write and both pruned extractions are all executed plans
+    // one write and both pruned frame reads are executed plans
     val froot = java.nio.file.Files.createTempDirectory("maint-fanout").toString
     in("fanout") {
       graft.sources.CdcFanout.materializeTables(spark,
         graft.cdc.CdcFixture.ensure(spark, sfDir),
-        Seq(("graft", "orders"), ("graft", "audit")), froot); ()
+        Seq(("graft", "orders"), ("graft", "audit")), froot)
+        .values.foreach(_.count()); ()
     }
 
     // ---- the incremental fan-out: two increments (subset index, full

@@ -818,10 +818,10 @@ object ScaleSmoke {
       val before = graft.sources.CdcFanout.filesDecoded.get()
       val out = java.nio.file.Files.createTempDirectory("cdcfan-out").toString
       val tFan0 = System.nanoTime()
-      val dests = graft.sources.CdcFanout.materializeTables(spark,
+      val frames = graft.sources.CdcFanout.materializeTables(spark,
         s"$dir/binlog.index", tables.map(("db", _)), out)
       val fanSums = tables.map { t =>
-        val r = spark.read.parquet(dests(("db", t)))
+        val r = frames(("db", t))
           .agg(sum(col("id")), count(lit(1))).head()
         (r.getLong(0), r.getLong(1))
       }
@@ -1001,7 +1001,7 @@ object ScaleSmoke {
       val fileBytes = files.map(f => new java.io.File(f).length() - 4).sum
       assert(res6.bytesLanded == fileBytes,
         s"landed ${res6.bytesLanded} bytes, files carry $fileBytes")
-      val rowF = spark.read.parquet(res6.tables(("db", "big")))
+      val rowF = res6.tables(("db", "big"))
         .agg(sum(col("id")).as("s"), count(lit(1)).as("n")).head()
       assert(rowF.getLong(1) == total &&
           rowF.getLong(0) == total * (total - 1) / 2,

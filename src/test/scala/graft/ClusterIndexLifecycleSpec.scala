@@ -398,6 +398,30 @@ class ClusterIndexLifecycleSpec extends SparkTestBase {
     graft.TmpDirs.deleteRecursively(new java.io.File(idx))
   }
 
+  test("gc after an append crashed past its commit deletes the replaced bucket files; verdicts unchanged") {
+    // ten singleton clusters in buckets 0..9; the batch doc joins doc 4,
+    // so the append replaces bucket 4's files. Crashed right after its
+    // commit, it never deleted them: they sit, unlisted, in the build's
+    // still-listed write directory until gc runs
+    val corpus = (0 until 10).map(i => (i.toLong, doc(s"c${i}x", s"t$i")))
+      .toDF("doc_id", "text")
+    val idx = java.nio.file.Files.createTempDirectory("clidx-gc-commit").toString
+    Dedup.buildClusterIndex(corpus, idx, threshold = thr)
+    val replaced = verdictFiles(idx).filter(_._2._1 == "4").keys.toSeq
+    assert(replaced.nonEmpty, "fixture: bucket 4 holds no file")
+    crashAt("clusterapp-after-commit")(Dedup.appendToClusterIndex(spark, idx,
+      Seq((20L, doc("c4x", "zz"))).toDF("doc_id", "text")))
+    assert(replaced.forall(p => new java.io.File(s"$idx/$p").exists()) &&
+      !noLeftovers(idx), "fixture: the crash left no replaced file behind")
+    val verdictsAfterCommit = verdictRows(idx).sorted
+    Dedup.gcClusterIndex(spark, idx)
+    assert(replaced.forall(p => !new java.io.File(s"$idx/$p").exists()),
+      "gc left a replaced bucket file on disk")
+    assert(noLeftovers(idx))
+    assert(verdictRows(idx).sorted == verdictsAfterCommit)
+    graft.TmpDirs.deleteRecursively(new java.io.File(idx))
+  }
+
   test("commit markers are liveness-gated: delete -> re-append -> delete-again executes (and the mirror)") {
     // the recorded op id alone is STALE across the inverse op: the
     // first delete's op id must not swallow the second delete after a

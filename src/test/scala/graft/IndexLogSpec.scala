@@ -4,12 +4,14 @@ import graft.ops.{Dedup, IndexLog, Similarity}
 import org.apache.spark.sql.DataFrame
 
 /** The commit log behind the IVF, semantic-dedup, near-dup and near-dup
-  * cluster indexes:
+  * cluster indexes and the multi-table fan-out's replica:
   *
-  *   - the four lifecycles (build → append → delete → compact →
-  *     rebuild or gc, as far as each index has the ops) run on a store
-  *     that refuses every rename outside Spark's own `_temporary/`, and
-  *     serve exactly what the same lifecycle serves on a local root;
+  *   - the four index lifecycles (build → append → delete → compact →
+  *     rebuild or gc, as far as each index has the ops) and the fan-out's
+  *     (materialize, two appends of a growing file, a tail) run on a
+  *     store that refuses every rename outside Spark's own
+  *     `_temporary/`, and serve exactly what the same lifecycle serves
+  *     on a local root;
   *   - a second writer of one version fails loud; a torn commit reads
   *     as not committed and the next writer replaces it;
   *   - every IVF op crashed before or during its commit leaves readers
@@ -92,7 +94,66 @@ class IndexLogSpec extends SparkTestBase {
     val clOut = Seq(clAppended, verdicts(), report())
     Dedup.compactClusterIndexArtifacts(spark, cl)
     Dedup.gcClusterIndex(spark, cl)
-    ivfOut ++ semOut ++ ndOut ++ clOut ++ Seq(verdicts(), report())
+    ivfOut ++ semOut ++ ndOut ++ clOut ++ Seq(verdicts(), report()) ++
+      fanout(root)
+  }
+
+  /** A gcdc log of two tables, 12 transactions: its bytes and the end
+    * offset of each event. */
+  private lazy val fanLog: (Array[Byte], Seq[Long]) = {
+    import org.apache.spark.sql.types._
+    val dir = tmp("fanlog")
+    val sch = StructType(Seq(StructField("k", LongType), StructField("v", StringType)))
+    val schB = StructType(Seq(StructField("bk", LongType)))
+    val w = new graft.cdc.CdcCodec.LogWriter(s"$dir/log.0")
+    w.tableMap(1000L, 1L, "db", "t", sch)
+    w.tableMap(1000L, 2L, "db", "b", schB)
+    (0 until 12).foreach { g =>
+      w.gtid(1000L + g, g.toLong)
+      w.writeRows(1000L + g, 1L, sch, Seq(Array[Any](g.toLong, s"v$g")))
+      if (g % 3 == 0) w.writeRows(1000L + g, 2L, schB, Seq(Array[Any](100L + g)))
+    }
+    w.close()
+    val bytes = java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(s"$dir/log.0"))
+    val r = new graft.cdc.CdcCodec.EventReader(s"$dir/log.0")
+    val ends = try r.map(_.endPos).toList finally r.close()
+    rm(dir)
+    (bytes, ends)
+  }
+
+  /** The fan-out's lifecycle with its replicas under `root`: materialize
+    * the whole log; then, over a live file that grows, append two
+    * increments, grow it to its full length and tail it. The log itself
+    * stays on the local disk. */
+  private def fanout(root: String): Seq[Seq[String]] = {
+    import graft.sources.CdcFanout
+    val (bytes, ends) = fanLog
+    val logDir = tmp("fanlive")
+    val live = java.nio.file.Paths.get(logDir, "live.0")
+    val index = s"$logDir/binlog.index"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(index), s"$live\n")
+    def grow(upTo: Int): Unit =
+      java.nio.file.Files.write(live, java.util.Arrays.copyOfRange(bytes, 0, upTo))
+    def frames(out: String): Seq[Seq[String]] =
+      CdcFanout.frames(spark, out).toSeq.sortBy(_._1.toString).map(f => rows(f._2))
+    val tables = Seq(("db", "t"), ("db", "b"))
+    grow(bytes.length)
+    CdcFanout.materializeTables(spark, index, tables, s"$root/fanmat")
+    val materialized = frames(s"$root/fanmat")
+    val tail = s"$root/fantail"
+    grow(ends(ends.length / 3).toInt)
+    CdcFanout.appendTables(spark, index, tables, tail)
+    val first = frames(tail)
+    grow(ends(2 * ends.length / 3).toInt)
+    CdcFanout.appendTables(spark, index, tables, tail)
+    val second = frames(tail)
+    grow(bytes.length)
+    assert(CdcFanout.tailTables(spark, index, tables, tail,
+      pollIntervalMs = 10, maxIdlePolls = 1) == 1)
+    val tailed = frames(tail)
+    assert(tailed == materialized, "the tailed replica diverged from the materialized one")
+    rm(logDir)
+    materialized ++ first ++ second ++ tailed
   }
 
   test("IVF, semantic-dedup and near-dup lifecycles run on a store that refuses every rename outside _temporary/") {
@@ -143,6 +204,30 @@ class IndexLogSpec extends SparkTestBase {
     // that commit dropped t2's files: they are deleted with the older
     // commit files
     assert(IndexFsProbe.unlisted(spark, root, "t").isEmpty)
+    assert(new java.io.File(s"$root/_log").list().count(_.endsWith(".json")) == 1)
+    rm(root)
+  }
+
+  test("gc deletes a table a commit dropped when the op crashed right after committing, and nothing no write made") {
+    val root = tmp("gc-drop")
+    val v1 = IndexLog.commit(spark, root, "w", None, Map(
+      "t" -> IndexLog.write(Seq(1L, 2L).toDF("id"), root, "t"),
+      "u" -> IndexLog.write(Seq(3L).toDF("id"), root, "u")))
+    IndexLog.crashPoint = Some("w-after-commit")
+    try intercept[IllegalStateException](v1.commit("w", Map.empty, drop = Set("u")))
+    finally IndexLog.crashPoint = None
+    assert(new java.io.File(s"$root/u").exists(), "fixture: the crash deleted u")
+    // what no write made is not the index's: a file and a foreign
+    // directory beside it survive
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(root, "log.000001"), "x")
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root, "land", "sub"))
+    IndexLog.gc(spark, root)
+    assert(!new java.io.File(s"$root/u").exists(), "gc left the dropped table on disk")
+    assert(new java.io.File(s"$root/log.000001").exists() &&
+      new java.io.File(s"$root/land/sub").exists(), "gc deleted what no write made")
+    val head = IndexLog.snapshot(spark, root)
+    assert(head.version == 2L && head.tables.keySet == Set("t"))
+    assert(head.frame("t").as[Long].collect().sorted.toSeq == Seq(1L, 2L))
     assert(new java.io.File(s"$root/_log").list().count(_.endsWith(".json")) == 1)
     rm(root)
   }

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * growth folding, reconnect-and-resume after an abrupt socket drop,
   * and the restart story — a killed-and-restarted loop replays ZERO
   * rows because both the landing (contiguity-checked appends) and the
-  * fold (offsets-manifest-committed increments) are idempotent.
+  * fold (one commit per increment) are idempotent.
   */
 class ReplicaTailSpec extends SparkTestBase {
 
@@ -54,8 +54,8 @@ class ReplicaTailSpec extends SparkTestBase {
   private def bytesOf(p: String): Seq[Byte] =
     Files.readAllBytes(java.nio.file.Paths.get(p)).toSeq
 
-  private def frameIds(framePath: String): Seq[Long] =
-    spark.read.parquet(framePath).select("id")
+  private def frameIds(frame: org.apache.spark.sql.DataFrame): Seq[Long] =
+    frame.select("id")
       .collect().map(_.getLong(0)).toSeq.sorted
 
   test("land-then-read: landed files byte-identical, frame equals the full decode, multiple folds") {
@@ -175,7 +175,7 @@ class ReplicaTailSpec extends SparkTestBase {
           outRoot = s"$dir/out")
         r.tables(("db", "t"))
       } finally srv1.close()
-    val executed = ReplicaTail.executedGtids(spark.read.parquet(frame))
+    val executed = ReplicaTail.executedGtids(frame)
     assert(executed == Map(uuid -> 10L), s"high-water marks: $executed")
     // auto-position resume from FRAME state alone (no landed-log
     // offsets): the server must skip gnos 1-10 and serve 11-20
